@@ -163,9 +163,12 @@ def main():
     result = work / "result.json"
     java = Path(os.environ["JAVA_HOME"]) / "bin" / "java" if os.environ.get("JAVA_HOME") \
         else shutil.which("java")
-    # -UsePerfData: no hsperfdata file outside the checkout
+    # -UsePerfData: no hsperfdata file outside the checkout.
+    # CompileThresholdScaling: the JIT compiles hot methods after a fifth of
+    # the usual calls, so per-call cost stops falling within the warm-up;
+    # without it serve's point calls were still getting faster while timed
     cmd = [str(java), f"-Xms{HEAP}", f"-Xmx{HEAP}", "-XX:ReservedCodeCacheSize=512m",
-           "-XX:-UsePerfData",
+           "-XX:-UsePerfData", "-XX:CompileThresholdScaling=0.2",
            "--add-modules=jdk.incubator.vector", f"-Djava.io.tmpdir={work / 'tmp'}",
            "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC"]
     cmd += [x for o in ADD_OPENS for x in ("--add-opens", f"{o}=ALL-UNNAMED")]

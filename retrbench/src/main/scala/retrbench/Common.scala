@@ -38,6 +38,15 @@ final class Ctx(val spark: SparkSession, val args: Args, val tracer: Tracer) {
   var timedStartNs, timedEndNs = 0L
   var timedStealPct = 0.0
 
+  /** Untimed warm-up: `rounds` repetitions of `round`, so the JIT has
+    * compiled the measured calls before the clock starts. A count, not a
+    * time: a slow stretch of the host would otherwise cut the warm-up
+    * short and leave the measured calls less compiled. */
+  def warmUp(rounds: Int)(round: => Unit): Unit = {
+    tracer.phase = "warm"
+    (0 until rounds).foreach(_ => round)
+  }
+
   /** The measured phase: repeats `round` from one client thread until the
     * run's seconds are spent. Every round completes, so each operation
     * type keeps its share of the samples. */
@@ -58,11 +67,22 @@ final class Ctx(val spark: SparkSession, val args: Args, val tracer: Tracer) {
   }
 }
 
+/** Timings of one operation type, kept per group (an index family).
+  * Families take different times, so the median of the pooled samples
+  * would sit at the border of two families and jump from run to run with
+  * the few calls there; `p50` is the mean of the families' medians. */
+final class Samples {
+  private val groups = mutable.LinkedHashMap[String, ArrayBuffer[Double]]()
+  def add(group: String, x: Double): Unit = groups.getOrElseUpdate(group, ArrayBuffer()) += x
+  def all: Seq[Double] = groups.values.flatten.toSeq
+  def p50: Double = groups.values.map(Stats.median).sum / groups.size
+}
+
 /** Samples behind the end-to-end metrics. */
 final class Recorder {
   var sessionS = 0.0
   val setupS, buildS, writeS = ArrayBuffer[Double]()
-  val batchMs, pointMs, cycleMs = ArrayBuffer[Double]()
+  val batchMs, pointMs, cycleMs = new Samples
   var batchQueries = 0L
   var batchTotalMs = 0.0
   var recallSum, hitSum = 0.0
@@ -72,8 +92,8 @@ final class Recorder {
   val genS, gtS, storeBytes = ArrayBuffer[Double]()
   val familyRecalls = mutable.LinkedHashMap[String, ArrayBuffer[Double]]()
 
-  def batch(queries: Int, ms: Double): Unit = {
-    batchMs += ms; batchQueries += queries; batchTotalMs += ms
+  def batch(group: String, queries: Int, ms: Double): Unit = {
+    batchMs.add(group, ms); batchQueries += queries; batchTotalMs += ms
   }
   def recall(r: Double): Unit = { recallSum += r; recallN += 1 }
   def hit(h: Boolean): Unit = { hitSum += (if (h) 1.0 else 0.0); hitN += 1 }

@@ -7,14 +7,16 @@ import org.apache.spark.sql.DataFrame
 import graft.operators.{IndexAppend, IndexArtifact, Registry, Searcher}
 import graft.sources.{ArtifactStore, RandomDataset}
 
-/** Writes beside distributed reads. Indexes built and persisted in set-up
-  * are loaded and mutated in cycles of {append fresh rows, delete live
-  * ids, a batch search of the mutated index, a small hybrid lookup}; every
-  * `Cycles` rounds they are reloaded, so the mutation lineage stays bounded.
-  * Each search after a mutation misses the engine's driver-local scan memo
-  * and pays the lazy append encode over the growing union; the hybrid
-  * lookup is BM25 WAND + exact dense kNN join + RRF fusion. Builds, saves
-  * and every read here are Spark-job-bound. */
+/** Writes beside distributed reads. Each round reloads the indexes built
+  * and persisted in set-up, runs on each family a cycle of {append fresh
+  * rows, delete live ids, a batch search of the mutated index}, and ends
+  * with one small hybrid lookup. Reloading every round keeps the lineage
+  * the same in every round (the stored index plus one append and one
+  * delete), so a search's job count repeats exactly and its time does not
+  * depend on how many rounds fit in the run. Each search after a mutation
+  * misses the engine's driver-local scan memo and pays the lazy append
+  * encode over the union; the hybrid lookup is BM25 WAND + exact dense kNN
+  * join + RRF fusion. Builds, saves and every read here are Spark-job-bound. */
 object Ingest {
   val N = 10000
   val Dim = 64
@@ -26,14 +28,15 @@ object Ingest {
   val BatchQ = 256
   val LookupQ = 4
   val RecallSample = 32
-  val Cycles = 2
   val AppendN = 500
   val DeleteN = 125
-  val SetupReps = 3
+  val SetupReps = 2
   /** base rows and text docs of the untimed set-up pass that runs before
     * the measured repetitions, so class loading and JIT warm-up land there */
   val WarmN = 2000
   val WarmDocs = 1000
+  /** untimed rounds (with their reloads) before the measured phase */
+  val WarmRounds = 1
 
   /** `shortOk`: the searcher's contract allows fewer than k rows (LSH
     * reranks only the candidates its buckets hold, and falls back to a
@@ -46,14 +49,15 @@ object Ingest {
     Family("lsh", Map("num_tables" -> "8", "hash_size" -> "8", "seed" -> "42"), Map.empty,
       shortOk = true))
 
-  /** one mutation cycle, fixed in set-up: what to append, what to delete,
-    * which queries to ask, and the exact answers on the rows live after it */
-  final class Step(val append: Seq[(Long, Array[Float])], val delete: Seq[Long],
-      val batch: IndexedSeq[Int], val sampled: IndexedSeq[Int], val gt: Array[Array[Long]],
-      val live: java.util.BitSet, val deleted: java.util.BitSet)
+  /** the mutation every cycle applies, fixed in set-up: what to append,
+    * what to delete, and the exact answers on the rows live after it for
+    * the pool queries whose index is a multiple of `BatchQ / RecallSample`
+    * (every batch window holds `RecallSample` of them) */
+  final class Mutation(val append: Seq[(Long, Array[Float])], val delete: Seq[Long],
+      val gt: Map[Int, Array[Long]], val live: java.util.BitSet, val deleted: java.util.BitSet)
 
   final class State(val baseDf: DataFrame, val pool: IndexedSeq[(Long, Array[Float])],
-      val steps: IndexedSeq[Step], val stored: Seq[(Family, String)],
+      val mutation: Mutation, val stored: Seq[(Family, String)],
       val hybrid: HybridArm.State)
 
   /** a family's index as the client holds it between cycles */
@@ -77,59 +81,58 @@ object Ingest {
         ArtifactStore.load(ctx.spark, l.dir, expectKind = Some(l.family.name))._1
       }
     }
-    var lookups = 0
+    var rounds = 0
     var replay: Option[(IndexedSeq[HybridArm.Query], Seq[(Long, Int, Long)])] = None
-    def round(step: Int, record: Boolean): Unit = live.foreach { l =>
-      val qs = (0 until LookupQ).map(j =>
-        state.hybrid.pool((lookups * LookupQ + j) % HybridArm.PoolQ))
-      lookups += 1
-      val (lex, ms) = ctx.timeMs(ctx.tracer("cycle") {
-        cycle(ctx, state, l, state.steps(step), record)
-        lookup(ctx, state.hybrid, qs, record)
-      })
-      if (record) {
-        ctx.rec.cycleMs += ms
-        if (replay.isEmpty) replay = Some(qs -> lex)
+    def round(record: Boolean): Unit = {
+      reload()
+      // a contiguous window of the pool, wrapped: another batch each round
+      val batch = (0 until BatchQ).map(j => ((rounds.toLong * 131 + j) % PoolQ).toInt)
+      live.foreach { l =>
+        val (_, ms) = ctx.timeMs(ctx.tracer("cycle") {
+          cycle(ctx, state, l, batch, record)
+        })
+        if (record) ctx.rec.cycleMs.add(l.family.name, ms)
       }
+      val qs = (0 until LookupQ).map(j =>
+        state.hybrid.pool((rounds * LookupQ + j) % HybridArm.PoolQ))
+      val lex = lookup(ctx, state.hybrid, qs, record)
+      if (record && replay.isEmpty) replay = Some(qs -> lex)
+      rounds += 1
     }
-    ctx.tracer.phase = "warm"
-    reload()
-    round(0, record = false)
-    var step = Cycles
-    ctx.closedLoop {
-      if (step == Cycles) { reload(); step = 0 }
-      round(step, record = true)
-      step += 1
-    }
+    ctx.warmUp(WarmRounds)(round(record = false))
+    rounds = 0 // the measured rounds ask the same queries in every run
+    ctx.closedLoop(round(record = true))
     replay.foreach { case (qs, lex) =>
       ctx.checker.record("hybrid.wand_vs_exact", HybridArm.exactReplay(ctx, state.hybrid, qs, lex))
     }
   }
 
   /** append, delete, then the batch search that pays for both */
-  private def cycle(ctx: Ctx, st: State, l: Live, s: Step, record: Boolean): Unit = {
+  private def cycle(ctx: Ctx, st: State, l: Live, batch: IndexedSeq[Int],
+      record: Boolean): Unit = {
     val spark = ctx.spark
     val f = l.family
+    val s = st.mutation
+    val sampled = batch.filter(_ % (BatchQ / RecallSample) == 0)
     val rows = Frames.vectors(spark, s.append)
     l.artifact = ctx.tracer("ingest.append")(IndexAppend.append(l.artifact, rows))
     val ids = Frames.ids(spark, s.delete)
     l.artifact = ctx.tracer("ingest.delete")(IndexAppend.delete(l.artifact, ids))
-    val qdf = Frames.queries(spark, s.batch.map(st.pool))
+    val qdf = Frames.queries(spark, batch.map(st.pool))
     val (res, ms) = ctx.timeMs(ctx.tracer("ingest.fresh_search") {
       Check.byQuery(Frames.collectRanked(l.searcher.search(l.artifact, qdf, K)))
     })
-    val recalls = s.sampled.indices.map(i =>
-      Exact.recall(res.getOrElse(s.sampled(i).toLong, Array.empty[Long]), s.gt(i)))
+    val recalls = sampled.map(q => Exact.recall(res.getOrElse(q.toLong, Array.empty[Long]), s.gt(q)))
     val recall = recalls.sum / recalls.length
     ctx.checker.record(s"ingest.${f.name}.search",
-      Check.topK(res, s.batch.map(_.toLong), K, i => s.live.get(i.toInt),
+      Check.topK(res, batch.map(_.toLong), K, i => s.live.get(i.toInt),
         i => s.deleted.get(i.toInt), f.shortOk) ++
         Check.recallFloor(recall, ctx.floor(s"ingest.${f.name}")))
     if (record) {
-      ctx.rec.batch(s.batch.length, ms)
+      ctx.rec.batch(f.name, batch.length, ms)
       recalls.foreach(ctx.rec.recall)
-      s.sampled.indices.foreach(i => ctx.rec.hit(res.getOrElse(s.sampled(i).toLong,
-        Array.empty[Long]).take(10).contains(s.gt(i)(0))))
+      sampled.foreach(q => ctx.rec.hit(res.getOrElse(q.toLong, Array.empty[Long]).take(10)
+        .contains(s.gt(q)(0))))
       ctx.rec.familyRecall(f.name, recall)
     }
   }
@@ -140,7 +143,7 @@ object Ingest {
     val (a, ms) = ctx.timeMs(ctx.tracer("hybrid.lookup")(HybridArm.lookup(ctx, h, qs)))
     ctx.checker.record("ingest.hybrid.lookup", a.problems)
     if (record) {
-      ctx.rec.pointMs += ms
+      ctx.rec.pointMs.add("hybrid", ms)
       ctx.rec.fusedHits += a.hits
       ctx.rec.fusedQueries += qs.length
     }
@@ -160,36 +163,26 @@ object Ingest {
       val df = gen(n, "ingest.base").persist()
       val base = Frames.collectVectors(df)
       val pool = Frames.collectVectors(gen(PoolQ, "ingest.queries")).toIndexedSeq
-      val appends = (0 until Cycles).map { c =>
-        val first = n.toLong + c.toLong * AppendN
-        Frames.collectVectors(gen(AppendN, s"ingest.append.$c"))
-          .map { case (i, v) => (first + i, v) }
-      }
+      val appends = Frames.collectVectors(gen(AppendN, "ingest.append"))
+        .map { case (i, v) => (n + i, v) }
       (df, base, pool, appends)
     })
-    val (steps, gtMs) = ctx.timeMs(ctx.tracer("sources.gt") {
-      val table = Exact.Table(base ++ appends.flatten)
+    val (mutation, gtMs) = ctx.timeMs(ctx.tracer("sources.gt") {
+      val table = Exact.Table(base ++ appends)
       val live = new java.util.BitSet()
-      live.set(0, n)
+      live.set(0, n + AppendN)
+      val rnd = new SplittableRandom(ctx.seedFor("ingest.delete"))
+      val del = Iterator.continually(rnd.nextInt(n + AppendN))
+        .distinct.take(DeleteN).map(_.toLong).toSeq.sorted
       val deleted = new java.util.BitSet()
-      (0 until Cycles).map { c =>
-        appends(c).foreach { case (i, _) => live.set(i.toInt) }
-        val rnd = new SplittableRandom(ctx.seedFor(s"ingest.delete.$c"))
-        val liveIds = live.stream().toArray
-        val del = Iterator.continually(liveIds(rnd.nextInt(liveIds.length)))
-          .distinct.take(DeleteN).map(_.toLong).toSeq.sorted
-        del.foreach { i => live.clear(i.toInt); deleted.set(i.toInt) }
-        val batch = (0 until BatchQ).map(j => (c * BatchQ + j) % PoolQ)
-        val sampled = batch.indices.filter(_ % (BatchQ / RecallSample) == 0).map(batch)
-        val liveNow = live.clone().asInstanceOf[java.util.BitSet]
-        val gt = Exact.topK(table, i => liveNow.get(i.toInt), sampled.map(pool(_)._2).toArray, K)
-        new Step(appends(c), del, batch, sampled, gt, liveNow,
-          deleted.clone().asInstanceOf[java.util.BitSet])
-      }
+      del.foreach { i => live.clear(i.toInt); deleted.set(i.toInt) }
+      val sampled = (0 until PoolQ by BatchQ / RecallSample).toArray
+      val gt = Exact.topK(table, i => live.get(i.toInt), sampled.map(pool(_)._2), K)
+      new Mutation(appends, del, sampled.zip(gt).toMap, live, deleted)
     })
     if (rep == 0) {
       ctx.digest.rows(base); ctx.digest.rows(pool)
-      steps.foreach { s => ctx.digest.rows(s.append); s.delete.foreach(ctx.digest.long) }
+      ctx.digest.rows(mutation.append); mutation.delete.foreach(ctx.digest.long)
     }
     var buildMs, writeMs = 0.0
     var bytes = 0L
@@ -215,6 +208,6 @@ object Ingest {
       ctx.rec.gtS += (gtMs + h.gtMs) / 1e3
       ctx.rec.storeBytes += (bytes + h.bytes).toDouble
     }
-    new State(baseDf, pool, steps, stored, h.state)
+    new State(baseDf, pool, mutation, stored, h.state)
   }
 }

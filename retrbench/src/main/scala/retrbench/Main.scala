@@ -39,6 +39,11 @@ object Main {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.codegen.cache.maxEntries", "4000")
       .config("spark.ui.enabled", "false")
+      // keep little job history, so the live heap read at the end does
+      // not grow with the number of calls a run fits in
+      .config("spark.ui.retainedJobs", "50")
+      .config("spark.ui.retainedStages", "50")
+      .config("spark.sql.ui.retainedExecutions", "50")
       .config("spark.local.dir", workDir.resolve("spark-local").toString)
       .config("spark.sql.warehouse.dir", workDir.resolve("warehouse").toString)
       .getOrCreate()

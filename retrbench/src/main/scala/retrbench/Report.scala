@@ -9,18 +9,18 @@ final case class Metric(name: String, value: Double, unit: String)
 object Report {
 
   def endToEnd(r: Recorder): Seq[Metric] = {
-    val batchTail = Stats.tail(r.batchMs)
-    val pointTail = Stats.tail(r.pointMs)
+    val batchTail = Stats.tail(r.batchMs.all)
+    val pointTail = Stats.tail(r.pointMs.all)
     Seq(
       Metric("setup_s", r.sessionS + Stats.median(r.setupS), "s"),
       Metric("search_qps", r.batchQueries / (r.batchTotalMs / 1e3), "1/s"),
-      Metric("batch_p50_ms", Stats.median(r.batchMs), "ms"),
+      Metric("batch_p50_ms", r.batchMs.p50, "ms"),
       Metric("batch_tail_ms", batchTail.value, "ms"),
-      Metric("point_p50_ms", Stats.median(r.pointMs), "ms"),
+      Metric("point_p50_ms", r.pointMs.p50, "ms"),
       Metric("point_tail_ms", pointTail.value, "ms"),
       Metric("build_s", Stats.median(r.buildS), "s"),
       Metric("write_s", Stats.median(r.writeS), "s"),
-      Metric("cycle_p50_ms", Stats.median(r.cycleMs), "ms"),
+      Metric("cycle_p50_ms", r.cycleMs.p50, "ms"),
       Metric("recall_at_20", r.recallSum / r.recallN, "fraction"),
       Metric("hit_at_10", r.hitSum / r.hitN, "fraction"),
       Metric("heap_live_mib", r.heapLiveMib, "MiB"))
@@ -29,7 +29,7 @@ object Report {
   /** sample counts and percentiles behind the tail metrics */
   def tailNotes(r: Recorder): Seq[String] = Seq("batch" -> r.batchMs, "point" -> r.pointMs)
     .map { case (n, xs) =>
-      val t = Stats.tail(xs)
+      val t = Stats.tail(xs.all)
       f"${n}_tail_ms is p${t.percentile}%.1f of ${t.samples} samples"
     }
 
