@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -139,6 +139,62 @@ object Bm25 {
     queries.select(col(qIdCol).as("query_id"),
       explode(array_distinct(Dedup.tokens(col(qTextCol)))).as("term"))
 
+  /** The [[qtermsOf]] rows of a batch on the driver, or None when there are
+    * more than `cap` of them. The batch is tokenized as a Project and
+    * exploded HERE, not by a Spark Generate: over a LocalRelation batch the
+    * optimizer folds the Project (ConvertToLocalRelation), so the probe runs
+    * no job; a distributed batch costs one job over ≤ cap+1 queries. Every
+    * non-null text has at least one term, so more than `cap` queries is
+    * over the cap without counting further. */
+  private def qtermRowsCapped(queries: DataFrame, qIdCol: String,
+      qTextCol: String, cap: Int): Option[Array[Row]] = {
+    val qs = queries.select(col(qIdCol).as("query_id"),
+        array_distinct(Dedup.tokens(col(qTextCol))).as("terms"))
+      .limit(cap + 1).collect()
+    val rows = qs.iterator.filterNot(_.isNullAt(1)).flatMap { r =>
+      val id = r.get(0)
+      r.getSeq[String](1).iterator.map(t => Row(id, t))
+    }.take(cap + 1).toArray
+    if (qs.length > cap || rows.length > cap) None else Some(rows)
+  }
+
+  /** Lucene-style idf as a Spark expression over `(n_docs, df)` — the
+    * relational and distributed-WAND paths' formula. */
+  private[graft] val idfCol: Column =
+    log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
+
+  /** [[idfCol]] evaluated on the driver, bit-identical: Spark's `log` is
+    * `StrictMath.log`, and the double arithmetic keeps the same
+    * association. */
+  private[graft] def idf(nDocs: Double, df: Double): Double =
+    StrictMath.log(1.0 + (nDocs - df + 0.5) / (df + 0.5))
+
+  /** Dense query index over `(query_id, term)` rows, in first-appearance
+    * order: the batch's query ids and, per query, its terms that `keep`
+    * accepts (WAND tasks and local top-k rows carry the int, not the
+    * caller's id type). */
+  private def denseQueries(qtRows: Array[Row], keep: String => Boolean)
+      : (IndexedSeq[Any], Array[Array[String]]) = {
+    val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
+    val terms = scala.collection.mutable.ArrayBuffer.empty[scala.collection.mutable.ArrayBuffer[String]]
+    val idx = scala.collection.mutable.HashMap.empty[Any, Int]
+    qtRows.foreach { r =>
+      val i = idx.getOrElseUpdate(r.get(0), {
+        ids += r.get(0)
+        terms += scala.collection.mutable.ArrayBuffer.empty[String]
+        ids.length - 1
+      })
+      if (keep(r.getString(1))) terms(i) += r.getString(1)
+    }
+    (ids.toIndexedSeq, terms.map(_.toArray).toArray)
+  }
+
+  /** `(query_id, doc_id, rank, score)` from fixed-point scores: the one
+    * output expression both WAND routes end in. */
+  private def withScore(ranked: DataFrame): DataFrame =
+    ranked.select(col("query_id"), col("doc_id"), col("rank"),
+      (col("score_fixed") / lit(1e6)).as("score"))
+
   private def scoreQTerms(post: DataFrame, stats: DataFrame,
       qterms: DataFrame, k: Int, k1: Double, b: Double,
       prebuiltDf: Option[DataFrame],
@@ -162,8 +218,7 @@ object Bm25 {
     // BigDecimal HALF_UP round (r14; identical doubles per posting ⇒
     // identical fixed-point longs ⇒ identical results, oracle-verified)
     val tdf = df.crossJoin(broadcast(stats))
-      .withColumn("idf",
-        log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))))
+      .withColumn("idf", idfCol)
       .select("term", "idf", "avgdl")
 
     // Champion lists (Manning/Raghavan/Schütze §7.1.3): the scoring
@@ -234,12 +289,10 @@ object Bm25 {
     val agg = scored.groupBy("query_id", "doc_id")
       .agg(sum("s_fixed").as("score_fixed"))
 
-    agg
+    withScore(agg
       .withColumn("rank", row_number().over(Window.partitionBy("query_id")
         .orderBy(col("score_fixed").desc, col("doc_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("doc_id"), col("rank"),
-        (col("score_fixed") / lit(1e6)).as("score"))
+      .filter(col("rank") <= k))
   }
 
   // ------------------------------------------------------- block-max WAND
@@ -299,46 +352,40 @@ object Bm25 {
       queries: DataFrame, qIdCol: String, qTextCol: String,
       k: Int, k1: Double = 1.2, b: Double = 0.75,
       prebuiltDf: Option[DataFrame] = None,
-      blockSize: Int = 64,
-      precollectedQt: Option[Array[org.apache.spark.sql.Row]] = None)
-      : DataFrame = {
+      blockSize: Int = 64): DataFrame = {
     val spark = post.sparkSession
-    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val qt = qtermsOf(queries, qIdCol, qTextCol)
-    // a caller that already collected the (query_id, term) batch for its
-    // own cap/vocab decision (searchFromIndexWand) passes it through —
-    // one driver job and one tokenization pass per serve batch, the same
-    // reuse discipline searchFromIndex documents for the relational path
-    val qtRows = precollectedQt.getOrElse(qt.limit(serveBatchCap + 1).collect())
-    if (qtRows.length > serveBatchCap) {
-      // Over-cap query batch: CHUNK it, never fall back to the
-      // relational scoring join. WAND is per-query independent, so a
-      // query-disjoint split unions to the exact same result, each
-      // chunk's driver footprint stays under the cap, and the df/idf
-      // values are unchanged (they are per-term corpus statistics —
-      // the chunk only narrows WHICH terms are looked up). The 100×
-      // pass caught the original fallback re-materializing the exact
-      // path's Σ qf·df candidates and overflowing local disk — the
-      // precise failure WAND exists to remove (found r12).
-      val nQueries = queries.select(col(qIdCol)).distinct()
-        .limit(serveBatchCap + 1).count()
-      if (nQueries <= 1)
-        // a SINGLE query wider than the cap cannot chunk further —
-        // corpus-shaped "query" text; the relational join is the
-        // honest plan for that degenerate shape
-        return scoreQTerms(post, stats, qt, k, k1, b, prebuiltDf)
-      val qtCount = qt.count()
-      // fan-out bounded per level (a 1000-chunk flat union nests the
-      // plan past analyzer stack depth); a still-over-cap chunk simply
-      // re-chunks on re-entry, so coverage is unchanged at log depth
-      val nChunks = math.min(32L, math.max(2L,
-        (qtCount + serveBatchCap - 1) / serveBatchCap)).toInt
-      return (0 until nChunks).map { i =>
-        searchWandOverPostings(post, stats,
-          queries.filter(pmod(hash(col(qIdCol)), lit(nChunks)) === i),
-          qIdCol, qTextCol, k, k1, b, prebuiltDf, blockSize)
-      }.reduce(_ unionByName _)
+    val qtRows = qtermRowsCapped(queries, qIdCol, qTextCol, serveBatchCap) match {
+      case Some(rows) => rows
+      case None =>
+        // Over-cap query batch: CHUNK it, never fall back to the
+        // relational scoring join. WAND is per-query independent, so a
+        // query-disjoint split unions to the exact same result, each
+        // chunk's driver footprint stays under the cap, and the df/idf
+        // values are unchanged (they are per-term corpus statistics —
+        // the chunk only narrows WHICH terms are looked up). The 100×
+        // pass caught the original fallback re-materializing the exact
+        // path's Σ qf·df candidates and overflowing local disk — the
+        // precise failure WAND exists to remove (found r12).
+        val nQueries = queries.select(col(qIdCol)).distinct()
+          .limit(serveBatchCap + 1).count()
+        if (nQueries <= 1)
+          // a SINGLE query wider than the cap cannot chunk further —
+          // corpus-shaped "query" text; the relational join is the
+          // honest plan for that degenerate shape
+          return scoreQTerms(post, stats, qt, k, k1, b, prebuiltDf)
+        val qtCount = qt.count()
+        // fan-out bounded per level (a 1000-chunk flat union nests the
+        // plan past analyzer stack depth); a still-over-cap chunk simply
+        // re-chunks on re-entry, so coverage is unchanged at log depth
+        val nChunks = math.min(32L, math.max(2L,
+          (qtCount + serveBatchCap - 1) / serveBatchCap)).toInt
+        return (0 until nChunks).map { i =>
+          searchWandOverPostings(post, stats,
+            queries.filter(pmod(hash(col(qIdCol)), lit(nChunks)) === i),
+            qIdCol, qTextCol, k, k1, b, prebuiltDf, blockSize)
+        }.reduce(_ unionByName _)
     }
 
     // per-term idf over the query vocabulary, computed by the SAME Spark
@@ -356,8 +403,7 @@ object Bm25 {
       .getOrElse(post.join(broadcast(qvocabDf), Seq("term"), "left_semi")
         .groupBy("term").agg(count(lit(1)).cast("double").as("df")))
     val idfRows = dfRel.crossJoin(broadcast(stats))
-      .withColumn("idf", log(lit(1.0) +
-        (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))))
+      .withColumn("idf", idfCol)
       .select("term", "idf", "avgdl").collect()
     val idfMap: Map[String, Double] =
       idfRows.map(r => r.getString(0) -> r.getDouble(1)).toMap
@@ -366,23 +412,9 @@ object Bm25 {
       if (idfRows.nonEmpty) idfRows(0).getDouble(2)
       else stats.collect()(0).getAs[Double]("avgdl")
 
-    // dense query index (the DAAT tasks and the local-top-k rows carry an
-    // int, not the caller's id type; the original ids join back at the
-    // end from a broadcast-small map)
-    val qidsBuf = scala.collection.mutable.ArrayBuffer.empty[Any]
-    val qTermsBuf = scala.collection.mutable.ArrayBuffer.empty[scala.collection.mutable.ArrayBuffer[String]]
-    val qIdx = scala.collection.mutable.HashMap.empty[Any, Int]
-    qtRows.foreach { r =>
-      val id = r.get(0)
-      val i = qIdx.getOrElseUpdate(id, {
-        qidsBuf += id
-        qTermsBuf += scala.collection.mutable.ArrayBuffer.empty[String]
-        qidsBuf.length - 1
-      })
-      // only terms that exist in the corpus can contribute
-      if (idfMap.contains(r.getString(1))) qTermsBuf(i) += r.getString(1)
-    }
-    val qTerms: Array[Array[String]] = qTermsBuf.map(_.toArray).toArray
+    // only terms that exist in the corpus can contribute; the original
+    // ids join back at the end from a broadcast-small map
+    val (qids, qTerms) = denseQueries(qtRows, idfMap.contains)
     val bcTerms = spark.sparkContext.broadcast(qTerms)
     val bcIdf = spark.sparkContext.broadcast(idfMap)
     val bsz = blockSize
@@ -398,11 +430,7 @@ object Bm25 {
     // estimate clears cores × maxPartitionBytes and the plain keyed
     // repartition plans unchanged.
     val slim = Par.co(
-      post.join(broadcast(qvocabDf), Seq("term"), "left_semi")
-        .select(col("term"),
-          col("doc_id").cast("long").as("doc_id"),
-          col("tf").cast("long").as("tf"),
-          col("dl").cast("int").as("dl")),
+      postingCols(post.join(broadcast(qvocabDf), Seq("term"), "left_semi")),
       col("doc_id"), minBytesPerTask = 16 * 1024L)
       .sortWithinPartitions("term", "doc_id")
 
@@ -450,19 +478,25 @@ object Bm25 {
     // original query ids join back from a broadcast-small local relation
     val qidField = qt.schema.head
     val qidRows: java.util.List[Row] = java.util.Arrays.asList(
-      qidsBuf.zipWithIndex.map { case (v, i) => Row(i, v) }.toSeq: _*)
+      qids.zipWithIndex.map { case (v, i) => Row(i, v) }: _*)
     val qidDf = spark.createDataFrame(qidRows, StructType(Seq(
       StructField("qidx", IntegerType, nullable = false),
       StructField("query_id", qidField.dataType, qidField.nullable))))
 
-    local
+    withScore(local
       .withColumn("rank", row_number().over(Window.partitionBy("qidx")
         .orderBy(col("score_fixed").desc, col("doc_id"))))
       .filter(col("rank") <= k)
-      .join(broadcast(qidDf), "qidx")
-      .select(col("query_id"), col("doc_id"), col("rank"),
-        (col("score_fixed") / lit(1e6)).as("score"))
+      .join(broadcast(qidDf), "qidx"))
   }
+
+  /** `(term, doc_id, tf, dl)` postings with the types the WAND kernel
+    * reads (long doc ids and tf, int dl). */
+  private def postingCols(post: DataFrame): DataFrame =
+    post.select(col("term"),
+      col("doc_id").cast("long").as("doc_id"),
+      col("tf").cast("long").as("tf"),
+      col("dl").cast("int").as("dl"))
 
   /** Persist the inverted index for repeated serving: postings bucketed
     * by `term` (the scoring join's key — co-located, exchange-free
@@ -513,45 +547,43 @@ object Bm25 {
     * tokenization, no postings aggregate — df and stats are persisted
     * lookups, and the postings/df scans carry an `isin` filter on the
     * batch's query-term vocabulary. The vocabulary is collected on the
-    * driver first (one job over the QUERY batch — the side that is small
-    * by definition), because a literal In on the bucket column is what
-    * unlocks bucket pruning + parquet pushdown: without it the scoring
-    * join would stream every postings bucket per batch, which at corpus
-    * scale reads the whole index to answer a 5-term query. */
+    * driver first ([[qtermRowsCapped]]: no job over a LocalRelation batch,
+    * one over a distributed one — the query side is small by definition),
+    * because a literal In on the bucket column is what unlocks bucket
+    * pruning + parquet pushdown: without it the scoring join would stream
+    * every postings bucket per batch, which at corpus scale reads the
+    * whole index to answer a 5-term query. */
   def searchFromIndex(spark: org.apache.spark.sql.SparkSession,
       table: String, queries: DataFrame, qIdCol: String, qTextCol: String,
       k: Int, k1: Double = 1.2, b: Double = 0.75,
       championListSize: Option[Int] = None): DataFrame = {
     // The query batch is the broadcast-small side by contract, and it
-    // feeds three places (vocab filter, df lookup, scoring join) — so pay
-    // ONE job to land it on the driver and serve every consumer from a
-    // LocalRelation: no repeated derivation jobs, broadcasts without a
-    // collect stage, and the vocabulary literal in hand. The collect is
-    // CAPPED (same discipline as LocalScan.queryVecsCapped): a caller
-    // that hands a huge "batch" must not OOM the driver or build a
-    // million-entry In literal — above the cap, fall back to the
-    // streaming plan (distributed qterms broadcast into the joins; every
-    // postings bucket is read, which is the correct trade when the query
-    // vocabulary is no longer small).
+    // feeds three places (vocab filter, df lookup, scoring join) — so land
+    // it on the driver once and serve every consumer from a LocalRelation:
+    // no repeated derivation jobs, broadcasts without a collect stage, and
+    // the vocabulary literal in hand. The collect is CAPPED (same
+    // discipline as LocalScan.queryVecsCapped): a caller that hands a huge
+    // "batch" must not OOM the driver or build a million-entry In literal
+    // — above the cap, fall back to the streaming plan (distributed qterms
+    // broadcast into the joins; every postings bucket is read, which is
+    // the correct trade when the query vocabulary is no longer small).
     val qt = qtermsOf(queries, qIdCol, qTextCol)
-    val cap = serveBatchCap
-    val rows = qt.limit(cap + 1).collect()
-    if (rows.length > cap)
-      scoreQTerms(
-        spark.table(s"${table}_postings"),
-        spark.table(s"${table}_stats"), qt, k, k1, b,
-        prebuiltDf = Some(spark.table(s"${table}_df")),
-        championListSize = championListSize)
-    else {
-      val qterms = spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), qt.schema)
-      val vocab = rows.map(_.getString(1)).distinct.toSeq
-      val termIn = col("term").isin(vocab: _*)
-      scoreQTerms(
-        spark.table(s"${table}_postings").filter(termIn),
-        spark.table(s"${table}_stats"), qterms, k, k1, b,
-        prebuiltDf = Some(spark.table(s"${table}_df").filter(termIn)),
-        championListSize = championListSize)
+    qtermRowsCapped(queries, qIdCol, qTextCol, serveBatchCap) match {
+      case None =>
+        scoreQTerms(
+          spark.table(s"${table}_postings"),
+          spark.table(s"${table}_stats"), qt, k, k1, b,
+          prebuiltDf = Some(spark.table(s"${table}_df")),
+          championListSize = championListSize)
+      case Some(rows) =>
+        val qterms = spark.createDataFrame(
+          java.util.Arrays.asList(rows: _*), qt.schema)
+        val termIn = col("term").isin(rows.map(_.getString(1)).distinct.toSeq: _*)
+        scoreQTerms(
+          spark.table(s"${table}_postings").filter(termIn),
+          spark.table(s"${table}_stats"), qterms, k, k1, b,
+          prebuiltDf = Some(spark.table(s"${table}_df").filter(termIn)),
+          championListSize = championListSize)
     }
   }
 
@@ -559,43 +591,107 @@ object Bm25 {
     * block-max WAND kernel instead of the relational Σ qf·df join —
     * results are CONTRACTED bit-identical (same fixed-point
     * contributions, same (score desc, id) tie-break; the
-    * `text_bm25_wand` gate pins that equivalence), so callers serving a
-    * persisted index get WAND's bounded candidates (≤ P·nq·k forwarded
-    * rows) at the same answers. Keeps the serve path's two structural
-    * wins: postings/df scans carry the batch's vocabulary as an `isin`
-    * literal (bucket pruning + parquet pushdown — only query-term
-    * buckets are read), and df/stats are persisted lookups, never a
-    * corpus aggregate. Measured at the 10× serve shape (50k docs, 944
-    * doc-prefix queries, dev/ServeWandAb, equality-asserted then
-    * interleaved min-of-2): WAND 3.6 s vs relational 290 s — the
-    * relational arm's Σ qf·df join materializes ~1.9B candidate rows on
-    * that corpus (every query shares the 40-word head vocabulary),
-    * exactly the blow-up WAND's θ-pruned DAAT never builds. */
+    * `text_bm25_wand` gate pins that equivalence). Keeps the serve path's
+    * two structural wins: postings/df scans carry the batch's vocabulary
+    * as an `isin` literal (bucket pruning + parquet pushdown — only
+    * query-term buckets are read), and df/stats are persisted lookups,
+    * never a corpus aggregate.
+    *
+    * Three routes, chosen on exact counts, never on a Catalyst estimate:
+    *   - more than [[serveBatchCap]] `(query, term)` rows: no vocabulary
+    *     literal (it would be a million-entry In) — WAND's own chunked
+    *     over-cap route over the full index tables.
+    *   - Σ df over the batch's vocabulary ≤ [[serveBatchCap]] (the df
+    *     rows and the stats row land in one job, and Σ df is exactly the
+    *     number of postings the batch touches): driver-local WAND
+    *     ([[wandOnDriver]]) — one more job collects those postings, and the
+    *     result is a LocalRelation. A small batch over a persisted index
+    *     is bound by per-job cost, not data (the hybrid lookup's lexical
+    *     arm ran 10 jobs on the distributed route, 2 here).
+    *   - otherwise distributed WAND ([[searchWandOverPostings]]): one
+    *     doc-keyed shuffle, ≤ P·nq·k forwarded rows.
+    *
+    * Measured at the 10× serve shape (50k docs, 944 doc-prefix queries,
+    * dev/ServeWandAb, equality-asserted then interleaved min-of-2): WAND
+    * 3.6 s vs relational 290 s — the relational arm's Σ qf·df join
+    * materializes ~1.9B candidate rows on that corpus (every query shares
+    * the 40-word head vocabulary), exactly the blow-up WAND's θ-pruned
+    * DAAT never builds. */
   def searchFromIndexWand(spark: org.apache.spark.sql.SparkSession,
       table: String, queries: DataFrame, qIdCol: String, qTextCol: String,
       k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val qt = qtermsOf(queries, qIdCol, qTextCol)
-    val rows = qt.limit(serveBatchCap + 1).collect()
-    if (rows.length > serveBatchCap)
-      // over-cap batch: no vocabulary literal (it would be a
-      // million-entry In) — WAND's own chunked over-cap route applies
-      searchWandOverPostings(
-        spark.table(s"${table}_postings"),
-        spark.table(s"${table}_stats"), queries, qIdCol, qTextCol, k, k1, b,
-        prebuiltDf = Some(spark.table(s"${table}_df")))
-    else {
-      val vocab = rows.map(_.getString(1)).distinct.toSeq
-      val termIn = col("term").isin(vocab: _*)
-      searchWandOverPostings(
-        spark.table(s"${table}_postings").filter(termIn),
-        spark.table(s"${table}_stats"), queries, qIdCol, qTextCol, k, k1, b,
-        prebuiltDf = Some(spark.table(s"${table}_df").filter(termIn)),
-        precollectedQt = Some(rows))
+    val post = spark.table(s"${table}_postings")
+    val stats = spark.table(s"${table}_stats")
+    val dfTable = spark.table(s"${table}_df")
+    val cap = serveBatchCap
+    qtermRowsCapped(queries, qIdCol, qTextCol, cap) match {
+      case None =>
+        searchWandOverPostings(post, stats, queries, qIdCol, qTextCol,
+          k, k1, b, prebuiltDf = Some(dfTable))
+      case Some(qtRows) =>
+        val termIn = col("term").isin(qtRows.map(_.getString(1)).distinct.toSeq: _*)
+        // the vocabulary's df rows and the stats row (null term) in ONE
+        // job: a union, not a broadcast crossJoin (a broadcast is a job)
+        val (statRow, dfRows) = dfTable.filter(termIn)
+          .select(col("term"), col("df"), lit(null).cast("double").as("avgdl"))
+          .union(stats.select(lit(null).cast("string"), col("n_docs"), col("avgdl")))
+          .collect().partition(_.isNullAt(0))
+        val nDocs = statRow.head.getDouble(1)
+        if (dfRows.map(_.getDouble(1)).sum <= cap)
+          wandOnDriver(post, qtRows, queries.select(col(qIdCol)).schema.head,
+            dfRows.map(r => r.getString(0) -> idf(nDocs, r.getDouble(1))).toMap,
+            statRow.head.getDouble(2), k, k1, b)
+        else
+          searchWandOverPostings(post.filter(termIn), stats, queries,
+            qIdCol, qTextCol, k, k1, b, prebuiltDf = Some(dfTable.filter(termIn)))
     }
   }
 
-  /** max (query_id, term) rows [[searchFromIndex]] lands on the driver
-    * before routing the batch through the streaming plan instead */
+  /** WAND over postings collected to the driver: one job reads the
+    * postings of the terms in `idfs` (bucket-pruned by the `isin`
+    * literal), the unchanged [[contribFixed]] / [[WandKernel]] score every
+    * query in parallel on driver cores, and the top-k lands in a
+    * LocalRelation with [[searchWandOverPostings]]' output schema. Ranks
+    * follow the (score desc, doc_id asc) order. */
+  private def wandOnDriver(post: DataFrame, qtRows: Array[Row],
+      qidField: org.apache.spark.sql.types.StructField,
+      idfs: Map[String, Double], avgdl: Double,
+      k: Int, k1: Double, b: Double): DataFrame = {
+    import org.apache.spark.sql.types._
+    val postRows =
+      if (idfs.isEmpty) Array.empty[Row]
+      else postingCols(post.filter(col("term").isin(idfs.keys.toSeq: _*))).collect()
+    val lists: Map[String, WandPostings] = postRows.groupBy(_.getString(0)).map {
+      case (t, rs) =>
+        val sorted = rs.sortBy(_.getLong(1))
+        val termIdf = idfs(t)
+        t -> WandPostings(sorted.map(_.getLong(1)),
+          sorted.map(r => contribFixed(termIdf, r.getLong(2), r.getInt(3), avgdl, k1, b)),
+          blockSize = 64)
+    }
+    val (qids, qTerms) = denseQueries(qtRows, lists.contains)
+    val top = new Array[Array[(Long, Long)]](qids.length)
+    java.util.stream.IntStream.range(0, qids.length).parallel().forEach { qi =>
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      if (qTerms(qi).nonEmpty)
+        WandKernel.run(qTerms(qi).map(lists), k, (docId, sc) => out += ((docId, sc)))
+      top(qi) = out.sortWith((x, y) => x._2 > y._2 || (x._2 == y._2 && x._1 < y._1)).toArray
+    }
+    val rows = for {
+      qi <- qids.indices
+      ((docId, sc), r) <- top(qi).iterator.zipWithIndex
+    } yield Row(qids(qi), docId, r + 1, sc)
+    withScore(post.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(Seq(
+        StructField("query_id", qidField.dataType, qidField.nullable),
+        StructField("doc_id", LongType, nullable = false),
+        StructField("rank", IntegerType, nullable = false),
+        StructField("score_fixed", LongType, nullable = false)))))
+  }
+
+  /** max (query_id, term) rows the serve paths land on the driver before
+    * routing the batch through the streaming plan instead; also the max
+    * Σ df of postings [[searchFromIndexWand]] scores on the driver */
   def serveBatchCap: Int =
     sys.props.get("graft.bm25.serveBatchCap").map(_.toInt)
       .orElse(sys.env.get("GRAFT_BM25_SERVE_BATCH_CAP").map(_.toInt))

@@ -35,7 +35,10 @@ package graft.operators
   * doc's postings are co-located, every partition answers every query
   * over its local docs with a local θ, and only ≤ k rows per
   * (partition, query) survive to the global top-k. Candidate
-  * materialization never exceeds P·nq·k rows regardless of df.
+  * materialization never exceeds P·nq·k rows regardless of df. A small
+  * serve batch ([[Bm25.searchFromIndexWand]], Σ df under the cap) runs
+  * the same kernel on the driver instead: one query per driver thread
+  * over the full postings lists.
   */
 private[operators] final class WandPostings(
     val ids: Array[Long],      // doc ids, strictly ascending

@@ -42,11 +42,12 @@ class Bm25WandSpec extends AnyFunSuite {
         exact(corpus, queries, k = 3), s"blockSize=$bs")
   }
 
-  test("randomized skewed corpus: WAND ≡ exact across block sizes and k") {
-    // Zipf-ish vocabulary (a few stopword-like terms shared by most docs
-    // + a long tail) — the regime WAND's pruning and the tie-heavy
-    // fixed-point scores stress hardest
-    val rnd = new scala.util.Random(42)
+  /** Zipf-ish vocabulary (a few stopword-like terms shared by most docs
+    * + a long tail) — the regime WAND's pruning and the tie-heavy
+    * fixed-point scores stress hardest: 300 `(id, text)` docs and
+    * `nQueries` `(qid, qtext)` queries. */
+  private def skewedCorpus(seed: Int, nQueries: Int) = {
+    val rnd = new scala.util.Random(seed)
     val common = Vector("alpha", "beta", "gamma")
     val rare = (0 until 40).map(i => s"w$i").toVector
     val docs = (0L until 300L).map { i =>
@@ -57,13 +58,18 @@ class Bm25WandSpec extends AnyFunSuite {
       }
       (i, toks.mkString(" "))
     }.toDF("id", "text")
-    val queries = (0L until 25L).map { i =>
+    val queries = (0L until nQueries.toLong).map { i =>
       val n = 1 + rnd.nextInt(4)
       (1000L + i, (0 until n).map { _ =>
         if (rnd.nextBoolean()) common(rnd.nextInt(common.size))
         else rare(rnd.nextInt(rare.size))
       }.mkString(" "))
     }.toDF("qid", "qtext")
+    (docs, queries)
+  }
+
+  test("randomized skewed corpus: WAND ≡ exact across block sizes and k") {
+    val (docs, queries) = skewedCorpus(42, nQueries = 25)
     for (bs <- Seq(1, 3, 64); k <- Seq(1, 5)) {
       assert(wand(docs, queries, k = k, blockSize = bs) ==
         exact(docs, queries, k = k), s"blockSize=$bs k=$k")
@@ -147,6 +153,136 @@ class Bm25WandSpec extends AnyFunSuite {
     } finally old match {
       case Some(v) => sys.props(key) = v
       case None => sys.props -= key
+    }
+  }
+
+  /** build a `buildIndex` layout named `table`, run `body`, drop it */
+  private def withIndex[T](docs: org.apache.spark.sql.DataFrame, table: String)(
+      body: => T): T =
+    try {
+      Bm25.buildIndex(docs, "id", "text", table, buckets = 4)
+      body
+    } finally Seq("_postings", "_df", "_stats")
+      .foreach(sfx => spark.sql(s"DROP TABLE IF EXISTS $table$sfx"))
+
+  private def withCap[T](cap: Option[Int])(body: => T): T = {
+    val key = "graft.bm25.serveBatchCap"
+    val old = sys.props.get(key)
+    cap.foreach(c => sys.props(key) = c.toString)
+    try body finally old match {
+      case Some(v) => sys.props(key) = v
+      case None => sys.props -= key
+    }
+  }
+
+  /** Serves `queries` from `table` through the driver-local route (default
+    * cap) and through the distributed route (cap = the batch's (query,
+    * term) row count, which is below its Σ df), requires bit-identical rows
+    * and equal schemas, and returns the rows. */
+  private def serveBothRoutes(table: String,
+      queries: org.apache.spark.sql.DataFrame, k: Int) = {
+    import org.apache.spark.sql.functions._
+    val vocab = queries.select(explode(array_distinct(
+      split(trim(lower($"qtext")), "\\s+"))).as("term"))
+    val nQt = vocab.count()
+    val sumDf = spark.table(s"${table}_df")
+      .join(vocab.distinct(), "term").agg(sum("df")).head().getDouble(0)
+    assert(nQt < sumDf, s"fixture must separate the caps: $nQt rows vs Σ df $sumDf")
+    def serve(cap: Option[Int]) = withCap(cap) {
+      val res = Bm25.searchFromIndexWand(spark, table, queries, "qid", "qtext", k = k)
+      val local = res.queryExecution.optimizedPlan
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+      val rows = res.select("query_id", "doc_id", "rank", "score")
+        .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3)).toSeq
+      (local, res.schema, rows)
+    }
+    val (onDriver, driverSchema, driverRows) = serve(None)
+    val (distLocal, distSchema, distRows) = serve(Some(nQt.toInt))
+    assert(onDriver && !distLocal, "each cap must select its route")
+    assert(driverSchema == distSchema)
+    // doubles compared by bits: the fixed-point scores must be identical
+    assert(driverRows.map(r => r.copy(_4 = java.lang.Double.doubleToRawLongBits(r._4))) ==
+      distRows.map(r => r.copy(_4 = java.lang.Double.doubleToRawLongBits(r._4))))
+    driverRows
+  }
+
+  test("searchFromIndexWand: driver-local route ≡ distributed route, bit for bit") {
+    val corpus = Seq(
+      (1L, "the quick brown fox"),
+      (2L, "the lazy dog"),
+      (3L, "quick quick quick fox"),
+      (4L, "dog eats dog food"),
+      // byte-identical docs: every score ties and resolves by doc_id
+      (5L, "brown dog fox"),
+      (6L, "brown dog fox"),
+      (7L, "fox and dog and the brown hen")).toDF("id", "text")
+    val queries = Seq(
+      (10L, "quick fox"),
+      (20L, "dog Dog DOG fox dog"),    // repeated terms count once
+      (30L, "brown fox dog"),          // 5 and 6 tie
+      (40L, "absent_term zzz"),        // nothing in the corpus: no rows
+      (50L, "eats")).toDF("qid", "qtext") // k > its one match
+    withIndex(corpus, "wandix_routes") {
+      val got = serveBothRoutes("wandix_routes", queries, k = 5)
+      assert(got == exact(corpus, queries, k = 5))
+      assert(!got.exists(_._1 == 40L))
+      assert(got.filter(_._1 == 50L).map(_._2) == Seq(4L))
+      val q30 = got.filter(_._1 == 30L)
+      val tie = q30.filter(r => r._2 == 5L || r._2 == 6L)
+      assert(tie.map(_._2) == Seq(5L, 6L) && tie(0)._4 == tie(1)._4 &&
+        tie(1)._3 == tie(0)._3 + 1)
+    }
+    // a wider batch over the skewed corpus: head terms in most docs
+    val (docs, skewedQueries) = skewedCorpus(42, nQueries = 25)
+    withIndex(docs, "wandix_routes_skewed") {
+      val got = serveBothRoutes("wandix_routes_skewed", skewedQueries, k = 5)
+      assert(got.nonEmpty && got == exact(docs, skewedQueries, k = 5))
+    }
+  }
+
+  test("driver idf is the expression Spark evaluates, bit for bit") {
+    val rnd = new scala.util.Random(7)
+    val grid = for {
+      n <- Seq(1.0, 2.0, 3.0, 7.0, 100.0, 10000.0, 12345.0, 1e6, 3.1e7)
+      df <- (Seq(1.0, 2.0, n / 3, n / 2, n - 1, n) ++
+        Seq.fill(20)(1.0 + rnd.nextInt(n.toInt).toDouble)).map(math.floor).distinct
+      if df >= 1 && df <= n
+    } yield (n, df)
+    val frame = grid.toDF("n_docs", "df")
+    // folded over the LocalRelation (interpreted) and generated code
+    // after a shuffle: both must agree with the driver function
+    for (rel <- Seq(frame, frame.repartition(3))) {
+      val got = rel.select($"n_docs", $"df", Bm25.idfCol.as("idf"))
+        .as[(Double, Double, Double)].collect()
+      assert(got.length == grid.length)
+      got.foreach { case (n, df, sparkIdf) =>
+        assert(java.lang.Double.doubleToRawLongBits(Bm25.idf(n, df)) ==
+          java.lang.Double.doubleToRawLongBits(sparkIdf), s"n=$n df=$df")
+      }
+    }
+  }
+
+  test("searchFromIndexWand runs at most 3 Spark jobs on a small LocalRelation batch") {
+    // job counts do not depend on host load: a change that adds a job to
+    // the small-batch serve fails here
+    val (docs, batch) = skewedCorpus(7, nQueries = 4) // batch: a LocalRelation
+    withIndex(docs, "wandix_jobs") {
+      val sc = spark.sparkContext
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      org.apache.spark.ListenerBusDrain.drain(sc)
+      sc.addSparkListener(listener)
+      val rows = try {
+        val r = Bm25.searchFromIndexWand(spark, "wandix_jobs", batch, "qid", "qtext", k = 10)
+          .collect()
+        org.apache.spark.ListenerBusDrain.drain(sc)
+        r
+      } finally sc.removeSparkListener(listener)
+      assert(rows.nonEmpty)
+      assert(jobs.get <= 3, s"${jobs.get} Spark jobs for a 4-query serve")
     }
   }
 }
