@@ -1,0 +1,77 @@
+package graft.dev
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+
+import graft.operators.Bm25
+
+/** A/B of [[Bm25.searchFromIndexWand]]'s two under-cap routes — WAND on
+  * the driver vs distributed WAND — across Σ df (the postings a batch
+  * touches), to place the crossover [[Bm25.driverWandMaxPostings]]
+  * encodes. The corpus is `dir`'s documents replicated `f` times under
+  * fresh doc ids for each `f` in `scales`, so Σ df grows with `f` while the
+  * batches stay fixed: the `text_bm25_serve` batch (200-char prefixes of
+  * every 53rd doc) and its first `small` queries (the hybrid lookup's
+  * size). Per (scale, batch) it checks both routes return identical rows,
+  * then times them interleaved and prints the median of `reps` per route.
+  *
+  * Usage: runMain graft.dev.WandRouteAb [dir=/root/testdata/sf0.1]
+  *   [reps=7] [scales=1,2,4,8] [small=4]
+  */
+object WandRouteAb {
+  def main(args: Array[String]): Unit = {
+    val dir = args.lift(0).getOrElse("/root/testdata/sf0.1")
+    val reps = args.lift(1).map(_.toInt).getOrElse(7)
+    val scales = args.lift(2).getOrElse("1,2,4,8").split(",").map(_.toInt)
+    val small = args.lift(3).map(_.toInt).getOrElse(4)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    val docs = spark.read.parquet(s"$dir/documents.parquet").select("doc_id", "text")
+    val span = docs.agg(max("doc_id")).head().getLong(0) + 1
+    val gateBatch = docs.filter(col("doc_id") % 53 === 0)
+      .select(col("doc_id").as("qid"), substring(col("text"), 1, 200).as("qtext"))
+    // a LocalRelation, like the hybrid lookup's batch
+    val smallBatch = spark.createDataFrame(java.util.Arrays.asList(
+      gateBatch.orderBy("qid").limit(small).collect(): _*), gateBatch.schema)
+    val key = "graft.bm25.driverWandMaxPostings"
+    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
+
+    scales.foreach { f =>
+      val table = s"wand_route_ab_x$f"
+      val corpus = (0 until f).map(i => docs.withColumn("doc_id", col("doc_id") + i * span))
+        .reduce(_ unionByName _)
+      Bm25.ensureIndex(corpus, "doc_id", "text", table, buckets = 8)
+      def serve(queries: DataFrame, onDriver: Boolean): Array[org.apache.spark.sql.Row] = {
+        sys.props(key) = if (onDriver) Long.MaxValue.toString else "0"
+        try Bm25.searchFromIndexWand(spark, table, queries, "qid", "qtext", k = 5)
+          .select("query_id", "doc_id", "rank", "score").collect()
+        finally sys.props -= key
+      }
+      Seq("gate" -> gateBatch, "small" -> smallBatch).foreach { case (name, queries) =>
+        val vocab = queries.select(explode(array_distinct(
+          split(trim(lower(col("qtext"))), "\\s+"))).as("term")).distinct()
+        val nq = queries.count()
+        val sumDf = spark.table(s"${table}_df").join(vocab, "term")
+          .agg(sum("df")).head().getDouble(0).toLong
+        val a = serve(queries, onDriver = true).map(_.toString).sorted
+        val b = serve(queries, onDriver = false).map(_.toString).sorted
+        require(a.sameElements(b), s"routes diverged at scale $f, $name batch")
+        val times = (1 to reps).map { r =>
+          def t(onDriver: Boolean): Double = {
+            val t0 = System.nanoTime(); serve(queries, onDriver); (System.nanoTime() - t0) / 1e6
+          }
+          if (r % 2 == 1) { val d = t(true); (d, t(false)) }
+          else { val x = t(false); (t(true), x) }
+        }
+        println(f"[wandroute] scale=$f%2d $name%5s queries=$nq%4d sumDf=$sumDf%9d " +
+          f"driver=${median(times.map(_._1))}%8.1f ms " +
+          f"distributed=${median(times.map(_._2))}%8.1f ms")
+      }
+    }
+    spark.stop()
+  }
+}

@@ -140,22 +140,29 @@ object Bm25 {
       explode(array_distinct(Dedup.tokens(col(qTextCol)))).as("term"))
 
   /** The [[qtermsOf]] rows of a batch on the driver, or None when there are
-    * more than `cap` of them. The batch is tokenized as a Project and
-    * exploded HERE, not by a Spark Generate: over a LocalRelation batch the
-    * optimizer folds the Project (ConvertToLocalRelation), so the probe runs
-    * no job; a distributed batch costs one job over ≤ cap+1 queries. Every
-    * non-null text has at least one term, so more than `cap` queries is
-    * over the cap without counting further. */
-  private def qtermRowsCapped(queries: DataFrame, qIdCol: String,
+    * more than `cap` of them. A LocalRelation batch already lives on the
+    * driver: it is tokenized as a Project (which ConvertToLocalRelation
+    * folds, so no job runs) over at most cap+1 queries and exploded HERE —
+    * every non-null text has at least one term, so more than `cap` queries
+    * is over the cap without counting further. Any other batch keeps the
+    * Spark-side explode and collects at most cap+1 `(query, term)` rows, so
+    * a huge or corpus-shaped batch never lands whole on the driver. */
+  private[graft] def qtermRowsCapped(queries: DataFrame, qIdCol: String,
       qTextCol: String, cap: Int): Option[Array[Row]] = {
-    val qs = queries.select(col(qIdCol).as("query_id"),
+    val folded = queries.select(col(qIdCol).as("query_id"),
         array_distinct(Dedup.tokens(col(qTextCol))).as("terms"))
-      .limit(cap + 1).collect()
-    val rows = qs.iterator.filterNot(_.isNullAt(1)).flatMap { r =>
-      val id = r.get(0)
-      r.getSeq[String](1).iterator.map(t => Row(id, t))
-    }.take(cap + 1).toArray
-    if (qs.length > cap || rows.length > cap) None else Some(rows)
+      .limit(cap + 1)
+    val rows = folded.queryExecution.optimizedPlan match {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        val qs = folded.collect()
+        if (qs.length > cap) return None
+        qs.iterator.filterNot(_.isNullAt(1)).flatMap { r =>
+          val id = r.get(0)
+          r.getSeq[String](1).iterator.map(t => Row(id, t))
+        }.take(cap + 1).toArray
+      case _ => qtermsOf(queries, qIdCol, qTextCol).limit(cap + 1).collect()
+    }
+    if (rows.length > cap) None else Some(rows)
   }
 
   /** Lucene-style idf as a Spark expression over `(n_docs, df)` — the
@@ -354,7 +361,6 @@ object Bm25 {
       prebuiltDf: Option[DataFrame] = None,
       blockSize: Int = 64): DataFrame = {
     val spark = post.sparkSession
-    import org.apache.spark.sql.types._
     val qt = qtermsOf(queries, qIdCol, qTextCol)
     val qtRows = qtermRowsCapped(queries, qIdCol, qTextCol, serveBatchCap) match {
       case Some(rows) => rows
@@ -395,9 +401,8 @@ object Bm25 {
     // from the same one-row stats crossJoin the idf needs anyway), so the
     // corpus stats and the idf map land in ONE driver job instead of two
     // (r14 — per WAND call, and the hybrid gates make three such calls)
-    val vocab = qtRows.map(_.getString(1)).distinct.toSeq
     import spark.implicits._
-    val qvocabDf = vocab.toDF("term")
+    val qvocabDf = qtRows.map(_.getString(1)).distinct.toSeq.toDF("term")
     val dfRel = prebuiltDf
       .map(_.join(broadcast(qvocabDf), Seq("term"), "left_semi"))
       .getOrElse(post.join(broadcast(qvocabDf), Seq("term"), "left_semi")
@@ -405,18 +410,31 @@ object Bm25 {
     val idfRows = dfRel.crossJoin(broadcast(stats))
       .withColumn("idf", idfCol)
       .select("term", "idf", "avgdl").collect()
-    val idfMap: Map[String, Double] =
-      idfRows.map(r => r.getString(0) -> r.getDouble(1)).toMap
     // empty vocab ⇒ no postings match ⇒ avgdl is never read by a kernel
     val avgdl =
       if (idfRows.nonEmpty) idfRows(0).getDouble(2)
       else stats.collect()(0).getAs[Double]("avgdl")
+    wandDistributed(post, qtRows, qt.schema.head,
+      idfRows.map(r => r.getString(0) -> r.getDouble(1)).toMap, avgdl,
+      k, k1, b, blockSize)
+  }
 
+  /** Distributed WAND over the batch `qtRows` with its `idfs` and `avgdl`
+    * in hand: the vocabulary's postings are shuffled ONCE, keyed by doc,
+    * each partition scores every query over its docs ([[LocalWand]]) and
+    * forwards ≤ k rows per query — ≤ P·nq·k rows to the global top-k. */
+  private def wandDistributed(post: DataFrame, qtRows: Array[Row],
+      qidField: org.apache.spark.sql.types.StructField,
+      idfs: Map[String, Double], avgdl: Double,
+      k: Int, k1: Double, b: Double, blockSize: Int): DataFrame = {
+    val spark = post.sparkSession
+    import org.apache.spark.sql.types._
+    import spark.implicits._
     // only terms that exist in the corpus can contribute; the original
     // ids join back at the end from a broadcast-small map
-    val (qids, qTerms) = denseQueries(qtRows, idfMap.contains)
+    val (qids, qTerms) = denseQueries(qtRows, idfs.contains)
     val bcTerms = spark.sparkContext.broadcast(qTerms)
-    val bcIdf = spark.sparkContext.broadcast(idfMap)
+    val bcIdf = spark.sparkContext.broadcast(idfs)
     val bsz = blockSize
 
     // query-vocab postings, ONE shuffle: co-locate each doc's postings,
@@ -430,53 +448,24 @@ object Bm25 {
     // estimate clears cores × maxPartitionBytes and the plain keyed
     // repartition plans unchanged.
     val slim = Par.co(
-      postingCols(post.join(broadcast(qvocabDf), Seq("term"), "left_semi")),
+      postingCols(post.join(broadcast(idfs.keys.toSeq.toDF("term")),
+        Seq("term"), "left_semi")),
       col("doc_id"), minBytesPerTask = 16 * 1024L)
       .sortWithinPartitions("term", "doc_id")
 
     val local = slim.mapPartitions { it =>
-      val idf = bcIdf.value
-      val lists = new java.util.HashMap[String, WandPostings]()
-      var curTerm: String = null
-      var curIdf = 0.0
-      val idsB = scala.collection.mutable.ArrayBuilder.make[Long]
-      val cbB = scala.collection.mutable.ArrayBuilder.make[Long]
-      def flush(): Unit = if (curTerm != null) {
-        lists.put(curTerm, WandPostings(idsB.result(), cbB.result(), bsz))
-        idsB.clear(); cbB.clear()
-      }
-      it.foreach { r =>
-        val t = r.getString(0)
-        if (t != curTerm) { flush(); curTerm = t; curIdf = idf(t) }
-        idsB += r.getLong(1)
-        cbB += contribFixed(curIdf, r.getLong(2), r.getInt(3), avgdl, k1, b)
-      }
-      flush()
+      val scorer = new LocalWand(it, bcIdf.value, avgdl, k1, b, bsz)
       val qts = bcTerms.value
       val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
       var qi = 0
       while (qi < qts.length) {
-        val terms = qts(qi)
-        var present = 0
-        val pls = new Array[WandPostings](terms.length)
-        var ti = 0
-        while (ti < terms.length) {
-          val pl = lists.get(terms(ti))
-          if (pl != null) { pls(present) = pl; present += 1 }
-          ti += 1
-        }
-        if (present > 0) {
-          val q = qi // stable capture for the emit closure
-          WandKernel.run(java.util.Arrays.copyOf(pls, present), k,
-            (docId, sc) => out += ((q, docId, sc)))
-        }
+        val q = qi // stable capture for the emit closure
+        scorer.query(qts(qi), k, (docId, sc) => out += ((q, docId, sc)))
         qi += 1
       }
       out.iterator
     }.toDF("qidx", "doc_id", "score_fixed")
 
-    // original query ids join back from a broadcast-small local relation
-    val qidField = qt.schema.head
     val qidRows: java.util.List[Row] = java.util.Arrays.asList(
       qids.zipWithIndex.map { case (v, i) => Row(i, v) }: _*)
     val qidDf = spark.createDataFrame(qidRows, StructType(Seq(
@@ -488,6 +477,49 @@ object Bm25 {
         .orderBy(col("score_fixed").desc, col("doc_id"))))
       .filter(col("rank") <= k)
       .join(broadcast(qidDf), "qidx"))
+  }
+
+  /** The WAND scorer over one slice of the postings, shared by the
+    * distributed route (one per doc partition) and the driver route (one
+    * over every posting of the batch). `sorted` holds [[postingCols]] rows
+    * ordered by (term, doc_id); each term's list builds in one streaming
+    * pass with [[contribFixed]]. Read-only once built, so [[query]] may run
+    * on many threads at once. */
+  private final class LocalWand(sorted: Iterator[Row], idfs: Map[String, Double],
+      avgdl: Double, k1: Double, b: Double, blockSize: Int) {
+    private val lists = new java.util.HashMap[String, WandPostings]()
+    locally {
+      var curTerm: String = null
+      var curIdf = 0.0
+      val idsB = scala.collection.mutable.ArrayBuilder.make[Long]
+      val cbB = scala.collection.mutable.ArrayBuilder.make[Long]
+      def flush(): Unit = if (curTerm != null) {
+        lists.put(curTerm, WandPostings(idsB.result(), cbB.result(), blockSize))
+        idsB.clear(); cbB.clear()
+      }
+      sorted.foreach { r =>
+        val t = r.getString(0)
+        if (t != curTerm) { flush(); curTerm = t; curIdf = idfs(t) }
+        idsB += r.getLong(1)
+        cbB += contribFixed(curIdf, r.getLong(2), r.getInt(3), avgdl, k1, b)
+      }
+      flush()
+    }
+
+    /** The top-k of one query over this slice, each hit to
+      * `emit(doc_id, score_fixed)` in arbitrary order; terms without
+      * postings here are skipped. */
+    def query(terms: Array[String], k: Int, emit: (Long, Long) => Unit): Unit = {
+      var present = 0
+      val pls = new Array[WandPostings](terms.length)
+      var ti = 0
+      while (ti < terms.length) {
+        val pl = lists.get(terms(ti))
+        if (pl != null) { pls(present) = pl; present += 1 }
+        ti += 1
+      }
+      if (present > 0) WandKernel.run(java.util.Arrays.copyOf(pls, present), k, emit)
+    }
   }
 
   /** `(term, doc_id, tf, dl)` postings with the types the WAND kernel
@@ -548,7 +580,8 @@ object Bm25 {
     * lookups, and the postings/df scans carry an `isin` filter on the
     * batch's query-term vocabulary. The vocabulary is collected on the
     * driver first ([[qtermRowsCapped]]: no job over a LocalRelation batch,
-    * one over a distributed one — the query side is small by definition),
+    * a capped `(query, term)` collect over any other — the query side is
+    * small by definition),
     * because a literal In on the bucket column is what unlocks bucket
     * pruning + parquet pushdown: without it the scoring join would stream
     * every postings bucket per batch, which at corpus scale reads the
@@ -601,15 +634,16 @@ object Bm25 {
     *   - more than [[serveBatchCap]] `(query, term)` rows: no vocabulary
     *     literal (it would be a million-entry In) — WAND's own chunked
     *     over-cap route over the full index tables.
-    *   - Σ df over the batch's vocabulary ≤ [[serveBatchCap]] (the df
-    *     rows and the stats row land in one job, and Σ df is exactly the
-    *     number of postings the batch touches): driver-local WAND
-    *     ([[wandOnDriver]]) — one more job collects those postings, and the
-    *     result is a LocalRelation. A small batch over a persisted index
-    *     is bound by per-job cost, not data (the hybrid lookup's lexical
-    *     arm ran 10 jobs on the distributed route, 2 here).
-    *   - otherwise distributed WAND ([[searchWandOverPostings]]): one
-    *     doc-keyed shuffle, ≤ P·nq·k forwarded rows.
+    *   - Σ df over the batch's vocabulary ≤ [[driverWandMaxPostings]]
+    *     (the df rows and the stats row land in one job, and Σ df is
+    *     exactly the number of postings the batch touches): driver-local
+    *     WAND ([[wandOnDriver]]) — one more job collects those postings,
+    *     and the result is a LocalRelation. A small batch over a persisted
+    *     index is bound by per-job cost, not data (the hybrid lookup's
+    *     lexical arm ran 10 jobs before this route existed, 2 here).
+    *   - otherwise distributed WAND ([[wandDistributed]]) over the probe's
+    *     `(query, term)` rows and the idf of the df rows already in hand:
+    *     one doc-keyed shuffle, ≤ P·nq·k forwarded rows.
     *
     * Measured at the 10× serve shape (50k docs, 944 doc-prefix queries,
     * dev/ServeWandAb, equality-asserted then interleaved min-of-2): WAND
@@ -623,8 +657,7 @@ object Bm25 {
     val post = spark.table(s"${table}_postings")
     val stats = spark.table(s"${table}_stats")
     val dfTable = spark.table(s"${table}_df")
-    val cap = serveBatchCap
-    qtermRowsCapped(queries, qIdCol, qTextCol, cap) match {
+    qtermRowsCapped(queries, qIdCol, qTextCol, serveBatchCap) match {
       case None =>
         searchWandOverPostings(post, stats, queries, qIdCol, qTextCol,
           k, k1, b, prebuiltDf = Some(dfTable))
@@ -637,22 +670,23 @@ object Bm25 {
           .union(stats.select(lit(null).cast("string"), col("n_docs"), col("avgdl")))
           .collect().partition(_.isNullAt(0))
         val nDocs = statRow.head.getDouble(1)
-        if (dfRows.map(_.getDouble(1)).sum <= cap)
-          wandOnDriver(post, qtRows, queries.select(col(qIdCol)).schema.head,
-            dfRows.map(r => r.getString(0) -> idf(nDocs, r.getDouble(1))).toMap,
-            statRow.head.getDouble(2), k, k1, b)
+        val avgdl = statRow.head.getDouble(2)
+        val idfs = dfRows.map(r => r.getString(0) -> idf(nDocs, r.getDouble(1))).toMap
+        val qidField = queries.select(col(qIdCol)).schema.head
+        if (dfRows.map(_.getDouble(1)).sum <= driverWandMaxPostings)
+          wandOnDriver(post, qtRows, qidField, idfs, avgdl, k, k1, b)
         else
-          searchWandOverPostings(post.filter(termIn), stats, queries,
-            qIdCol, qTextCol, k, k1, b, prebuiltDf = Some(dfTable.filter(termIn)))
+          wandDistributed(post.filter(termIn), qtRows, qidField, idfs, avgdl,
+            k, k1, b, blockSize = 64)
     }
   }
 
   /** WAND over postings collected to the driver: one job reads the
     * postings of the terms in `idfs` (bucket-pruned by the `isin`
-    * literal), the unchanged [[contribFixed]] / [[WandKernel]] score every
-    * query in parallel on driver cores, and the top-k lands in a
-    * LocalRelation with [[searchWandOverPostings]]' output schema. Ranks
-    * follow the (score desc, doc_id asc) order. */
+    * literal), one [[LocalWand]] over all of them scores every query in
+    * parallel on driver cores, and the top-k lands in a LocalRelation with
+    * [[wandDistributed]]' output schema. Ranks follow the
+    * (score desc, doc_id asc) order. */
   private def wandOnDriver(post: DataFrame, qtRows: Array[Row],
       qidField: org.apache.spark.sql.types.StructField,
       idfs: Map[String, Double], avgdl: Double,
@@ -661,20 +695,16 @@ object Bm25 {
     val postRows =
       if (idfs.isEmpty) Array.empty[Row]
       else postingCols(post.filter(col("term").isin(idfs.keys.toSeq: _*))).collect()
-    val lists: Map[String, WandPostings] = postRows.groupBy(_.getString(0)).map {
-      case (t, rs) =>
-        val sorted = rs.sortBy(_.getLong(1))
-        val termIdf = idfs(t)
-        t -> WandPostings(sorted.map(_.getLong(1)),
-          sorted.map(r => contribFixed(termIdf, r.getLong(2), r.getInt(3), avgdl, k1, b)),
-          blockSize = 64)
-    }
-    val (qids, qTerms) = denseQueries(qtRows, lists.contains)
+    java.util.Arrays.sort(postRows, (x: Row, y: Row) => {
+      val c = x.getString(0).compareTo(y.getString(0))
+      if (c != 0) c else java.lang.Long.compare(x.getLong(1), y.getLong(1))
+    })
+    val scorer = new LocalWand(postRows.iterator, idfs, avgdl, k1, b, blockSize = 64)
+    val (qids, qTerms) = denseQueries(qtRows, idfs.contains)
     val top = new Array[Array[(Long, Long)]](qids.length)
     java.util.stream.IntStream.range(0, qids.length).parallel().forEach { qi =>
       val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      if (qTerms(qi).nonEmpty)
-        WandKernel.run(qTerms(qi).map(lists), k, (docId, sc) => out += ((docId, sc)))
+      scorer.query(qTerms(qi), k, (docId, sc) => out += ((docId, sc)))
       top(qi) = out.sortWith((x, y) => x._2 > y._2 || (x._2 == y._2 && x._1 < y._1)).toArray
     }
     val rows = for {
@@ -689,9 +719,20 @@ object Bm25 {
         StructField("score_fixed", LongType, nullable = false)))))
   }
 
+  /** max Σ df (postings touched) of a batch [[searchFromIndexWand]] scores
+    * on the driver; above it the batch takes distributed WAND. The routes
+    * meet between ~350k and ~460k postings (dev/WandRouteAb, 4 cores; the
+    * distributed route wins at ~930k), and every posting of a driver-route
+    * batch sits on the driver heap, so the limit is set below that.
+    * `graft.bm25.driverWandMaxPostings` overrides it for route tests and
+    * the distributed-route Verify pass (0 forces every batch onto the
+    * distributed route). */
+  def driverWandMaxPostings: Long =
+    sys.props.get("graft.bm25.driverWandMaxPostings").map(_.toLong)
+      .getOrElse(200_000L)
+
   /** max (query_id, term) rows the serve paths land on the driver before
-    * routing the batch through the streaming plan instead; also the max
-    * Σ df of postings [[searchFromIndexWand]] scores on the driver */
+    * routing the batch through the streaming plan instead */
   def serveBatchCap: Int =
     sys.props.get("graft.bm25.serveBatchCap").map(_.toInt)
       .orElse(sys.env.get("GRAFT_BM25_SERVE_BATCH_CAP").map(_.toInt))

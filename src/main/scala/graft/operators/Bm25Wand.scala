@@ -36,7 +36,8 @@ package graft.operators
   * over its local docs with a local θ, and only ≤ k rows per
   * (partition, query) survive to the global top-k. Candidate
   * materialization never exceeds P·nq·k rows regardless of df. A small
-  * serve batch ([[Bm25.searchFromIndexWand]], Σ df under the cap) runs
+  * serve batch ([[Bm25.searchFromIndexWand]], Σ df under
+  * [[Bm25.driverWandMaxPostings]]) runs
   * the same kernel on the driver instead: one query per driver thread
   * over the full postings lists.
   */

@@ -165,30 +165,24 @@ class Bm25WandSpec extends AnyFunSuite {
     } finally Seq("_postings", "_df", "_stats")
       .foreach(sfx => spark.sql(s"DROP TABLE IF EXISTS $table$sfx"))
 
-  private def withCap[T](cap: Option[Int])(body: => T): T = {
-    val key = "graft.bm25.serveBatchCap"
+  /** runs `body` with system property `key` set to `value` (unset when None) */
+  private def withProp[T](key: String, value: Option[String])(body: => T): T = {
     val old = sys.props.get(key)
-    cap.foreach(c => sys.props(key) = c.toString)
+    value.foreach(v => sys.props(key) = v)
     try body finally old match {
       case Some(v) => sys.props(key) = v
       case None => sys.props -= key
     }
   }
 
+  private val driverMaxKey = "graft.bm25.driverWandMaxPostings"
+
   /** Serves `queries` from `table` through the driver-local route (default
-    * cap) and through the distributed route (cap = the batch's (query,
-    * term) row count, which is below its Σ df), requires bit-identical rows
-    * and equal schemas, and returns the rows. */
+    * Σ df limit) and through the distributed route (limit 0), requires
+    * bit-identical rows and equal schemas, and returns the rows. */
   private def serveBothRoutes(table: String,
       queries: org.apache.spark.sql.DataFrame, k: Int) = {
-    import org.apache.spark.sql.functions._
-    val vocab = queries.select(explode(array_distinct(
-      split(trim(lower($"qtext")), "\\s+"))).as("term"))
-    val nQt = vocab.count()
-    val sumDf = spark.table(s"${table}_df")
-      .join(vocab.distinct(), "term").agg(sum("df")).head().getDouble(0)
-    assert(nQt < sumDf, s"fixture must separate the caps: $nQt rows vs Σ df $sumDf")
-    def serve(cap: Option[Int]) = withCap(cap) {
+    def serve(limit: Option[String]) = withProp(driverMaxKey, limit) {
       val res = Bm25.searchFromIndexWand(spark, table, queries, "qid", "qtext", k = k)
       val local = res.queryExecution.optimizedPlan
         .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
@@ -197,8 +191,8 @@ class Bm25WandSpec extends AnyFunSuite {
       (local, res.schema, rows)
     }
     val (onDriver, driverSchema, driverRows) = serve(None)
-    val (distLocal, distSchema, distRows) = serve(Some(nQt.toInt))
-    assert(onDriver && !distLocal, "each cap must select its route")
+    val (distLocal, distSchema, distRows) = serve(Some("0"))
+    assert(onDriver && !distLocal, "each limit must select its route")
     assert(driverSchema == distSchema)
     // doubles compared by bits: the fixed-point scores must be identical
     assert(driverRows.map(r => r.copy(_4 = java.lang.Double.doubleToRawLongBits(r._4))) ==
@@ -262,27 +256,72 @@ class Bm25WandSpec extends AnyFunSuite {
     }
   }
 
-  test("searchFromIndexWand runs at most 3 Spark jobs on a small LocalRelation batch") {
+  /** Spark jobs `body` starts, counted by a listener */
+  private def jobsOf[T](body: => T): (Int, T) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.ListenerBusDrain.drain(sc)
+      (jobs.get, r)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("searchFromIndexWand job counts on a small batch, per route") {
     // job counts do not depend on host load: a change that adds a job to
-    // the small-batch serve fails here
+    // a small-batch serve fails here
     val (docs, batch) = skewedCorpus(7, nQueries = 4) // batch: a LocalRelation
     withIndex(docs, "wandix_jobs") {
-      val sc = spark.sparkContext
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      org.apache.spark.ListenerBusDrain.drain(sc)
-      sc.addSparkListener(listener)
-      val rows = try {
-        val r = Bm25.searchFromIndexWand(spark, "wandix_jobs", batch, "qid", "qtext", k = 10)
-          .collect()
-        org.apache.spark.ListenerBusDrain.drain(sc)
-        r
-      } finally sc.removeSparkListener(listener)
+      def serve(q: org.apache.spark.sql.DataFrame) = jobsOf(
+        Bm25.searchFromIndexWand(spark, "wandix_jobs", q, "qid", "qtext", k = 10)
+          .collect())
+      val (driverJobs, rows) = serve(batch)
       assert(rows.nonEmpty)
-      assert(jobs.get <= 3, s"${jobs.get} Spark jobs for a 4-query serve")
+      assert(driverJobs <= 3, s"$driverJobs Spark jobs for a 4-query driver-route serve")
+      // Σ df above the limit: the distributed route reuses the probe's
+      // (query, term) rows and the df/stats rows it already collected, so
+      // it neither re-tokenizes the batch nor collects the idf again (5
+      // jobs; 8 when this route re-entered searchWandOverPostings)
+      val (distJobs, distRows) = withProp(driverMaxKey, Some("0"))(serve(batch))
+      assert(distRows.toSet == rows.toSet)
+      assert(distJobs <= 5, s"$distJobs Spark jobs for a 4-query distributed-route serve")
+      // a shuffled batch adds only its bounded (query, term) collect: the
+      // batch's shuffle and at most two take jobs
+      val spread = batch.repartition(2)
+      val (spreadJobs, _) = withProp(driverMaxKey, Some("0"))(serve(spread))
+      assert(spreadJobs <= distJobs + 3,
+        s"$spreadJobs Spark jobs for a 2-partition distributed-route serve")
+    }
+  }
+
+  test("a query wider than the cap: bounded probe, exact answers on every serve path") {
+    // 60 distinct terms in ONE query against a cap of 10: the probe must
+    // report over-cap, and every serve path must still answer exactly
+    val wide = Seq((99L, (0 until 60).map(i => s"tok$i").mkString(" ")))
+      .toDF("qid", "qtext")
+    val corpus = Seq((1L, "tok1 tok2 tok3"), (2L, "tok4 tok5"),
+      (3L, "tok1 tok59"), (4L, "other words")).toDF("id", "text")
+    val want = exact(corpus, wide, k = 2)
+    assert(want.nonEmpty)
+    withIndex(corpus, "wandix_wide") {
+      withProp("graft.bm25.serveBatchCap", Some("10")) {
+        for (batch <- Seq(wide, wide.repartition(2))) {
+          assert(Bm25.qtermRowsCapped(batch, "qid", "qtext", 10).isEmpty)
+          assert(Bm25.qtermRowsCapped(batch, "qid", "qtext", 60).map(_.length)
+            .contains(60))
+          for (serve <- Seq[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame](
+              Bm25.searchFromIndexWand(spark, "wandix_wide", _, "qid", "qtext", k = 2),
+              Bm25.searchFromIndex(spark, "wandix_wide", _, "qid", "qtext", k = 2)))
+            assert(serve(batch).select("query_id", "doc_id", "rank", "score")
+              .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3)).toSeq == want)
+        }
+      }
     }
   }
 }
