@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** The engine's modular index/search split, mirroring the reference's
   * `BaseIndexer` / `BaseSearcher` / registry design (modular.py:28-106) in
@@ -220,8 +221,9 @@ final case class BruteForceIndexer() extends Indexer {
 
 /** Flat scan searcher = the exact kNN join (modular.py:336-387); below
   * the LocalScan cap AND the per-batch flop budget the scan runs
-  * driver-core-parallel on the memoized collected table — same kernel
-  * arithmetic, bit-identical results. Above the flop budget the batch is
+  * driver-core-parallel on the memoized collected table
+  * ([[KnnJoin.scanOnDriver]]) — same kernel arithmetic, bit-identical
+  * results. Above the flop budget the batch is
   * compute-bound, not dispatch-bound: job dispatch is noise there, and on
   * a real cluster the distributed scan holds every executor core while
   * the driver kernel is capped at one machine (the budget default sits
@@ -229,18 +231,11 @@ final case class BruteForceIndexer() extends Indexer {
 final case class LinearSearcher(metric: String,
     strided: Boolean = false) extends Searcher {
   def search(artifact: IndexArtifact, queries: DataFrame, k: Int): DataFrame = {
-    // flop gate from the cheap memoized (count, width) probe BEFORE any
-    // collect: a compute-bound batch must not pay (or pin) a full table
-    // collection it will never scan
-    val plan = for {
-      mode <- LocalScan.metricMode(metric)
-      if LocalScan.enabled
-      (qids, qVecs) = LocalScan.queryVecsAlways(queries)
-      (n, dim) <- LocalScan.payloadStats(artifact.data, "vector", bytesPerUnit = 4)
-      if qids.length.toLong * n * dim <= LocalScan.fullScanFlopCap
-      vt <- LocalScan.vecTable(artifact.data, ivf = false)
-    } yield LocalScan.scanVecsFull(
-      artifact.data.sparkSession, vt, qids, qVecs, k, mode, strided = strided)
-    plan.getOrElse(KnnJoin.knnJoin(queries, artifact.data, k, metric))
+    // any query batch under the LocalScan row cap is collected (memoized
+    // per instance); the gate is KnnJoin's shared driver route
+    val q = queries.select(col("qid").cast("long").as("qid"), col("vector"))
+    KnnJoin.scanOnDriver(q, LocalScan.queryVecs(queries), artifact.data, k,
+      metric, strided)
+      .getOrElse(KnnJoin.knnJoinDistributed(q, artifact.data, k, metric))
   }
 }

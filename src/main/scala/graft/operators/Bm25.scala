@@ -152,16 +152,15 @@ object Bm25 {
     val folded = queries.select(col(qIdCol).as("query_id"),
         array_distinct(Dedup.tokens(col(qTextCol))).as("terms"))
       .limit(cap + 1)
-    val rows = folded.queryExecution.optimizedPlan match {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+    val rows =
+      if (LocalScan.onDriver(folded)) {
         val qs = folded.collect()
         if (qs.length > cap) return None
         qs.iterator.filterNot(_.isNullAt(1)).flatMap { r =>
           val id = r.get(0)
           r.getSeq[String](1).iterator.map(t => Row(id, t))
         }.take(cap + 1).toArray
-      case _ => qtermsOf(queries, qIdCol, qTextCol).limit(cap + 1).collect()
-    }
+      } else qtermsOf(queries, qIdCol, qTextCol).limit(cap + 1).collect()
     if (rows.length > cap) None else Some(rows)
   }
 

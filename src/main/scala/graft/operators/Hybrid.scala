@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -15,10 +17,13 @@ import org.apache.spark.sql.functions._
   * Scale shape: each arm is already a per-query top-k relation (≤
   * n_queries·k rows — the arms do the 100 TB heavy lifting with their own
   * operators: [[Bm25]] never reshuffles the corpus, [[KnnJoin]] scans the
-  * base once), so fusion is one small shuffle over
+  * base once), so distributed fusion is one small shuffle over
   * O(n_queries · k · n_arms) rows, INDEPENDENT of corpus size, followed
   * by the bounded-heap top-k. Adding an arm adds a union branch, not a
-  * corpus pass.
+  * corpus pass. When every arm's contribution plan is a LocalRelation
+  * (the arms' rows are already on the driver — an exact plan test) the
+  * same sum and top-k run on the driver instead ([[fuseOnDriver]]): no
+  * Spark job, the same rows, ranks, score bits and schema.
   *
   * Determinism: contributions are fixed-point longs
   * (`round(1e12 / (k0+rank))`) so the fused score is an associative
@@ -57,16 +62,58 @@ object Hybrid {
         col("id").cast("long").as("id"),
         round(lit(w * ScoreScale) / (lit(k0.toDouble) + col("rank").cast("double")), 0)
           .cast("long").as("__c"))
-    }.reduce(_ union _)
-    val fused = contribs
-      .groupBy(col("qid"), col("id"))
-      .agg(sum(col("__c")).as("__f"))
-    // bounded-heap top-k on the negated fixed score: (dist asc, id asc)
-    // == (score desc, id asc); |f| ≤ n_arms·1.7e10 is double-exact
-    KnnJoin.topKExploded(
+    }
+    // (qid, rank, id, dist) with dist = -Σ contributions: (dist asc,
+    // id asc) == (score desc, id asc); |f| ≤ n_arms·1.7e10 is double-exact
+    val ranked = fuseOnDriver(contribs, k).getOrElse {
+      val fused = contribs.reduce(_ union _)
+        .groupBy(col("qid"), col("id"))
+        .agg(sum(col("__c")).as("__f"))
+      KnnJoin.topKExploded(
         fused.select(col("qid"), col("id"), negate(col("__f")).cast("double").as("__d")),
         col("id"), col("__d"), k)
-      .select(col("qid"), col("rank"), col("id"),
-        round(negate(col("dist")) / lit(ScoreScale), 6).as("rrf"))
+    }
+    ranked.select(col("qid"), col("rank"), col("id"),
+      round(negate(col("dist")) / lit(ScoreScale), 6).as("rrf"))
+  }
+
+  /** The fusion's (qid, rank, id, dist) relation computed on the driver,
+    * or None to keep the distributed plan. Applies when the LocalScan fast
+    * path is enabled, k ≥ 1, and every contribution plan (the arm with
+    * its `round(w·S/(k0+rank))` projection, which folds onto the arm's
+    * LocalRelation) is a LocalRelation, so collecting them runs no Spark
+    * job. The contributions are summed per (qid, id) as exact longs and
+    * each qid keeps the k best of (-Σ as double, id) in the
+    * [[BoundedTopK]] order the distributed [[TopKByDist]] uses. A null
+    * qid, id or contribution, or a sum that overflows a long, keeps the
+    * distributed plan, whose `sum` and grouping define those cases. The
+    * qid column is nullable iff some arm's is (the union's nullability). */
+  private def fuseOnDriver(contribs: Seq[DataFrame], k: Int): Option[DataFrame] = {
+    if (!LocalScan.enabled || k < 1 || !contribs.forall(LocalScan.onDriver))
+      return None
+    val rows = contribs.flatMap(_.collect())
+    if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)))
+      return None
+    // qid → id → Σ contributions
+    val sums = mutable.LongMap.empty[mutable.LongMap[Long]]
+    val it = rows.iterator
+    while (it.hasNext) {
+      val r = it.next()
+      val perQ = sums.getOrElseUpdate(r.getLong(0), mutable.LongMap.empty[Long])
+      val id = r.getLong(1)
+      perQ(id) =
+        try Math.addExact(perQ.getOrElse(id, 0L), r.getLong(2))
+        catch { case _: ArithmeticException => return None }
+    }
+    if (sums.valuesIterator.exists(_.valuesIterator.contains(Long.MinValue)))
+      return None // -f overflows
+    val qids = sums.keys.toArray.sorted
+    val heaps = qids.map { q =>
+      val h = new BoundedTopK(k)
+      sums(q).foreach { case (id, f) => h.insert(id, (-f).toDouble) }
+      h
+    }
+    Some(LocalScan.resultDf(contribs.head.sparkSession, qids, heaps,
+      LocalScan.resultSchemaWith(contribs.exists(_.schema("qid").nullable))))
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, StructType}
 
 import graft.functions.VectorFunctions
 
@@ -25,6 +26,15 @@ import graft.functions.VectorFunctions
   *    query before the single small shuffle on qid (vs a Window sort which
   *    would shuffle every candidate row). At 100 TB the shuffle volume is
   *    O(n_queries · k · partitions), independent of base row count.
+  *
+  * Driver route ([[scanOnDriver]]): a query batch that is already on the
+  * driver — its optimized plan is a LocalRelation, an exact test — is
+  * scanned there against the base's memoized collected table
+  * ([[LocalScan.vecTable]]) when the base passes the LocalScan caps. The
+  * kernels replicate the codegen distance arithmetic and the (dist, id)
+  * heap order, so rows, ranks, distance bits and the result schema equal
+  * the distributed plan's. A repeated small batch against one base then
+  * runs no Spark job after the first (which collects the table).
   */
 object KnnJoin {
 
@@ -79,7 +89,9 @@ object KnnJoin {
     } else agg
   }
 
-  /** Exploded result: (qid, rank, id, dist), rank 1-based by (dist, id). */
+  /** Exploded result: (qid, rank, id, dist), rank 1-based by (dist, id).
+    * A LocalRelation query batch over a base with the default column
+    * names takes the driver route ([[scanOnDriver]]) when it applies. */
   def knnJoin(
       queries: DataFrame,
       base: DataFrame,
@@ -89,15 +101,78 @@ object KnnJoin {
       queryVecCol: String = "vector",
       baseIdCol: String = "id",
       baseVecCol: String = "vector"): DataFrame = {
-    knnJoinAgg(queries, base, k, metric, queryIdCol, queryVecCol,
-      baseIdCol, baseVecCol)
+    val q = queries.select(col(queryIdCol).cast("long").as("qid"),
+      col(queryVecCol).as("vector"))
+    // the base's collected table is memoized by DataFrame identity, so
+    // only a base read as-is (no per-call rename) can take the route
+    val local =
+      if (baseIdCol != "id" || baseVecCol != "vector") None
+      else scanOnDriver(q,
+        if (LocalScan.onDriver(q)) LocalScan.queryArrays(q.collect()) else None,
+        base, k, metric)
+    local.getOrElse(knnJoinDistributed(q, base, k, metric, baseIdCol, baseVecCol))
+  }
+
+  /** [[knnJoin]]'s distributed plan over a `(qid: long, vector)` batch:
+    * [[knnJoinAgg]] exploded. */
+  private[operators] def knnJoinDistributed(
+      q: DataFrame,
+      base: DataFrame,
+      k: Int,
+      metric: String,
+      baseIdCol: String = "id",
+      baseVecCol: String = "vector"): DataFrame =
+    knnJoinAgg(q, base, k, metric, "qid", "vector", baseIdCol, baseVecCol)
       .select(col("qid"), posexplode(col("nn")).as(Seq("__pos", "__nn")))
       .select(
         col("qid"),
         (col("__pos") + 1).cast("int").as("rank"),
         col("__nn.id").as("id"),
         col("__nn.dist").as("dist"))
-  }
+
+  /** The exact flat scan on the driver, shared by [[knnJoin]] and
+    * [[LinearSearcher]]; None keeps the distributed plan. `q` is the
+    * batch projected to `(qid: long, vector)` (it supplies the vector
+    * type and the qid nullability of the result schema); `batch` is its
+    * rows on the driver, sorted by qid ([[LocalScan.queryArrays]]), or
+    * None. The route applies when
+    *  - the fast path is enabled, the metric has a driver kernel
+    *    ([[LocalScan.metricMode]]) and k ≥ 1;
+    *  - both vector columns are `array<float>`;
+    *  - the batch holds no null qid or vector and no repeated qid (the
+    *    distributed plan merges repeated qids into one top-k; the driver
+    *    kernel would rank each row on its own);
+    *  - the base passes [[LocalScan.payloadStats]] +
+    *    [[LocalScan.fullScanFlopCap]], then [[LocalScan.vecTable]] (which
+    *    declines null rows and ragged dims), and every query has the
+    *    base's dim.
+    * `strided` selects LinearSearcher's opt-in FAISS-regime kernels. */
+  private[operators] def scanOnDriver(
+      q: DataFrame,
+      batch: => Option[(Array[Long], Array[Array[Float]])],
+      base: DataFrame,
+      k: Int,
+      metric: String,
+      strided: Boolean = false): Option[DataFrame] =
+    for {
+      mode <- LocalScan.metricMode(metric)
+      if LocalScan.enabled && k >= 1 &&
+        floatVectors(q.schema) && floatVectors(base.schema)
+      (qids, qVecs) <- batch
+      if (1 until qids.length).forall(i => qids(i) != qids(i - 1))
+      (n, dim) <- LocalScan.payloadStats(base, "vector", bytesPerUnit = 4)
+      if qids.length.toLong * n * dim <= LocalScan.fullScanFlopCap
+      vt <- LocalScan.vecTable(base, ivf = false)
+      if vt.n == 0 || qVecs.forall(_.length == vt.dim)
+    } yield LocalScan.scanVecsFull(base.sparkSession, vt, qids, qVecs, k, mode,
+      strided, qidNullable = q.schema("qid").nullable)
+
+  /** the `vector` field is `array<float>`, the type the driver kernels read */
+  private def floatVectors(schema: StructType): Boolean =
+    schema.fields.exists(f => f.name == "vector" && (f.dataType match {
+      case ArrayType(FloatType, _) => true
+      case _ => false
+    }))
 
   /** Shared result tail: scored (qid, id-ish, dist-ish) rows → global
     * top-k per query via the bounded-heap aggregate, exploded to the

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Driver-local batch-search fast path — the FAISS client-memory regime
@@ -153,14 +153,29 @@ object LocalScan {
   def memoized[T <: AnyRef](key: AnyRef)(compute: => Option[T]): Option[T] =
     if (!enabled) None else cached(key)(compute)
 
-  private def collectQueryRows(queries: DataFrame): (Array[Long], Array[Array[Float]]) = {
-    val rows = queries
-      .select(col("qid").cast("long"), col("vector"))
-      .collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
-      .sortBy(_._1)
-    (rows.map(_._1), rows.map(_._2))
-  }
+  private def collectQueryRows(queries: DataFrame): Option[(Array[Long], Array[Array[Float]])] =
+    queryArrays(queries.select(col("qid").cast("long"), col("vector")).collect())
+
+  /** `(qid: long, vector)` rows → (qids ascending, vectors aligned by
+    * qidx); None when a qid or a vector is null. The distributed plans
+    * skip such a row (its distance is null), which the driver kernels
+    * cannot mirror, so callers keep the distributed plan for it. */
+  def queryArrays(rows: Array[Row]): Option[(Array[Long], Array[Array[Float]])] =
+    if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
+    else {
+      val sorted = rows.map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
+        .sortBy(_._1)
+      Some((sorted.map(_._1), sorted.map(_._2)))
+    }
+
+  /** True when the optimized plan of `df` is a LocalRelation: its rows are
+    * already on the driver, and `collect()` returns them without running
+    * a Spark job (`LocalTableScanExec.executeCollect`). A Project or
+    * Filter over a LocalRelation folds into one (ConvertToLocalRelation).
+    * The test is exact, not a size estimate. */
+  def onDriver(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
 
   /** Catalyst-estimate smallness gate (same shape as
     * IvfModel.boundedVecSample): below cores × maxPartitionBytes a probe
@@ -175,8 +190,9 @@ object LocalScan {
   }
 
   /** Queries collected once per queries-DataFrame instance: (qids sorted
-    * ascending, vectors aligned by qidx). None above [[queryRowCap]] or
-    * with the fast path disabled. Memoization freezes the batch against
+    * ascending, vectors aligned by qidx). None above [[queryRowCap]],
+    * with the fast path disabled, or when a qid or a vector is null
+    * ([[queryArrays]]). Memoization freezes the batch against
     * THIS DataFrame instance: a lazy source whose underlying files
     * change between searches of the same object returns the first
     * collection — re-plan the DataFrame (or disable the fast path) for
@@ -195,16 +211,10 @@ object LocalScan {
       if (smallEstimate(queries) && queryRowCap < Int.MaxValue) {
         val probe = queries.select(col("qid").cast("long"), col("vector"))
           .limit(queryRowCap.toInt + 1).collect()
-        if (probe.length > queryRowCap) None
-        else {
-          val rows = probe
-            .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
-            .sortBy(_._1)
-          Some((rows.map(_._1), rows.map(_._2)))
-        }
+        if (probe.length > queryRowCap) None else queryArrays(probe)
       }
       else if (queries.count() > queryRowCap) None
-      else Some(collectQueryRows(queries))
+      else collectQueryRows(queries)
     }
 
   /** [[queryVecs]] bounded by an explicit row cap for callers whose
@@ -216,13 +226,7 @@ object LocalScan {
     else cached[(Array[Long], Array[Array[Float]])](queries) {
       val probe = queries.select(col("qid").cast("long"), col("vector"))
         .limit(cap + 1).collect()
-      if (probe.length > cap) None
-      else {
-        val rows = probe
-          .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
-          .sortBy(_._1)
-        Some((rows.map(_._1), rows.map(_._2)))
-      }
+      if (probe.length > cap) None else queryArrays(probe)
     }
 
   /** [[queryVecs]] with the pre-existing unconditional-collect behavior
@@ -230,7 +234,8 @@ object LocalScan {
     * query batch per search before this module existed; above the memo
     * cap they keep doing exactly that. */
   def queryVecsAlways(queries: DataFrame): (Array[Long], Array[Array[Float]]) =
-    queryVecs(queries).getOrElse(collectQueryRows(queries))
+    queryVecs(queries).orElse(collectQueryRows(queries)).getOrElse(
+      throw new IllegalArgumentException("query batch holds a null qid or vector"))
 
   /** Collect in ONE job when the size estimate clears an 8× margin under
     * [[bytesCap]] (r15 — replaces the stats-probe-then-collect pair for
@@ -242,12 +247,11 @@ object LocalScan {
     * unchanged, so at real scale nothing is ever collected to learn it
     * is big. */
   private def collectUnderCap[R <: AnyRef](data: DataFrame, payloadCol: String,
-      bytesPerUnit: Int)(doCollect: () => R)(bytesOf: R => Long): Option[R] = {
+      bytesPerUnit: Int)(doCollect: () => Option[R])(bytesOf: R => Long): Option[R] = {
     val est = data.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (smallEstimate(data) && est * 8 <= BigInt(bytesCap)) {
-      val r = doCollect()
-      if (bytesOf(r) > bytesCap) None else Some(r)
-    } else withinCap(data, payloadCol, bytesPerUnit)(doCollect)
+    if (smallEstimate(data) && est * 8 <= BigInt(bytesCap))
+      doCollect().filter(r => bytesOf(r) <= bytesCap)
+    else withinCap(data, payloadCol, bytesPerUnit)(doCollect).flatten
   }
 
   /** collected code relation (id, codes[, centroid_id]) under the caps;
@@ -264,43 +268,43 @@ object LocalScan {
             .map(r => (r.getInt(1), r.getLong(0), r.getAs[Array[Byte]](2)))
             .sortBy(t => (t._1, t._2))
           val m = if (rows.isEmpty) 0 else rows.head._3.length
-          val ct = new CodeTable(rows.map(_._2), flattenBytes(rows.map(_._3), m),
-            m, offsetsOf(rows.map(_._1)))
-          ct
+          Some(new CodeTable(rows.map(_._2), flattenBytes(rows.map(_._3), m),
+            m, offsetsOf(rows.map(_._1))))
         } else {
           val rows = data
             .select(col("id").cast("long"), col("codes"))
             .collect()
             .map(r => (r.getLong(0), r.getAs[Array[Byte]](1)))
           val m = if (rows.isEmpty) 0 else rows.head._2.length
-          new CodeTable(rows.map(_._1), flattenBytes(rows.map(_._2), m), m, null)
+          Some(new CodeTable(rows.map(_._1), flattenBytes(rows.map(_._2), m), m, null))
         }
       } { ct => ct.n.toLong * (ct.m.toLong + 12) }
     }
 
   /** collected float-vector relation (id, vector[, centroid_id]) under
-    * the caps; memoized per DataFrame instance. */
+    * the caps; memoized per DataFrame instance. None (the distributed
+    * plan) when a collected id, centroid id or vector is null, or the
+    * vectors differ in length: the distributed plans skip a null row, and
+    * the flat layout holds one dim per table. */
   def vecTable(data: DataFrame, ivf: Boolean): Option[VecTable] =
     if (!enabled) None
     else cached[VecTable](data) {
       collectUnderCap(data, "vector", bytesPerUnit = 4) { () =>
-        if (ivf) {
-          val rows = data
-            .select(col("id").cast("long"), col("centroid_id").cast("int"),
-              col("vector"))
-            .collect()
-            .map(r => (r.getInt(1), r.getLong(0), r.getSeq[Float](2).toArray))
-            .sortBy(t => (t._1, t._2))
+        val cols = Seq(col("id").cast("long"), col("vector")) ++
+          (if (ivf) Seq(col("centroid_id").cast("int")) else Nil)
+        val raw = data.select(cols: _*).collect()
+        if (raw.exists(r => (0 until r.length).exists(r.isNullAt))) None
+        else {
+          val rows = raw.map(r => (if (ivf) r.getInt(2) else 0, r.getLong(0),
+            r.getSeq[Float](1).toArray))
           val dim = if (rows.isEmpty) 0 else rows.head._3.length
-          new VecTable(rows.map(_._2), flattenFloats(rows.map(_._3), dim),
-            dim, offsetsOf(rows.map(_._1)))
-        } else {
-          val rows = data
-            .select(col("id").cast("long"), col("vector"))
-            .collect()
-            .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-          val dim = if (rows.isEmpty) 0 else rows.head._2.length
-          new VecTable(rows.map(_._1), flattenFloats(rows.map(_._2), dim), dim, null)
+          if (rows.exists(_._3.length != dim)) None
+          else if (ivf) {
+            val sorted = rows.sortBy(t => (t._1, t._2))
+            Some(new VecTable(sorted.map(_._2), flattenFloats(sorted.map(_._3), dim),
+              dim, offsetsOf(sorted.map(_._1))))
+          } else
+            Some(new VecTable(rows.map(_._2), flattenFloats(rows.map(_._3), dim), dim, null))
         }
       } { vt => vt.n.toLong * (vt.dim.toLong * 4 + 12) }
     }
@@ -1030,8 +1034,9 @@ object LocalScan {
     * bit-identical to the oracle-exact kernels, so gates never set it). */
   def scanVecsFull(spark: SparkSession, vt: VecTable, qids: Array[Long],
       qVecs: Array[Array[Float]], k: Int, mode: Int,
-      strided: Boolean = false): DataFrame = {
-    if (strided) return scanVecsFullStrided(spark, vt, qids, qVecs, k, mode)
+      strided: Boolean = false, qidNullable: Boolean = false): DataFrame = {
+    val schema = resultSchemaWith(qidNullable)
+    if (strided) return scanVecsFullStrided(spark, vt, qids, qVecs, k, mode, schema)
     val heaps = new Array[BoundedTopK](qids.length)
     // SIMD kernels cover modes 0-2 only; the gram mode's dot loop is
     // already the minimal-op kernel
@@ -1093,7 +1098,7 @@ object LocalScan {
         }
       }
     }
-    resultDf(spark, qids, heaps)
+    resultDf(spark, qids, heaps, schema)
   }
 
   /** reassociated SIMD distance over a flat row (opt-in via [[scanSimd]];
@@ -1111,7 +1116,7 @@ object LocalScan {
     * per table (memoized) and shared by every query and every search */
   private def scanVecsFullStrided(spark: SparkSession, vt: VecTable,
       qids: Array[Long], qVecs: Array[Array[Float]], k: Int,
-      mode: Int): DataFrame = {
+      mode: Int, schema: org.apache.spark.sql.types.StructType): DataFrame = {
     val heaps = new Array[BoundedTopK](qids.length)
     val m = if (mode == 3) 0 else mode // l2_gram ≡ l2 here: gram IS the kernel
     val norms = if (m == 1) null else rowNorms(vt)
@@ -1152,7 +1157,7 @@ object LocalScan {
         }
       }
     }
-    resultDf(spark, qids, heaps)
+    resultDf(spark, qids, heaps, schema)
   }
 
   /** IVF flat scan: probed lists only (mirrors IvfSearcher's equi-join +
@@ -1302,9 +1307,11 @@ object LocalScan {
     * driver-local serving row once the kernels were fast
     * (dev/ResultDfMicro). DESTRUCTIVE on the heaps (popRoot drain,
     * back-to-front = ascending (dist, id) — identical order and values
-    * to the old BoundedTopK.sorted path). */
+    * to the old BoundedTopK.sorted path). `schema` is [[resultSchema]]
+    * up to the qid column's nullability ([[resultSchemaWith]]). */
   def resultDf(spark: SparkSession, qids: Array[Long],
-      heaps: Array[BoundedTopK]): DataFrame = {
+      heaps: Array[BoundedTopK],
+      schema: org.apache.spark.sql.types.StructType = resultSchema): DataFrame = {
     // per-query slot bases via prefix sum, then a PARALLEL drain: each
     // query writes a disjoint slot range, so the packed layout (and every
     // row value) is identical to the sequential drain — the ~0.4 ms
@@ -1350,7 +1357,7 @@ object LocalScan {
         while (i < end) { drain(i); i += 1 }
       }
     } else { qi = 0; while (qi < nq) { drain(qi); qi += 1 } }
-    org.apache.spark.sql.graftshim.Shim.localRelationDf(spark, resultSchema,
+    org.apache.spark.sql.graftshim.Shim.localRelationDf(spark, schema,
       scala.collection.immutable.ArraySeq.unsafeWrapArray(rows),
       fastResultRow)
   }
@@ -1449,4 +1456,12 @@ object LocalScan {
       StructField("id", LongType, nullable = false),
       StructField("dist", DoubleType, nullable = false)))
   }
+
+  /** [[resultSchema]] with the qid column's nullability of the input it
+    * came from: the distributed plans carry the query relation's qid
+    * nullability through to their (qid, rank, id, dist) output. */
+  def resultSchemaWith(qidNullable: Boolean): org.apache.spark.sql.types.StructType =
+    if (!qidNullable) resultSchema
+    else org.apache.spark.sql.types.StructType(
+      resultSchema.fields.updated(0, resultSchema.fields(0).copy(nullable = true)))
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.JobCount.jobsOf
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Bm25
@@ -256,29 +257,12 @@ class Bm25WandSpec extends AnyFunSuite {
     }
   }
 
-  /** Spark jobs `body` starts, counted by a listener */
-  private def jobsOf[T](body: => T): (Int, T) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.ListenerBusDrain.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val r = body
-      org.apache.spark.ListenerBusDrain.drain(sc)
-      (jobs.get, r)
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("searchFromIndexWand job counts on a small batch, per route") {
     // job counts do not depend on host load: a change that adds a job to
     // a small-batch serve fails here
     val (docs, batch) = skewedCorpus(7, nQueries = 4) // batch: a LocalRelation
     withIndex(docs, "wandix_jobs") {
-      def serve(q: org.apache.spark.sql.DataFrame) = jobsOf(
+      def serve(q: org.apache.spark.sql.DataFrame) = jobsOf(spark.sparkContext)(
         Bm25.searchFromIndexWand(spark, "wandix_jobs", q, "qid", "qtext", k = 10)
           .collect())
       val (driverJobs, rows) = serve(batch)

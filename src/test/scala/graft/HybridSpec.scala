@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.JobCount.jobsOf
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Hybrid, KnnJoin, Mining}
@@ -103,5 +106,66 @@ class HybridSpec extends AnyFunSuite {
       .select($"qid", $"rk".as("rank"), $"id")
     val gotSel = got.select($"qid", $"rank", $"id")
     assert(gotSel.except(expect).isEmpty && expect.except(gotSel).isEmpty)
+  }
+
+  // The driver route of rrfFuseWeighted (every arm's contribution plan a
+  // LocalRelation) must equal the distributed fusion bit for bit
+  // (RouteCheck).
+  private def bits(df: DataFrame) = RouteCheck.bits(df, "rrf")
+  private def bothRoutes(local: Boolean)(search: => DataFrame) =
+    RouteCheck.bothRoutes(local, "rrf")(search)
+
+  /** a ranked arm: per qid, `n` distinct ids drawn from 0 until 30 */
+  private def arm(seed: Int, qids: Seq[Long], n: Int): DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    qids.flatMap { q =>
+      rnd.shuffle((0L until 30L).toList).take(n).zipWithIndex
+        .map { case (id, r) => (q, id, r + 1) }
+    }.toDF("qid", "id", "rank")
+  }
+
+  test("driver fusion ≡ distributed fusion: weights, one-arm qids, ties, k above the candidates") {
+    // qid 5 only in the lexical arm, qid 6 only in the dense arm; single-arm
+    // docs at equal ranks tie on score and break by id
+    val lex = arm(1, Seq(0L, 1L, 2L, 3L, 5L), 8)
+    val den = arm(2, Seq(0L, 1L, 2L, 3L, 6L), 8)
+    for (k <- Seq(3, 10, 40)) {
+      val unit = bothRoutes(local = true)(Hybrid.rrfFuse(Seq(lex, den), k))
+      assert(unit.map(_._1).toSet == Set(0L, 1L, 2L, 3L, 5L, 6L))
+      bothRoutes(local = true)(Hybrid.rrfFuseWeighted(Seq(lex -> 0.75, den -> 0.25), k))
+      bothRoutes(local = true)(Hybrid.rrfFuseWeighted(Seq(lex -> 1.0, den -> 0.0), k))
+    }
+    // k above every qid's candidate count: all fused candidates come back
+    val all = bothRoutes(local = true)(Hybrid.rrfFuse(Seq(lex, den), 40))
+    assert(all.count(_._1 == 5L) == 8)
+    // equal single-arm contributions tie and break by id
+    val a = Seq((7L, 30L, 1), (7L, 12L, 2)).toDF("qid", "id", "rank")
+    val b = Seq((7L, 10L, 1), (7L, 20L, 2)).toDF("qid", "id", "rank")
+    assert(bothRoutes(local = true)(Hybrid.rrfFuse(Seq(a, b), 4)).map(_._3) ==
+      Seq(10L, 30L, 12L, 20L))
+    // a nullable qid in one arm makes the fused qid nullable on both routes
+    val nullableQid = spark.createDataFrame(java.util.Arrays.asList(lex.collect(): _*),
+      StructType(Seq(
+        StructField("qid", LongType, nullable = true),
+        StructField("id", LongType, nullable = false),
+        StructField("rank", IntegerType, nullable = false))))
+    val fused = Hybrid.rrfFuse(Seq(nullableQid, den), 10)
+    assert(fused.schema("qid").nullable)
+    bothRoutes(local = true)(Hybrid.rrfFuse(Seq(nullableQid, den), 10))
+  }
+
+  test("driver fusion runs no Spark job; a distributed arm keeps the distributed plan") {
+    val lex = arm(3, Seq(0L, 1L, 2L, 3L), 20)
+    val den = arm(4, Seq(0L, 1L, 2L, 3L), 20)
+    val (jobs, rows) = jobsOf(spark.sparkContext)(Hybrid.rrfFuse(Seq(lex, den), 10).collect())
+    assert(rows.length == 40)
+    assert(jobs == 0, s"$jobs Spark jobs to fuse two LocalRelation arms")
+    // one arm behind a shuffle: not a LocalRelation, so the whole fusion
+    // stays distributed
+    val spread = den.repartition(2)
+    val mixed = bothRoutes(local = false)(Hybrid.rrfFuse(Seq(lex, spread), 10))
+    assert(mixed == bits(Hybrid.rrfFuse(Seq(lex, den), 10)))
+    assert(Hybrid.rrfFuse(Seq(lex, spread), 10).queryExecution.executedPlan.toString
+      .contains("partial_top_k_by_dist"))
   }
 }

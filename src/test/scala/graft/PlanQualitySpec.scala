@@ -409,14 +409,24 @@ class PlanQualitySpec extends AnyFunSuite {
     assert("Exchange hashpartitioning".r.findAllIn(mp).size == 1, mp.linesIterator.take(3).mkString)
 
     // RRF fusion: no join at all — a union of rank relations, one partial
-    // fixed-point sum, one bounded-heap top-k; nothing corpus-sized
+    // fixed-point sum, one bounded-heap top-k; nothing corpus-sized.
+    // LocalRelation arms fuse on the driver by default, so the distributed
+    // plan is forced here (HybridSpec proves the two routes equal)
     val arm1 = Seq((0L, 1L, 1), (0L, 2L, 2)).toDF("qid", "id", "rank")
     val arm2 = Seq((0L, 2L, 1), (0L, 3L, 2)).toDF("qid", "id", "rank")
-    val fp = graft.operators.Hybrid.rrfFuse(Seq(arm1, arm2), k = 3)
-      .queryExecution.executedPlan.toString
+    System.setProperty("graft.local.enabled", "false")
+    val fp =
+      try graft.operators.Hybrid.rrfFuse(Seq(arm1, arm2), k = 3)
+        .queryExecution.executedPlan.toString
+      finally System.clearProperty("graft.local.enabled")
     assert(!fp.contains("CartesianProduct") && !fp.contains("BroadcastNestedLoopJoin"),
       "fusion must stay join-free")
     assert(fp.contains("Union") && fp.contains("partial_top_k_by_dist"))
+    // with the fast path on, LocalRelation arms plan as one local scan
+    val lp = graft.operators.Hybrid.rrfFuse(Seq(arm1, arm2), k = 3)
+      .queryExecution.executedPlan.toString
+    assert(lp.contains("LocalTableScan") && !lp.contains("Exchange") &&
+      !lp.contains("Union"), s"driver fusion must plan as a LocalTableScan:\n$lp")
 
     // MMR rerank: per-query-local greedy — exactly one shuffle (the group
     // on qid) and an object MapGroups, no corpus-side operator
