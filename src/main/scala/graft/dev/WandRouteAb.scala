@@ -8,12 +8,14 @@ import graft.operators.Bm25
 /** A/B of [[Bm25.searchFromIndexWand]]'s two under-cap routes — WAND on
   * the driver vs distributed WAND — across Σ df (the postings a batch
   * touches), to place the crossover [[Bm25.driverWandMaxPostings]]
-  * encodes. The corpus is `dir`'s documents replicated `f` times under
-  * fresh doc ids for each `f` in `scales`, so Σ df grows with `f` while the
-  * batches stay fixed: the `text_bm25_serve` batch (200-char prefixes of
-  * every 53rd doc) and its first `small` queries (the hybrid lookup's
-  * size). Per (scale, batch) it checks both routes return identical rows,
-  * then times them interleaved and prints the median of `reps` per route.
+  * encodes. Each route is forced by the Σ df limit it is called with
+  * ([[Bm25.searchFromIndexWandUpTo]]). The corpus is `dir`'s documents
+  * replicated `f` times under fresh doc ids for each `f` in `scales`, so
+  * Σ df grows with `f` while the batches stay fixed: the `text_bm25_serve`
+  * batch (200-char prefixes of every 53rd doc) and its first `small`
+  * queries (the hybrid lookup's size). Per (scale, batch) it checks both
+  * routes return identical rows, then times them interleaved and prints
+  * the median of `reps` per route.
   *
   * Usage: runMain graft.dev.WandRouteAb [dir=/root/testdata/sf0.1]
   *   [reps=7] [scales=1,2,4,8] [small=4]
@@ -37,7 +39,6 @@ object WandRouteAb {
     // a LocalRelation, like the hybrid lookup's batch
     val smallBatch = spark.createDataFrame(java.util.Arrays.asList(
       gateBatch.orderBy("qid").limit(small).collect(): _*), gateBatch.schema)
-    val key = "graft.bm25.driverWandMaxPostings"
     def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
 
     scales.foreach { f =>
@@ -45,12 +46,10 @@ object WandRouteAb {
       val corpus = (0 until f).map(i => docs.withColumn("doc_id", col("doc_id") + i * span))
         .reduce(_ unionByName _)
       Bm25.ensureIndex(corpus, "doc_id", "text", table, buckets = 8)
-      def serve(queries: DataFrame, onDriver: Boolean): Array[org.apache.spark.sql.Row] = {
-        sys.props(key) = if (onDriver) Long.MaxValue.toString else "0"
-        try Bm25.searchFromIndexWand(spark, table, queries, "qid", "qtext", k = 5)
+      def serve(queries: DataFrame, onDriver: Boolean): Array[org.apache.spark.sql.Row] =
+        Bm25.searchFromIndexWandUpTo(spark, table, queries, "qid", "qtext", k = 5,
+          k1 = 1.2, b = 0.75, driverMaxPostings = if (onDriver) Long.MaxValue else -1L)
           .select("query_id", "doc_id", "rank", "score").collect()
-        finally sys.props -= key
-      }
       Seq("gate" -> gateBatch, "small" -> smallBatch).foreach { case (name, queries) =>
         val vocab = queries.select(explode(array_distinct(
           split(trim(lower(col("qtext"))), "\\s+"))).as("term")).distinct()

@@ -1036,11 +1036,9 @@ object AdcScan {
     * skipping the exchange + final-aggregate stages saves two job
     * boundaries per search. Above it (huge query batches on wide data)
     * the distributed [[KnnJoin.topKExploded]] tail runs instead — the
-    * same statistics-driven adaptive switch as Dedup's union-find path. */
-  def defaultDriverMergeCap: Long =
-    sys.props.get("graft.adc.driverMergeCap").map(_.toLong)
-      .orElse(sys.env.get("GRAFT_ADC_DRIVER_MERGE_CAP").map(_.toLong))
-      .getOrElse(2_000_000L)
+    * same exact-count switch as Dedup's union-find path, and off with
+    * [[Regime.enabled]]. */
+  val driverMergeCap: Long = 2_000_000L
 
   /** Full scan + top-k finish: every query scores every code row. `data`
     * must project (id: long, codes: binary). Output: the canonical
@@ -1133,7 +1131,7 @@ object AdcScan {
 
   /** Merge the per-partition survivors into the canonical
     * (qid, rank, id, dist) result — on the driver below
-    * [[defaultDriverMergeCap]] potential survivor rows (identical
+    * [[driverMergeCap]] potential survivor rows (identical
     * (dist, id) order and k-bound as the distributed tail), distributed
     * otherwise. */
   private def finish(scanned: org.apache.spark.sql.Dataset[(Long, Long, Double)],
@@ -1141,7 +1139,7 @@ object AdcScan {
     val spark = scanned.sparkSession
     import spark.implicits._
     val potential = qids.length.toLong * k * math.max(1, nPartitions)
-    if (potential > defaultDriverMergeCap)
+    if (!Regime.enabled || potential > driverMergeCap)
       KnnJoin.topKExploded(scanned.toDF("qid", "id", "__dist"),
         col("id"), col("__dist"), k)
     else {

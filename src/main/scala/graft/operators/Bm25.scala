@@ -145,23 +145,21 @@ object Bm25 {
     * folds, so no job runs) over at most cap+1 queries and exploded HERE —
     * every non-null text has at least one term, so more than `cap` queries
     * is over the cap without counting further. Any other batch keeps the
-    * Spark-side explode and collects at most cap+1 `(query, term)` rows, so
-    * a huge or corpus-shaped batch never lands whole on the driver. */
+    * Spark-side explode behind the [[Regime.rowsUpTo]] probe, so a huge or
+    * corpus-shaped batch never lands whole on the driver. */
   private[graft] def qtermRowsCapped(queries: DataFrame, qIdCol: String,
       qTextCol: String, cap: Int): Option[Array[Row]] = {
     val folded = queries.select(col(qIdCol).as("query_id"),
         array_distinct(Dedup.tokens(col(qTextCol))).as("terms"))
       .limit(cap + 1)
-    val rows =
-      if (LocalScan.onDriver(folded)) {
-        val qs = folded.collect()
-        if (qs.length > cap) return None
-        qs.iterator.filterNot(_.isNullAt(1)).flatMap { r =>
-          val id = r.get(0)
-          r.getSeq[String](1).iterator.map(t => Row(id, t))
-        }.take(cap + 1).toArray
-      } else qtermsOf(queries, qIdCol, qTextCol).limit(cap + 1).collect()
-    if (rows.length > cap) None else Some(rows)
+    if (!Regime.onDriver(folded))
+      return Regime.rowsUpTo(qtermsOf(queries, qIdCol, qTextCol), cap)
+    val qs = folded.collect()
+    val rows = qs.iterator.filterNot(_.isNullAt(1)).flatMap { r =>
+      val id = r.get(0)
+      r.getSeq[String](1).iterator.map(t => Row(id, t))
+    }.take(cap + 1).toArray
+    if (qs.length > cap || rows.length > cap) None else Some(rows)
   }
 
   /** Lucene-style idf as a Spark expression over `(n_docs, df)` — the
@@ -594,7 +592,7 @@ object Bm25 {
     // it on the driver once and serve every consumer from a LocalRelation:
     // no repeated derivation jobs, broadcasts without a collect stage, and
     // the vocabulary literal in hand. The collect is CAPPED (same
-    // discipline as LocalScan.queryVecsCapped): a caller that hands a huge
+    // discipline as Regime.rowsUpTo): a caller that hands a huge
     // "batch" must not OOM the driver or build a million-entry In literal
     // — above the cap, fall back to the streaming plan (distributed qterms
     // broadcast into the joins; every postings bucket is read, which is
@@ -633,9 +631,10 @@ object Bm25 {
     *   - more than [[serveBatchCap]] `(query, term)` rows: no vocabulary
     *     literal (it would be a million-entry In) — WAND's own chunked
     *     over-cap route over the full index tables.
-    *   - Σ df over the batch's vocabulary ≤ [[driverWandMaxPostings]]
-    *     (the df rows and the stats row land in one job, and Σ df is
-    *     exactly the number of postings the batch touches): driver-local
+    *   - with [[Regime.enabled]], Σ df over the batch's vocabulary ≤
+    *     [[driverWandMaxPostings]] (the df rows and the stats row land in
+    *     one job, and Σ df is exactly the number of postings the batch
+    *     touches): driver-local
     *     WAND ([[wandOnDriver]]) — one more job collects those postings,
     *     and the result is a LocalRelation. A small batch over a persisted
     *     index is bound by per-job cost, not data (the hybrid lookup's
@@ -652,7 +651,16 @@ object Bm25 {
     * DAAT never builds. */
   def searchFromIndexWand(spark: org.apache.spark.sql.SparkSession,
       table: String, queries: DataFrame, qIdCol: String, qTextCol: String,
-      k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+      k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    searchFromIndexWandUpTo(spark, table, queries, qIdCol, qTextCol, k, k1, b,
+      driverWandMaxPostings)
+
+  /** [[searchFromIndexWand]] with the driver route's Σ df limit as an
+    * argument: dev/WandRouteAb times each route (Long.MaxValue / -1) to
+    * place the crossover the limit encodes. */
+  private[graft] def searchFromIndexWandUpTo(spark: org.apache.spark.sql.SparkSession,
+      table: String, queries: DataFrame, qIdCol: String, qTextCol: String,
+      k: Int, k1: Double, b: Double, driverMaxPostings: Long): DataFrame = {
     val post = spark.table(s"${table}_postings")
     val stats = spark.table(s"${table}_stats")
     val dfTable = spark.table(s"${table}_df")
@@ -672,7 +680,7 @@ object Bm25 {
         val avgdl = statRow.head.getDouble(2)
         val idfs = dfRows.map(r => r.getString(0) -> idf(nDocs, r.getDouble(1))).toMap
         val qidField = queries.select(col(qIdCol)).schema.head
-        if (dfRows.map(_.getDouble(1)).sum <= driverWandMaxPostings)
+        if (Regime.enabled && dfRows.map(_.getDouble(1)).sum <= driverMaxPostings)
           wandOnDriver(post, qtRows, qidField, idfs, avgdl, k, k1, b)
         else
           wandDistributed(post.filter(termIn), qtRows, qidField, idfs, avgdl,
@@ -723,12 +731,9 @@ object Bm25 {
     * meet between ~350k and ~460k postings (dev/WandRouteAb, 4 cores; the
     * distributed route wins at ~930k), and every posting of a driver-route
     * batch sits on the driver heap, so the limit is set below that.
-    * `graft.bm25.driverWandMaxPostings` overrides it for route tests and
-    * the distributed-route Verify pass (0 forces every batch onto the
-    * distributed route). */
-  def driverWandMaxPostings: Long =
-    sys.props.get("graft.bm25.driverWandMaxPostings").map(_.toLong)
-      .getOrElse(200_000L)
+    * `graft.local.enabled=false` sends every batch to the distributed
+    * route. */
+  val driverWandMaxPostings: Long = 200_000L
 
   /** max (query_id, term) rows the serve paths land on the driver before
     * routing the batch through the streaming plan instead */

@@ -125,20 +125,21 @@ object Coreset {
     // `dfun` replicates the expression path's accumulation order (see
     // note above), the argmax tie-breaks (mind desc, id asc), and the
     // head-is-zero early stop matches the distributed pass — identical
-    // trajectory, oracle-checked by the recursive-CTE replay. The cap is
-    // the same statistics-driven adaptive switch as
-    // Dedup.driverUnionFind's edge cap; env-tunable.
-    val localCap = sys.props.get("graft.kcenter.driver.bytes")
-      .orElse(sys.env.get("GRAFT_KCENTER_DRIVER_BYTES"))
-      .map(_.toLong).getOrElse(64L << 20) // sys-prop first: test hook
-    val estBytes = base.queryExecution.optimizedPlan.stats.sizeInBytes
-    // 6x decode-expansion factor (ADVICE r14): the Catalyst estimate
-    // reflects encoded (often compressed-parquet) bytes, while collect()
-    // lands boxed Rows — a float costs ~4 B encoded but ~16-24 B as a
-    // boxed element behind a WrappedArray. Same discipline as
-    // driverUnionFind's edge cap.
-    if (batch == 1 && estBytes * 6 <= BigInt(localCap)) {
-      val rows = base.collect()
+    // trajectory, oracle-checked by the recursive-CTE replay. The budget
+    // is a sixth of LocalScan.bytesCap, counted as the boxed Rows
+    // collect() lands: per float a boxed element behind the WrappedArray
+    // plus its reference (~24 B) and the unboxed copy (4 B), per row
+    // ~112 B of Row, boxed id and array headers. Only the estimate admits
+    // the collect (no probe job at scale): est × 8 ≤ bytesCap / 6 is the
+    // est × 6 ≤ 64 MiB bound this route has always had; the exact boxed
+    // bytes are then re-checked on the rows.
+    val localRows =
+      if (!Regime.enabled || batch != 1) None
+      else Regime.collectUnder(base, LocalScan.bytesCap / 6)(None)(Some(base.collect())) {
+        _.iterator.map(r => r.getSeq[Float](1).length * 28L + 112).sum
+      }
+    if (localRows.isDefined) {
+      val rows = localRows.get
       require(rows.nonEmpty, "k-center selection needs a non-empty input")
       val n = rows.length
       val ids = rows.map(_.getLong(0))

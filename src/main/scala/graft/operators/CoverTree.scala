@@ -79,36 +79,37 @@ final case class CoverTreeSearcher(metric: String = "l2",
       case None => None
       case Some(al) =>
         val cap = HnswSearcher.allowedLocalCap
-        val rows = al.select(col("id").cast("long")).limit(cap + 1).collect()
-        if (rows.length > cap) {
-          if (strict) throw new IllegalStateException(
-            s"covertree filtered search: allowed set exceeds the exact " +
-              s"selector-walk cap (HnswSearcher.allowedLocalCap=$cap ids); " +
-              "the oversample+post-filter fallback is APPROXIMATE and this " +
-              "caller demanded exactness — raise graft.hnsw.allowedLocalCap " +
-              "or drop strict")
-          val alIds = al.select(col("id").cast("long").as("id"))
-          val over = searchImpl(artifact, queries, k * math.max(1, oversample), None)
-          return KnnJoin.topKExploded(
-            over.join(alIds, Seq("id"), "left_semi")
-              .select(col("qid"), col("id"), col("dist")),
-            col("id"), col("dist"), k)
+        Regime.rowsUpTo(al.select(col("id").cast("long")), cap) match {
+          case None =>
+            if (strict) throw new IllegalStateException(
+              s"covertree filtered search: allowed set exceeds the exact " +
+                s"selector-walk cap (HnswSearcher.allowedLocalCap=$cap ids); " +
+                "the oversample+post-filter fallback is APPROXIMATE and this " +
+                "caller demanded exactness — raise graft.hnsw.allowedLocalCap " +
+                "or drop strict")
+            val alIds = al.select(col("id").cast("long").as("id"))
+            val over = searchImpl(artifact, queries, k * math.max(1, oversample), None)
+            return KnnJoin.topKExploded(
+              over.join(alIds, Seq("id"), "left_semi")
+                .select(col("qid"), col("id"), col("dist")),
+              col("id"), col("dist"), k)
+          case Some(rows) =>
+            val set = new java.util.HashSet[java.lang.Long](rows.length * 2)
+            rows.foreach(r => set.add(r.getLong(0)))
+            val sel = new Array[Boolean](tree.ids.length)
+            var i = 0
+            while (i < tree.ids.length) {
+              sel(i) = set.contains(tree.ids(i)); i += 1
+            }
+            Some(sel)
         }
-        val set = new java.util.HashSet[java.lang.Long](rows.length * 2)
-        rows.foreach(r => set.add(r.getLong(0)))
-        val sel = new Array[Boolean](tree.ids.length)
-        var i = 0
-        while (i < tree.ids.length) {
-          sel(i) = set.contains(tree.ids(i)); i += 1
-        }
-        Some(sel)
     }
     val acc = counter
     // adaptive local walk (see HnswGlobalSearcher / LocalScan): the tree
     // already lives on the driver, a search batch is tiny by definition —
     // below the cap the walk runs driver-core-parallel with zero Spark
     // jobs and zero per-search tree broadcasts
-    val collected = LocalScan.queryVecsCapped(queries,
+    val collected = LocalScan.queryVecs(queries,
       HnswGlobalSearcher.driverWalkCap)
     if (collected.isDefined) {
       val (qids, qVecs) = collected.get

@@ -221,9 +221,10 @@ object Dedup {
     * union-find instead of ~5 rounds × 2 distributed jobs — the same
     * statistics-driven decision Spark itself makes when it swaps a
     * shuffle join for a broadcast join under the size threshold. The cap
-    * (default 4M directed edges ≈ 64 MB collected) is env-tunable via
-    * GRAFT_CC_DRIVER_EDGE_CAP; both paths produce identical labels
-    * (min-reachable-id, spec-asserted equal on random graphs). */
+    * defaults to 4M directed edges ≈ 64 MB collected, and
+    * `graft.local.enabled=false` ([[Regime.enabled]]) turns the driver path
+    * off; both paths produce identical labels (min-reachable-id,
+    * spec-asserted equal on random graphs). */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 15,
       driverEdgeCap: Long = defaultDriverEdgeCap): DataFrame = {
     // `pairs` is typically an expensive similarity join; scan it ONCE.
@@ -246,7 +247,7 @@ object Dedup {
       .localCheckpoint())
     // the checkpoint makes this count a metadata-cheap scan of pinned rows
     val nEdges = tick("count")(undirected.count())
-    if (nEdges <= driverEdgeCap)
+    if (Regime.enabled && nEdges <= driverEdgeCap)
       return tick("unionfind")(driverUnionFind(undirected, nEdges))
     // self-loops make the per-round join a CLOSED-neighborhood min in one
     // equi-join + groupBy — no in-loop union of `comp` with a plan that
@@ -299,9 +300,8 @@ object Dedup {
 
   /** Driver-edge-count threshold for the union-find fast path: 4M
     * directed edges collect to ~64 MB of longs — broadcast-join-sized,
-    * far under driver heap. 0 disables the fast path entirely. */
-  def defaultDriverEdgeCap: Long =
-    sys.env.get("GRAFT_CC_DRIVER_EDGE_CAP").map(_.toLong).getOrElse(4_000_000L)
+    * far under driver heap. */
+  val defaultDriverEdgeCap: Long = 4_000_000L
 
   /** Small-graph path: collect the (already materialized, slim) directed
     * edge relation and label components with union-find (path halving +

@@ -173,9 +173,9 @@ final case class HnswSearcher(nprobe: Int = 2, efSearch: Int = 48,
     // and the payload bytes cap (and, filtered, by the allowed-id cap);
     // over-cap inputs keep the distributed plan below, which
     // HnswDistLocalSpec asserts produces identical rows.
-    if (LocalScan.enabled) {
+    if (Regime.enabled) {
       val collected =
-        LocalScan.queryVecsCapped(queries, HnswGlobalSearcher.driverWalkCap)
+        LocalScan.queryVecs(queries, HnswGlobalSearcher.driverWalkCap)
       val model =
         if (collected.isDefined) HnswSearcher.localModel(artifact) else None
       // Some(None) = unfiltered local; Some(Some(set)) = filtered local;
@@ -184,13 +184,11 @@ final case class HnswSearcher(nprobe: Int = 2, efSearch: Int = 48,
         allowedOpt match {
           case None => Some(None)
           case Some(al) if collected.isDefined && model.isDefined =>
-            val cap = HnswSearcher.allowedLocalCap
-            val rows = al.select(col("id").cast("long")).limit(cap + 1).collect()
-            if (rows.length > cap) None
-            else {
+            Regime.rowsUpTo(al.select(col("id").cast("long")),
+                HnswSearcher.allowedLocalCap).map { rows =>
               val s = new java.util.HashSet[java.lang.Long](rows.length * 2)
               rows.foreach(r => s.add(r.getLong(0)))
-              Some(Some(s))
+              Some(s)
             }
           case _ => None
         }
@@ -358,58 +356,44 @@ object HnswSearcher {
     * (the vector payload dominates: nbrs add ~2m ints/row) */
   private[operators] def localModel(artifact: IndexArtifact): Option[DistModel] =
     LocalScan.memoized[DistModel](artifact.data) {
-      // per-row estimate: vector floats + adjacency (~2m ints at spill-time
+      // per-row bytes: vector floats + adjacency (~2m ints at spill-time
       // degree, NswGraph caps degree at 2m) + Row/array-header overhead
       val m = artifact.meta.getOrElse("m", "16").toInt
-      def fitsOf(n: Long, width: Long): Boolean =
-        n * (width * 4 + 8L * m + 64) <= LocalScan.bytesCap
-      // ONE collect job when the size estimate clears an 8× margin under
-      // the cap (r15, LocalScan.collectUnderCap discipline): the exact
-      // fits formula is re-checked on the collected rows, so a lying
-      // estimate still routes to the distributed walk — at the price of
-      // one margin-bounded wasted collect. Above the margin the stats
-      // probe gates the collect exactly as before.
-      val est = artifact.data.queryExecution.optimizedPlan.stats.sizeInBytes
-      val direct = LocalScan.smallEstimate(artifact.data) &&
-        est * 8 <= BigInt(LocalScan.bytesCap)
-      val fits = direct || LocalScan.payloadStats(artifact.data, "vector", 4)
-        .exists { case (n, width) => fitsOf(n, width.toLong) }
-      if (!fits) None
-      else {
-        val met = artifact.meta.getOrElse("metric", "l2")
-        val nPart = artifact.meta("n_partitions").toInt
-        val rows = artifact.data
+      def bytesOf(n: Long, width: Long): Long = n * (width * 4 + 8L * m + 64)
+      Regime.collectUnder(artifact.data, LocalScan.bytesCap)(
+        LocalScan.payloadStats(artifact.data, "vector", 4)
+          .map { case (n, width) => bytesOf(n, width) }) {
+        Some(artifact.data
           .select(col("centroid_id").cast("int"), col("idx").cast("int"),
             col("id").cast("long"), col("vector"), col("nbrs"))
-          .collect()
-        // post-collect cap enforcement for the direct (estimate-margin)
-        // path — same decision the stats probe would have made
-        if (direct && rows.nonEmpty &&
-            !fitsOf(rows.length.toLong, rows.head.getSeq[Float](3).length.toLong))
-          None
-        else {
-          val counts = new Array[Int](nPart)
-          rows.foreach(r => counts(r.getInt(0)) += 1)
-          val ids = Array.tabulate(nPart)(c => new Array[Long](counts(c)))
-          val vecs = Array.tabulate(nPart)(c => new Array[Array[Float]](counts(c)))
-          val adj = Array.tabulate(nPart)(c => new Array[Array[Int]](counts(c)))
-          rows.foreach { r =>
-            val cid = r.getInt(0); val idx = r.getInt(1)
-            ids(cid)(idx) = r.getLong(2)
-            vecs(cid)(idx) = r.getSeq[Float](3).toArray
-            adj(cid)(idx) = r.getSeq[Int](4).toArray
-          }
-          val graphs = Array.tabulate(nPart) { c =>
-            if (counts(c) == 0) null
-            else NswGraph.fromAdjacency(vecs(c), adj(c), met)
-          }
-          val centroids = artifact.aux("centroids")
-            .select(col("centroid_id").cast("int"), col("vector"))
-            .collect()
-            .sortBy(_.getInt(0))
-            .map(_.getSeq[Float](1).toArray)
-          Some(new DistModel(graphs, ids, centroids))
+          .collect())
+      } { rows =>
+        if (rows.isEmpty) 0L
+        else bytesOf(rows.length, rows.head.getSeq[Float](3).length)
+      }.map { rows =>
+        val met = artifact.meta.getOrElse("metric", "l2")
+        val nPart = artifact.meta("n_partitions").toInt
+        val counts = new Array[Int](nPart)
+        rows.foreach(r => counts(r.getInt(0)) += 1)
+        val ids = Array.tabulate(nPart)(c => new Array[Long](counts(c)))
+        val vecs = Array.tabulate(nPart)(c => new Array[Array[Float]](counts(c)))
+        val adj = Array.tabulate(nPart)(c => new Array[Array[Int]](counts(c)))
+        rows.foreach { r =>
+          val cid = r.getInt(0); val idx = r.getInt(1)
+          ids(cid)(idx) = r.getLong(2)
+          vecs(cid)(idx) = r.getSeq[Float](3).toArray
+          adj(cid)(idx) = r.getSeq[Int](4).toArray
         }
+        val graphs = Array.tabulate(nPart) { c =>
+          if (counts(c) == 0) null
+          else NswGraph.fromAdjacency(vecs(c), adj(c), met)
+        }
+        val centroids = artifact.aux("centroids")
+          .select(col("centroid_id").cast("int"), col("vector"))
+          .collect()
+          .sortBy(_.getInt(0))
+          .map(_.getSeq[Float](1).toArray)
+        new DistModel(graphs, ids, centroids)
       }
     }
 }

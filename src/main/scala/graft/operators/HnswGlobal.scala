@@ -46,6 +46,9 @@ final case class HnswGlobalIndexer(
     // build (HnswIndexer — the measured `hnsw_dist` path) with the
     // SPANN spill=2 closure and ~128k-row groups. HnswGlobalSearcher
     // recognizes the resulting kind="hnsw" artifact and delegates.
+    // The exact probe runs first, never an estimate (Regime.collectUnder):
+    // near the cap the collect is GBs, and an array column's estimate
+    // can read ~50× small.
     val stats = LocalScan.payloadStats(base, "vector", 4)
     val fits = stats.exists { case (n, width) =>
       // floats + layered adjacency (~2m ints layer0 + thinning uppers
@@ -183,29 +186,30 @@ final case class HnswGlobalSearcher(efSearch: Int = 100, metric: String = "l2",
       case None => None
       case Some(al) =>
         val cap = HnswSearcher.allowedLocalCap
-        val rows = al.select(col("id").cast("long")).limit(cap + 1).collect()
-        if (rows.length > cap) {
-          if (strict) throw new IllegalStateException(
-            s"hnsw_global filtered search: allowed set exceeds the " +
-              s"selector-walk cap (HnswSearcher.allowedLocalCap=$cap ids); " +
-              "the oversample+post-filter fallback trades recall for " +
-              "selectivity and this caller demanded the selector walk — " +
-              "raise graft.hnsw.allowedLocalCap or drop strict")
-          val alIds = al.select(col("id").cast("long").as("id"))
-          val over = searchImpl(artifact, queries, k * math.max(1, oversample), None)
-          return KnnJoin.topKExploded(
-            over.join(alIds, Seq("id"), "left_semi")
-              .select(col("qid"), col("id"), col("dist")),
-            col("id"), col("dist"), k)
+        Regime.rowsUpTo(al.select(col("id").cast("long")), cap) match {
+          case None =>
+            if (strict) throw new IllegalStateException(
+              s"hnsw_global filtered search: allowed set exceeds the " +
+                s"selector-walk cap (HnswSearcher.allowedLocalCap=$cap ids); " +
+                "the oversample+post-filter fallback trades recall for " +
+                "selectivity and this caller demanded the selector walk — " +
+                "raise graft.hnsw.allowedLocalCap or drop strict")
+            val alIds = al.select(col("id").cast("long").as("id"))
+            val over = searchImpl(artifact, queries, k * math.max(1, oversample), None)
+            return KnnJoin.topKExploded(
+              over.join(alIds, Seq("id"), "left_semi")
+                .select(col("qid"), col("id"), col("dist")),
+              col("id"), col("dist"), k)
+          case Some(rows) =>
+            val set = new java.util.HashSet[java.lang.Long](rows.length * 2)
+            rows.foreach(r => set.add(r.getLong(0)))
+            val sel = new Array[Boolean](model.ids.length)
+            var i = 0
+            while (i < model.ids.length) {
+              sel(i) = set.contains(model.ids(i)); i += 1
+            }
+            Some(sel)
         }
-        val set = new java.util.HashSet[java.lang.Long](rows.length * 2)
-        rows.foreach(r => set.add(r.getLong(0)))
-        val sel = new Array[Boolean](model.ids.length)
-        var i = 0
-        while (i < model.ids.length) {
-          sel(i) = set.contains(model.ids(i)); i += 1
-        }
-        Some(sel)
     }
     val outSchema = StructType(Seq(
       StructField("qid", LongType, nullable = false),
@@ -226,7 +230,7 @@ final case class HnswGlobalSearcher(efSearch: Int = 100, metric: String = "l2",
     // memoized across repeated searches of the same batch (LocalScan);
     // the capped probe collects at most cap+1 rows, so a huge query
     // batch never lands on the driver before routing distributed
-    val collected = LocalScan.queryVecsCapped(queries, cap)
+    val collected = LocalScan.queryVecs(queries, cap)
     if (collected.isDefined) {
       val (cQids, cVecs) = collected.get
       val ws = ThreadLocal.withInitial[HnswWorkspace](() =>

@@ -89,7 +89,7 @@ object Hybrid {
     * distributed plan, whose `sum` and grouping define those cases. The
     * qid column is nullable iff some arm's is (the union's nullability). */
   private def fuseOnDriver(contribs: Seq[DataFrame], k: Int): Option[DataFrame] = {
-    if (!LocalScan.enabled || k < 1 || !contribs.forall(LocalScan.onDriver))
+    if (!Regime.enabled || k < 1 || !contribs.forall(Regime.onDriver))
       return None
     val rows = contribs.flatMap(_.collect())
     if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)))

@@ -82,22 +82,20 @@ object IvfModel {
     * independent of the projection). */
   private[operators] def boundedVecSample(rel: DataFrame, vecCol: String,
       capRows: Long, seed: Long): (Array[Array[Float]], Long) = {
-    val spark = rel.sparkSession
-    val est = rel.queryExecution.optimizedPlan.stats.sizeInBytes
-    val small = est < BigInt(spark.sessionState.conf.filesMaxPartitionBytes) *
-      spark.sparkContext.defaultParallelism
-    if (small) {
-      val rows = rel.select(col(vecCol)).limit(capRows.toInt + 1).collect()
-      if (rows.length <= capRows)
-        return (rows.map(_.getSeq[Float](0).toArray), rows.length.toLong)
+    val probe =
+      if (Regime.smallEstimate(rel).isEmpty) None
+      else Regime.rowsUpTo(rel.select(col(vecCol)), capRows)
+    probe match {
+      case Some(rows) => (rows.map(_.getSeq[Float](0).toArray), rows.length.toLong)
+      case None =>
+        val n = rel.count()
+        val fraction = math.min(1.0, capRows.toDouble / math.max(1L, n))
+        val sample = (if (fraction < 1.0)
+            rel.sample(withReplacement = false, fraction, seed)
+          else rel)
+          .select(col(vecCol)).collect().map(_.getSeq[Float](0).toArray)
+        (sample, n)
     }
-    val n = rel.count()
-    val fraction = math.min(1.0, capRows.toDouble / math.max(1L, n))
-    val sample = (if (fraction < 1.0)
-        rel.sample(withReplacement = false, fraction, seed)
-      else rel)
-      .select(col(vecCol)).collect().map(_.getSeq[Float](0).toArray)
-    (sample, n)
   }
 
   /** nearest-centroid assignment (always L2 — FAISS coarse quantizers

@@ -108,7 +108,7 @@ object KnnJoin {
     val local =
       if (baseIdCol != "id" || baseVecCol != "vector") None
       else scanOnDriver(q,
-        if (LocalScan.onDriver(q)) LocalScan.queryArrays(q.collect()) else None,
+        if (Regime.onDriver(q)) LocalScan.queryArrays(q.collect()) else None,
         base, k, metric)
     local.getOrElse(knnJoinDistributed(q, base, k, metric, baseIdCol, baseVecCol))
   }
@@ -156,7 +156,7 @@ object KnnJoin {
       strided: Boolean = false): Option[DataFrame] =
     for {
       mode <- LocalScan.metricMode(metric)
-      if LocalScan.enabled && k >= 1 &&
+      if Regime.enabled && k >= 1 &&
         floatVectors(q.schema) && floatVectors(base.schema)
       (qids, qVecs) <- batch
       if (1 until qids.length).forall(i => qids(i) != qids(i - 1))

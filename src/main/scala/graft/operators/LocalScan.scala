@@ -19,7 +19,8 @@ import org.apache.spark.sql.functions._
   *    against the scan itself.
   *
   * The switch mirrors Spark's own broadcast-join threshold: statistics
-  * decide whether the small-side shortcut applies; semantics never
+  * decide whether the small-side shortcut applies ([[Regime]] holds the
+  * estimate, the exact re-check and the kill switch); semantics never
   * change. Kernels reuse the exact scorer objects ([[AdcScan.Scorer]])
   * and the [[BoundedTopK]] (dist, id) total order of the distributed
   * path, so results are bit-identical either way (spec-asserted by
@@ -33,13 +34,6 @@ import org.apache.spark.sql.functions._
   * below that floor.
   */
 object LocalScan {
-
-  /** kill-switch (tests force the distributed path to prove equality):
-    * -Dgraft.local.enabled=false / GRAFT_LOCAL_SCAN=0 */
-  def enabled: Boolean =
-    sys.props.get("graft.local.enabled")
-      .orElse(sys.env.get("GRAFT_LOCAL_SCAN"))
-      .forall(v => v != "false" && v != "0")
 
   /** max bytes of index payload collected to the driver (ids + codes or
     * vectors); above it the caller keeps the distributed scan */
@@ -137,8 +131,13 @@ object LocalScan {
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[AnyRef, AnyRef]())
 
-  private def cached[T <: AnyRef](key: AnyRef)(compute: => Option[T]): Option[T] =
-    memo.get(key) match {
+  /** memo slot for collected structures (the built-in tables, query
+    * batches, LSH bucket maps) — DataFrame-identity keying, None=too-big;
+    * None without computing when [[Regime.enabled]] is off. The caller
+    * owns the size gate. */
+  def memoized[T <: AnyRef](key: AnyRef)(compute: => Option[T]): Option[T] =
+    if (!Regime.enabled) None
+    else memo.get(key) match {
       case TooBig => None
       case null =>
         val v = compute
@@ -147,14 +146,8 @@ object LocalScan {
       case v => Some(v.asInstanceOf[T])
     }
 
-  /** generic memo slot for operator-specific collected structures (e.g.
-    * LSH bucket maps) — same DataFrame-identity keying and None=too-big
-    * contract as the built-in tables. The caller owns the size gate. */
-  def memoized[T <: AnyRef](key: AnyRef)(compute: => Option[T]): Option[T] =
-    if (!enabled) None else cached(key)(compute)
-
-  private def collectQueryRows(queries: DataFrame): Option[(Array[Long], Array[Array[Float]])] =
-    queryArrays(queries.select(col("qid").cast("long"), col("vector")).collect())
+  private def qidVectors(queries: DataFrame): DataFrame =
+    queries.select(col("qid").cast("long"), col("vector"))
 
   /** `(qid: long, vector)` rows → (qids ascending, vectors aligned by
     * qidx); None when a qid or a vector is null. The distributed plans
@@ -168,29 +161,9 @@ object LocalScan {
       Some((sorted.map(_._1), sorted.map(_._2)))
     }
 
-  /** True when the optimized plan of `df` is a LocalRelation: its rows are
-    * already on the driver, and `collect()` returns them without running
-    * a Spark job (`LocalTableScanExec.executeCollect`). A Project or
-    * Filter over a LocalRelation folds into one (ConvertToLocalRelation).
-    * The test is exact, not a size estimate. */
-  def onDriver(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan
-      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
-
-  /** Catalyst-estimate smallness gate (same shape as
-    * IvfModel.boundedVecSample): below cores × maxPartitionBytes a probe
-    * may collect bounded rows in ONE job; above it the caller must learn
-    * sizes without pulling data (count first) so at real scale nothing
-    * extra ever lands on the driver. */
-  private[operators] def smallEstimate(df: DataFrame): Boolean = {
-    val spark = df.sparkSession
-    df.queryExecution.optimizedPlan.stats.sizeInBytes <
-      BigInt(spark.sessionState.conf.filesMaxPartitionBytes) *
-        spark.sparkContext.defaultParallelism
-  }
-
   /** Queries collected once per queries-DataFrame instance: (qids sorted
-    * ascending, vectors aligned by qidx). None above [[queryRowCap]],
+    * ascending, vectors aligned by qidx). None above `cap` rows (by
+    * default [[queryRowCap]]; the driver graph walks pass their own),
     * with the fast path disabled, or when a qid or a vector is null
     * ([[queryArrays]]). Memoization freezes the batch against
     * THIS DataFrame instance: a lazy source whose underlying files
@@ -200,33 +173,18 @@ object LocalScan {
     * but froze nothing across calls either way.
     *
     * Under-cap this is ONE collect job (r15): when the size estimate is
-    * small, a `limit(cap+1)` probe replaces the historical
-    * count-then-collect pair — same rows (the batch sorts by qid anyway,
-    * so even row order is immaterial); the probe exceeding the cap means
-    * the count would have too. Above the estimate the count runs first,
-    * so an at-scale batch never collects cap+1 rows to learn it is big. */
-  def queryVecs(queries: DataFrame): Option[(Array[Long], Array[Array[Float]])] =
-    if (!enabled) None
-    else cached[(Array[Long], Array[Array[Float]])](queries) {
-      if (smallEstimate(queries) && queryRowCap < Int.MaxValue) {
-        val probe = queries.select(col("qid").cast("long"), col("vector"))
-          .limit(queryRowCap.toInt + 1).collect()
-        if (probe.length > queryRowCap) None else queryArrays(probe)
-      }
-      else if (queries.count() > queryRowCap) None
-      else collectQueryRows(queries)
-    }
-
-  /** [[queryVecs]] bounded by an explicit row cap for callers whose
-    * local path only serves small batches (driver graph walks): probes
-    * `cap + 1` rows so an over-cap batch never fully collects. */
-  def queryVecsCapped(queries: DataFrame,
-      cap: Int): Option[(Array[Long], Array[Array[Float]])] =
-    if (!enabled) None
-    else cached[(Array[Long], Array[Array[Float]])](queries) {
-      val probe = queries.select(col("qid").cast("long"), col("vector"))
-        .limit(cap + 1).collect()
-      if (probe.length > cap) None else queryArrays(probe)
+    * small, or `cap` is below [[queryRowCap]] (cap + 1 rows are few), the
+    * [[Regime.rowsUpTo]] probe replaces the historical count-then-collect
+    * pair — same rows (the batch sorts by qid anyway, so even row order
+    * is immaterial). Otherwise the count runs first, so an at-scale batch
+    * never collects queryRowCap + 1 rows to learn it is big. */
+  def queryVecs(queries: DataFrame, cap: Long = queryRowCap)
+      : Option[(Array[Long], Array[Array[Float]])] =
+    memoized[(Array[Long], Array[Array[Float]])](queries) {
+      if (cap < queryRowCap || Regime.smallEstimate(queries).isDefined)
+        Regime.rowsUpTo(qidVectors(queries), cap).flatMap(queryArrays)
+      else if (queries.count() > cap) None
+      else queryArrays(qidVectors(queries).collect())
     }
 
   /** [[queryVecs]] with the pre-existing unconditional-collect behavior
@@ -234,32 +192,23 @@ object LocalScan {
     * query batch per search before this module existed; above the memo
     * cap they keep doing exactly that. */
   def queryVecsAlways(queries: DataFrame): (Array[Long], Array[Array[Float]]) =
-    queryVecs(queries).orElse(collectQueryRows(queries)).getOrElse(
+    queryVecs(queries).orElse(queryArrays(qidVectors(queries).collect())).getOrElse(
       throw new IllegalArgumentException("query batch holds a null qid or vector"))
 
-  /** Collect in ONE job when the size estimate clears an 8× margin under
-    * [[bytesCap]] (r15 — replaces the stats-probe-then-collect pair for
-    * the gate/bench shape); the exact cap is still enforced POST-collect
-    * via `bytesOf`, so a lying estimate routes an over-cap relation to
-    * the distributed path exactly as before (at the price of one wasted
-    * bounded collect — bounded because the margin caps what the estimate
-    * admits). Above the margin the historical stats-gated path runs
-    * unchanged, so at real scale nothing is ever collected to learn it
-    * is big. */
-  private def collectUnderCap[R <: AnyRef](data: DataFrame, payloadCol: String,
-      bytesPerUnit: Int)(doCollect: () => Option[R])(bytesOf: R => Long): Option[R] = {
-    val est = data.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (smallEstimate(data) && est * 8 <= BigInt(bytesCap))
-      doCollect().filter(r => bytesOf(r) <= bytesCap)
-    else withinCap(data, payloadCol, bytesPerUnit)(doCollect).flatten
-  }
+  /** exact payload bytes of a table, n · (width · unit + 12), from the
+    * [[payloadStats]] probe */
+  private def tableBytes(data: DataFrame, payloadCol: String,
+      bytesPerUnit: Int): Option[Long] =
+    payloadStats(data, payloadCol, bytesPerUnit).map { case (n, width) =>
+      n * (width.toLong * bytesPerUnit + 12)
+    }
 
-  /** collected code relation (id, codes[, centroid_id]) under the caps;
-    * memoized per DataFrame instance. */
+  /** collected code relation (id, codes[, centroid_id]) under
+    * [[bytesCap]] ([[Regime.collectUnder]]); memoized per DataFrame
+    * instance. */
   def codeTable(data: DataFrame, ivf: Boolean): Option[CodeTable] =
-    if (!enabled) None
-    else cached[CodeTable](data) {
-      collectUnderCap(data, "codes", bytesPerUnit = 1) { () =>
+    memoized[CodeTable](data) {
+      Regime.collectUnder(data, bytesCap)(tableBytes(data, "codes", 1)) {
         if (ivf) {
           val rows = data
             .select(col("id").cast("long"), col("centroid_id").cast("int"),
@@ -282,14 +231,14 @@ object LocalScan {
     }
 
   /** collected float-vector relation (id, vector[, centroid_id]) under
-    * the caps; memoized per DataFrame instance. None (the distributed
-    * plan) when a collected id, centroid id or vector is null, or the
-    * vectors differ in length: the distributed plans skip a null row, and
-    * the flat layout holds one dim per table. */
+    * [[bytesCap]] ([[Regime.collectUnder]]); memoized per DataFrame
+    * instance. None (the distributed plan) when a collected id, centroid
+    * id or vector is null, or the vectors differ in length: the
+    * distributed plans skip a null row, and the flat layout holds one dim
+    * per table. */
   def vecTable(data: DataFrame, ivf: Boolean): Option[VecTable] =
-    if (!enabled) None
-    else cached[VecTable](data) {
-      collectUnderCap(data, "vector", bytesPerUnit = 4) { () =>
+    memoized[VecTable](data) {
+      Regime.collectUnder(data, bytesCap)(tableBytes(data, "vector", 4)) {
         val cols = Seq(col("id").cast("long"), col("vector")) ++
           (if (ivf) Seq(col("centroid_id").cast("int")) else Nil)
         val raw = data.select(cols: _*).collect()
@@ -309,8 +258,8 @@ object LocalScan {
       } { vt => vt.n.toLong * (vt.dim.toLong * 4 + 12) }
     }
 
-  /** memoized (rowCount, payloadWidth) of a relation — the cheap probe
-    * behind [[withinCap]] and pre-collect guards (e.g. LinearSearcher's
+  /** memoized (rowCount, payloadWidth) of a relation — the exact probe
+    * behind [[codeTable]]/[[vecTable]] and pre-collect guards (e.g. LinearSearcher's
     * flop gate, which must decide BEFORE paying the collect) */
   private val statsMemo =
     java.util.Collections.synchronizedMap(
@@ -334,7 +283,7 @@ object LocalScan {
     // metadata-only count never reads the payload column, while
     // first(payload) over a 100 TB relation would.
     val (n, width) =
-      if (smallEstimate(data)) {
+      if (Regime.smallEstimate(data).isDefined) {
         val r = data.agg(count(lit(1)), first(col(payloadCol))).collect()(0)
         (r.getLong(0), widthOf(r, 1))
       } else {
@@ -347,17 +296,6 @@ object LocalScan {
     statsMemo.put(data, (n, width))
     Some((n, width))
   }
-
-  /** size gate: one count + one width probe (both memoized) — the
-    * collect only happens when n · width · unit fits */
-  private def withinCap[T](data: DataFrame, payloadCol: String,
-      bytesPerUnit: Int)(collect: () => T): Option[T] =
-    payloadStats(data, payloadCol, bytesPerUnit) match {
-      case None => None
-      case Some((n, width)) =>
-        val bytes = n * (width.toLong * bytesPerUnit + 12)
-        if (bytes > bytesCap) None else Some(collect())
-    }
 
   private def flattenBytes(rows: Array[Array[Byte]], m: Int): Array[Byte] = {
     val out = new Array[Byte](rows.length * m)

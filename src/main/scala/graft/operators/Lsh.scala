@@ -150,20 +150,11 @@ private[operators] object LshLocal {
       numTables: Int): Option[Buckets] =
     LocalScan.memoized[Buckets](artifact.data) {
       val data = artifact.data
-      // ONE collect job when the size estimate clears an 8× margin under
-      // the cap (r15, same discipline as LocalScan.collectUnderCap); the
-      // exact (table, key, id) ~24 B/row cap is still enforced on the
-      // collected length, so a lying estimate routes to the distributed
-      // plan exactly as the historical count-then-collect pair did.
-      val est = data.queryExecution.optimizedPlan.stats.sizeInBytes
-      val rowsOpt =
-        if (LocalScan.smallEstimate(data) && est * 8 <= BigInt(LocalScan.bytesCap))
-          Some(data.select(col("id").cast("long"), col("table").cast("int"),
-            col("key").cast("long")).collect())
-        else if (data.count() * 24 > LocalScan.bytesCap) None
-        else Some(data.select(col("id").cast("long"), col("table").cast("int"),
+      // (table, key, id) at ~24 B/row
+      Regime.collectUnder(data, LocalScan.bytesCap)(Some(data.count() * 24)) {
+        Some(data.select(col("id").cast("long"), col("table").cast("int"),
           col("key").cast("long")).collect())
-      rowsOpt.filter(_.length.toLong * 24 <= LocalScan.bytesCap).map { rows =>
+      }(_.length.toLong * 24).map { rows =>
         val grouped = Array.fill(numTables)(
           new scala.collection.mutable.LongMap[scala.collection.mutable.ArrayBuffer[Long]]())
         rows.foreach { r =>

@@ -46,20 +46,8 @@ object Par {
     * derives from the runtime core count and the relation's own size
     * estimate, and past cores × maxPartitionBytes no exchange is
     * inserted at all. */
-  def fan(df: DataFrame, key: Column, minBytesPerTask: Long = 0L): DataFrame = {
-    val spark = df.sparkSession
-    val cores = spark.sparkContext.defaultParallelism
-    val split = spark.sessionState.conf.filesMaxPartitionBytes
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est >= BigInt(split) * cores) df
-    else {
-      val target =
-        if (minBytesPerTask <= 0L) cores
-        else ((est + minBytesPerTask - 1) / minBytesPerTask)
-          .min(BigInt(cores)).max(BigInt(1)).toInt
-      df.repartition(target, key)
-    }
-  }
+  def fan(df: DataFrame, key: Column, minBytesPerTask: Long = 0L): DataFrame =
+    widened(df, key, minBytesPerTask).getOrElse(df)
 
   /** Scaled-floor variant for tokenize/shingle-grade work (~µs/byte). */
   def fanText(df: DataFrame, key: Column): DataFrame =
@@ -76,18 +64,21 @@ object Par {
     * width the planner/AQE sizes by bytes — the correct regime once
     * partitions carry real data. `minBytesPerTask` scales the floor so
     * kilobyte relations don't pay full-width task dispatch. */
-  def co(df: DataFrame, key: Column, minBytesPerTask: Long = 0L): DataFrame = {
-    val spark = df.sparkSession
-    val cores = spark.sparkContext.defaultParallelism
-    val split = spark.sessionState.conf.filesMaxPartitionBytes
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est >= BigInt(split) * cores) df.repartition(key)
-    else {
+  def co(df: DataFrame, key: Column, minBytesPerTask: Long = 0L): DataFrame =
+    widened(df, key, minBytesPerTask).getOrElse(df.repartition(key))
+
+  /** `df` repartitioned on `key` to the floor width when its estimate is
+    * small ([[Regime.smallEstimate]]): the default parallelism, or with
+    * `minBytesPerTask` one task per that many estimated bytes, capped at
+    * it. None at real scale. */
+  private def widened(df: DataFrame, key: Column,
+      minBytesPerTask: Long): Option[DataFrame] =
+    Regime.smallEstimate(df).map { est =>
+      val cores = df.sparkSession.sparkContext.defaultParallelism
       val target =
         if (minBytesPerTask <= 0L) cores
         else ((est + minBytesPerTask - 1) / minBytesPerTask)
           .min(BigInt(cores)).max(BigInt(1)).toInt
       df.repartition(target, key)
     }
-  }
 }

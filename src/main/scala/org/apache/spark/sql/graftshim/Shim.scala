@@ -105,7 +105,7 @@ object Shim {
             }
             return rows.iterator.map(fastRow).toArray
           }
-          val conv = converterCache.computeIfAbsent(schema, s =>
+          val conv = converterCache.computeIfAbsent(this.schema, s =>
             org.apache.spark.sql.catalyst.CatalystTypeConverters
               .createToScalaConverter(s))
           rows.iterator.map(r =>

@@ -176,14 +176,13 @@ class Bm25WandSpec extends AnyFunSuite {
     }
   }
 
-  private val driverMaxKey = "graft.bm25.driverWandMaxPostings"
-
-  /** Serves `queries` from `table` through the driver-local route (default
-    * Σ df limit) and through the distributed route (limit 0), requires
-    * bit-identical rows and equal schemas, and returns the rows. */
+  /** Serves `queries` from `table` through the driver-local route (default)
+    * and through the distributed route (the `graft.local.enabled=false`
+    * kill switch), requires bit-identical rows and equal schemas, and
+    * returns the rows. */
   private def serveBothRoutes(table: String,
       queries: org.apache.spark.sql.DataFrame, k: Int) = {
-    def serve(limit: Option[String]) = withProp(driverMaxKey, limit) {
+    def serve() = {
       val res = Bm25.searchFromIndexWand(spark, table, queries, "qid", "qtext", k = k)
       val local = res.queryExecution.optimizedPlan
         .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
@@ -191,9 +190,9 @@ class Bm25WandSpec extends AnyFunSuite {
         .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3)).toSeq
       (local, res.schema, rows)
     }
-    val (onDriver, driverSchema, driverRows) = serve(None)
-    val (distLocal, distSchema, distRows) = serve(Some("0"))
-    assert(onDriver && !distLocal, "each limit must select its route")
+    val (onDriver, driverSchema, driverRows) = serve()
+    val (distLocal, distSchema, distRows) = RouteCheck.distributed(serve())
+    assert(onDriver && !distLocal, "each setting must select its route")
     assert(driverSchema == distSchema)
     // doubles compared by bits: the fixed-point scores must be identical
     assert(driverRows.map(r => r.copy(_4 = java.lang.Double.doubleToRawLongBits(r._4))) ==
@@ -268,17 +267,17 @@ class Bm25WandSpec extends AnyFunSuite {
       val (driverJobs, rows) = serve(batch)
       assert(rows.nonEmpty)
       assert(driverJobs <= 3, s"$driverJobs Spark jobs for a 4-query driver-route serve")
-      // Σ df above the limit: the distributed route reuses the probe's
+      // the distributed route (kill switch) reuses the probe's
       // (query, term) rows and the df/stats rows it already collected, so
       // it neither re-tokenizes the batch nor collects the idf again (5
       // jobs; 8 when this route re-entered searchWandOverPostings)
-      val (distJobs, distRows) = withProp(driverMaxKey, Some("0"))(serve(batch))
+      val (distJobs, distRows) = RouteCheck.distributed(serve(batch))
       assert(distRows.toSet == rows.toSet)
       assert(distJobs <= 5, s"$distJobs Spark jobs for a 4-query distributed-route serve")
       // a shuffled batch adds only its bounded (query, term) collect: the
       // batch's shuffle and at most two take jobs
       val spread = batch.repartition(2)
-      val (spreadJobs, _) = withProp(driverMaxKey, Some("0"))(serve(spread))
+      val (spreadJobs, _) = RouteCheck.distributed(serve(spread))
       assert(spreadJobs <= distJobs + 3,
         s"$spreadJobs Spark jobs for a 2-partition distributed-route serve")
     }

@@ -56,12 +56,10 @@ class CoresetSpec extends AnyFunSuite {
     val df = graft.sources.RandomDataset.vectors(spark, n = 300, dim = 6, seed = 47)
     val local = Coreset.kCenterGreedy(df, k = 15).orderBy("step").collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq
-    System.setProperty("graft.kcenter.driver.bytes", "0") // force distributed
-    try {
-      val dist = Coreset.kCenterGreedy(df, k = 15).orderBy("step").collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq
-      assert(local === dist)
-    } finally System.clearProperty("graft.kcenter.driver.bytes")
+    val dist = RouteCheck.distributed(Coreset.kCenterGreedy(df, k = 15)
+      .orderBy("step").collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq)
+    assert(local === dist)
   }
 
   test("kCenterBatch(b=1) IS the greedy trajectory; b>1 stays sound") {

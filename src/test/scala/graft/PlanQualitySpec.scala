@@ -168,14 +168,7 @@ class PlanQualitySpec extends AnyFunSuite {
         // assertable (the default LocalScan fast path and driver-merge
         // finish both return an already-materialized local relation;
         // LocalScanSpec proves those equal to this plan's rows)
-        System.setProperty("graft.adc.driverMergeCap", "0")
-        System.setProperty("graft.local.enabled", "false")
-        val result =
-          try searcher.search(artifact, queries, 5)
-          finally {
-            System.clearProperty("graft.adc.driverMergeCap")
-            System.clearProperty("graft.local.enabled")
-          }
+        val result = RouteCheck.distributed(searcher.search(artifact, queries, 5))
         // expression-level check (not string matching: the cached code
         // relation's lineage description legitimately mentions the
         // build-time encode UDF, but nothing EXECUTED may be one)

@@ -1,0 +1,180 @@
+package graft
+
+import org.apache.spark.JobCount.{actionsOf, jobsOf}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.operators._
+
+/** Catalyst sizes an array column by its element default (4 B for
+  * `array<float>`), so a relation of 256-float vectors reads far smaller
+  * than it is. Under a `graft.local.bytesCap` that such an estimate clears
+  * by [[Regime.collectUnder]]'s 8× margin while the exact bytes do not,
+  * every collect site takes the one-job collect, re-checks the exact cap
+  * on what it collected, and falls back to its distributed route — with
+  * the rows of the forced-distributed plan ([[RouteCheck]]). The global
+  * HNSW build, whose collect is GBs at its cap, probes the exact size
+  * before it collects anything. */
+class RegimeSpec extends AnyFunSuite {
+  lazy val spark = SparkFixture.spark
+
+  Registry.init()
+
+  /** n rows of (id, `dim` floats); a fresh relation per call, since the
+    * collect memo is keyed by DataFrame instance */
+  private def vectors(n: Int, dim: Int = 256): DataFrame =
+    spark.range(n).select(col("id"),
+      array_repeat((col("id") % 13).cast("float"), dim).as("vector"))
+
+  private def queries(dim: Int = 256): DataFrame =
+    spark.range(5).select((col("id") * 7).as("qid"),
+      array_repeat((col("id") % 13 + lit(0.5)).cast("float"), dim).as("vector"))
+
+  private def estimate(df: DataFrame): BigInt =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes
+
+  /** The cap a site's relation clears by the 8× margin on its estimate;
+    * asserts that its `exact` bytes do not fit under it. */
+  private def marginCap(df: DataFrame, exact: Long): Long = {
+    val cap = (estimate(df) * 8).toLong
+    assert(Regime.smallEstimate(df).isDefined)
+    assert(cap < exact, s"estimate ${estimate(df)} B does not understate $exact B")
+    cap
+  }
+
+  private def withProp[T](key: String, value: Long)(body: => T): T = {
+    val old = sys.props.get(key)
+    sys.props(key) = value.toString
+    try body finally old match {
+      case Some(v) => sys.props(key) = v
+      case None => sys.props -= key
+    }
+  }
+
+  private def withCap[T](cap: Long)(body: => T): T = withProp("graft.local.bytesCap", cap)(body)
+
+  test("an array<float> column of 256 floats is understated about 50×") {
+    val n = 1000
+    val exact = n * (256L * 4 + 12)
+    assert(estimate(vectors(n)) * 50 < exact,
+      s"estimate ${estimate(vectors(n))} B vs exact $exact B")
+  }
+
+  test("vecTable: an understated base falls back to the distributed kNN join") {
+    val n = 600
+    val cap = marginCap(vectors(n), n * (256L * 4 + 12))
+    withCap(cap) {
+      assert(LocalScan.vecTable(vectors(n), ivf = false).isEmpty)
+      val artifact = Registry.indexer("brute_force", Map.empty, "l2").build(vectors(n))
+      val s = Registry.searcher("linear", Map.empty, "l2")
+      assert(RouteCheck.bothRoutes(local = false, "dist")(
+        s.search(artifact, queries(), 5)).nonEmpty)
+    }
+    withCap(n * (256L * 4 + 12))(assert(LocalScan.vecTable(vectors(n), ivf = false).isDefined))
+  }
+
+  test("codeTable: an understated code relation falls back to the distributed scan") {
+    val (n, dim) = (300, 2048)
+    val artifact = Sq8Indexer().build(vectors(n, dim))
+    val cap = marginCap(artifact.data, n * (dim + 12L))
+    withCap(cap) {
+      assert(LocalScan.codeTable(Sq8Indexer().build(vectors(n, dim)).data, ivf = false).isEmpty)
+      // the distributed scan ends in the driver merge, a LocalRelation
+      assert(RouteCheck.bothRoutes(local = true, "dist")(
+        Sq8Searcher("l2").search(artifact, queries(dim), 5)).nonEmpty)
+      // no memoized table: a repeated search scans again
+      assert(jobsOf(spark.sparkContext)(
+        Sq8Searcher("l2").search(artifact, queries(dim), 5))._1 > 0)
+    }
+    withCap(n * (dim + 12L))(assert(LocalScan.codeTable(
+      Sq8Indexer().build(vectors(n, dim)).data, ivf = false).isDefined))
+  }
+
+  test("LSH buckets: understated buckets fall back to the distributed probe") {
+    val (n, dim, tables) = (600, 8, 16)
+    val params = Map("num_tables" -> tables.toString, "hash_size" -> "4",
+      "bucket_width" -> "4.0", "seed" -> "42")
+    def build() = Registry.indexer("lsh", params, "l2").build(vectors(n, dim))
+    val artifact = build()
+    val exact = n.toLong * tables * 24
+    val cap = marginCap(artifact.data, exact)
+    val s = Registry.searcher("lsh", Map("candidate_multiplier" -> "8"), "l2")
+    withCap(cap) {
+      // the rerank vectors fit: the fallback is the buckets' own
+      assert(LocalScan.vecTable(build().aux("vectors"), ivf = false).isDefined)
+      assert(RouteCheck.bothRoutes(local = false, "dist")(
+        s.search(artifact, queries(dim), 5)).nonEmpty)
+    }
+    val fresh = build()
+    withCap(exact)(RouteCheck.bothRoutes(local = true, "dist")(s.search(fresh, queries(dim), 5)))
+  }
+
+  test("Hnsw local model: an understated graph relation falls back to the distributed walk") {
+    // a stored graph read back from parquet: the estimate is the file size,
+    // and run-length-encoded vectors compress far below their heap bytes
+    val (n, dim) = (600, 512)
+    val params = Map("n_partitions" -> "2", "m" -> "8", "ef_construction" -> "32",
+      "nprobe" -> "2", "ef_search" -> "32", "seed" -> "42")
+    val tmp = java.nio.file.Files.createTempDirectory("regime-hnsw")
+    val dir = tmp.resolve("a").toString
+    try {
+      graft.sources.ArtifactStore.save(
+        Registry.indexer("hnsw", params, "l2").build(vectors(n, dim)),
+        dir, "l2", dim, n, "fp", "cfg")
+      def load() = graft.sources.ArtifactStore.load(spark, dir)._1
+      val artifact = load()
+      val exact = n * (dim * 4L + 8L * 8 + 64)
+      val cap = marginCap(artifact.data, exact)
+      val s = Registry.searcher("hnsw", params, "l2")
+      withCap(cap) {
+        assert(RouteCheck.bothRoutes(local = false, "dist")(
+          s.search(artifact, queries(dim), 5)).nonEmpty)
+      }
+      val fresh = load()
+      withCap(exact)(RouteCheck.bothRoutes(local = true, "dist")(s.search(fresh, queries(dim), 5)))
+    } finally org.apache.spark.network.util.JavaUtils.deleteRecursively(tmp.toFile)
+  }
+
+  test("the kill switch forces Dedup's union-find onto the distributed rounds") {
+    import spark.implicits._
+    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L), (9L, 7L), (4L, 4L)).toDF("a", "b")
+    def labels(df: DataFrame) = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val fast = Dedup.connectedComponents(pairs)
+    val dist = RouteCheck.distributed(Dedup.connectedComponents(pairs))
+    assert(Regime.onDriver(fast) && !Regime.onDriver(dist))
+    assert(labels(fast) == labels(dist))
+  }
+
+  test("k-center: an understated input falls back to the distributed passes") {
+    val n = 600
+    def select(): (Int, Seq[(Int, Long, Double)]) = {
+      val (jobs, df) = jobsOf(spark.sparkContext)(Coreset.kCenterGreedy(vectors(n), k = 8))
+      (jobs, df.orderBy("step").collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq)
+    }
+    val cap = marginCap(vectors(n), n * (256L * 28 + 112))
+    val (localJobs, local) = select()
+    val (distJobs, dist) = RouteCheck.distributed(select())
+    // k-center's budget is a sixth of graft.local.bytesCap
+    val (cappedJobs, capped) = withCap(cap * 6)(select())
+    assert(local == dist && capped == dist)
+    assert(localJobs == 1 && distJobs > localJobs, s"$localJobs vs $distJobs jobs")
+    // the one bounded collect the estimate admitted, then the passes
+    assert(cappedJobs == distJobs + 1, s"$cappedJobs vs $distJobs jobs")
+  }
+
+  test("HnswGlobal build: an understated base is probed exactly, never collected, before the fallback") {
+    val (n, dim, m) = (600, 256, 8)
+    val exact = n * (dim * 4L + 12L * m + 64)
+    val cap = marginCap(vectors(n, dim), exact)
+    def build(cap: Long) = withProp("graft.hnsw.buildBytesCap", cap)(actionsOf(spark.sparkContext)(
+      HnswGlobalIndexer(m = m, efConstruction = 32).build(vectors(n, dim))))
+    val (actions, routed) = build(cap)
+    assert(routed.kind == "hnsw")
+    assert(!actions.exists(_.contains("at HnswGlobal.scala")), actions.mkString("\n"))
+    val (fitActions, global) = build(exact)
+    assert(global.kind == "hnsw_global")
+    assert(fitActions.exists(_.startsWith("collect at HnswGlobal.scala")), fitActions.mkString("\n"))
+  }
+}

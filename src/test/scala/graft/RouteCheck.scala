@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.scalatest.Assertions._
 
-import graft.operators.LocalScan
+import graft.operators.Regime
 
 /** Runs one search on its default route and on the distributed plan
   * forced by the `graft.local.enabled=false` kill switch, and checks that
@@ -33,10 +33,10 @@ object RouteCheck {
       : Seq[(Long, Int, Long, Long)] = {
     val got = search
     val want = distributed(search)
-    assert(LocalScan.onDriver(got) == local,
+    assert(Regime.onDriver(got) == local,
       s"expected the ${if (local) "driver" else "distributed"} route:\n" +
         got.queryExecution.optimizedPlan)
-    assert(!LocalScan.onDriver(want))
+    assert(!Regime.onDriver(want))
     assert(got.schema == want.schema)
     val rows = bits(got, score)
     assert(rows == bits(want, score))

@@ -1,0 +1,43 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Ratchets over the library sources (`src/main/scala`, the `graft/dev`
+  * probes excluded): a change that writes another hand copy of the
+  * driver-or-distributed decision, or another ad-hoc knob read, fails
+  * here instead of drifting in unnoticed. */
+class SourceRatchetSpec extends AnyFunSuite {
+
+  private lazy val sources: Seq[(Path, String)] = {
+    val root = Paths.get("src/main/scala")
+    val dev = root.resolve("graft/dev")
+    val walk = Files.walk(root)
+    try walk.iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") && !p.startsWith(dev))
+      .map(p => p -> Files.readString(p)).toList
+    finally walk.close()
+  }
+
+  private def filesMatching(re: Regex): Seq[String] =
+    sources.collect { case (p, s) if re.findFirstIn(s).isDefined => p.getFileName.toString }
+
+  test("only Regime reads the Catalyst estimate or tests for a LocalRelation") {
+    assert(sources.size > 50)
+    assert(filesMatching("""optimizedPlan\s*\.\s*stats""".r) == Seq("Regime.scala"))
+    assert(filesMatching(
+      """isInstanceOf\[[\w.]*LocalRelation\]|case\s+\w+\s*:\s*[\w.]*LocalRelation\b""".r) ==
+      Seq("Regime.scala"))
+  }
+
+  test("at most 50 ad-hoc knob reads") {
+    val reads = sources.map { case (_, s) =>
+      """sys\.props|sys\.env|System\.getProperty|System\.getenv""".r.findAllIn(s).size
+    }.sum
+    assert(reads <= 50, s"$reads sys.props/sys.env/System.getProperty/System.getenv reads")
+  }
+}
