@@ -354,12 +354,14 @@ object HnswSearcher {
 
   /** memoized per artifact relation; None above [[LocalScan.bytesCap]]
     * (the vector payload dominates: nbrs add ~2m ints/row) */
-  private[operators] def localModel(artifact: IndexArtifact): Option[DistModel] =
-    LocalScan.memoized[DistModel](artifact.data) {
-      // per-row bytes: vector floats + adjacency (~2m ints at spill-time
-      // degree, NswGraph caps degree at 2m) + Row/array-header overhead
-      val m = artifact.meta.getOrElse("m", "16").toInt
-      def bytesOf(n: Long, width: Long): Long = n * (width * 4 + 8L * m + 64)
+  private[operators] def localModel(artifact: IndexArtifact): Option[DistModel] = {
+    // per-row bytes: vector floats + adjacency (~2m ints at spill-time
+    // degree, NswGraph caps degree at 2m) + Row/array-header overhead
+    val m = artifact.meta.getOrElse("m", "16").toInt
+    def bytesOf(n: Long, width: Long): Long = n * (width * 4 + 8L * m + 64)
+    LocalScan.memoized[DistModel](artifact.data, "hnsw")(d =>
+      bytesOf(d.idsByCid.map(_.length.toLong).sum,
+        if (d.centroids.isEmpty) 0 else d.centroids(0).length)) {
       Regime.collectUnder(artifact.data, LocalScan.bytesCap)(
         LocalScan.payloadStats(artifact.data, "vector", 4)
           .map { case (n, width) => bytesOf(n, width) }) {
@@ -396,6 +398,7 @@ object HnswSearcher {
         new DistModel(graphs, ids, centroids)
       }
     }
+  }
 }
 
 /** growable primitive int list: the adjacency representation (a generic

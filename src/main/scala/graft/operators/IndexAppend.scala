@@ -16,6 +16,17 @@ import org.apache.spark.sql.functions._
   * to the new rows only; the union is a plan node, not a rewrite, and a
   * store round-trip re-partitions by the probe keys as usual
   * ([[graft.sources.ArtifactStore.partitionKeys]]).
+  *
+  * For `ivf`, `ivf_sq8`, `ivf_pq` and `lsh`, [[append]] and [[delete]]
+  * also record each result relation's parent and its delta ([[Lineage]]):
+  * the new rows with the kind's per-row encoder ([[IvfModel.assign]],
+  * [[Sq8Model.encode]], [[IvfPq.encodeRow]], [[LshModel.hashOne]]), or
+  * the deleted ids. When the parent's driver table is memoized (for
+  * example a reloaded stored index that was searched before), the next
+  * search builds the result's table on the driver from it with no Spark
+  * job ([[LocalScan.codeTable]], [[LocalScan.vecTable]], the LSH bucket
+  * maps); otherwise it collects the result's plan as before. `hnsw`
+  * rebuilds touched groups and records no lineage.
   */
 object IndexAppend {
 
@@ -66,14 +77,14 @@ object IndexAppend {
     * is that restriction made permanent. */
   def delete(artifact: IndexArtifact, ids: DataFrame): IndexArtifact = {
     val del = ids.select(col("id").cast("long").as("id"))
+    def minus(rel: DataFrame): DataFrame =
+      Lineage.record(rel.join(del, Seq("id"), "left_anti"), rel, Lineage.Delete(del))
     artifact.kind match {
       case "ivf" | "ivf_sq8" | "ivf_pq" =>
-        artifact.copy(data = artifact.data.join(del, Seq("id"), "left_anti"))
+        artifact.copy(data = minus(artifact.data))
       case "lsh" =>
-        artifact.copy(
-          data = artifact.data.join(del, Seq("id"), "left_anti"),
-          aux = artifact.aux + ("vectors" ->
-            artifact.aux("vectors").join(del, Seq("id"), "left_anti")))
+        artifact.copy(data = minus(artifact.data),
+          aux = artifact.aux + ("vectors" -> minus(artifact.aux("vectors"))))
       case "hnsw" =>
         // a plain anti-join would leave dangling `nbrs` edges (they are
         // positional idx references) — rebuild ONLY the groups that held
@@ -109,9 +120,12 @@ object IndexAppend {
     val model = Sq8Model(
       artifact.meta("lo").split(",").map(_.toFloat),
       artifact.meta("hi").split(",").map(_.toFloat))
-    artifact.copy(data = artifact.data
-      .select("id", "centroid_id", "codes")
-      .unionByName(IvfSq8.encodeRelation(newRows, centers, model)))
+    artifact.copy(data = Lineage.record(
+      artifact.data.select("id", "centroid_id", "codes")
+        .unionByName(IvfSq8.encodeRelation(newRows, centers, model)),
+      artifact.data,
+      Lineage.Append(newRows, centers.head.length,
+        v => (IvfModel.assign(centers, v), model.encode(v)))))
   }
 
   /** frozen coarse centroids + frozen PQ codebooks (both reconstructable
@@ -131,8 +145,13 @@ object IndexAppend {
           i, IvfModel.assign(centers, v), v)
       })
       .toDF("id", "centroid_id", "codes")
-    artifact.copy(data = artifact.data
-      .select("id", "centroid_id", "codes").unionByName(encoded))
+    artifact.copy(data = Lineage.record(
+      artifact.data.select("id", "centroid_id", "codes").unionByName(encoded),
+      artifact.data,
+      Lineage.Append(newRows, centers.head.length, v =>
+        IvfPq.encodeRow(centers, model, residual)(0L, IvfModel.assign(centers, v), v) match {
+          case (_, cid, codes) => (cid, codes)
+        })))
   }
 
   /** FAISS `IndexHNSW.add` semantics for the per-centroid graph index
@@ -189,10 +208,13 @@ object IndexAppend {
     val buckets = rows
       .withColumn("__keys", model.hashUdf(spark)(col("vector")))
       .select(col("id"), posexplode(col("__keys")).as(Seq("table", "key")))
+    val vectors = artifact.aux("vectors")
     artifact.copy(
-      data = artifact.data.select("id", "table", "key").unionByName(buckets),
-      aux = artifact.aux + ("vectors" ->
-        artifact.aux("vectors").select(col("id"), col("vector"))
-          .unionByName(rows)))
+      data = Lineage.record(
+        artifact.data.select("id", "table", "key").unionByName(buckets),
+        artifact.data, Lineage.Append(rows, model.dim, v => (0, model.hashOne(v)))),
+      aux = artifact.aux + ("vectors" -> Lineage.record(
+        vectors.select(col("id"), col("vector")).unionByName(rows),
+        vectors, Lineage.Append(rows, model.dim, v => (0, v)))))
   }
 }

@@ -135,8 +135,10 @@ object IvfModel {
       .as[(Long, Array[Float])]
       .mapPartitions(_.map { case (i, v) => (i, v, assign(centers, v)) })
       .toDF("id", "vector", "centroid_id")
-    artifact.copy(data = artifact.data
-      .select("id", "vector", "centroid_id").unionByName(assigned))
+    artifact.copy(data = Lineage.record(
+      artifact.data.select("id", "vector", "centroid_id").unionByName(assigned),
+      artifact.data,
+      Lineage.Append(newRows, centers.head.length, v => (assign(centers, v), v))))
   }
 
   def centroidsDf(spark: org.apache.spark.sql.SparkSession,
@@ -146,12 +148,19 @@ object IvfModel {
       .toDF("centroid_id", "vector")
   }
   /** centroids as (cid, vector) pairs — from the build's driver-side copy
-    * when present, else one collect of the tiny aux relation */
+    * when present, else one collect of the tiny aux relation, memoized
+    * per frame like a scan table ([[LocalScan.frameModel]]: a reloaded
+    * artifact's appends and searches read it with no job) */
   def centroidsOf(artifact: IndexArtifact): Array[(Int, Array[Float])] =
     artifact.local.get("centroids_local") match {
       case Some(cs: Array[Array[Float]] @unchecked) => cs.zipWithIndex.map(_.swap)
-      case _ => artifact.aux("centroids").select("centroid_id", "vector")
-        .collect().map(r => r.getInt(0) -> r.getSeq[Float](1).toArray)
+      case _ =>
+        val aux = artifact.aux("centroids")
+        LocalScan.frameModel[Array[(Int, Array[Float])]](aux, "centroids")(
+          _.map(_._2.length * 4L + 16).sum) {
+          aux.select("centroid_id", "vector")
+            .collect().map(r => r.getInt(0) -> r.getSeq[Float](1).toArray)
+        }
     }
 }
 

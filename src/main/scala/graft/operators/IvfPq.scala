@@ -115,6 +115,8 @@ object IvfPq {
 
 final case class IvfPqSearcher(nprobe: Int, metric: String,
     strided: Boolean = false) extends Searcher with QueryBroadcastLifecycle {
+  import IvfPqSearcher.sameCentroids
+
   def search(artifact: IndexArtifact, queries: DataFrame, k: Int): DataFrame = {
     beginSearch()
     val model = PqModel.fromArtifact(artifact)
@@ -175,9 +177,9 @@ final case class IvfPqSearcher(nprobe: Int, metric: String,
         val nlist = cents.keys.max + 1
         val centSeq = cents.toArray
         val t2 = IvfPqSearcher.term2Memo.synchronized {
-          IvfPqSearcher.term2Memo.get(artifact.data)
+          IvfPqSearcher.term2Memo.get(model)
         } match {
-          case t: Array[Array[Float]] if t != null => t
+          case (cs, t) if sameCentroids(cs, centArr) => t
           case _ =>
             val t = Array.ofDim[Float](nlist, mm * nC)
             java.util.stream.IntStream.range(0, centSeq.length).parallel().forEach { ci =>
@@ -203,7 +205,7 @@ final case class IvfPqSearcher(nprobe: Int, metric: String,
               }
             }
             IvfPqSearcher.term2Memo.synchronized {
-              IvfPqSearcher.term2Memo.put(artifact.data, t)
+              IvfPqSearcher.term2Memo.put(model, (centArr, t))
             }
             t
         }
@@ -255,8 +257,16 @@ final case class IvfPqSearcher(nprobe: Int, metric: String,
 }
 
 object IvfPqSearcher {
-  /** residual term2 table per artifact (keyed by the artifact's data
-    * DataFrame instance, weak like LocalScan's table memo) */
+  /** residual term2 table per frozen model: weakly keyed by the PqModel
+    * instance, with the (cid, centroid) array it was built from. A
+    * mutated or reloaded artifact reads the same model and centroid
+    * instances (the build's driver copies, or the memoized aux collects),
+    * so it reuses the table. */
   private[operators] val term2Memo =
-    new java.util.WeakHashMap[AnyRef, Array[Array[Float]]]()
+    new java.util.WeakHashMap[PqModel, (Array[(Int, Array[Float])], Array[Array[Float]])]()
+
+  /** the same centroid instances under the same ids */
+  private def sameCentroids(a: Array[(Int, Array[Float])],
+      b: Array[(Int, Array[Float])]): Boolean =
+    a.length == b.length && a.indices.forall(i => a(i)._1 == b(i)._1 && (a(i)._2 eq b(i)._2))
 }

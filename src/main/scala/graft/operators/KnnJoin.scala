@@ -103,7 +103,7 @@ object KnnJoin {
       baseVecCol: String = "vector"): DataFrame = {
     val q = queries.select(col(queryIdCol).cast("long").as("qid"),
       col(queryVecCol).as("vector"))
-    // the base's collected table is memoized by DataFrame identity, so
+    // the base's collected table is memoized on the base frame itself, so
     // only a base read as-is (no per-call rename) can take the route
     val local =
       if (baseIdCol != "id" || baseVecCol != "vector") None

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.functions._
 
 /** Driver-local batch-search fast path — the FAISS client-memory regime
@@ -8,11 +9,16 @@ import org.apache.spark.sql.functions._
   * returns arrays without any cluster hop — modular.py:336-387,
   * base_algorithm.py:57-71), expressed as an ADAPTIVE execution choice:
   *
-  *  - below [[bytesCap]], the index relation is collected ONCE per
-  *    artifact (memoized by DataFrame identity — the artifact holds one
-  *    DataFrame instance for its lifetime) into flat primitive arrays,
-  *    and every subsequent batch search runs as a multi-threaded scan
-  *    across driver cores with ZERO Spark jobs;
+  *  - below [[bytesCap]], the index relation is collected ONCE into flat
+  *    primitive arrays, and every subsequent batch search runs as a
+  *    multi-threaded scan across driver cores with ZERO Spark jobs. The
+  *    table is memoized on the frame itself (the artifact holds one
+  *    DataFrame instance for its lifetime), and also by the frame's store
+  *    identity when [[graft.sources.ArtifactStore.load]] made the frame
+  *    (so a reload of the same stored index is a hit). A frame
+  *    that [[IndexAppend]] made from a parent ([[Lineage]]) is derived on
+  *    the driver from the parent's table plus the appended or deleted
+  *    rows instead of being collected again;
   *  - above it, callers keep the distributed partition-buffered scan
   *    ([[AdcScan]]) / join pipelines — the 100 TB path, where the index
   *    could never fit one machine and per-search job dispatch is noise
@@ -115,36 +121,136 @@ object LocalScan {
   final class VecTable(val ids: Array[Long], val flat: Array[Float],
       val dim: Int, val listOffsets: Array[Int]) {
     def n: Int = ids.length
-    /** lazily-computed per-row squared norms (gram-trick scan). Cached ON
-      * the table: the generic memo is keyed by this instance already (the
-      * LSH id-index), and a fresh wrapper key would be weak-map garbage. */
+    /** lazily-computed per-row squared norms (gram-trick scan), cached
+      * on the table */
     @volatile private[operators] var normsCache: Array[Double] = null
+    /** id → row offset, built once per table; None when an id repeats */
+    private[operators] lazy val idIndex: Option[scala.collection.mutable.LongMap[Int]] = {
+      val m = new scala.collection.mutable.LongMap[Int](n * 2)
+      var i = 0
+      while (i < n && !m.contains(ids(i))) { m(ids(i)) = i; i += 1 }
+      if (i < n) None else Some(m)
+    }
   }
 
   // ---------------------------------------------------------------------
-  // memoization: DataFrame-identity keyed (an IndexArtifact holds the
-  // same DataFrame instance for its lifetime; a rebuilt artifact is a new
-  // key and the weak map lets the old collection be collected with it)
+  // memoization: per frame (an IndexArtifact holds the same DataFrame
+  // instance for its lifetime; a rebuilt artifact is a new frame), or
+  // store keyed for frames loaded from an ArtifactStore
   // ---------------------------------------------------------------------
   private case object TooBig
-  private val memo =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[AnyRef, AnyRef]())
+  private val slotTags =
+    new java.util.concurrent.ConcurrentHashMap[String, TreeNodeTag[AnyRef]]()
 
-  /** memo slot for collected structures (the built-in tables, query
-    * batches, LSH bucket maps) — DataFrame-identity keying, None=too-big;
-    * None without computing when [[Regime.enabled]] is off. The caller
-    * owns the size gate. */
-  def memoized[T <: AnyRef](key: AnyRef)(compute: => Option[T]): Option[T] =
-    if (!Regime.enabled) None
-    else memo.get(key) match {
-      case TooBig => None
-      case null =>
-        val v = compute
-        memo.put(key, v.getOrElse(TooBig))
-        v
-      case v => Some(v.asInstanceOf[T])
+  /** The frame's own memo entry for `slot`: a tag on its logical plan
+    * node, so the entry lives exactly as long as the frame (and the
+    * DataFrames that share its plan, such as `toDF()`). A weak map keyed
+    * by the frame would keep the value after the frame died, until the
+    * map's next access. */
+  private def entry(frame: DataFrame, slot: String): AnyRef = {
+    val node = frame.queryExecution.logical
+    node.synchronized(node.getTagValue(slotTags.computeIfAbsent(slot, TreeNodeTag[AnyRef](_))))
+      .orNull
+  }
+
+  private def setEntry(frame: DataFrame, slot: String, v: AnyRef): Unit = {
+    val node = frame.queryExecution.logical
+    node.synchronized(node.setTagValue(slotTags.computeIfAbsent(slot, TreeNodeTag[AnyRef](_)), v))
+  }
+
+  /** Store-keyed entries, least recently used first. They are held
+    * strongly (a reload makes new DataFrames, so nothing else keeps them
+    * alive), and their `bytesOf` total stays at or under [[bytesCap]]. */
+  private object stored {
+    private val entries =
+      new java.util.LinkedHashMap[String, (AnyRef, Long)](16, 0.75f, true)
+    private var held = 0L
+
+    def bytes: Long = synchronized(held)
+
+    def get(key: String): Option[AnyRef] = synchronized(Option(entries.get(key)).map(_._1))
+
+    def put(key: String, v: AnyRef, bytes: Long): Unit = synchronized {
+      val old = entries.remove(key)
+      if (old != null) held -= old._2
+      val cap = bytesCap
+      if (bytes <= cap) {
+        entries.put(key, (v, bytes))
+        held += bytes
+        val eldest = entries.values.iterator
+        while (held > cap) { held -= eldest.next()._2; eldest.remove() }
+      }
     }
+  }
+
+  /** bytes held by the store-keyed entries */
+  private[graft] def storedBytes: Long = stored.bytes
+
+  /** Memo slot for a structure collected from one frame (the built-in
+    * tables, query batches, LSH bucket maps, frozen models); None = too
+    * big, and None without computing when [[Regime.enabled]] is off. The
+    * caller owns the size gate. When [[graft.sources.ArtifactStore.load]]
+    * made the frame, a computed structure is also held under the frame's
+    * store identity and `slot`, so every reload of the same stored files
+    * hits; "too big" stays per frame, so a reload re-checks it against the
+    * current cap. Once computed, the frame's [[Lineage]] link is dropped. */
+  def memoized[T <: AnyRef](frame: DataFrame, slot: String)(bytesOf: T => Long)(
+      compute: => Option[T]): Option[T] =
+    if (!Regime.enabled) None
+    else {
+      val key = graft.sources.ArtifactStore.identityOf(frame).map(_ + "#" + slot)
+      entry(frame, slot) match {
+        case TooBig => None
+        case null =>
+          key.flatMap(stored.get).orElse {
+            val v = compute
+            Lineage.forget(frame)
+            for (k <- key; t <- v) stored.put(k, t, bytesOf(t))
+            v
+          } match {
+            case Some(t) => setEntry(frame, slot, t); Some(t.asInstanceOf[T])
+            case None => setEntry(frame, slot, TooBig); None
+          }
+        case v => Some(v.asInstanceOf[T])
+      }
+    }
+
+  /** a frozen model read from an index frame (centroids, codebooks):
+    * memoized like a table, and computed per call when the memo is off */
+  def frameModel[T <: AnyRef](frame: DataFrame, slot: String)(bytesOf: T => Long)(
+      compute: => T): T =
+    memoized[T](frame, slot)(bytesOf)(Some(compute)).getOrElse(compute)
+
+  /** True when `frame`'s `slot` table is in the memo, or will be once
+    * collected because the frame was loaded from a store */
+  private def rooted(frame: DataFrame, slot: String): Boolean =
+    graft.sources.ArtifactStore.identityOf(frame).isDefined ||
+      (entry(frame, slot) match { case null | TooBig => false; case _ => true })
+
+  /** True when `frame`'s table can come from the memo without collecting a
+    * plan that [[IndexAppend]] made: it is [[rooted]], or its parent is
+    * servable. A built parent that was never searched is not: its child
+    * collects its own plan instead. */
+  private def servable(frame: DataFrame, slot: String): Boolean =
+    rooted(frame, slot) || Lineage.of(frame).exists(l => servable(l.parent, slot))
+
+  /** `frame`'s table built on the driver from its parent's table and the
+    * delta rows, when `frame` has a [[Lineage]] link, the parent is
+    * [[servable]] and the delta is admitted ([[Lineage.rowsOf]]); `apply`
+    * returns None when it cannot mirror the plan (an appended id that is
+    * already live). A [[rooted]] parent's table comes from `tableOf` (the
+    * memo); an intermediate one is derived in passing and not memoized,
+    * so a chain holds no table per step. */
+  private[operators] def derived[T](frame: DataFrame, slot: String)(
+      tableOf: DataFrame => Option[T])(apply: (T, Lineage.Rows) => Option[T]): Option[T] =
+    for {
+      link <- Lineage.of(frame)
+      if servable(link.parent, slot)
+      rows <- Lineage.rowsOf(link.delta)
+      parent <- if (rooted(link.parent, slot)) tableOf(link.parent)
+        else derived(link.parent, slot)(tableOf)(apply)
+      table <- apply(parent, rows)
+    } yield table
 
   private def qidVectors(queries: DataFrame): DataFrame =
     queries.select(col("qid").cast("long"), col("vector"))
@@ -180,7 +286,8 @@ object LocalScan {
     * never collects queryRowCap + 1 rows to learn it is big. */
   def queryVecs(queries: DataFrame, cap: Long = queryRowCap)
       : Option[(Array[Long], Array[Array[Float]])] =
-    memoized[(Array[Long], Array[Array[Float]])](queries) {
+    memoized[(Array[Long], Array[Array[Float]])](queries, "queries")(
+        qv => qv._1.length * 8L + qv._2.map(_.length * 4L + 16).sum) {
       if (cap < queryRowCap || Regime.smallEstimate(queries).isDefined)
         Regime.rowsUpTo(qidVectors(queries), cap).flatMap(queryArrays)
       else if (queries.count() > cap) None
@@ -204,59 +311,120 @@ object LocalScan {
     }
 
   /** collected code relation (id, codes[, centroid_id]) under
-    * [[bytesCap]] ([[Regime.collectUnder]]); memoized per DataFrame
-    * instance. */
+    * [[bytesCap]] ([[Regime.collectUnder]]), or derived from its parent's
+    * table ([[derived]]); memoized per frame ([[memoized]]). */
   def codeTable(data: DataFrame, ivf: Boolean): Option[CodeTable] =
-    memoized[CodeTable](data) {
-      Regime.collectUnder(data, bytesCap)(tableBytes(data, "codes", 1)) {
-        if (ivf) {
-          val rows = data
-            .select(col("id").cast("long"), col("centroid_id").cast("int"),
-              col("codes"))
-            .collect()
-            .map(r => (r.getInt(1), r.getLong(0), r.getAs[Array[Byte]](2)))
-            .sortBy(t => (t._1, t._2))
-          val m = if (rows.isEmpty) 0 else rows.head._3.length
-          Some(new CodeTable(rows.map(_._2), flattenBytes(rows.map(_._3), m),
-            m, offsetsOf(rows.map(_._1))))
-        } else {
-          val rows = data
-            .select(col("id").cast("long"), col("codes"))
-            .collect()
-            .map(r => (r.getLong(0), r.getAs[Array[Byte]](1)))
-          val m = if (rows.isEmpty) 0 else rows.head._2.length
-          Some(new CodeTable(rows.map(_._1), flattenBytes(rows.map(_._2), m), m, null))
-        }
-      } { ct => ct.n.toLong * (ct.m.toLong + 12) }
+    memoized[CodeTable](data, s"codes:$ivf")(codeBytes) {
+      derived(data, s"codes:$ivf")(codeTable(_, ivf)) { (p, rows) =>
+        withDelta(p.ids, p.listOffsets, p.m, p.codes, ivf, rows)(new CodeTable(_, _, _, _))
+      }.filter(codeBytes(_) <= bytesCap).orElse(collectCodes(data, ivf))
     }
 
+  private def codeBytes(ct: CodeTable): Long = ct.n.toLong * (ct.m.toLong + 12)
+
+  private def collectCodes(data: DataFrame, ivf: Boolean): Option[CodeTable] =
+    Regime.collectUnder(data, bytesCap)(tableBytes(data, "codes", 1)) {
+      if (ivf) {
+        val rows = data
+          .select(col("id").cast("long"), col("centroid_id").cast("int"),
+            col("codes"))
+          .collect()
+          .map(r => (r.getInt(1), r.getLong(0), r.getAs[Array[Byte]](2)))
+          .sortBy(t => (t._1, t._2))
+        val m = if (rows.isEmpty) 0 else rows.head._3.length
+        Some(new CodeTable(rows.map(_._2), flattenBytes(rows.map(_._3), m),
+          m, offsetsOf(rows.map(_._1))))
+      } else {
+        val rows = data
+          .select(col("id").cast("long"), col("codes"))
+          .collect()
+          .map(r => (r.getLong(0), r.getAs[Array[Byte]](1)))
+        val m = if (rows.isEmpty) 0 else rows.head._2.length
+        Some(new CodeTable(rows.map(_._1), flattenBytes(rows.map(_._2), m), m, null))
+      }
+    }(codeBytes)
+
   /** collected float-vector relation (id, vector[, centroid_id]) under
-    * [[bytesCap]] ([[Regime.collectUnder]]); memoized per DataFrame
-    * instance. None (the distributed plan) when a collected id, centroid
-    * id or vector is null, or the vectors differ in length: the
-    * distributed plans skip a null row, and the flat layout holds one dim
-    * per table. */
+    * [[bytesCap]] ([[Regime.collectUnder]]), or derived from its parent's
+    * table ([[derived]]); memoized per frame ([[memoized]]). None
+    * (the distributed plan) when a collected id, centroid id or vector is
+    * null, or the vectors differ in length: the distributed plans skip a
+    * null row, and the flat layout holds one dim per table. */
   def vecTable(data: DataFrame, ivf: Boolean): Option[VecTable] =
-    memoized[VecTable](data) {
-      Regime.collectUnder(data, bytesCap)(tableBytes(data, "vector", 4)) {
-        val cols = Seq(col("id").cast("long"), col("vector")) ++
-          (if (ivf) Seq(col("centroid_id").cast("int")) else Nil)
-        val raw = data.select(cols: _*).collect()
-        if (raw.exists(r => (0 until r.length).exists(r.isNullAt))) None
-        else {
-          val rows = raw.map(r => (if (ivf) r.getInt(2) else 0, r.getLong(0),
-            r.getSeq[Float](1).toArray))
-          val dim = if (rows.isEmpty) 0 else rows.head._3.length
-          if (rows.exists(_._3.length != dim)) None
-          else if (ivf) {
-            val sorted = rows.sortBy(t => (t._1, t._2))
-            Some(new VecTable(sorted.map(_._2), flattenFloats(sorted.map(_._3), dim),
-              dim, offsetsOf(sorted.map(_._1))))
-          } else
-            Some(new VecTable(rows.map(_._2), flattenFloats(rows.map(_._3), dim), dim, null))
-        }
-      } { vt => vt.n.toLong * (vt.dim.toLong * 4 + 12) }
+    memoized[VecTable](data, s"vectors:$ivf")(vecBytes) {
+      derived(data, s"vectors:$ivf")(vecTable(_, ivf)) { (p, rows) =>
+        withDelta(p.ids, p.listOffsets, p.dim, p.flat, ivf, rows)(new VecTable(_, _, _, _))
+      }.filter(vecBytes(_) <= bytesCap).orElse(collectVecs(data, ivf))
     }
+
+  private def vecBytes(vt: VecTable): Long = vt.n.toLong * (vt.dim.toLong * 4 + 12)
+
+  private def collectVecs(data: DataFrame, ivf: Boolean): Option[VecTable] =
+    Regime.collectUnder(data, bytesCap)(tableBytes(data, "vector", 4)) {
+      val cols = Seq(col("id").cast("long"), col("vector")) ++
+        (if (ivf) Seq(col("centroid_id").cast("int")) else Nil)
+      val raw = data.select(cols: _*).collect()
+      if (raw.exists(r => (0 until r.length).exists(r.isNullAt))) None
+      else {
+        val rows = raw.map(r => (if (ivf) r.getInt(2) else 0, r.getLong(0),
+          r.getSeq[Float](1).toArray))
+        val dim = if (rows.isEmpty) 0 else rows.head._3.length
+        if (rows.exists(_._3.length != dim)) None
+        else if (ivf) {
+          val sorted = rows.sortBy(t => (t._1, t._2))
+          Some(new VecTable(sorted.map(_._2), flattenFloats(sorted.map(_._3), dim),
+            dim, offsetsOf(sorted.map(_._1))))
+        } else
+          Some(new VecTable(rows.map(_._2), flattenFloats(rows.map(_._3), dim), dim, null))
+      }
+    }(vecBytes)
+
+  /** A table derived through one delta, as `make(ids, payload, width,
+    * listOffsets)`: the parent's rows (flat payload of stride `width`)
+    * less the deleted ids, plus the added rows. A grouped table (`ivf`)
+    * merges the added rows into the (centroid_id, id) order that the
+    * collect sorts into, so it equals the collected table array for
+    * array; a flat one appends them (row order never changes a (dist, id)
+    * top-k). None when an added id is already live in the parent, or an
+    * added payload has another width. */
+  private def withDelta[A: scala.reflect.ClassTag, T](ids: Array[Long], offsets: Array[Int],
+      width: Int, flat: Array[A], ivf: Boolean, rows: Lineage.Rows)(
+      make: (Array[Long], Array[A], Int, Array[Int]) => T): Option[T] = {
+    val added = rows.payloads.map(_.asInstanceOf[Array[A]])
+    val w = if (ids.nonEmpty || added.isEmpty) width else added(0).length
+    if (added.exists(_.length != w) || ids.exists(rows.adds)) return None
+    // output row i: parent row src(i) when ≥ 0, else added row −src(i)−1
+    val src = Array.newBuilder[Int]
+    val cids = Array.newBuilder[Int]
+    def keep(r: Int, cid: Int): Unit =
+      if (!rows.deletes(ids(r))) { src += r; cids += cid }
+    def add(a: Int): Unit = { src += -a - 1; cids += rows.cids(a) }
+    var a = 0
+    if (!ivf) ids.indices.foreach(keep(_, 0))
+    else {
+      var cid = 0
+      while (cid + 1 < offsets.length) {
+        var r = offsets(cid)
+        while (r < offsets(cid + 1)) {
+          while (a < added.length && rows.cids(a) == cid && rows.ids(a) < ids(r)) {
+            add(a); a += 1
+          }
+          keep(r, cid); r += 1
+        }
+        while (a < added.length && rows.cids(a) == cid) { add(a); a += 1 }
+        cid += 1
+      }
+    }
+    while (a < added.length) { add(a); a += 1 }
+    val plan = src.result()
+    val out = new Array[A](plan.length * w)
+    plan.indices.foreach { i =>
+      if (plan(i) >= 0) System.arraycopy(flat, plan(i) * w, out, i * w, w)
+      else System.arraycopy(added(-plan(i) - 1), 0, out, i * w, w)
+    }
+    Some(make(plan.map(i => if (i >= 0) ids(i) else rows.ids(-i - 1)), out, w,
+      if (ivf) offsetsOf(cids.result()) else null))
+  }
 
   /** memoized (rowCount, payloadWidth) of a relation — the exact probe
     * behind [[codeTable]]/[[vecTable]] and pre-collect guards (e.g. LinearSearcher's
@@ -270,27 +438,41 @@ object LocalScan {
     if (!data.schema.fieldNames.contains(payloadCol)) return None
     val hit = statsMemo.get(data)
     if (hit != null) return Some(hit)
-    def widthOf(row: org.apache.spark.sql.Row, i: Int): Int =
-      if (row.isNullAt(i)) 0
-      else if (bytesPerUnit == 1) row.getAs[Array[Byte]](i).length
-      else row.getSeq[Float](i).length
-    // ONE job under a small size estimate (r15): count + a first-row
-    // width in a single aggregate. Payload widths are uniform per
-    // relation (vector dim / code length are model constants, appends
-    // are dim-checked), so WHICH row supplies the width is immaterial —
-    // the historical limit(1) probe read an arbitrary first partition
-    // row too. Above the estimate the count stays a separate job: a
-    // metadata-only count never reads the payload column, while
-    // first(payload) over a 100 TB relation would.
+    // ONE job under a small size estimate, with no Exchange: each
+    // partition counts its rows and reads its first row's width, and one
+    // collect brings the partials back (an agg(count, first) ran as a
+    // shuffle-map job plus a result job under AQE). Payload widths are
+    // uniform per relation (vector dim / code length are model constants,
+    // appends are dim-checked), so WHICH row supplies the width is
+    // immaterial. Above the estimate the count stays a separate job: a
+    // metadata-only count never reads the payload column, while reading
+    // it over a 100 TB relation would.
     val (n, width) =
       if (Regime.smallEstimate(data).isDefined) {
-        val r = data.agg(count(lit(1)), first(col(payloadCol))).collect()(0)
-        (r.getLong(0), widthOf(r, 1))
+        val parts = data.select(col(payloadCol)).queryExecution.toRdd
+          .mapPartitions { it =>
+            var n = 0L
+            var w = -1
+            while (it.hasNext) {
+              val r = it.next()
+              if (w < 0)
+                w = if (r.isNullAt(0)) 0
+                  else if (bytesPerUnit == 1) r.getBinary(0).length
+                  else r.getArray(0).numElements()
+              n += 1
+            }
+            Iterator.single((n, w))
+          }.collect()
+        (parts.map(_._1).sum, parts.map(_._2).find(_ >= 0).getOrElse(0))
       } else {
         val c = data.count()
         val w =
           if (c == 0) 0
-          else widthOf(data.select(col(payloadCol)).limit(1).collect()(0), 0)
+          else data.select(col(payloadCol)).limit(1).collect()(0) match {
+            case r if r.isNullAt(0) => 0
+            case r if bytesPerUnit == 1 => r.getAs[Array[Byte]](0).length
+            case r => r.getSeq[Float](0).length
+          }
         (c, w)
       }
     statsMemo.put(data, (n, width))

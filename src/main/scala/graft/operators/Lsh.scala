@@ -146,26 +146,53 @@ private[operators] object LshLocal {
     * table for rerank/fallback */
   final class Buckets(val tables: Array[scala.collection.mutable.LongMap[Array[Long]]])
 
-  private def collectBuckets(artifact: IndexArtifact,
-      numTables: Int): Option[Buckets] =
-    LocalScan.memoized[Buckets](artifact.data) {
-      val data = artifact.data
-      // (table, key, id) at ~24 B/row
-      Regime.collectUnder(data, LocalScan.bytesCap)(Some(data.count() * 24)) {
-        Some(data.select(col("id").cast("long"), col("table").cast("int"),
-          col("key").cast("long")).collect())
-      }(_.length.toLong * 24).map { rows =>
-        val grouped = Array.fill(numTables)(
-          new scala.collection.mutable.LongMap[scala.collection.mutable.ArrayBuffer[Long]]())
-        rows.foreach { r =>
-          val t = r.getInt(1)
-          if (t >= 0 && t < numTables)
-            grouped(t).getOrElseUpdate(r.getLong(2),
-              new scala.collection.mutable.ArrayBuffer[Long]()) += r.getLong(0)
-        }
-        new Buckets(grouped.map(_.map { case (k, v) => (k, v.toArray) }))
-      }
+  /** the bucket maps of an LSH bucket relation (table, key, id): collected
+    * under [[LocalScan.bytesCap]] at ~24 B per row, or derived from the
+    * parent relation's maps ([[LocalScan.derived]]) */
+  private def collectBuckets(data: DataFrame, numTables: Int): Option[Buckets] =
+    LocalScan.memoized[Buckets](data, "lsh_buckets")(bucketBytes) {
+      LocalScan.derived(data, "lsh_buckets")(collectBuckets(_, numTables))(withDelta)
+        .filter(bucketBytes(_) <= LocalScan.bytesCap)
+        .orElse(Regime.collectUnder(data, LocalScan.bytesCap)(Some(data.count() * 24)) {
+          Some(data.select(col("id").cast("long"), col("table").cast("int"),
+            col("key").cast("long")).collect())
+        }(_.length.toLong * 24).map { rows =>
+          val grouped = Array.fill(numTables)(
+            new scala.collection.mutable.LongMap[scala.collection.mutable.ArrayBuffer[Long]]())
+          rows.foreach { r =>
+            val t = r.getInt(1)
+            if (t >= 0 && t < numTables)
+              grouped(t).getOrElseUpdate(r.getLong(2),
+                new scala.collection.mutable.ArrayBuffer[Long]()) += r.getLong(0)
+          }
+          new Buckets(grouped.map(_.map { case (k, v) => (k, v.toArray) }))
+        })
     }
+
+  private def bucketBytes(b: Buckets): Long =
+    b.tables.iterator.flatMap(_.valuesIterator).map(_.length.toLong * 24).sum
+
+  /** the parent's maps minus the deleted ids plus the appended rows under
+    * their keys (`payloads`: per-table keys from [[LshModel.hashOne]]);
+    * None when an appended id is already live. Each map is cloned, not
+    * rebuilt, and a bucket that a deleted id empties stays as an empty
+    * array. Neither changes a result: votes are counted per id and the
+    * cap heap is (−votes, id) ordered, so order within a bucket is
+    * immaterial too. */
+  private def withDelta(parent: Buckets, rows: Lineage.Rows): Option[Buckets] =
+    if (rows.ids.nonEmpty && parent.tables.exists(_.valuesIterator.exists(_.exists(rows.adds))))
+      None
+    else Some(new Buckets(parent.tables.indices.toArray.map { t =>
+      val out = parent.tables(t).clone()
+      if (rows.deleted.nonEmpty)
+        out.transformValuesInPlace(ids =>
+          if (ids.exists(rows.deletes)) ids.filterNot(rows.deletes) else ids)
+      rows.ids.indices.groupBy(i => rows.payloads(i).asInstanceOf[Array[Long]](t))
+        .foreach { case (key, added) =>
+          out(key) = out.getOrElse(key, Array.emptyLongArray) ++ added.map(rows.ids)
+        }
+      out
+    }))
 
   def trySearch(artifact: IndexArtifact, model: LshModel, queries: DataFrame,
       k: Int, cap: Int, metric: String, fallback: Boolean): Option[DataFrame] = {
@@ -177,7 +204,7 @@ private[operators] object LshLocal {
       case Some(v) => v
       case None => return None
     }
-    val buckets = collectBuckets(artifact, model.numTables) match {
+    val buckets = collectBuckets(artifact.data, model.numTables) match {
       case Some(b) => b
       case None => return None
     }
@@ -185,15 +212,12 @@ private[operators] object LshLocal {
       case Some(qv) => qv
       case None => return None
     }
-    // id → row offset, memoized against the collected VecTable itself
-    // (which the memo keeps strongly alive as the aux relation's value —
-    // a tuple key would be weakly-referenced garbage immediately)
-    val idIndex = LocalScan.memoized[scala.collection.mutable.LongMap[Int]](vt) {
-      val m = new scala.collection.mutable.LongMap[Int](vt.n * 2)
-      var i = 0
-      while (i < vt.n) { m(vt.ids(i)) = i; i += 1 }
-      Some(m)
-    }.get
+    // None (the distributed plan) when an id repeats: the rerank join
+    // scores every vector row of a candidate id, one offset per id cannot
+    val idIndex = vt.idIndex match {
+      case Some(m) => m
+      case None => return None
+    }
 
     val spark = artifact.data.sparkSession
     val out = new Array[BoundedTopK](qids.length)

@@ -222,9 +222,13 @@ object PqModel {
     }.toSeq.toDF("subspace", "centroid", "vector")
   }
 
+  /** the build's model when present, else one collect of the codebooks
+    * relation, memoized per frame ([[LocalScan.frameModel]]) */
   def fromArtifact(a: IndexArtifact): PqModel = a.local.get("pq_model") match {
     case Some(m: PqModel) => m
-    case _ => collectFromAux(a)
+    case _ =>
+      LocalScan.frameModel[PqModel](a.aux("codebooks"), "pq")(
+        _.codebooks.map(_.map(_.length * 4L + 16).sum).sum)(collectFromAux(a))
   }
 
   private def collectFromAux(a: IndexArtifact): PqModel = {

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.graftshim.Shim
 
 /** Where an operator's data lives: collected on the driver (the FAISS
   * client-memory regime — every index in process RAM, modular.py:336-387)
@@ -70,10 +71,16 @@ object Regime {
 
   /** The rows of `df` when it holds at most `cap`, else None: one
     * `limit(cap + 1)` collect, so an over-cap relation never lands whole
-    * on the driver. */
+    * on the driver. Rows that are already on the driver ([[onDriver]])
+    * are read from the relation itself, with no job and no physical plan
+    * (the planning and execution events of a `collect` cost more than
+    * converting a few hundred rows). */
   def rowsUpTo(df: DataFrame, cap: Long): Option[Array[Row]] = {
-    val rows =
-      if (cap >= Int.MaxValue) df.collect() else df.limit(cap.toInt + 1).collect()
+    val take = math.min(cap + 1, Int.MaxValue.toLong).toInt
+    val rows = df.queryExecution.optimizedPlan match {
+      case local: LocalRelation => Shim.externalRows(local.schema, local.data.take(take))
+      case _ => if (cap >= Int.MaxValue) df.collect() else df.limit(take).collect()
+    }
     if (rows.length > cap) None else Some(rows)
   }
 }

@@ -6,7 +6,7 @@ import java.security.MessageDigest
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.IndexArtifact
 
@@ -109,8 +109,8 @@ object ArtifactStore {
     if (!Files.exists(base.resolve(Sentinel)))
       throw ArtifactValidationException(
         s"incomplete artifact (missing $Sentinel) at $dir")
-    val manifest = parseFlatJson(
-      Files.readString(base.resolve("manifest.json")))
+    val manifestJson = Files.readString(base.resolve("manifest.json"))
+    val manifest = parseFlatJson(manifestJson)
     if (manifest("schema_version") != SchemaVersion)
       throw ArtifactValidationException(
         s"schema version ${manifest("schema_version")} != $SchemaVersion")
@@ -129,8 +129,12 @@ object ArtifactStore {
         throw ArtifactValidationException(
           s"dataset fingerprint mismatch (index built on different data)")
     }
+    val manifestSha = sha256(manifestJson)
     val frames = manifest("frames").split(",").filter(_.nonEmpty).map { name =>
-      name -> spark.read.parquet(base.resolve(name).toString)
+      val df = spark.read.parquet(base.resolve(name).toString)
+      identities.put(df, Seq(base.toAbsolutePath.normalize.toString, manifestSha, name,
+        sha256(partFiles(base.resolve(name)).mkString("\n"))).mkString("|"))
+      name -> df
     }.toMap
     val meta = manifest.collect {
       case (k, v) if k.startsWith("meta.") => k.stripPrefix("meta.") -> v
@@ -138,6 +142,27 @@ object ArtifactStore {
     val artifact = IndexArtifact(manifest("kind"), frames("data"), meta,
       frames - "data")
     (artifact, manifest)
+  }
+
+  /** Store identity of each frame that [[load]] made: the directory, the
+    * sha256 of its `manifest.json`, the frame name and the sha256 of the
+    * frame's file names. Every write makes part files with fresh names, so
+    * an overwrite at the same directory is a new identity. Weakly keyed
+    * by the DataFrame; [[graft.operators.LocalScan]] keys its memo by it,
+    * so a reload of the same stored files is a memo hit. */
+  private val identities =
+    java.util.Collections.synchronizedMap(
+      new java.util.WeakHashMap[DataFrame, String]())
+
+  private[graft] def identityOf(df: DataFrame): Option[String] =
+    Option(identities.get(df))
+
+  /** file names under a frame directory, relative and sorted */
+  private def partFiles(dir: Path): Seq[String] = {
+    val walk = Files.walk(dir)
+    try walk.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(dir.relativize(_).toString).toSeq.sorted
+    finally walk.close()
   }
 
   /** minimal flat JSON object parser (manifests are flat string maps) */

@@ -105,13 +105,20 @@ object Shim {
             }
             return rows.iterator.map(fastRow).toArray
           }
-          val conv = converterCache.computeIfAbsent(this.schema, s =>
-            org.apache.spark.sql.catalyst.CatalystTypeConverters
-              .createToScalaConverter(s))
-          rows.iterator.map(r =>
-            conv(r).asInstanceOf[org.apache.spark.sql.Row]).toArray
+          externalRows(this.schema, rows)
         }
       }
     }
+  }
+
+  /** `rows` as the external Rows `collect()` returns for `schema`, through
+    * the schema-cached Catalyst→Scala converter */
+  def externalRows(schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[org.apache.spark.sql.catalyst.InternalRow])
+      : Array[org.apache.spark.sql.Row] = {
+    val conv = converterCache.computeIfAbsent(schema, s =>
+      org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToScalaConverter(s))
+    rows.iterator.map(r => conv(r).asInstanceOf[org.apache.spark.sql.Row]).toArray
   }
 }

@@ -177,4 +177,16 @@ class RegimeSpec extends AnyFunSuite {
     assert(global.kind == "hnsw_global")
     assert(fitActions.exists(_.startsWith("collect at HnswGlobal.scala")), fitActions.mkString("\n"))
   }
+
+  test("payloadStats sizes a small relation in one job, with no Exchange") {
+    val n = 300
+    val codes = spark.range(n).select(col("id"), expr("unhex(repeat('ab', 32))").as("codes"))
+    Seq((vectors(n, 64), "vector", 4, 64), (codes, "codes", 1, 32)).foreach {
+      case (df, payload, unit, width) =>
+        assert(Regime.smallEstimate(df).isDefined)
+        assert(jobsOf(spark.sparkContext)(LocalScan.payloadStats(df, payload, unit)) ==
+          ((1, Some((n.toLong, width)))))
+    }
+    assert(LocalScan.payloadStats(vectors(0, 8), "vector", 4).contains((0L, 0)))
+  }
 }
