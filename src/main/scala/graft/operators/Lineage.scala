@@ -25,10 +25,6 @@ private[operators] object Lineage {
 
   final case class Link(parent: DataFrame, delta: Delta)
 
-  /** most delta rows that are brought to the driver; a bigger delta keeps
-    * the collect of the child's plan */
-  val DeltaRowCap: Long = 1L << 16
-
   /** A link rides on the child's own logical plan node, so it lives
     * exactly as long as the child: a weak map would hold the link (and
     * the appended rows it names) after the child died, until its next
@@ -54,15 +50,25 @@ private[operators] object Lineage {
     def adds(id: Long): Boolean = java.util.Arrays.binarySearch(idsSorted, id) >= 0
   }
 
-  /** The delta's rows, admitted through [[Regime.rowsUpTo]] (no job when
-    * the rows already sit on the driver). None over [[DeltaRowCap]] rows,
-    * or when an appended row has a null id or vector, a vector of another
+  /** True when the delta's rows are already on the driver
+    * ([[Regime.onDriver]]), as a client's arriving rows or id list are.
+    * Only such a delta is applied on the driver: reading any other one
+    * would run a job and pull rows that the child's own plan reads anyway,
+    * so that child keeps its collect. */
+  def onDriver(delta: Delta): Boolean = delta match {
+    case Append(rows, _, _) => Regime.onDriver(rows)
+    case Delete(ids) => Regime.onDriver(ids)
+  }
+
+  /** The delta's rows, read from the driver with no job
+    * ([[Regime.driverRows]]). None when the delta is not [[onDriver]], or
+    * when an appended row has a null id or vector, a vector of another
     * width, or an id that repeats within the batch: the child's plan then
     * runs as before (and fails where the distributed append fails). A
     * null deleted id matches no row, as in the anti-join. */
   def rowsOf(delta: Delta): Option[Rows] = delta match {
     case Append(rows, dim, encode) =>
-      Regime.rowsUpTo(rows.select(col("id").cast("long"), col("vector")), DeltaRowCap)
+      Regime.driverRows(rows.select(col("id").cast("long"), col("vector")))
         .filter(_.forall(r => !r.isNullAt(0) && !r.isNullAt(1) &&
           r.getSeq[Float](1).length == dim))
         .map { rs =>
@@ -77,7 +83,7 @@ private[operators] object Lineage {
         .filter(rs => rs.map(_._2).distinct.length == rs.length)
         .map(rs => new Rows(rs.map(_._2), rs.map(_._1), rs.map(_._3), Array.emptyLongArray))
     case Delete(ids) =>
-      Regime.rowsUpTo(ids, DeltaRowCap).map { rs =>
+      Regime.driverRows(ids).map { rs =>
         new Rows(Array.emptyLongArray, Array.emptyIntArray, Array.empty[AnyRef],
           rs.filterNot(_.isNullAt(0)).map(_.getLong(0)).sorted.distinct)
       }

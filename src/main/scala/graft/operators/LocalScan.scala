@@ -222,33 +222,39 @@ object LocalScan {
     memoized[T](frame, slot)(bytesOf)(Some(compute)).getOrElse(compute)
 
   /** True when `frame`'s `slot` table is in the memo, or will be once
-    * collected because the frame was loaded from a store */
+    * collected because the frame was loaded from a store; false once the
+    * frame's table was found too big */
   private def rooted(frame: DataFrame, slot: String): Boolean =
-    graft.sources.ArtifactStore.identityOf(frame).isDefined ||
-      (entry(frame, slot) match { case null | TooBig => false; case _ => true })
+    entry(frame, slot) match {
+      case null => graft.sources.ArtifactStore.identityOf(frame).isDefined
+      case TooBig => false
+      case _ => true
+    }
 
   /** True when `frame`'s table can come from the memo without collecting a
-    * plan that [[IndexAppend]] made: it is [[rooted]], or its parent is
-    * servable. A built parent that was never searched is not: its child
-    * collects its own plan instead. */
+    * plan that [[IndexAppend]] made: it is [[rooted]], or its delta is on
+    * the driver ([[Lineage.onDriver]]) and its parent is servable. A built
+    * parent that was never searched is not: its child collects its own
+    * plan instead. */
   private def servable(frame: DataFrame, slot: String): Boolean =
-    rooted(frame, slot) || Lineage.of(frame).exists(l => servable(l.parent, slot))
+    rooted(frame, slot) ||
+      Lineage.of(frame).exists(l => Lineage.onDriver(l.delta) && servable(l.parent, slot))
 
   /** `frame`'s table built on the driver from its parent's table and the
-    * delta rows, when `frame` has a [[Lineage]] link, the parent is
-    * [[servable]] and the delta is admitted ([[Lineage.rowsOf]]); `apply`
-    * returns None when it cannot mirror the plan (an appended id that is
-    * already live). A [[rooted]] parent's table comes from `tableOf` (the
-    * memo); an intermediate one is derived in passing and not memoized,
-    * so a chain holds no table per step. */
+    * delta rows, when `frame` has a [[Lineage]] link whose delta is on the
+    * driver and whose parent is [[servable]]; `apply` returns None when it
+    * cannot mirror the plan (an appended id that is already live). A
+    * [[rooted]] parent's table comes from `tableOf` (the memo), before
+    * any delta row is read; an intermediate one is derived in passing and
+    * not memoized, so a chain holds no table per step. */
   private[operators] def derived[T](frame: DataFrame, slot: String)(
       tableOf: DataFrame => Option[T])(apply: (T, Lineage.Rows) => Option[T]): Option[T] =
     for {
       link <- Lineage.of(frame)
-      if servable(link.parent, slot)
-      rows <- Lineage.rowsOf(link.delta)
+      if Lineage.onDriver(link.delta) && servable(link.parent, slot)
       parent <- if (rooted(link.parent, slot)) tableOf(link.parent)
         else derived(link.parent, slot)(tableOf)(apply)
+      rows <- Lineage.rowsOf(link.delta)
       table <- apply(parent, rows)
     } yield table
 

@@ -147,12 +147,12 @@ private[operators] object LshLocal {
   final class Buckets(val tables: Array[scala.collection.mutable.LongMap[Array[Long]]])
 
   /** the bucket maps of an LSH bucket relation (table, key, id): collected
-    * under [[LocalScan.bytesCap]] at ~24 B per row, or derived from the
-    * parent relation's maps ([[LocalScan.derived]]) */
+    * (when the 24 B per row lower bound fits [[LocalScan.bytesCap]]) or
+    * derived from the parent relation's maps ([[LocalScan.derived]]), and
+    * kept when their footprint ([[bucketBytes]]) fits the cap */
   private def collectBuckets(data: DataFrame, numTables: Int): Option[Buckets] =
     LocalScan.memoized[Buckets](data, "lsh_buckets")(bucketBytes) {
       LocalScan.derived(data, "lsh_buckets")(collectBuckets(_, numTables))(withDelta)
-        .filter(bucketBytes(_) <= LocalScan.bytesCap)
         .orElse(Regime.collectUnder(data, LocalScan.bytesCap)(Some(data.count() * 24)) {
           Some(data.select(col("id").cast("long"), col("table").cast("int"),
             col("key").cast("long")).collect())
@@ -167,10 +167,19 @@ private[operators] object LshLocal {
           }
           new Buckets(grouped.map(_.map { case (k, v) => (k, v.toArray) }))
         })
+        .filter(bucketBytes(_) <= LocalScan.bytesCap)
     }
 
+  /** driver bytes of the bucket maps: per map its slot arrays (a long key
+    * and a compressed reference per slot; a LongMap keeps at most half of
+    * its slots full, and holds at least 16), and per key its id array (a
+    * 16 B header and 8 B per id): ~60 B per id when the buckets hold one
+    * id each, ~5 MB for 10,000 rows hashed into 8 tables. */
   private def bucketBytes(b: Buckets): Long =
-    b.tables.iterator.flatMap(_.valuesIterator).map(_.length.toLong * 24).sum
+    b.tables.iterator.map { t =>
+      math.max(16L, java.lang.Long.highestOneBit(t.size * 2L) * 2) * 12 +
+        t.valuesIterator.map(16L + 8L * _.length).sum
+    }.sum
 
   /** the parent's maps minus the deleted ids plus the appended rows under
     * their keys (`payloads`: per-table keys from [[LshModel.hashOne]]);

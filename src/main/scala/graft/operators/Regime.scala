@@ -77,10 +77,19 @@ object Regime {
     * converting a few hundred rows). */
   def rowsUpTo(df: DataFrame, cap: Long): Option[Array[Row]] = {
     val take = math.min(cap + 1, Int.MaxValue.toLong).toInt
-    val rows = df.queryExecution.optimizedPlan match {
-      case local: LocalRelation => Shim.externalRows(local.schema, local.data.take(take))
-      case _ => if (cap >= Int.MaxValue) df.collect() else df.limit(take).collect()
-    }
+    val rows = localRows(df, take).getOrElse(
+      if (cap >= Int.MaxValue) df.collect() else df.limit(take).collect())
     if (rows.length > cap) None else Some(rows)
   }
+
+  /** The rows of `df` when they are already on the driver ([[onDriver]]),
+    * read from the relation itself with no job; None otherwise, without
+    * running anything. */
+  def driverRows(df: DataFrame): Option[Array[Row]] = localRows(df, Int.MaxValue)
+
+  private def localRows(df: DataFrame, take: Int): Option[Array[Row]] =
+    df.queryExecution.optimizedPlan match {
+      case local: LocalRelation => Some(Shim.externalRows(local.schema, local.data.take(take)))
+      case _ => None
+    }
 }

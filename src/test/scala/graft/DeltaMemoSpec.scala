@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.JobCount.jobsOf
+import org.apache.spark.JobCount.{actionsOf, jobsOf}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.scalatest.BeforeAndAfterAll
@@ -161,26 +161,70 @@ class DeltaMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("the store-keyed memo never holds more than bytesCap") {
-    val f = fams.find(_.kind == "ivf_sq8").get
-    val dirs = (0 until 3).map(i =>
-      store(f.build(train.filter(col("id") % 3 =!= i)), s"lru-$i"))
-    // one table: ~533 rows of 16 code bytes + 12 B, plus the centroids
-    val cap = 533L * 28 * 3 / 2
+  private def withCap[T](cap: Long)(body: => T): T = {
     val old = sys.props.get("graft.local.bytesCap")
     sys.props("graft.local.bytesCap") = cap.toString
-    try {
-      dirs.foreach { d =>
-        assert(served(f, load(d))._1 > 0)
-        assert(LocalScan.storedBytes <= cap && LocalScan.storedBytes > 0)
-      }
-      // the first table was evicted: its reload collects again
-      assert(served(f, load(dirs.head))._1 > 0)
-      assert(LocalScan.storedBytes <= cap)
-      assert(served(f, load(dirs.head))._1 == 0)
-    } finally old match {
+    try body
+    finally old match {
       case Some(v) => sys.props("graft.local.bytesCap") = v
       case None => sys.props -= "graft.local.bytesCap"
+    }
+  }
+
+  Seq("ivf_sq8", "lsh").foreach { kind =>
+    test(s"$kind: the store-keyed memo never holds more than bytesCap") {
+      val f = fams.find(_.kind == kind).get
+      val dirs = (0 until 3).map(i =>
+        store(f.build(train.filter(col("id") % 3 =!= i)), s"lru-$kind-$i"))
+      // what one index's entries weigh, under the default cap
+      val before = LocalScan.storedBytes
+      assert(served(f, load(dirs.head))._1 > 0)
+      val one = LocalScan.storedBytes - before
+      assert(one > 0)
+      val cap = one * 3 / 2
+      withCap(cap) {
+        dirs.tail.foreach { d =>
+          assert(served(f, load(d))._1 > 0)
+          assert(LocalScan.storedBytes <= cap && LocalScan.storedBytes > 0)
+        }
+        // the first index was evicted: its reload collects again
+        assert(served(f, load(dirs.head))._1 > 0)
+        assert(LocalScan.storedBytes <= cap)
+        assert(served(f, load(dirs.head))._1 == 0)
+      }
+    }
+  }
+
+  test("a delta off the driver, or a base over bytesCap, reads no delta rows") {
+    val far = spark.range(0, 1000, 5).toDF("id")
+    assert(!Regime.onDriver(far))
+    /** the default search of `art` (mutated from a reload): it collects
+      * its plan or runs distributed, reads nothing through a driver-row
+      * probe, and equals the distributed rows */
+    def collectsItsPlan(f: Fam, art: IndexArtifact): Seq[(Long, Int, Long, Long)] = {
+      val (actions, (jobs, got)) =
+        actionsOf(sc)(jobsOf(sc)(RouteCheck.bits(f.searcher.search(art, queries, k), "dist")))
+      assert(jobs > 0, f.kind)
+      assert(!actions.exists(a => a.contains("Regime.scala") || a.contains("Lineage.scala")),
+        s"${f.kind}: ${actions.mkString(", ")}")
+      assert(got == RouteCheck.distributed(
+        RouteCheck.bits(f.searcher.search(art, queries, k), "dist")), f.kind)
+      got
+    }
+    fams.foreach { f =>
+      val dir = store(f.build(train), s"${f.kind}-far")
+      served(f, load(dir))
+      // the base is memoized, but the deleted ids are not on the driver
+      val rows = collectsItsPlan(f, IndexAppend.delete(load(dir), far))
+      assert(!rows.exists(_._3 % 5 == 0))
+      // a stored base that was never searched, over the cap
+      val big = store(f.build(train), s"${f.kind}-big")
+      withCap(2000) {
+        val loaded = load(big)
+        collectsItsPlan(f, IndexAppend.delete(loaded, far))
+        collectsItsPlan(f, delete(del)(loaded))
+        collectsItsPlan(f, append(extra)(loaded))
+      }
     }
   }
 }
