@@ -790,13 +790,15 @@ object SparkEntry {
           championListSize = Some(32))
         .select("query_id", "doc_id", "rank")
     }),
-    // --- EXACT BM25 top-k via distributed block-max WAND (Broder CIKM'03 /
-    //     Ding & Suel SIGIR'11) — the at-scale EXACT path: doc-partitioned
-    //     DAAT cursors with threshold pruning forward ≤ k rows per
-    //     (partition, query); the Σ_t qf(t)·df(t) candidate join that
-    //     overflowed 80 GB of spill at the 100× pass never materializes.
-    //     Results are contracted bit-identical to text_bm25_topk (same
-    //     fixed-point contributions, same tie-break) — same oracle ---
+    // --- EXACT BM25 top-k via block-max WAND (Broder CIKM'03 / Ding &
+    //     Suel SIGIR'11) — the at-scale EXACT path: DAAT cursors with
+    //     threshold pruning keep ≤ k rows per query; the Σ_t qf(t)·df(t)
+    //     candidate join that overflowed 80 GB of spill at the 100× pass
+    //     never materializes. A batch touching ≤ 200,000 postings
+    //     (Bm25.driverWandMaxPostings) scores on the driver, a larger one
+    //     doc-partitioned (≤ k rows per (partition, query)). Results are
+    //     contracted bit-identical to text_bm25_topk (same fixed-point
+    //     contributions, same tie-break) — same oracle ---
     "text_bm25_wand" -> ((s, dir) => {
       val docs = Tables.load(s, dir, "documents")
       Bm25.searchTopKWand(docs,
@@ -814,10 +816,11 @@ object SparkEntry {
     //     and sums fixed-point contributions (associative). The corpus is
     //     documents+embeddings zipped by id (doc_id ≡ vec_id, TESTDATA).
     //     The lexical arm runs the WAND path (r12) — bit-identical to
-    //     searchTopK by contract (text_bm25_wand's gate pins that), and
-    //     it removes the arm's Σ qf·df candidate blow-up, so the hybrid
-    //     gates complete at the 100× scale where the relational exact
-    //     arm overflowed local spill ---
+    //     searchTopK by contract (text_bm25_wand's gate pins that), on
+    //     the driver or distributed by its Σ df, and it removes the arm's
+    //     Σ qf·df candidate blow-up, so the hybrid gates complete at the
+    //     100× scale where the relational exact arm overflowed local
+    //     spill ---
     "hybrid_rrf" -> ((s, dir) => {
       val docs = Tables.load(s, dir, "documents")
       val emb = Tables.load(s, dir, "embeddings")
@@ -1536,7 +1539,7 @@ object SparkEntry {
     * desc, doc_id) tie-break). Shared byte-for-byte by the three gates
     * contracted to identical results: `text_bm25_topk` (relational
     * exact scoring), `text_bm25_serve` (persisted-index serving) and
-    * `text_bm25_wand` (distributed block-max WAND). */
+    * `text_bm25_wand` (block-max WAND). */
   private def bm25ExactOracleSql: String =
     """WITH tok AS (
       |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks
@@ -4129,8 +4132,8 @@ object SparkEntry {
         |FROM per
         |HAVING round(avg(recall), 4) >= 0.75""".stripMargin,
     // the full LSH pipeline replicated in SQL: the seeded hyperplanes
-    // are deterministic DATA (java.util.Random(42), gate config 12x4x64)
-    // embedded as literals; sign-bit keys, bucket join, vote ranking,
+    // are deterministic DATA (java.util.Random(42), gate config 12x4x64,
+    // printed by dev/DumpPlanes) embedded as literals; sign-bit keys, bucket join, vote ranking,
     // (votes desc, id) cap at 320, exact cosine rerank, recall vs exact
     // GT - same floor filter as the Spark query.
     "j3_lsh_pipeline" ->

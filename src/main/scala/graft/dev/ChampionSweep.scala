@@ -22,6 +22,10 @@ import graft.operators.Bm25
   *
   * Usage: runMain graft.dev.ChampionSweep [dir] [Ns=8,16,32,64,128] [short]
   *
+  * The cand-gen+rescore columns below were measured with a
+  * `championRescore` variant of [[Bm25.searchTopK]] that has since been
+  * removed: it cost more than exact WAND at every N, and no gate used it.
+  *
   * Measured record, all at 10× (50k docs / 944 queries, k=5, top-5
   * (q, d, rank)-triple agreement vs the exact ranking):
   *
@@ -94,12 +98,10 @@ object ChampionSweep {
     val nq = queries.count()
     println(s"[champ] $dir: ${docs.count()} docs, $nq queries (qlen=$qlen)")
 
-    def run(champ: Option[Int], label: String,
-        rescore: Boolean = false) = {
+    def run(champ: Option[Int], label: String) = {
       val t0 = System.nanoTime()
       val res = Bm25.searchTopK(docs, queries, "doc_id", "text",
-          "qid", "qtext", k = 5, championListSize = champ,
-          championRescore = rescore)
+          "qid", "qtext", k = 5, championListSize = champ)
         .select("query_id", "doc_id", "rank").cache()
       val n = res.count()
       val secs = (System.nanoTime() - t0) / 1e9
@@ -121,9 +123,6 @@ object ChampionSweep {
       val (res, _) = run(Some(n), s"champ-$n")
       println(f"[champ]   N=$n%-4d top5 agreement=${agreeOf(res)}%.4f (truncated scoring)")
       res.unpersist()
-      val (res2, _) = run(Some(n), s"champ-$n+rescore", rescore = true)
-      println(f"[champ]   N=$n%-4d top5 agreement=${agreeOf(res2)}%.4f (candidate-gen + full rescore)")
-      res2.unpersist()
     }
     spark.stop()
   }

@@ -1167,9 +1167,7 @@ object AdcScan {
     * Any FAISS-shaped configuration (nlist ≤ ~10⁵, batches ≤ ~10⁵
     * queries, dims ≤ ~10³) sits orders of magnitude below it. */
   def coarseProbeFlopCap: Long =
-    sys.props.get("graft.adc.probeFlopCap").map(_.toLong)
-      .orElse(sys.env.get("GRAFT_ADC_PROBE_FLOP_CAP").map(_.toLong))
-      .getOrElse(10_000_000_000L)
+    sys.props.get("graft.adc.probeFlopCap").map(_.toLong).getOrElse(10_000_000_000L)
 
   def coarseProbesFit(nQueries: Long, nlist: Long, dims: Long): Boolean =
     nQueries * nlist * dims <= coarseProbeFlopCap

@@ -79,58 +79,42 @@ object Bm25 {
     * `docs (idCol, textCol)`; returns
     * `(query_id, doc_id, rank, score)` with `rank` 1-based per query,
     * ordered by (score desc, doc_id asc), at most `k` rows per query.
+    * This relational Σ qf·df join is the exact reference the WAND paths
+    * ([[searchTopKWand]]) are contracted bit-identical to.
     *
     * `k1`/`b` are the standard Robertson parameters; idf is the
     * Lucene-style `ln(1 + (N - df + 0.5)/(df + 0.5))` (never negative).
     * Query term frequency is ignored (distinct query terms), the common
-    * retrieval simplification. */
+    * retrieval simplification.
+    *
+    * `championListSize`: truncated scoring over per-term champion lists
+    * (Manning/Raghavan/Schütze §7.1.3), the `text_bm25_champion` gate's
+    * semantics. It stays on this relational path only: it is approximate
+    * by construction, so it cannot share WAND's exactness contract, and
+    * exact WAND already costs less than every champion variant measured
+    * (dev/ChampionSweep) — a WAND champion option would be code for a
+    * variant nothing needs. */
   def searchTopK(docs: DataFrame, queries: DataFrame,
       idCol: String, textCol: String, qIdCol: String, qTextCol: String,
       k: Int, k1: Double = 1.2, b: Double = 0.75,
-      championListSize: Option[Int] = None,
-      championRescore: Boolean = false): DataFrame = {
+      championListSize: Option[Int] = None): DataFrame = {
     // one-row corpus stats from the CACHED pre-explode scan (no postings
     // shuffle, no second tokenize pass — r14)
     val dls = dlsCacheSlot.cached(docLengths(docs, idCol, textCol))
-    val stats = dls
-      .agg(count(lit(1)).cast("double").as("n_docs"),
-        avg("dl").as("avgdl"))
     // the postings relation feeds TWO consumers (the df aggregate and the
     // scoring join); without a persist each branch re-runs the explode +
     // groupBy shuffle from scratch. Spill-safe MEMORY_AND_DISK;
     // session cache-clear (or the caller) reclaims it. The repeated-batch
     // path avoids the issue structurally — buildIndex materializes the
     // postings once as a bucketed table.
-    searchTopKOverPostings(
-      postCacheSlot.cached(postingsOf(dls)), stats,
-      queries, qIdCol, qTextCol, k, k1, b,
-      championListSize = championListSize,
-      championRescore = championRescore)
+    scoreQTerms(postCacheSlot.cached(postingsOf(dls)), statsOf(dls),
+      qtermsOf(queries, qIdCol, qTextCol), k, k1, b, prebuiltDf = None,
+      championListSize)
   }
 
-  /** Scoring over a prebuilt `(doc_id, term, tf, dl)` postings relation
-    * and a one-row `(n_docs, avgdl)` stats relation — the 100 TB path:
-    * materialize `postings` once (bucketed by `term`, see
-    * [[graft.sources.Bucketing]] / [[buildIndex]]) and serve every query
-    * batch from it without re-tokenizing the corpus; `searchTopK`
-    * derives both inline for the one-shot case.
-    *
-    * `prebuiltDf`: an optional `(term, df)` relation persisted with the
-    * index ([[buildIndex]]). When present, serving never aggregates the
-    * postings at all — df rows for the query terms come from a
-    * term-keyed lookup join. When absent, df is computed from the
-    * postings, but ONLY after a broadcast semi-join against the query
-    * vocabulary: aggregating first and joining after would shuffle the
-    * full term dictionary per batch — at 100 TB that full-corpus
-    * aggregate would dominate a 5-term query's cost. */
-  def searchTopKOverPostings(post: DataFrame, stats: DataFrame,
-      queries: DataFrame, qIdCol: String, qTextCol: String,
-      k: Int, k1: Double = 1.2, b: Double = 0.75,
-      prebuiltDf: Option[DataFrame] = None,
-      championListSize: Option[Int] = None,
-      championRescore: Boolean = false): DataFrame =
-    scoreQTerms(post, stats, qtermsOf(queries, qIdCol, qTextCol),
-      k, k1, b, prebuiltDf, championListSize, championRescore)
+  /** One-row `(n_docs, avgdl)` corpus statistics of a [[docLengths]] scan. */
+  private def statsOf(dls: DataFrame): DataFrame =
+    dls.agg(count(lit(1)).cast("double").as("n_docs"), avg("dl").as("avgdl"))
 
   /** `(query_id, term)` — the distinct query-term relation scoring joins
     * against. */
@@ -163,7 +147,7 @@ object Bm25 {
   }
 
   /** Lucene-style idf as a Spark expression over `(n_docs, df)` — the
-    * relational and distributed-WAND paths' formula. */
+    * relational path's formula. */
   private[graft] val idfCol: Column =
     log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
 
@@ -194,16 +178,21 @@ object Bm25 {
   }
 
   /** `(query_id, doc_id, rank, score)` from fixed-point scores: the one
-    * output expression both WAND routes end in. */
+    * output expression every route ends in. */
   private def withScore(ranked: DataFrame): DataFrame =
     ranked.select(col("query_id"), col("doc_id"), col("rank"),
       (col("score_fixed") / lit(1e6)).as("score"))
 
+  /** The relational Σ qf·df scoring join over a `(doc_id, term, tf, dl)`
+    * postings relation and a one-row `(n_docs, avgdl)` stats relation.
+    * `prebuiltDf`: the `(term, df)` relation persisted with the index
+    * ([[buildIndex]]); when absent, df is aggregated from the postings,
+    * but only after a broadcast semi-join against the query vocabulary —
+    * aggregating first would shuffle the full term dictionary per batch. */
   private def scoreQTerms(post: DataFrame, stats: DataFrame,
       qterms: DataFrame, k: Int, k1: Double, b: Double,
       prebuiltDf: Option[DataFrame],
-      championListSize: Option[Int] = None,
-      championRescore: Boolean = false): DataFrame = {
+      championListSize: Option[Int] = None): DataFrame = {
     // per-term document frequency, restricted to the query vocabulary
     // BEFORE the aggregate: the semi-join keeps only postings of query
     // terms (a broadcast filter — the corpus side never moves), so the
@@ -211,8 +200,7 @@ object Bm25 {
     // term dictionary. df values for surviving terms are identical.
     val df = prebuiltDf.getOrElse {
       val qvocab = qterms.select("term").distinct()
-      post.join(broadcast(qvocab), Seq("term"), "left_semi")
-        .groupBy("term").agg(count(lit(1)).cast("double").as("df"))
+      termDf(post.join(broadcast(qvocab), Seq("term"), "left_semi"))
     }
     // per-TERM idf/avgdl relation (≤ query vocabulary rows). The scoring
     // contribution s = f(idf(term), tf, dl, avgdl) does not depend on the
@@ -237,7 +225,7 @@ object Bm25 {
     // only). The rank-filter window compiles to a Partial
     // WindowGroupLimit, so each map partition forwards ≤ N rows per term
     // before the exchange. None = exact scoring (the gate path).
-    val champPost = championListSize.map { n =>
+    val postScoring = championListSize.fold(post) { n =>
       val qvocab = qterms.select("term").distinct()
       post.join(broadcast(qvocab), Seq("term"), "left_semi")
         .crossJoin(broadcast(stats.select("avgdl")))
@@ -254,41 +242,16 @@ object Bm25 {
         .filter(col("crank") <= n)
         .select("doc_id", "term", "tf", "dl")
     }
-    val postScoring = champPost.getOrElse(post)
 
-    def scoreExpr(df0: DataFrame): DataFrame = df0
+    // s_fixed per posting FIRST (tiny broadcast term join), query fan-out
+    // joins the slim (query_id, term) relation after — see tdf note above
+    val scored = postScoring.join(broadcast(tdf), "term")
       .withColumn("s",
         col("idf") * (col("tf") * lit(k1 + 1.0)) /
           (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))))
       // fixed-point: associative long sum (see object scaladoc)
       .withColumn("s_fixed", round(col("s") * lit(1e6), 0).cast("long"))
-
-    // Champion lists as CANDIDATE GENERATION (MRS §7.1.3's actual use),
-    // not truncated scoring: the champion traversal proposes (query,
-    // doc) pairs — Σ_t qf(t)·min(df(t), N) of them — and each candidate
-    // is then rescored with its FULL term overlap against the query, so
-    // a candidate's score is its exact BM25 (only docs outside every
-    // query term's champion list can be missed). At scale the rescore
-    // join touches only candidate docs' postings (a semi-join on the
-    // candidate doc set), never Σ qf·df. Truncated scoring (rescore
-    // off) keeps the r11 gate semantics: each term contributes only its
-    // champion entries, so tail contributions are lost and top-5
-    // agreement collapses on heavy-tailed queries (dev/ChampionSweep:
-    // ≤0.22 even on the Zipf corpus).
-    // s_fixed per posting FIRST (tiny broadcast term join), query fan-out
-    // joins the slim (query_id, term) relation after — see tdf note above
-    val scored = champPost match {
-      case Some(cp) if championRescore =>
-        val cand = cp.join(broadcast(qterms), Seq("term"))
-          .select("query_id", "doc_id").distinct()
-        val candDocs = cand.select("doc_id").distinct()
-        scoreExpr(post.join(candDocs, Seq("doc_id"), "left_semi")
-            .join(broadcast(tdf), "term"))
-          .join(broadcast(qterms), Seq("term"))
-          .join(cand, Seq("query_id", "doc_id"), "left_semi")
-      case _ => scoreExpr(postScoring.join(broadcast(tdf), "term"))
-        .join(broadcast(qterms), Seq("term"))
-    }
+      .join(broadcast(qterms), Seq("term"))
 
     val agg = scored.groupBy("query_id", "doc_id")
       .agg(sum("s_fixed").as("score_fixed"))
@@ -317,114 +280,114 @@ object Bm25 {
       .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue().toLong
   }
 
-  /** EXACT BM25 top-k via distributed block-max WAND ([[WandKernel]]) —
-    * same results as [[searchTopK]] (bit-identical scores, same
-    * (score desc, doc_id asc) tie-break), but the candidate space never
-    * materializes: the exact relational path's scoring join emits
-    * Σ_t qf(t)·df(t) rows before aggregating (the 100× pass's one local
-    * spill overflow), while this path shuffles the query-vocab postings
-    * ONCE (hash-partitioned by doc so every doc's terms are co-located),
-    * then each partition answers every query document-at-a-time with
-    * threshold pruning and forwards at most k rows per (partition,
-    * query) to the global top-k — P·nq·k rows total, df-independent.
-    *
-    * Scale shape: work parallelism is across doc partitions (each task
-    * runs all queries over its local docs, θ-pruned); the query batch is
-    * driver-collected and broadcast (capped at [[serveBatchCap]] —
-    * above it, the batch is CHUNKED query-disjoint and each chunk runs
-    * WAND, an exact union; only a single degenerate corpus-shaped
-    * "query" wider than the cap itself routes to the relational join).
+  /** EXACT BM25 top-k via block-max WAND ([[WandKernel]]) — same results
+    * as [[searchTopK]] (bit-identical scores, same (score desc, doc_id
+    * asc) tie-break), but the candidate space never materializes: the
+    * exact relational path's scoring join emits Σ_t qf(t)·df(t) rows
+    * before aggregating (the 100× pass's one local spill overflow), while
+    * WAND scores document-at-a-time with threshold pruning and keeps at
+    * most k rows per query. The corpus is tokenized once per call (cached:
+    * stats and postings share the scan, r14) and searched by the one WAND
+    * core ([[wand]]), which picks the driver or the distributed route.
     * doc ids must be castable to long (the DAAT cursors and the
     * tie-break order compare longs). */
   def searchTopKWand(docs: DataFrame, queries: DataFrame,
       idCol: String, textCol: String, qIdCol: String, qTextCol: String,
       k: Int, k1: Double = 1.2, b: Double = 0.75,
       blockSize: Int = 64): DataFrame = {
-    // tokenize once, cached: stats and postings share the scan (r14)
     val dls = dlsCacheSlot.cached(docLengths(docs, idCol, textCol))
-    val stats = dls
-      .agg(count(lit(1)).cast("double").as("n_docs"), avg("dl").as("avgdl"))
-    // postings feeds the df aggregate AND the scoring scan (same reuse
-    // rationale as searchTopK's cache)
-    searchWandOverPostings(postCacheSlot.cached(postingsOf(dls)), stats,
-      queries, qIdCol, qTextCol, k, k1, b)
+    wand(postCacheSlot.cached(postingsOf(dls)), statsOf(dls), prebuiltDf = None,
+      queries, qIdCol, qTextCol, k, k1, b, blockSize, driverWandMaxPostings)
   }
 
-  /** [[searchTopKWand]] over a prebuilt postings/stats/df layout (the
-    * [[buildIndex]] serving shape). */
-  def searchWandOverPostings(post: DataFrame, stats: DataFrame,
+  /** `(term, df)` document frequencies of a postings relation. */
+  private def termDf(post: DataFrame): DataFrame =
+    post.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
+
+  /** The one WAND search under [[searchTopKWand]] and
+    * [[searchFromIndexWand]]: postings `(doc_id, term, tf, dl)`, the
+    * one-row `(n_docs, avgdl)` stats, the persisted `(term, df)` relation
+    * when there is one (else df is aggregated over the vocabulary's
+    * postings), and a query batch. Every choice is made on exact counts,
+    * never on a Catalyst estimate:
+    *   1. the batch's `(query, term)` rows land on the driver
+    *      ([[qtermRowsCapped]]); their vocabulary becomes an `isin`
+    *      literal on the postings and df scans, which over a
+    *      [[buildIndex]] layout unlocks bucket pruning and parquet
+    *      pushdown;
+    *   2. above [[serveBatchCap]] rows the batch is CHUNKED query-disjoint
+    *      and each chunk re-enters here — WAND is per-query independent
+    *      and df/idf are per-term corpus statistics, so the union is
+    *      exact. The 100× pass caught the original fallback
+    *      re-materializing the relational Σ qf·df candidates and
+    *      overflowing local disk (r12). Only a single query wider than
+    *      the cap, which cannot chunk, takes the relational join;
+    *   3. the vocabulary's df rows and the stats row land in ONE union
+    *      collect, and idf is computed on the driver ([[idf]],
+    *      bit-identical to [[idfCol]]);
+    *   4. with [[Regime.enabled]] and Σ df (exactly the number of
+    *      postings the batch touches) ≤ `driverMaxPostings`, WAND runs on
+    *      the driver ([[wandOnDriver]]) and the result is a LocalRelation —
+    *      a small batch is bound by per-job cost, not data; otherwise
+    *      distributed WAND ([[wandDistributed]]): one doc-keyed shuffle,
+    *      ≤ P·nq·k forwarded rows. */
+  private def wand(post: DataFrame, stats: DataFrame, prebuiltDf: Option[DataFrame],
       queries: DataFrame, qIdCol: String, qTextCol: String,
-      k: Int, k1: Double = 1.2, b: Double = 0.75,
-      prebuiltDf: Option[DataFrame] = None,
-      blockSize: Int = 64): DataFrame = {
-    val spark = post.sparkSession
-    val qt = qtermsOf(queries, qIdCol, qTextCol)
-    val qtRows = qtermRowsCapped(queries, qIdCol, qTextCol, serveBatchCap) match {
-      case Some(rows) => rows
+      k: Int, k1: Double, b: Double, blockSize: Int,
+      driverMaxPostings: Long, depth: Int = 0): DataFrame =
+    qtermRowsCapped(queries, qIdCol, qTextCol, serveBatchCap) match {
       case None =>
-        // Over-cap query batch: CHUNK it, never fall back to the
-        // relational scoring join. WAND is per-query independent, so a
-        // query-disjoint split unions to the exact same result, each
-        // chunk's driver footprint stays under the cap, and the df/idf
-        // values are unchanged (they are per-term corpus statistics —
-        // the chunk only narrows WHICH terms are looked up). The 100×
-        // pass caught the original fallback re-materializing the exact
-        // path's Σ qf·df candidates and overflowing local disk — the
-        // precise failure WAND exists to remove (found r12).
+        val qt = qtermsOf(queries, qIdCol, qTextCol)
         val nQueries = queries.select(col(qIdCol)).distinct()
           .limit(serveBatchCap + 1).count()
-        if (nQueries <= 1)
-          // a SINGLE query wider than the cap cannot chunk further —
-          // corpus-shaped "query" text; the relational join is the
-          // honest plan for that degenerate shape
-          return scoreQTerms(post, stats, qt, k, k1, b, prebuiltDf)
-        val qtCount = qt.count()
-        // fan-out bounded per level (a 1000-chunk flat union nests the
-        // plan past analyzer stack depth); a still-over-cap chunk simply
-        // re-chunks on re-entry, so coverage is unchanged at log depth
-        val nChunks = math.min(32L, math.max(2L,
-          (qtCount + serveBatchCap - 1) / serveBatchCap)).toInt
-        return (0 until nChunks).map { i =>
-          searchWandOverPostings(post, stats,
-            queries.filter(pmod(hash(col(qIdCol)), lit(nChunks)) === i),
-            qIdCol, qTextCol, k, k1, b, prebuiltDf, blockSize)
-        }.reduce(_ unionByName _)
+        if (nQueries <= 1) scoreQTerms(post, stats, qt, k, k1, b, prebuiltDf)
+        else {
+          // fan-out bounded per level (a 1000-chunk flat union nests the
+          // plan past analyzer stack depth); a still-over-cap chunk
+          // re-chunks on re-entry, so coverage is unchanged at log depth.
+          // Each level hashes with its own seed: re-splitting a chunk by
+          // the hash that formed it would keep every query in one
+          // sub-chunk, and recurse until the stack overflows
+          val nChunks = math.min(32L, math.max(2L,
+            (qt.count() + serveBatchCap - 1) / serveBatchCap)).toInt
+          (0 until nChunks).map { i =>
+            wand(post, stats, prebuiltDf,
+              queries.filter(pmod(hash(col(qIdCol), lit(depth)), lit(nChunks)) === i),
+              qIdCol, qTextCol, k, k1, b, blockSize, driverMaxPostings, depth + 1)
+          }.reduce(_ unionByName _)
+        }
+      case Some(qtRows) =>
+        val termIn = col("term").isin(qtRows.map(_.getString(1)).distinct.toSeq: _*)
+        val dfRel = prebuiltDf.fold(termDf(post.filter(termIn)))(_.filter(termIn))
+        // the stats row carries a null term; a union, not a broadcast
+        // crossJoin (a broadcast is a job of its own)
+        val (statRow, dfRows) = dfRel
+          .select(col("term"), col("df"), lit(null).cast("double").as("avgdl"))
+          .union(stats.select(lit(null).cast("string"), col("n_docs"), col("avgdl")))
+          .collect().partition(_.isNullAt(0))
+        val nDocs = statRow.head.getDouble(1)
+        // null over an empty corpus, where no posting ever reads it
+        val avgdl = statRow.head.getAs[Double](2)
+        val idfs = dfRows.map(r => r.getString(0) -> idf(nDocs, r.getDouble(1))).toMap
+        // the postings of the terms with a df row: LocalWand reads each
+        // posting's idf
+        val hit = post.filter(col("term").isin(idfs.keys.toSeq: _*))
+        val qidField = queries.select(col(qIdCol)).schema.head
+        if (Regime.enabled && dfRows.map(_.getDouble(1)).sum <= driverMaxPostings)
+          wandOnDriver(hit, qtRows, qidField, idfs, avgdl, k, k1, b, blockSize)
+        else
+          wandDistributed(hit, qtRows, qidField, idfs, avgdl, k, k1, b, blockSize)
     }
 
-    // per-term idf over the query vocabulary, computed by the SAME Spark
-    // expressions as the exact path (collected, so the doubles entering
-    // contribFixed are bit-identical to what the relational plan feeds
-    // its scoring expression). avgdl rides along on every row (it comes
-    // from the same one-row stats crossJoin the idf needs anyway), so the
-    // corpus stats and the idf map land in ONE driver job instead of two
-    // (r14 — per WAND call, and the hybrid gates make three such calls)
-    import spark.implicits._
-    val qvocabDf = qtRows.map(_.getString(1)).distinct.toSeq.toDF("term")
-    val dfRel = prebuiltDf
-      .map(_.join(broadcast(qvocabDf), Seq("term"), "left_semi"))
-      .getOrElse(post.join(broadcast(qvocabDf), Seq("term"), "left_semi")
-        .groupBy("term").agg(count(lit(1)).cast("double").as("df")))
-    val idfRows = dfRel.crossJoin(broadcast(stats))
-      .withColumn("idf", idfCol)
-      .select("term", "idf", "avgdl").collect()
-    // empty vocab ⇒ no postings match ⇒ avgdl is never read by a kernel
-    val avgdl =
-      if (idfRows.nonEmpty) idfRows(0).getDouble(2)
-      else stats.collect()(0).getAs[Double]("avgdl")
-    wandDistributed(post, qtRows, qt.schema.head,
-      idfRows.map(r => r.getString(0) -> r.getDouble(1)).toMap, avgdl,
-      k, k1, b, blockSize)
-  }
-
-  /** Distributed WAND over the batch `qtRows` with its `idfs` and `avgdl`
-    * in hand: the vocabulary's postings are shuffled ONCE, keyed by doc,
-    * each partition scores every query over its docs ([[LocalWand]]) and
-    * forwards ≤ k rows per query — ≤ P·nq·k rows to the global top-k. */
-  private def wandDistributed(post: DataFrame, qtRows: Array[Row],
+  /** Distributed WAND over `hit`, the postings of the terms in `idfs`:
+    * they are shuffled ONCE, keyed by doc, each partition scores every
+    * query of `qtRows` over its docs ([[LocalWand]]) and forwards ≤ k rows
+    * per query — ≤ P·nq·k rows to the global top-k. */
+  private def wandDistributed(hit: DataFrame, qtRows: Array[Row],
       qidField: org.apache.spark.sql.types.StructField,
       idfs: Map[String, Double], avgdl: Double,
       k: Int, k1: Double, b: Double, blockSize: Int): DataFrame = {
-    val spark = post.sparkSession
+    val spark = hit.sparkSession
     import org.apache.spark.sql.types._
     import spark.implicits._
     // only terms that exist in the corpus can contribute; the original
@@ -444,10 +407,7 @@ object Bm25 {
     // 0.64 → 1.30 s under default AQE coalescing); at real scale the
     // estimate clears cores × maxPartitionBytes and the plain keyed
     // repartition plans unchanged.
-    val slim = Par.co(
-      postingCols(post.join(broadcast(idfs.keys.toSeq.toDF("term")),
-        Seq("term"), "left_semi")),
-      col("doc_id"), minBytesPerTask = 16 * 1024L)
+    val slim = Par.co(postingCols(hit), col("doc_id"), minBytesPerTask = 16 * 1024L)
       .sortWithinPartitions("term", "doc_id")
 
     val local = slim.mapPartitions { it =>
@@ -474,6 +434,42 @@ object Bm25 {
         .orderBy(col("score_fixed").desc, col("doc_id"))))
       .filter(col("rank") <= k)
       .join(broadcast(qidDf), "qidx"))
+  }
+
+  /** WAND on the driver: one job collects `hit`, the postings of the terms
+    * in `idfs` (bucket-pruned by the `isin` literal over a persisted
+    * index), one [[LocalWand]] over all of them scores every query in
+    * parallel on driver cores, and the top-k lands in a LocalRelation with
+    * [[wandDistributed]]' output schema. Ranks follow the
+    * (score desc, doc_id asc) order. */
+  private def wandOnDriver(hit: DataFrame, qtRows: Array[Row],
+      qidField: org.apache.spark.sql.types.StructField,
+      idfs: Map[String, Double], avgdl: Double,
+      k: Int, k1: Double, b: Double, blockSize: Int): DataFrame = {
+    import org.apache.spark.sql.types._
+    val postRows = if (idfs.isEmpty) Array.empty[Row] else postingCols(hit).collect()
+    java.util.Arrays.sort(postRows, (x: Row, y: Row) => {
+      val c = x.getString(0).compareTo(y.getString(0))
+      if (c != 0) c else java.lang.Long.compare(x.getLong(1), y.getLong(1))
+    })
+    val scorer = new LocalWand(postRows.iterator, idfs, avgdl, k1, b, blockSize)
+    val (qids, qTerms) = denseQueries(qtRows, idfs.contains)
+    val top = new Array[Array[(Long, Long)]](qids.length)
+    java.util.stream.IntStream.range(0, qids.length).parallel().forEach { qi =>
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      scorer.query(qTerms(qi), k, (docId, sc) => out += ((docId, sc)))
+      top(qi) = out.sortWith((x, y) => x._2 > y._2 || (x._2 == y._2 && x._1 < y._1)).toArray
+    }
+    val rows = for {
+      qi <- qids.indices
+      ((docId, sc), r) <- top(qi).iterator.zipWithIndex
+    } yield Row(qids(qi), docId, r + 1, sc)
+    withScore(hit.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(Seq(
+        StructField("query_id", qidField.dataType, qidField.nullable),
+        StructField("doc_id", LongType, nullable = false),
+        StructField("rank", IntegerType, nullable = false),
+        StructField("score_fixed", LongType, nullable = false)))))
   }
 
   /** The WAND scorer over one slice of the postings, shared by the
@@ -544,13 +540,11 @@ object Bm25 {
     // df from the already-bucketed postings: the groupBy("term") plans
     // exchange-free on the bucketed layout
     graft.sources.Bucketing.dropWithLocation(spark, s"${table}_df")
-    spark.table(s"${table}_postings")
-      .groupBy("term").agg(count(lit(1)).cast("double").as("df"))
+    termDf(spark.table(s"${table}_postings"))
       .write.mode("overwrite").format("parquet")
       .saveAsTable(s"${table}_df")
     graft.sources.Bucketing.dropWithLocation(spark, s"${table}_stats")
-    docLengths(docs, idCol, textCol)
-      .agg(count(lit(1)).cast("double").as("n_docs"), avg("dl").as("avgdl"))
+    statsOf(docLengths(docs, idCol, textCol))
       .write.mode("overwrite").format("parquet")
       .saveAsTable(s"${table}_stats")
   }
@@ -572,21 +566,21 @@ object Bm25 {
     if (!ready) buildIndex(docs, idCol, textCol, table, buckets)
   }
 
-  /** Serve a query batch from a [[buildIndex]] layout: no corpus
-    * tokenization, no postings aggregate — df and stats are persisted
-    * lookups, and the postings/df scans carry an `isin` filter on the
-    * batch's query-term vocabulary. The vocabulary is collected on the
-    * driver first ([[qtermRowsCapped]]: no job over a LocalRelation batch,
-    * a capped `(query, term)` collect over any other — the query side is
-    * small by definition),
-    * because a literal In on the bucket column is what unlocks bucket
-    * pruning + parquet pushdown: without it the scoring join would stream
-    * every postings bucket per batch, which at corpus scale reads the
-    * whole index to answer a 5-term query. */
+  /** Serve a query batch from a [[buildIndex]] layout with the relational
+    * scoring join — the persisted-index twin of the [[searchTopK]]
+    * reference: no corpus tokenization, no postings aggregate — df and
+    * stats are persisted lookups, and the postings/df scans carry an
+    * `isin` filter on the batch's query-term vocabulary. The vocabulary is
+    * collected on the driver first ([[qtermRowsCapped]]: no job over a
+    * LocalRelation batch, a capped `(query, term)` collect over any other —
+    * the query side is small by definition), because a literal In on the
+    * bucket column is what unlocks bucket pruning + parquet pushdown:
+    * without it the scoring join would stream every postings bucket per
+    * batch, which at corpus scale reads the whole index to answer a
+    * 5-term query. */
   def searchFromIndex(spark: org.apache.spark.sql.SparkSession,
       table: String, queries: DataFrame, qIdCol: String, qTextCol: String,
-      k: Int, k1: Double = 1.2, b: Double = 0.75,
-      championListSize: Option[Int] = None): DataFrame = {
+      k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     // The query batch is the broadcast-small side by contract, and it
     // feeds three places (vocab filter, df lookup, scoring join) — so land
     // it on the driver once and serve every consumer from a LocalRelation:
@@ -603,8 +597,7 @@ object Bm25 {
         scoreQTerms(
           spark.table(s"${table}_postings"),
           spark.table(s"${table}_stats"), qt, k, k1, b,
-          prebuiltDf = Some(spark.table(s"${table}_df")),
-          championListSize = championListSize)
+          prebuiltDf = Some(spark.table(s"${table}_df")))
       case Some(rows) =>
         val qterms = spark.createDataFrame(
           java.util.Arrays.asList(rows: _*), qt.schema)
@@ -612,36 +605,17 @@ object Bm25 {
         scoreQTerms(
           spark.table(s"${table}_postings").filter(termIn),
           spark.table(s"${table}_stats"), qterms, k, k1, b,
-          prebuiltDf = Some(spark.table(s"${table}_df").filter(termIn)),
-          championListSize = championListSize)
+          prebuiltDf = Some(spark.table(s"${table}_df").filter(termIn)))
     }
   }
 
-  /** [[searchFromIndex]] with the scoring pass routed through the
-    * block-max WAND kernel instead of the relational Σ qf·df join —
+  /** [[searchFromIndex]] with the scoring pass routed through the one
+    * WAND core ([[wand]]) instead of the relational Σ qf·df join —
     * results are CONTRACTED bit-identical (same fixed-point
     * contributions, same (score desc, id) tie-break; the
-    * `text_bm25_wand` gate pins that equivalence). Keeps the serve path's
-    * two structural wins: postings/df scans carry the batch's vocabulary
-    * as an `isin` literal (bucket pruning + parquet pushdown — only
-    * query-term buckets are read), and df/stats are persisted lookups,
-    * never a corpus aggregate.
-    *
-    * Three routes, chosen on exact counts, never on a Catalyst estimate:
-    *   - more than [[serveBatchCap]] `(query, term)` rows: no vocabulary
-    *     literal (it would be a million-entry In) — WAND's own chunked
-    *     over-cap route over the full index tables.
-    *   - with [[Regime.enabled]], Σ df over the batch's vocabulary ≤
-    *     [[driverWandMaxPostings]] (the df rows and the stats row land in
-    *     one job, and Σ df is exactly the number of postings the batch
-    *     touches): driver-local
-    *     WAND ([[wandOnDriver]]) — one more job collects those postings,
-    *     and the result is a LocalRelation. A small batch over a persisted
-    *     index is bound by per-job cost, not data (the hybrid lookup's
-    *     lexical arm ran 10 jobs before this route existed, 2 here).
-    *   - otherwise distributed WAND ([[wandDistributed]]) over the probe's
-    *     `(query, term)` rows and the idf of the df rows already in hand:
-    *     one doc-keyed shuffle, ≤ P·nq·k forwarded rows.
+    * `text_bm25_serve` gate pins that equivalence). df and stats are
+    * persisted lookups, never a corpus aggregate, and the postings/df
+    * scans read only the buckets of the batch's vocabulary.
     *
     * Measured at the 10× serve shape (50k docs, 944 doc-prefix queries,
     * dev/ServeWandAb, equality-asserted then interleaved min-of-2): WAND
@@ -660,85 +634,23 @@ object Bm25 {
     * place the crossover the limit encodes. */
   private[graft] def searchFromIndexWandUpTo(spark: org.apache.spark.sql.SparkSession,
       table: String, queries: DataFrame, qIdCol: String, qTextCol: String,
-      k: Int, k1: Double, b: Double, driverMaxPostings: Long): DataFrame = {
-    val post = spark.table(s"${table}_postings")
-    val stats = spark.table(s"${table}_stats")
-    val dfTable = spark.table(s"${table}_df")
-    qtermRowsCapped(queries, qIdCol, qTextCol, serveBatchCap) match {
-      case None =>
-        searchWandOverPostings(post, stats, queries, qIdCol, qTextCol,
-          k, k1, b, prebuiltDf = Some(dfTable))
-      case Some(qtRows) =>
-        val termIn = col("term").isin(qtRows.map(_.getString(1)).distinct.toSeq: _*)
-        // the vocabulary's df rows and the stats row (null term) in ONE
-        // job: a union, not a broadcast crossJoin (a broadcast is a job)
-        val (statRow, dfRows) = dfTable.filter(termIn)
-          .select(col("term"), col("df"), lit(null).cast("double").as("avgdl"))
-          .union(stats.select(lit(null).cast("string"), col("n_docs"), col("avgdl")))
-          .collect().partition(_.isNullAt(0))
-        val nDocs = statRow.head.getDouble(1)
-        val avgdl = statRow.head.getDouble(2)
-        val idfs = dfRows.map(r => r.getString(0) -> idf(nDocs, r.getDouble(1))).toMap
-        val qidField = queries.select(col(qIdCol)).schema.head
-        if (Regime.enabled && dfRows.map(_.getDouble(1)).sum <= driverMaxPostings)
-          wandOnDriver(post, qtRows, qidField, idfs, avgdl, k, k1, b)
-        else
-          wandDistributed(post.filter(termIn), qtRows, qidField, idfs, avgdl,
-            k, k1, b, blockSize = 64)
-    }
-  }
+      k: Int, k1: Double, b: Double, driverMaxPostings: Long): DataFrame =
+    wand(spark.table(s"${table}_postings"), spark.table(s"${table}_stats"),
+      Some(spark.table(s"${table}_df")), queries, qIdCol, qTextCol,
+      k, k1, b, blockSize = 64, driverMaxPostings)
 
-  /** WAND over postings collected to the driver: one job reads the
-    * postings of the terms in `idfs` (bucket-pruned by the `isin`
-    * literal), one [[LocalWand]] over all of them scores every query in
-    * parallel on driver cores, and the top-k lands in a LocalRelation with
-    * [[wandDistributed]]' output schema. Ranks follow the
-    * (score desc, doc_id asc) order. */
-  private def wandOnDriver(post: DataFrame, qtRows: Array[Row],
-      qidField: org.apache.spark.sql.types.StructField,
-      idfs: Map[String, Double], avgdl: Double,
-      k: Int, k1: Double, b: Double): DataFrame = {
-    import org.apache.spark.sql.types._
-    val postRows =
-      if (idfs.isEmpty) Array.empty[Row]
-      else postingCols(post.filter(col("term").isin(idfs.keys.toSeq: _*))).collect()
-    java.util.Arrays.sort(postRows, (x: Row, y: Row) => {
-      val c = x.getString(0).compareTo(y.getString(0))
-      if (c != 0) c else java.lang.Long.compare(x.getLong(1), y.getLong(1))
-    })
-    val scorer = new LocalWand(postRows.iterator, idfs, avgdl, k1, b, blockSize = 64)
-    val (qids, qTerms) = denseQueries(qtRows, idfs.contains)
-    val top = new Array[Array[(Long, Long)]](qids.length)
-    java.util.stream.IntStream.range(0, qids.length).parallel().forEach { qi =>
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      scorer.query(qTerms(qi), k, (docId, sc) => out += ((docId, sc)))
-      top(qi) = out.sortWith((x, y) => x._2 > y._2 || (x._2 == y._2 && x._1 < y._1)).toArray
-    }
-    val rows = for {
-      qi <- qids.indices
-      ((docId, sc), r) <- top(qi).iterator.zipWithIndex
-    } yield Row(qids(qi), docId, r + 1, sc)
-    withScore(post.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
-      StructType(Seq(
-        StructField("query_id", qidField.dataType, qidField.nullable),
-        StructField("doc_id", LongType, nullable = false),
-        StructField("rank", IntegerType, nullable = false),
-        StructField("score_fixed", LongType, nullable = false)))))
-  }
-
-  /** max Σ df (postings touched) of a batch [[searchFromIndexWand]] scores
-    * on the driver; above it the batch takes distributed WAND. The routes
-    * meet between ~350k and ~460k postings (dev/WandRouteAb, 4 cores; the
-    * distributed route wins at ~930k), and every posting of a driver-route
-    * batch sits on the driver heap, so the limit is set below that.
-    * `graft.local.enabled=false` sends every batch to the distributed
-    * route. */
+  /** max Σ df (postings touched) of a batch the WAND core ([[wand]])
+    * scores on the driver; above it the batch takes distributed WAND. The
+    * routes meet between ~350k and ~460k postings (dev/WandRouteAb over a
+    * persisted index, 4 cores; the distributed route wins at ~930k), and
+    * every posting of a driver-route batch sits on the driver heap, so the
+    * limit is set below that. `graft.local.enabled=false` sends every
+    * batch to the distributed route. */
   val driverWandMaxPostings: Long = 200_000L
 
-  /** max (query_id, term) rows the serve paths land on the driver before
-    * routing the batch through the streaming plan instead */
+  /** max (query_id, term) rows a search lands on the driver before
+    * chunking the batch (WAND) or routing it through the streaming plan
+    * (the relational [[searchFromIndex]]) instead */
   def serveBatchCap: Int =
-    sys.props.get("graft.bm25.serveBatchCap").map(_.toInt)
-      .orElse(sys.env.get("GRAFT_BM25_SERVE_BATCH_CAP").map(_.toInt))
-      .getOrElse(200_000)
+    sys.props.get("graft.bm25.serveBatchCap").map(_.toInt).getOrElse(200_000)
 }

@@ -30,16 +30,19 @@ package graft.operators
   * order-independent), computed with the identical double-arithmetic
   * expression tree (see [[Bm25.contribFixed]]).
   *
-  * Everything here is single-threaded per (partition, query); Spark
-  * supplies the parallelism — documents are hash-partitioned so each
-  * doc's postings are co-located, every partition answers every query
-  * over its local docs with a local θ, and only ≤ k rows per
-  * (partition, query) survive to the global top-k. Candidate
-  * materialization never exceeds P·nq·k rows regardless of df. A small
-  * serve batch ([[Bm25.searchFromIndexWand]], Σ df under
-  * [[Bm25.driverWandMaxPostings]]) runs
-  * the same kernel on the driver instead: one query per driver thread
-  * over the full postings lists.
+  * Everything here is single-threaded per (slice, query). Both BM25
+  * WAND searches, over a corpus ([[Bm25.searchTopKWand]]) and over a
+  * persisted index ([[Bm25.searchFromIndexWand]]), run it through one
+  * core that picks the route per batch:
+  *   - a batch whose vocabulary touches at most
+  *     [[Bm25.driverWandMaxPostings]] postings (Σ df) runs on the driver,
+  *     one query per driver thread over the full postings lists;
+  *   - a larger batch, or any batch under `graft.local.enabled=false`,
+  *     runs distributed: documents are hash-partitioned so each doc's
+  *     postings are co-located, every partition answers every query over
+  *     its local docs with a local θ, and only ≤ k rows per (partition,
+  *     query) survive to the global top-k. Candidate materialization
+  *     never exceeds P·nq·k rows regardless of df.
   */
 private[operators] final class WandPostings(
     val ids: Array[Long],      // doc ids, strictly ascending

@@ -233,22 +233,16 @@ object Dedup {
     // relation so ids / self-loop edges / every iteration below reuse the
     // materialized rows instead of re-running the upstream join (the naive
     // plan re-evaluated it ~5×: 2 union branches × 2 consumers + comp init).
-    val verbose = sys.env.contains("GRAFT_CC_VERBOSE")
-    def tick[T](tag: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      if (verbose) System.err.println(f"[cc] $tag%-12s ${(System.nanoTime() - t0) / 1e9}%6.2fs")
-      r
-    }
-    val undirected = tick("edges")(pairs
+    val undirected = pairs
       .select(explode(array(
         struct(col("a").cast("long").as("src"), col("b").cast("long").as("dst")),
         struct(col("b").cast("long").as("src"), col("a").cast("long").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .localCheckpoint())
+      .localCheckpoint()
     // the checkpoint makes this count a metadata-cheap scan of pinned rows
-    val nEdges = tick("count")(undirected.count())
+    val nEdges = undirected.count()
     if (Regime.enabled && nEdges <= driverEdgeCap)
-      return tick("unionfind")(driverUnionFind(undirected, nEdges))
+      return driverUnionFind(undirected, nEdges)
     // self-loops make the per-round join a CLOSED-neighborhood min in one
     // equi-join + groupBy — no in-loop union of `comp` with a plan that
     // already contains `comp` (which trips Catalyst's Union constraint
@@ -262,7 +256,7 @@ object Dedup {
     // grows ~4× per iteration and Catalyst analysis wedges after a handful
     // of rounds — checkpointing truncates the lineage to a constant-size
     // LogicalRDD. (Reliable-checkpoint dir is the cluster-grade variant.)
-    var comp = tick("init")(ids.withColumn("comp", col("id")).localCheckpoint())
+    var comp = ids.withColumn("comp", col("id")).localCheckpoint()
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {
@@ -278,17 +272,17 @@ object Dedup {
       // (Measured: a second jump per round does NOT reduce round count on
       // dup-chain graphs — rounds are limited by neighbor-min relabeling,
       // not pointer depth — so one jump is the cost-optimal setting.)
-      val next = tick(s"jump $iter")(nbrMin
+      val next = nbrMin
         .join(nbrMin.select(col("id").as("comp"), col("comp").as("cc")), Seq("comp"))
         .select(col("id"), col("cc").as("comp"))
-        .localCheckpoint())
+        .localCheckpoint()
       // convergence probe: skipped on round 0 — with any edges at all the
       // first round always relabels something, so the count would be a
       // guaranteed-true action (maxIter still bounds the edgeless case)
       val changed =
         if (iter == 0) 1L
-        else tick(s"changed $iter")(next.as("n").join(comp.as("o"), Seq("id"))
-          .filter(col("n.comp") =!= col("o.comp")).limit(1).count())
+        else next.as("n").join(comp.as("o"), Seq("id"))
+          .filter(col("n.comp") =!= col("o.comp")).limit(1).count()
       comp.unpersist()
       comp = next
       converged = changed == 0

@@ -102,9 +102,7 @@ object HnswGlobalIndexer {
     * Above it [[HnswGlobalIndexer.build]] routes to the distributed
     * per-centroid build instead of OOMing. */
   def buildBytesCap: Long =
-    sys.props.get("graft.hnsw.buildBytesCap").map(_.toLong)
-      .orElse(sys.env.get("GRAFT_HNSW_BUILD_BYTES_CAP").map(_.toLong))
-      .getOrElse(8L << 30)
+    sys.props.get("graft.hnsw.buildBytesCap").map(_.toLong).getOrElse(8L << 30)
 }
 
 final case class HnswGlobalSearcher(efSearch: Int = 100, metric: String = "l2",
@@ -276,10 +274,7 @@ final case class HnswGlobalSearcher(efSearch: Int = 100, metric: String = "l2",
 object HnswGlobalSearcher {
   /** query-batch cap for the driver-parallel walk (above it, the walk
     * distributes via the broadcast model) */
-  def driverWalkCap: Int =
-    sys.props.get("graft.hnsw.driverWalkCap").map(_.toInt)
-      .orElse(sys.env.get("GRAFT_HNSW_DRIVER_WALK_CAP").map(_.toInt))
-      .getOrElse(100_000)
+  val driverWalkCap: Int = 100_000
 }
 
 /** Driver-side multi-layer HNSW graph. Levels are sampled geometrically

@@ -44,9 +44,7 @@ object LocalScan {
   /** max bytes of index payload collected to the driver (ids + codes or
     * vectors); above it the caller keeps the distributed scan */
   def bytesCap: Long =
-    sys.props.get("graft.local.bytesCap").map(_.toLong)
-      .orElse(sys.env.get("GRAFT_LOCAL_BYTES_CAP").map(_.toLong))
-      .getOrElse(512L << 20)
+    sys.props.get("graft.local.bytesCap").map(_.toLong).getOrElse(512L << 20)
 
   /** per-batch flop budget for the FULL flat scan (queries × rows × dim):
     * above it the batch is compute-bound end to end and LinearSearcher
@@ -59,15 +57,12 @@ object LocalScan {
     * [[queryRowCap]] still route genuinely big inputs to the cluster
     * path. Pruned scans (IVF lists, code scans) stay local — their
     * per-batch work is orders of magnitude smaller. */
-  def fullScanFlopCap: Long =
-    sys.props.get("graft.local.fullScanFlopCap").map(_.toLong)
-      .getOrElse(64_000_000_000L)
+  val fullScanFlopCap: Long = 64_000_000_000L
 
   /** max query rows collected+memoized by [[queryVecs]]; a query batch
     * beyond this is not a "batch search" but a join — callers fall back
     * to their streaming plans */
-  def queryRowCap: Long =
-    sys.props.get("graft.local.queryRowCap").map(_.toLong).getOrElse(1L << 20)
+  val queryRowCap: Long = 1L << 20
 
   /** OPT-IN reassociated SIMD kernels for the driver-local FLOAT scans
     * (exact / ivf_flat): -Dgraft.scan.simd=true / GRAFT_SCAN_SIMD=1.
@@ -105,8 +100,7 @@ object LocalScan {
     * ivf_flat par), where the graph walk's scattered per-call pattern
     * measured net negative. 50 is the narrowest measured shape — below
     * it the scalar chain stays. */
-  private val scanSimdMinDim: Int =
-    sys.props.get("graft.scan.simd.mindim").map(_.toInt).getOrElse(50)
+  private val scanSimdMinDim: Int = 50
 
   /** one collected inverted-code relation: row r's code bytes at
     * [r·m, (r+1)·m); rows grouped contiguously by centroid id with

@@ -184,8 +184,7 @@ object SimdDist {
   }
 
   /** measured crossover (between 50-d and 64-d on this box) */
-  val simdMinDim: Int =
-    sys.props.get("graft.simd.mindim").map(_.toInt).getOrElse(64)
+  val simdMinDim: Int = 64
 
   /** tri-state: -Dgraft.simd.enabled / GRAFT_SIMD forces either side;
     * unset = ON when the module resolves (the r12 default flip) */

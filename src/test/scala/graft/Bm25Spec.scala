@@ -114,45 +114,4 @@ class Bm25Spec extends AnyFunSuite {
         s"champion score $s exceeds exact $es for ($q,$d)"))
     }
   }
-
-  test("champion rescore: candidates score EXACT; N ≥ corpus ≡ exact; ≥ truncated agreement") {
-    val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
-    val queries = docs.filter($"doc_id" % 23 === 0)
-      .selectExpr("doc_id as qid", "text as qtext")
-    def run(champ: Option[Int], rescore: Boolean) =
-      Bm25.searchTopK(docs, queries, "doc_id", "text", "qid", "qtext", k = 5,
-        championListSize = champ, championRescore = rescore)
-    val exact = run(None, rescore = false)
-      .select("query_id", "doc_id", "rank", "score")
-      .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3))
-    // champion lists that hold every posting → candidates = every pair
-    // with term overlap → rescore ≡ exact, bit for bit
-    val full = run(Some(docs.count().toInt), rescore = true)
-      .select("query_id", "doc_id", "rank", "score")
-      .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3))
-    assert(exact.toSeq == full.toSeq)
-    // small N: every candidate's score equals its EXACT BM25 (full term
-    // overlap, not the truncated contributions) — the defining property
-    // of candidate-generation + rescore vs truncated scoring
-    val exactScores = run(None, rescore = false)
-      .select("query_id", "doc_id", "score")
-      .as[(Long, Long, Double)].collect()
-      .map { case (q, d, s) => (q, d) -> s }.toMap
-    val re = run(Some(4), rescore = true)
-      .select("query_id", "doc_id", "score")
-      .as[(Long, Long, Double)].collect()
-    assert(re.nonEmpty)
-    // exact's output carries only ITS top-5 pairs; where a rescored
-    // candidate appears in both, the scores must be identical (full
-    // term overlap — unlike truncated scoring, which only lower-bounds)
-    var shared = 0
-    re.foreach { case (q, d, s) =>
-      exactScores.get((q, d)).foreach { es =>
-        shared += 1
-        assert(math.abs(s - es) < 1e-9,
-          s"rescored candidate ($q,$d) got $s, exact is $es")
-      }
-    }
-    assert(shared > 0, "no overlap between rescore and exact top-5")
-  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.JobCount.jobsOf
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Bm25
@@ -176,49 +177,67 @@ class Bm25WandSpec extends AnyFunSuite {
     }
   }
 
-  /** Serves `queries` from `table` through the driver-local route (default)
-    * and through the distributed route (the `graft.local.enabled=false`
-    * kill switch), requires bit-identical rows and equal schemas, and
-    * returns the rows. */
-  private def serveBothRoutes(table: String,
-      queries: org.apache.spark.sql.DataFrame, k: Int) = {
-    def serve() = {
-      val res = Bm25.searchFromIndexWand(spark, table, queries, "qid", "qtext", k = k)
-      val local = res.queryExecution.optimizedPlan
-        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
-      val rows = res.select("query_id", "doc_id", "rank", "score")
-        .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3)).toSeq
-      (local, res.schema, rows)
+  /** `(query_id, doc_id, rank, raw bits of score)`, sorted by (query_id, rank) */
+  private def rowBits(res: org.apache.spark.sql.DataFrame) =
+    res.select("query_id", "doc_id", "rank", "score")
+      .as[(Long, Long, Int, Double)].collect()
+      .map(r => (r._1, r._2, r._3, java.lang.Double.doubleToRawLongBits(r._4)))
+      .sortBy(r => (r._1, r._3)).toSeq
+
+  /** [[exact]]'s rows with the scores as raw bits */
+  private def exactBits(docs: org.apache.spark.sql.DataFrame,
+      queries: org.apache.spark.sql.DataFrame, k: Int) =
+    rowBits(Bm25.searchTopK(docs, queries, "id", "text", "qid", "qtext", k = k))
+
+  /** True when every leaf of the plan is a LocalRelation: the search ran on
+    * the driver (one LocalRelation per chunk of an over-cap batch). */
+  private def allOnDriver(res: org.apache.spark.sql.DataFrame): Boolean =
+    res.queryExecution.optimizedPlan.collectLeaves().forall(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+
+  /** Runs `search` on its default route and on the distributed route (the
+    * `graft.local.enabled=false` kill switch). The default run must be on
+    * the driver and the forced run must not; the two must have equal
+    * schemas and bit-identical rows. Returns the schema and the rows. */
+  private def bothRoutes(search: => org.apache.spark.sql.DataFrame) = {
+    def run() = {
+      val res = search
+      (allOnDriver(res), res.schema, rowBits(res))
     }
-    val (onDriver, driverSchema, driverRows) = serve()
-    val (distLocal, distSchema, distRows) = RouteCheck.distributed(serve())
+    val (onDriver, driverSchema, driverRows) = run()
+    val (distLocal, distSchema, distRows) = RouteCheck.distributed(run())
     assert(onDriver && !distLocal, "each setting must select its route")
     assert(driverSchema == distSchema)
-    // doubles compared by bits: the fixed-point scores must be identical
-    assert(driverRows.map(r => r.copy(_4 = java.lang.Double.doubleToRawLongBits(r._4))) ==
-      distRows.map(r => r.copy(_4 = java.lang.Double.doubleToRawLongBits(r._4))))
-    driverRows
+    assert(driverRows == distRows)
+    (driverSchema, driverRows)
   }
 
+  private def serveBothRoutes(table: String,
+      queries: org.apache.spark.sql.DataFrame, k: Int) =
+    bothRoutes(Bm25.searchFromIndexWand(spark, table, queries, "qid", "qtext", k = k))._2
+
+  private val tinyCorpus = Seq(
+    (1L, "the quick brown fox"),
+    (2L, "the lazy dog"),
+    (3L, "quick quick quick fox"),
+    (4L, "dog eats dog food"),
+    // byte-identical docs: every score ties and resolves by doc_id
+    (5L, "brown dog fox"),
+    (6L, "brown dog fox"),
+    (7L, "fox and dog and the brown hen"))
+  private val tinyQueries = Seq(
+    (10L, "quick fox"),
+    (20L, "dog Dog DOG fox dog"),    // repeated terms count once
+    (30L, "brown fox dog"),          // 5 and 6 tie
+    (40L, "absent_term zzz"),        // nothing in the corpus: no rows
+    (50L, "eats"))                   // k > its one match
+
   test("searchFromIndexWand: driver-local route ≡ distributed route, bit for bit") {
-    val corpus = Seq(
-      (1L, "the quick brown fox"),
-      (2L, "the lazy dog"),
-      (3L, "quick quick quick fox"),
-      (4L, "dog eats dog food"),
-      // byte-identical docs: every score ties and resolves by doc_id
-      (5L, "brown dog fox"),
-      (6L, "brown dog fox"),
-      (7L, "fox and dog and the brown hen")).toDF("id", "text")
-    val queries = Seq(
-      (10L, "quick fox"),
-      (20L, "dog Dog DOG fox dog"),    // repeated terms count once
-      (30L, "brown fox dog"),          // 5 and 6 tie
-      (40L, "absent_term zzz"),        // nothing in the corpus: no rows
-      (50L, "eats")).toDF("qid", "qtext") // k > its one match
+    val corpus = tinyCorpus.toDF("id", "text")
+    val queries = tinyQueries.toDF("qid", "qtext")
     withIndex(corpus, "wandix_routes") {
       val got = serveBothRoutes("wandix_routes", queries, k = 5)
-      assert(got == exact(corpus, queries, k = 5))
+      assert(got == exactBits(corpus, queries, k = 5))
       assert(!got.exists(_._1 == 40L))
       assert(got.filter(_._1 == 50L).map(_._2) == Seq(4L))
       val q30 = got.filter(_._1 == 30L)
@@ -230,7 +249,31 @@ class Bm25WandSpec extends AnyFunSuite {
     val (docs, skewedQueries) = skewedCorpus(42, nQueries = 25)
     withIndex(docs, "wandix_routes_skewed") {
       val got = serveBothRoutes("wandix_routes_skewed", skewedQueries, k = 5)
-      assert(got.nonEmpty && got == exact(docs, skewedQueries, k = 5))
+      assert(got.nonEmpty && got == exactBits(docs, skewedQueries, k = 5))
+    }
+  }
+
+  test("searchTopKWand: driver route ≡ distributed route ≡ searchTopK, bit for bit") {
+    def check(docs: org.apache.spark.sql.DataFrame,
+        queries: org.apache.spark.sql.DataFrame, k: Int): Unit = {
+      val ref = Bm25.searchTopK(docs, queries, "id", "text", "qid", "qtext", k = k)
+      val refRows = rowBits(ref)
+      assert(refRows.nonEmpty)
+      for (bs <- Seq(1, 64)) {
+        val (schema, rows) = bothRoutes(Bm25.searchTopKWand(docs, queries,
+          "id", "text", "qid", "qtext", k = k, blockSize = bs))
+        assert(schema == ref.schema, s"blockSize=$bs")
+        assert(rows == refRows, s"blockSize=$bs")
+      }
+    }
+    check(tinyCorpus.toDF("id", "text"), tinyQueries.toDF("qid", "qtext"), k = 5)
+    val (docs, queries) = skewedCorpus(42, nQueries = 25)
+    check(docs, queries, k = 5)
+    // over the cap (25 queries, ~60 (query, term) rows): the batch chunks
+    // query-disjoint, and each chunk takes the driver route by default
+    withProp("graft.bm25.serveBatchCap", Some("20")) {
+      assert(Bm25.qtermRowsCapped(queries, "qid", "qtext", 20).isEmpty)
+      check(docs, queries, k = 5)
     }
   }
 
@@ -269,8 +312,7 @@ class Bm25WandSpec extends AnyFunSuite {
       assert(driverJobs <= 3, s"$driverJobs Spark jobs for a 4-query driver-route serve")
       // the distributed route (kill switch) reuses the probe's
       // (query, term) rows and the df/stats rows it already collected, so
-      // it neither re-tokenizes the batch nor collects the idf again (5
-      // jobs; 8 when this route re-entered searchWandOverPostings)
+      // it neither re-tokenizes the batch nor collects the idf again
       val (distJobs, distRows) = RouteCheck.distributed(serve(batch))
       assert(distRows.toSet == rows.toSet)
       assert(distJobs <= 5, s"$distJobs Spark jobs for a 4-query distributed-route serve")
@@ -280,6 +322,38 @@ class Bm25WandSpec extends AnyFunSuite {
       val (spreadJobs, _) = RouteCheck.distributed(serve(spread))
       assert(spreadJobs <= distJobs + 3,
         s"$spreadJobs Spark jobs for a 2-partition distributed-route serve")
+    }
+  }
+
+  test("searchTopKWand job counts on a small batch, per route") {
+    val (docs, batch) = skewedCorpus(7, nQueries = 4) // batch: a LocalRelation
+    def search() = jobsOf(spark.sparkContext)(
+      Bm25.searchTopKWand(docs, batch, "id", "text", "qid", "qtext", k = 10).collect())
+    search() // tokenizes the corpus into the cached postings
+    val (driverJobs, rows) = search()
+    assert(rows.nonEmpty)
+    val (distJobs, distRows) = RouteCheck.distributed(search())
+    assert(distRows.toSet == rows.toSet)
+    // driver route: the df/stats union collect and the postings collect
+    assert(driverJobs <= 2, s"$driverJobs Spark jobs for a 4-query driver-route search")
+    assert(distJobs <= 5, s"$distJobs Spark jobs for a 4-query distributed-route search")
+  }
+
+  test("an over-cap chunk that the first split cannot separate splits again") {
+    // every query id falls in the first of two chunks under the level-0
+    // split (and under the unseeded hash): re-splitting a chunk by the
+    // hash that formed it used to recurse until the stack overflowed
+    val (docs, pool) = skewedCorpus(11, nQueries = 200)
+    val queries = pool.filter(pmod(hash($"qid"), lit(2)) === 0 &&
+      pmod(hash($"qid", lit(0)), lit(2)) === 0).limit(12)
+    val nRows = Bm25.qtermRowsCapped(queries, "qid", "qtext", 10000).get.length
+    val want = exactBits(docs, queries, k = 5)
+    assert(want.map(_._1).distinct.length == 12)
+    withProp("graft.bm25.serveBatchCap", Some(((nRows + 1) / 2).toString)) {
+      def search() = rowBits(Bm25.searchTopKWand(docs, queries, "id", "text",
+        "qid", "qtext", k = 5))
+      assert(search() == want)
+      assert(RouteCheck.distributed(search()) == want)
     }
   }
 

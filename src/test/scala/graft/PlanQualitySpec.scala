@@ -309,18 +309,26 @@ class PlanQualitySpec extends AnyFunSuite {
     }
   }
 
-  test("BM25 WAND: one doc-shuffle, vocab semi-join pruned, bounded local rows") {
+  test("BM25 WAND: one doc-shuffle, vocab-pruned postings, bounded local rows") {
     val docs = Tables.load(spark, dir, "documents")
     val queries = docs.filter(col("doc_id") % 23 === 0)
       .select(col("doc_id").as("qid"),
         substring(col("text"), 1, 200).as("qtext"))
-    val res = graft.operators.Bm25.searchTopKWand(docs, queries,
+    def search() = graft.operators.Bm25.searchTopKWand(docs, queries,
       "doc_id", "text", "qid", "qtext", k = 5)
-    val plan = res.queryExecution.executedPlan.toString
-    // the scoring scan reads ONLY query-vocab postings (broadcast
-    // semi-join prune before the doc repartition)
-    assert(plan.contains("LeftSemi"),
-      s"WAND postings must be vocab-semi-join pruned:\n$plan")
+    // this batch touches fewer postings than Bm25.driverWandMaxPostings, so
+    // by default it runs on the driver (Bm25WandSpec proves the two routes
+    // equal); the distributed plan is forced here
+    assert(graft.operators.Regime.onDriver(search()),
+      "a small batch must take the driver route by default")
+    val (res, plan) = RouteCheck.distributed {
+      val r = search()
+      (r, r.queryExecution.executedPlan.toString)
+    }
+    // the scoring scan reads ONLY query-vocab postings (a literal
+    // vocabulary filter before the doc repartition)
+    assert(plan.contains("term#") && (plan.contains("INSET") || plan.contains(" IN (")),
+      s"WAND postings must be filtered to the query vocabulary:\n$plan")
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"),
       s"WAND must never plan a pair join — that is the candidate " +

@@ -34,10 +34,14 @@ class SourceRatchetSpec extends AnyFunSuite {
       Seq("Regime.scala"))
   }
 
-  test("at most 50 ad-hoc knob reads") {
+  /** lowered whenever a change turns knobs into constants */
+  private val knobReadCeiling = 39
+
+  test("ad-hoc knob reads stay at or under the ceiling") {
     val reads = sources.map { case (_, s) =>
       """sys\.props|sys\.env|System\.getProperty|System\.getenv""".r.findAllIn(s).size
     }.sum
-    assert(reads <= 50, s"$reads sys.props/sys.env/System.getProperty/System.getenv reads")
+    assert(reads <= knobReadCeiling,
+      s"$reads sys.props/sys.env/System.getProperty/System.getenv reads (ceiling $knobReadCeiling)")
   }
 }
