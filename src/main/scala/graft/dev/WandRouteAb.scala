@@ -5,17 +5,21 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Bm25
 
-/** A/B of [[Bm25.searchFromIndexWand]]'s two under-cap routes — WAND on
-  * the driver vs distributed WAND — across Σ df (the postings a batch
-  * touches), to place the crossover [[Bm25.driverWandMaxPostings]]
-  * encodes. Each route is forced by the Σ df limit it is called with
-  * ([[Bm25.searchFromIndexWandUpTo]]). The corpus is `dir`'s documents
-  * replicated `f` times under fresh doc ids for each `f` in `scales`, so
-  * Σ df grows with `f` while the batches stay fixed: the `text_bm25_serve`
-  * batch (200-char prefixes of every 53rd doc) and its first `small`
-  * queries (the hybrid lookup's size). Per (scale, batch) it checks both
+/** A/B/C of [[Bm25.searchFromIndexWand]]'s under-cap routes — WAND on
+  * the driver served from the index's snapshot, WAND on the driver over
+  * the batch's collected postings, and distributed WAND — across Σ df
+  * (the postings a batch touches), to place the crossover
+  * [[Bm25.driverWandMaxPostings]] encodes. The driver routes are forced by
+  * the Σ df limit they are called with ([[Bm25.searchFromIndexWandUpTo]]);
+  * the collect route also sets `graft.local.bytesCap` to 0, so the
+  * snapshot is not served. The corpus is `dir`'s documents replicated `f`
+  * times under fresh doc ids for each `f` in `scales`, so Σ df grows with
+  * `f` while the batches stay fixed: the `text_bm25_serve` batch
+  * (200-char prefixes of every 53rd doc) and its first `small` queries
+  * (the hybrid lookup's size). Per (scale, batch) it checks the three
   * routes return identical rows, then times them interleaved and prints
-  * the median of `reps` per route.
+  * the median of `reps` per route. The snapshot loads on its route's
+  * first, untimed call.
   *
   * Usage: runMain graft.dev.WandRouteAb [dir=/root/testdata/sf0.1]
   *   [reps=7] [scales=1,2,4,8] [small=4]
@@ -46,29 +50,40 @@ object WandRouteAb {
       val corpus = (0 until f).map(i => docs.withColumn("doc_id", col("doc_id") + i * span))
         .reduce(_ unionByName _)
       Bm25.ensureIndex(corpus, "doc_id", "text", table, buckets = 8)
-      def serve(queries: DataFrame, onDriver: Boolean): Array[org.apache.spark.sql.Row] =
-        Bm25.searchFromIndexWandUpTo(spark, table, queries, "qid", "qtext", k = 5,
-          k1 = 1.2, b = 0.75, driverMaxPostings = if (onDriver) Long.MaxValue else -1L)
+      def serve(queries: DataFrame, route: String): Array[org.apache.spark.sql.Row] = {
+        def run() = Bm25.searchFromIndexWandUpTo(spark, table, queries, "qid", "qtext", k = 5,
+          k1 = 1.2, b = 0.75,
+          driverMaxPostings = if (route == "distributed") -1L else Long.MaxValue)
           .select("query_id", "doc_id", "rank", "score").collect()
+        if (route != "collect") run()
+        else {
+          val old = sys.props.get("graft.local.bytesCap")
+          sys.props("graft.local.bytesCap") = "0"
+          try run() finally old match {
+            case Some(v) => sys.props("graft.local.bytesCap") = v
+            case None => sys.props -= "graft.local.bytesCap"
+          }
+        }
+      }
+      val routes = Seq("snapshot", "collect", "distributed")
       Seq("gate" -> gateBatch, "small" -> smallBatch).foreach { case (name, queries) =>
         val vocab = queries.select(explode(array_distinct(
           split(trim(lower(col("qtext"))), "\\s+"))).as("term")).distinct()
         val nq = queries.count()
         val sumDf = spark.table(s"${table}_df").join(vocab, "term")
           .agg(sum("df")).head().getDouble(0).toLong
-        val a = serve(queries, onDriver = true).map(_.toString).sorted
-        val b = serve(queries, onDriver = false).map(_.toString).sorted
-        require(a.sameElements(b), s"routes diverged at scale $f, $name batch")
+        val rows = routes.map(r => serve(queries, r).map(_.toString).sorted)
+        require(rows.forall(_.sameElements(rows.head)), s"routes diverged at scale $f, $name batch")
+        // each rep runs the routes in a rotated order
         val times = (1 to reps).map { r =>
-          def t(onDriver: Boolean): Double = {
-            val t0 = System.nanoTime(); serve(queries, onDriver); (System.nanoTime() - t0) / 1e6
-          }
-          if (r % 2 == 1) { val d = t(true); (d, t(false)) }
-          else { val x = t(false); (t(true), x) }
+          val order = routes.drop(r % routes.length) ++ routes.take(r % routes.length)
+          order.map { route =>
+            val t0 = System.nanoTime(); serve(queries, route)
+            route -> (System.nanoTime() - t0) / 1e6
+          }.toMap
         }
         println(f"[wandroute] scale=$f%2d $name%5s queries=$nq%4d sumDf=$sumDf%9d " +
-          f"driver=${median(times.map(_._1))}%8.1f ms " +
-          f"distributed=${median(times.map(_._2))}%8.1f ms")
+          routes.map(r => f"$r=${median(times.map(_(r)))}%8.1f ms").mkString(" "))
       }
     }
     spark.stop()

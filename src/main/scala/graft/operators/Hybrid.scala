@@ -81,17 +81,19 @@ object Hybrid {
     * or None to keep the distributed plan. Applies when the LocalScan fast
     * path is enabled, k ≥ 1, and every contribution plan (the arm with
     * its `round(w·S/(k0+rank))` projection, which folds onto the arm's
-    * LocalRelation) is a LocalRelation, so collecting them runs no Spark
-    * job. The contributions are summed per (qid, id) as exact longs and
+    * LocalRelation) is a LocalRelation, whose rows are read off the
+    * relation ([[Regime.driverRows]]): no Spark job, no physical plan.
+    * The contributions are summed per (qid, id) as exact longs and
     * each qid keeps the k best of (-Σ as double, id) in the
     * [[BoundedTopK]] order the distributed [[TopKByDist]] uses. A null
     * qid, id or contribution, or a sum that overflows a long, keeps the
     * distributed plan, whose `sum` and grouping define those cases. The
     * qid column is nullable iff some arm's is (the union's nullability). */
   private def fuseOnDriver(contribs: Seq[DataFrame], k: Int): Option[DataFrame] = {
-    if (!Regime.enabled || k < 1 || !contribs.forall(Regime.onDriver))
-      return None
-    val rows = contribs.flatMap(_.collect())
+    if (!Regime.enabled || k < 1) return None
+    val local = contribs.map(Regime.driverRows)
+    if (local.exists(_.isEmpty)) return None
+    val rows = local.flatMap(_.get)
     if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)))
       return None
     // qid → id → Σ contributions

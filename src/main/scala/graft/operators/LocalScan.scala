@@ -133,6 +133,8 @@ object LocalScan {
   // store keyed for frames loaded from an ArtifactStore
   // ---------------------------------------------------------------------
   private case object TooBig
+  /** a keyed structure found too big under cap `cap` ([[memoizedBy]]) */
+  private final case class TooBigAt(cap: Long)
   private val slotTags =
     new java.util.concurrent.ConcurrentHashMap[String, TreeNodeTag[AnyRef]]()
 
@@ -162,7 +164,10 @@ object LocalScan {
 
     def bytes: Long = synchronized(held)
 
-    def get(key: String): Option[AnyRef] = synchronized(Option(entries.get(key)).map(_._1))
+    def get(key: String): Option[AnyRef] = entry(key).map(_._1)
+
+    /** the value held under `key` with the bytes it was counted at */
+    def entry(key: String): Option[(AnyRef, Long)] = synchronized(Option(entries.get(key)))
 
     def put(key: String, v: AnyRef, bytes: Long): Unit = synchronized {
       val old = entries.remove(key)
@@ -207,6 +212,41 @@ object LocalScan {
           }
         case v => Some(v.asInstanceOf[T])
       }
+    }
+
+  /** Memo slot for a structure collected under a key the caller builds
+    * from what the structure was read from (a persisted BM25 index's
+    * snapshot: its files and scoring parameters), held in the same
+    * store-keyed LRU, so its bytes count under [[bytesCap]]. `compute`
+    * owns any pre-collect size bound (None = too big); the exact
+    * `bytesOf` is re-checked here. None without computing when
+    * [[Regime.enabled]] is off. A held structure is served only while it
+    * fits the current cap ([[heldBy]]), and one found too big is not
+    * computed again until the cap rises. */
+  def memoizedBy[T <: AnyRef](key: String)(bytesOf: T => Long)(
+      compute: => Option[T]): Option[T] =
+    if (!Regime.enabled) None
+    else {
+      val cap = bytesCap
+      stored.entry(key) match {
+        case Some((TooBigAt(was), _)) if cap <= was => None
+        case Some((TooBigAt(_), _)) | None =>
+          compute.map(t => (t, bytesOf(t))) match {
+            case Some((t, bytes)) if bytes <= cap =>
+              stored.put(key, t, bytes); Some(t)
+            case _ => stored.put(key, TooBigAt(cap), 0L); None
+          }
+        case Some(_) => heldBy[T](key)
+      }
+    }
+
+  /** The structure [[memoizedBy]] holds under `key` when it fits the
+    * current [[bytesCap]], without computing anything; None when
+    * [[Regime.enabled]] is off. */
+  def heldBy[T <: AnyRef](key: String): Option[T] =
+    if (!Regime.enabled) None
+    else stored.entry(key).collect {
+      case (v, bytes) if !v.isInstanceOf[TooBigAt] && bytes <= bytesCap => v.asInstanceOf[T]
     }
 
   /** a frozen model read from an index frame (centroids, codebooks):

@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.JobCount.jobsOf
+import org.apache.spark.JobCount.{actionsOf, jobsOf}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Bm25
+import graft.operators.{Bm25, LocalScan}
 
 /** Block-max WAND exact BM25: contracted bit-identical to the exact
   * relational path ([[Bm25.searchTopK]]) — same fixed-point scores,
@@ -310,6 +310,18 @@ class Bm25WandSpec extends AnyFunSuite {
       val (driverJobs, rows) = serve(batch)
       assert(rows.nonEmpty)
       assert(driverJobs <= 3, s"$driverJobs Spark jobs for a 4-query driver-route serve")
+      // the first call loads the index snapshot: the df/stats union
+      // collect and one collect of every posting; a warm call is served
+      // from it with no job
+      assert(driverJobs <= 2, s"$driverJobs Spark jobs for the first (snapshot-loading) serve")
+      val (warmJobs, warmRows) = serve(batch)
+      assert(warmJobs == 0, s"$warmJobs Spark jobs for a warm snapshot serve")
+      assert(warmRows.toSet == rows.toSet)
+      // the batch's (query, term) rows are read off its LocalRelation and
+      // the answer is a LocalRelation: planning it posts no SQL execution
+      val (actions, _) = actionsOf(spark.sparkContext)(
+        Bm25.searchFromIndexWand(spark, "wandix_jobs", batch, "qid", "qtext", k = 10))
+      assert(actions.isEmpty, actions.mkString(", "))
       // the distributed route (kill switch) reuses the probe's
       // (query, term) rows and the df/stats rows it already collected, so
       // it neither re-tokenizes the batch nor collects the idf again
@@ -379,6 +391,100 @@ class Bm25WandSpec extends AnyFunSuite {
               .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3)).toSeq == want)
         }
       }
+    }
+  }
+
+  /** the default search of the index `table`, with the WAND block size */
+  private def serveIndex(table: String, queries: org.apache.spark.sql.DataFrame, k: Int,
+      blockSize: Int = 64, k1: Double = 1.2, b: Double = 0.75) =
+    Bm25.searchFromIndexWandUpTo(spark, table, queries, "qid", "qtext", k, k1, b,
+      Bm25.driverWandMaxPostings, blockSize)
+
+  /** `searchFromIndex`'s rows with the scores as raw bits */
+  private def relationalBits(table: String, queries: org.apache.spark.sql.DataFrame,
+      k: Int, k1: Double = 1.2, b: Double = 0.75) =
+    rowBits(Bm25.searchFromIndex(spark, table, queries, "qid", "qtext", k = k, k1 = k1, b = b))
+
+  test("index snapshot ≡ collect route ≡ distributed route ≡ searchFromIndex, bit for bit") {
+    val (docs, queries) = skewedCorpus(42, nQueries = 25)
+    withIndex(docs, "wandix_snap") {
+      val matches = relationalBits("wandix_snap", queries, k = 10000).length
+      for (bs <- Seq(4, 64); k <- Seq(1, 5, matches + 1)) {
+        val want = relationalBits("wandix_snap", queries, k)
+        assert(want.nonEmpty)
+        def serve() = serveIndex("wandix_snap", queries, k, bs)
+        serve() // loads this block size's snapshot
+        val (jobs, snap) = jobsOf(spark.sparkContext)(rowBits(serve()))
+        assert(jobs == 0, s"blockSize=$bs k=$k: $jobs jobs for a snapshot serve")
+        assert(snap == want, s"blockSize=$bs k=$k")
+        // bytesCap 0 keeps the snapshot out: the per-batch postings collect
+        val collected = withProp("graft.local.bytesCap", Some("0")) {
+          val res = serve()
+          assert(allOnDriver(res))
+          rowBits(res)
+        }
+        assert(collected == want, s"blockSize=$bs k=$k")
+        assert(RouteCheck.distributed(rowBits(serve())) == want, s"blockSize=$bs k=$k")
+      }
+      // other (k1, b) after the default: a snapshot of their own
+      val want = relationalBits("wandix_snap", queries, k = 5, k1 = 0.9, b = 0.4)
+      assert(want != relationalBits("wandix_snap", queries, k = 5))
+      for (_ <- 0 until 2)
+        assert(rowBits(serveIndex("wandix_snap", queries, k = 5, k1 = 0.9, b = 0.4)) == want)
+      assert(rowBits(serveIndex("wandix_snap", queries, k = 5)) ==
+        relationalBits("wandix_snap", queries, k = 5))
+    }
+  }
+
+  test("a buildIndex of another corpus under the same name serves the new corpus") {
+    val (docs, queries) = skewedCorpus(42, nQueries = 25)
+    val (other, _) = skewedCorpus(5, nQueries = 1)
+    withIndex(docs, "wandix_rebuild") {
+      serveIndex("wandix_rebuild", queries, k = 5).collect() // loads the snapshot
+      Bm25.buildIndex(other, "id", "text", "wandix_rebuild", buckets = 4)
+      val want = exactBits(other, queries, k = 5)
+      assert(want != exactBits(docs, queries, k = 5))
+      assert(rowBits(serveIndex("wandix_rebuild", queries, k = 5)) == want)
+      val (jobs, warm) = jobsOf(spark.sparkContext)(rowBits(serveIndex("wandix_rebuild", queries, k = 5)))
+      assert(jobs == 0 && warm == want)
+    }
+  }
+
+  test("an index over bytesCap keeps the per-batch route, and the memo stays under the cap") {
+    val (docs, queries) = skewedCorpus(42, nQueries = 25)
+    withIndex(docs, "wandix_overcap") {
+      val want = relationalBits("wandix_overcap", queries, k = 5)
+      val cap = 2000L // the index is ~30 kB as a snapshot
+      withProp("graft.local.bytesCap", Some(cap.toString)) {
+        for (_ <- 0 until 2) {
+          val (jobs, got) = jobsOf(spark.sparkContext) {
+            val res = serveIndex("wandix_overcap", queries, k = 5)
+            assert(allOnDriver(res))
+            rowBits(res)
+          }
+          // the df/stats union collect and the batch's postings collect
+          assert(jobs == 2, s"$jobs Spark jobs")
+          assert(got == want)
+          assert(LocalScan.storedBytes <= cap)
+        }
+      }
+    }
+  }
+
+  test("under graft.local.enabled=false no snapshot is built") {
+    val (docs, batch) = skewedCorpus(7, nQueries = 4)
+    withIndex(docs, "wandix_off") {
+      def serve() = jobsOf(spark.sparkContext)(
+        rowBits(serveIndex("wandix_off", batch, k = 10)))
+      val held = LocalScan.storedBytes
+      val (offJobs, off) = RouteCheck.distributed(serve())
+      assert(RouteCheck.distributed(serve())._1 == offJobs)
+      assert(LocalScan.storedBytes == held)
+      // the default route's first call still pays the snapshot load
+      val (firstJobs, first) = serve()
+      assert(firstJobs == 2 && first == off)
+      assert(LocalScan.storedBytes > held)
+      assert(serve()._1 == 0)
     }
   }
 }

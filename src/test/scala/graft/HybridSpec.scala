@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.JobCount.jobsOf
+import org.apache.spark.JobCount.{actionsOf, jobsOf}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -160,6 +160,10 @@ class HybridSpec extends AnyFunSuite {
     val (jobs, rows) = jobsOf(spark.sparkContext)(Hybrid.rrfFuse(Seq(lex, den), 10).collect())
     assert(rows.length == 40)
     assert(jobs == 0, s"$jobs Spark jobs to fuse two LocalRelation arms")
+    // the arms' rows are read off their relations: fusing them plans no
+    // physical query and posts no SQL execution
+    val (actions, _) = actionsOf(spark.sparkContext)(Hybrid.rrfFuse(Seq(lex, den), 10))
+    assert(actions.isEmpty, actions.mkString(", "))
     // one arm behind a shuffle: not a LocalRelation, so the whole fusion
     // stays distributed
     val spread = den.repartition(2)
