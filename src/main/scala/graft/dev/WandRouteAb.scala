@@ -9,10 +9,11 @@ import graft.operators.Bm25
   * the driver served from the index's snapshot, WAND on the driver over
   * the batch's collected postings, and distributed WAND — across Σ df
   * (the postings a batch touches), to place the crossover
-  * [[Bm25.driverWandMaxPostings]] encodes. The driver routes are forced by
-  * the Σ df limit they are called with ([[Bm25.searchFromIndexWandUpTo]]);
-  * the collect route also sets `graft.local.bytesCap` to 0, so the
-  * snapshot is not served. The corpus is `dir`'s documents replicated `f`
+  * [[Bm25.driverWandMaxPostings]] encodes. The collect route is forced by
+  * an unbounded Σ df limit ([[Bm25.searchFromIndexWandUpTo]]) and
+  * `graft.local.bytesCap` 0, so the snapshot is not served; the
+  * distributed route by `graft.local.enabled=false`, since a held
+  * snapshot serves a batch over any limit. The corpus is `dir`'s documents replicated `f`
   * times under fresh doc ids for each `f` in `scales`, so Σ df grows with
   * `f` while the batches stay fixed: the `text_bm25_serve` batch
   * (200-char prefixes of every 53rd doc) and its first `small` queries
@@ -52,17 +53,20 @@ object WandRouteAb {
       Bm25.ensureIndex(corpus, "doc_id", "text", table, buckets = 8)
       def serve(queries: DataFrame, route: String): Array[org.apache.spark.sql.Row] = {
         def run() = Bm25.searchFromIndexWandUpTo(spark, table, queries, "qid", "qtext", k = 5,
-          k1 = 1.2, b = 0.75,
-          driverMaxPostings = if (route == "distributed") -1L else Long.MaxValue)
+          k1 = 1.2, b = 0.75, driverMaxPostings = Long.MaxValue)
           .select("query_id", "doc_id", "rank", "score").collect()
-        if (route != "collect") run()
-        else {
-          val old = sys.props.get("graft.local.bytesCap")
-          sys.props("graft.local.bytesCap") = "0"
+        def withProp(key: String, value: String) = {
+          val old = sys.props.get(key)
+          sys.props(key) = value
           try run() finally old match {
-            case Some(v) => sys.props("graft.local.bytesCap") = v
-            case None => sys.props -= "graft.local.bytesCap"
+            case Some(v) => sys.props(key) = v
+            case None => sys.props -= key
           }
+        }
+        route match {
+          case "collect" => withProp("graft.local.bytesCap", "0")
+          case "distributed" => withProp("graft.local.enabled", "false")
+          case _ => run()
         }
       }
       val routes = Seq("snapshot", "collect", "distributed")

@@ -326,12 +326,13 @@ object Bm25 {
     *      re-materializing the relational Σ qf·df candidates and
     *      overflowing local disk (r12). Only a single query wider than
     *      the cap, which cannot chunk, takes the relational join;
-    *   3. the driver route is taken with [[Regime.enabled]] and Σ df
+    *   3. when the index's snapshot is held (which needs
+    *      [[Regime.enabled]]), the batch is scored from it
+    *      ([[driverTopK]]) with no Spark job, whatever its Σ df. Otherwise
+    *      the driver route is taken with [[Regime.enabled]] and Σ df
     *      (exactly the number of postings the batch touches) ≤
     *      `driverMaxPostings`: a small batch is bound by per-job cost, not
-    *      data. When the index's snapshot is held and the batch takes the
-    *      driver route, the batch is scored from it ([[driverTopK]]) with
-    *      no Spark job;
+    *      data;
     *   4. otherwise the vocabulary's df rows and the stats row land in ONE
     *      union collect, and idf is computed on the driver ([[idf]],
     *      bit-identical to [[idfCol]]);
@@ -370,10 +371,7 @@ object Bm25 {
       case Some(qtRows) =>
         val terms = qtRows.map(_.getString(1)).distinct
         val qidField = queries.select(col(qIdCol)).schema.head
-        def driverRoute(sumDf: Double) = Regime.enabled && sumDf <= driverMaxPostings
-        val warm = snapshot.flatMap(_.held)
-          .filter(s => driverRoute(terms.iterator.map(s.df(_).toDouble).sum))
-        warm match {
+        snapshot.flatMap(_.held) match {
           case Some(s) => driverTopK(queries.sparkSession, s, qtRows, qidField, k)
           case None =>
             val termIn = col("term").isin(terms.toSeq: _*)
@@ -391,7 +389,7 @@ object Bm25 {
             // the postings of the terms with a df row: LocalWand reads each
             // posting's idf
             val hit = post.filter(col("term").isin(idfs.keys.toSeq: _*))
-            if (driverRoute(dfRows.map(_.getDouble(1)).sum))
+            if (Regime.enabled && dfRows.map(_.getDouble(1)).sum <= driverMaxPostings)
               snapshot.flatMap(_.load(nDocs, avgdl)) match {
                 case Some(s) => driverTopK(queries.sparkSession, s, qtRows, qidField, k)
                 case None => wandOnDriver(hit, qtRows, qidField, idfs, avgdl, k, k1, b, blockSize)
@@ -672,10 +670,10 @@ object Bm25 {
     * Repeated serving: the first batch that takes the driver route
     * loads the whole index into one driver snapshot ([[IndexSnapshot]]:
     * each term's WAND list, built once), held in [[LocalScan]]'s
-    * store-keyed memo under [[LocalScan.bytesCap]]. Every later batch
-    * whose Σ df is ≤ [[driverWandMaxPostings]] is scored from it with no
-    * Spark job; a [[buildIndex]] under the same name is a new key. An
-    * index over the cap, a batch over the limit and any call under
+    * store-keyed memo under [[LocalScan.bytesCap]]. Every later batch is
+    * scored from it with no Spark job, a batch over
+    * [[driverWandMaxPostings]] too; a [[buildIndex]] under the same name
+    * is a new key. An index over the cap and any call under
     * `graft.local.enabled=false` route as without it: the df/stats union
     * collect, then the driver's postings collect or distributed WAND.
     *
@@ -692,8 +690,8 @@ object Bm25 {
       driverWandMaxPostings)
 
   /** [[searchFromIndexWand]] with the driver route's Σ df limit and the
-    * WAND block size as arguments: dev/WandRouteAb times each route
-    * (Long.MaxValue / -1) to place the crossover the limit encodes. */
+    * WAND block size as arguments: dev/WandRouteAb forces the collect
+    * route with Long.MaxValue to place the crossover the limit encodes. */
   private[graft] def searchFromIndexWandUpTo(spark: org.apache.spark.sql.SparkSession,
       table: String, queries: DataFrame, qIdCol: String, qTextCol: String,
       k: Int, k1: Double, b: Double, driverMaxPostings: Long,
@@ -756,14 +754,17 @@ object Bm25 {
   private val postingRowBytes = 144L
 
   /** max Σ df (postings touched) of a batch the WAND core ([[wand]])
-    * scores on the driver; above it the batch takes distributed WAND. The
-    * routes meet between ~350k and ~460k postings (dev/WandRouteAb over a
-    * persisted index, 4 cores; the distributed route wins at ~930k), and
-    * every posting of a driver-route batch sits on the driver heap, so the
-    * limit is set below that. It was measured on the collect route (each
-    * batch collects its terms' postings) and is kept unchanged for batches
-    * served from a persisted index's snapshot. `graft.local.enabled=false`
-    * sends every batch to the distributed route. */
+    * scores on the driver by collecting its terms' postings; above it the
+    * batch takes distributed WAND. Those two routes meet between ~350k and
+    * ~460k postings (dev/WandRouteAb over a persisted index, 4 cores; the
+    * distributed route wins at ~930k), and every posting of such a batch
+    * sits on the driver heap, so the limit is set below that. A batch over
+    * a persisted index whose snapshot is held skips the limit: the
+    * snapshot measured faster than distributed WAND at every Σ df up to
+    * 929,848 (981 vs 1548 ms for the `text_bm25_serve` batch, 75 vs 760 ms
+    * for 4 queries) and holds no per-batch postings.
+    * `graft.local.enabled=false` sends every batch to the distributed
+    * route. */
   val driverWandMaxPostings: Long = 200_000L
 
   /** max (query_id, term) rows a search lands on the driver before

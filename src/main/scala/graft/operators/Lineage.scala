@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** How [[IndexAppend]] made an index relation from its parent: the parent
   * relation plus one delta, either appended rows with the kind's own
@@ -60,32 +61,59 @@ private[operators] object Lineage {
     case Delete(ids) => Regime.onDriver(ids)
   }
 
+  /** An append's `(id, vector)` rows as read once per delta relation
+    * ([[appended]]). They ride on the relation's own plan node, the way a
+    * [[Link]] does, so every table derived through the delta (an LSH
+    * index's bucket maps and its vector table) shares one read. */
+  private val AppendedTag = TreeNodeTag[Option[(Array[Long], Array[Array[Float]])]](
+    "graft.lineage.appended")
+
   /** The delta's rows, read from the driver with no job
-    * ([[Regime.driverRows]]). None when the delta is not [[onDriver]], or
-    * when an appended row has a null id or vector, a vector of another
-    * width, or an id that repeats within the batch: the child's plan then
-    * runs as before (and fails where the distributed append fails). A
-    * null deleted id matches no row, as in the anti-join. */
+    * ([[Regime.driverRows]]); an append's are read once per delta
+    * relation ([[AppendedTag]]) and only the kind's `encode` runs per
+    * call. None when the delta is not [[onDriver]], or when an appended
+    * row has a null id or vector, a vector of another width, or an id
+    * that repeats within the batch: the child's plan then runs as before
+    * (and fails where the distributed append fails). A null deleted id
+    * matches no row, as in the anti-join. */
   def rowsOf(delta: Delta): Option[Rows] = delta match {
     case Append(rows, dim, encode) =>
-      Regime.driverRows(rows.select(col("id").cast("long"), col("vector")))
-        .filter(_.forall(r => !r.isNullAt(0) && !r.isNullAt(1) &&
-          r.getSeq[Float](1).length == dim))
-        .map { rs =>
-          // the encoders are pure: encode on every driver core
-          val encoded = new Array[(Int, Long, AnyRef)](rs.length)
-          java.util.stream.IntStream.range(0, rs.length).parallel().forEach { i =>
-            val (cid, payload) = encode(rs(i).getSeq[Float](1).toArray)
-            encoded(i) = (cid, rs(i).getLong(0), payload)
-          }
-          encoded.sortBy(t => (t._1, t._2))
+      val node = rows.queryExecution.logical
+      val read = node.getTagValue(AppendedTag).getOrElse {
+        val r = appended(rows)
+        node.setTagValue(AppendedTag, r)
+        r
+      }
+      read.filter(_._2.forall(_.length == dim)).map { case (ids, vecs) =>
+        // the encoders are pure: encode on every driver core
+        val encoded = new Array[(Int, Long, AnyRef)](ids.length)
+        java.util.stream.IntStream.range(0, ids.length).parallel().forEach { i =>
+          val (cid, payload) = encode(vecs(i))
+          encoded(i) = (cid, ids(i), payload)
         }
-        .filter(rs => rs.map(_._2).distinct.length == rs.length)
-        .map(rs => new Rows(rs.map(_._2), rs.map(_._1), rs.map(_._3), Array.emptyLongArray))
+        val rs = encoded.sortBy(t => (t._1, t._2))
+        new Rows(rs.map(_._2), rs.map(_._1), rs.map(_._3), Array.emptyLongArray)
+      }
     case Delete(ids) =>
       Regime.driverRows(ids).map { rs =>
         new Rows(Array.emptyLongArray, Array.emptyIntArray, Array.empty[AnyRef],
           rs.filterNot(_.isNullAt(0)).map(_.getLong(0)).sorted.distinct)
       }
+  }
+
+  /** `rows`' (id, vector) pairs, ids cast to long as the append's plan
+    * casts them. Integral ids are read from `rows`' own optimized plan,
+    * the one [[onDriver]] already folded to a LocalRelation, so a
+    * projection in it (the append's dim check) is not evaluated again. */
+  private def appended(rows: DataFrame): Option[(Array[Long], Array[Array[Float]])] = {
+    val read = rows.schema("id").dataType match {
+      case LongType | IntegerType | ShortType | ByteType => rows
+      case _ => rows.select(col("id").cast("long").as("id"), col("vector"))
+    }
+    val (idAt, vecAt) = (read.schema.fieldIndex("id"), read.schema.fieldIndex("vector"))
+    Regime.driverRows(read)
+      .filter(_.forall(r => !r.isNullAt(idAt) && !r.isNullAt(vecAt)))
+      .map(rs => (rs.map(_.getAs[Number](idAt).longValue), rs.map(_.getSeq[Float](vecAt).toArray)))
+      .filter { case (ids, _) => ids.distinct.length == ids.length }
   }
 }

@@ -1109,7 +1109,8 @@ object LocalScan {
     }
   }
 
-  /** public alias for operator-local fast paths (LSH rerank/fallback) */
+  /** one exact distance, [[vecDist]]: LSH's rerank of its capped
+    * candidates */
   def vecDistAt(q: Array[Float], flat: Array[Float], off: Int,
       dim: Int, mode: Int): Double = vecDist(q, flat, off, dim, mode)
 
@@ -1187,40 +1188,58 @@ object LocalScan {
   }
 
   /** exact flat scan (mirrors KnnJoin.knnJoin: broadcast queries × base
-    * scan + bounded heap, no padding); tiled like [[scanCodesFull]].
-    * [[scanSimd]] swaps in the reassociated SIMD kernels (opt-in);
-    * `strided` swaps in the scalar stride-4 gram kernels (opt-in via the
-    * searcher's `strided_accum` — the FAISS comparison regime; not
-    * bit-identical to the oracle-exact kernels, so gates never set it). */
+    * scan + bounded heap, no padding); tiled like [[scanCodesFull]], and
+    * scored by [[fullHeaps]]. [[scanSimd]] swaps in the reassociated SIMD
+    * kernels (opt-in); `strided` swaps in the scalar stride-4 gram
+    * kernels (opt-in via the searcher's `strided_accum` — the FAISS
+    * comparison regime; not bit-identical to the oracle-exact kernels, so
+    * gates never set it). */
   def scanVecsFull(spark: SparkSession, vt: VecTable, qids: Array[Long],
       qVecs: Array[Array[Float]], k: Int, mode: Int,
       strided: Boolean = false, qidNullable: Boolean = false): DataFrame = {
     val schema = resultSchemaWith(qidNullable)
     if (strided) return scanVecsFullStrided(spark, vt, qids, qVecs, k, mode, schema)
-    val heaps = new Array[BoundedTopK](qids.length)
     // SIMD kernels cover modes 0-2 only; the gram mode's dot loop is
     // already the minimal-op kernel
     val simd = scanSimd && SimdDist.vectorKernel.isDefined && mode != 3
+    resultDf(spark, qids, fullHeaps(vt, qVecs, k, mode, simd), schema)
+  }
+
+  /** the exact flat scan's top-k heaps, aligned with `qVecs`: the
+    * index-order double kernels, never the SIMD ones (LSH's zero-collision
+    * fallback, which must equal the distributed kNN join bit for bit) */
+  private[operators] def exactHeaps(vt: VecTable, qVecs: Array[Array[Float]],
+      k: Int, mode: Int): Array[BoundedTopK] =
+    fullHeaps(vt, qVecs, k, mode, simd = false)
+
+  /** queries scored together per row by the exact kernel ([[groupHeaps]]) */
+  private val queryGroup = 4
+
+  /** One top-k heap per query over every row, a block of queries
+    * ([[blockFor]]) per parallel task. A block of at least [[queryGroup]]
+    * queries on the exact kernels goes through [[groupHeaps]]; a smaller
+    * one (a point batch's one-query blocks), the gram mode and the SIMD
+    * kernels score query by query over L2-sized row chunks. */
+  private def fullHeaps(vt: VecTable, qVecs: Array[Array[Float]], k: Int,
+      mode: Int, simd: Boolean): Array[BoundedTopK] = {
+    val heaps = new Array[BoundedTopK](qVecs.length)
     val gram = mode == 3
     val norms = if (gram) rowNorms(vt) else null
-    if (vt.n > 0) {
-      val chunkRows = math.max(1, (64 << 10) / math.max(1, vt.dim))
-      val qb = blockFor(qids.length)
-      val nBlocks = (qids.length + qb - 1) / qb
-      java.util.stream.IntStream.range(0, nBlocks).parallel().forEach { b =>
-        val q0 = b * qb
-        val q1 = math.min(qids.length, q0 + qb)
-        var qi = q0
-        while (qi < q1) { heaps(qi) = new BoundedTopK(k); qi += 1 }
+    val chunkRows = math.max(1, (64 << 10) / math.max(1, vt.dim))
+    val qb = blockFor(qVecs.length)
+    val nBlocks = (qVecs.length + qb - 1) / qb
+    java.util.stream.IntStream.range(0, nBlocks).parallel().forEach { b =>
+      val q0 = b * qb
+      val q1 = math.min(qVecs.length, q0 + qb)
+      var qi = q0
+      while (qi < q1) { heaps(qi) = new BoundedTopK(k); qi += 1 }
+      if (!gram && !simd && q1 - q0 >= queryGroup) groupHeaps(vt, qVecs, q0, q1, heaps, mode)
+      else {
         // hoisted ‖q‖² per query of this block (gram mode only)
         val qq = if (!gram) null else {
           val a = new Array[Double](q1 - q0)
           var j = q0
-          while (j < q1) {
-            val q = qVecs(j); var acc = 0.0; var i = 0
-            while (i < q.length) { val x = q(i).toDouble; acc += x * x; i += 1 }
-            a(j - q0) = acc; j += 1
-          }
+          while (j < q1) { a(j - q0) = queryNorm(qVecs(j)); j += 1 }
           a
         }
         var c0 = 0
@@ -1258,7 +1277,73 @@ object LocalScan {
         }
       }
     }
-    resultDf(spark, qids, heaps, schema)
+    heaps
+  }
+
+  /** The exact kernel for queries [q0, q1) of a block: each row is
+    * widened to double once and scored against the block's queries,
+    * [[queryGroup]] at a time with one accumulator chain per query (a
+    * single query's chain is latency-bound; independent chains overlap),
+    * then the rest one by one. Every chain adds in index order the same
+    * double terms as [[vecDist]], and cosine's Σx² per query and Σy² per
+    * row are separate index-order chains there too, so every distance is
+    * bit-identical to it; each query still takes the rows in ascending
+    * order, so its heap sees the same insertion sequence. */
+  private def groupHeaps(vt: VecTable, qVecs: Array[Array[Float]], q0: Int, q1: Int,
+      heaps: Array[BoundedTopK], mode: Int): Unit = {
+    val dim = vt.dim
+    val nq = q1 - q0
+    val x = Array.tabulate(nq)(j => qVecs(q0 + j).map(_.toDouble))
+    val xx = if (mode == 2) Array.tabulate(nq)(j => queryNorm(qVecs(q0 + j))) else null
+    val y = new Array[Double](dim)
+    @inline def finish(acc: Double, j: Int, yy: Double): Double =
+      if (mode == 0) math.sqrt(acc)
+      else if (mode == 1) -acc
+      else {
+        val denom = math.sqrt(xx(j)) * math.sqrt(yy)
+        if (denom == 0.0) 1.0 else 1.0 - acc / denom
+      }
+    var r = 0
+    while (r < vt.n) {
+      val off = r * dim
+      var yy = 0.0
+      var i = 0
+      if (mode == 2) while (i < dim) {
+        val v = vt.flat(off + i).toDouble; y(i) = v; yy += v * v; i += 1
+      } else while (i < dim) { y(i) = vt.flat(off + i).toDouble; i += 1 }
+      val id = vt.ids(r)
+      var j = 0
+      while (j + queryGroup <= nq) {
+        val x0 = x(j); val x1 = x(j + 1); val x2 = x(j + 2); val x3 = x(j + 3)
+        var a0 = 0.0; var a1 = 0.0; var a2 = 0.0; var a3 = 0.0
+        i = 0
+        if (mode == 0) while (i < dim) {
+          val v = y(i)
+          val d0 = x0(i) - v; val d1 = x1(i) - v; val d2 = x2(i) - v; val d3 = x3(i) - v
+          a0 += d0 * d0; a1 += d1 * d1; a2 += d2 * d2; a3 += d3 * d3
+          i += 1
+        } else while (i < dim) {
+          val v = y(i)
+          a0 += x0(i) * v; a1 += x1(i) * v; a2 += x2(i) * v; a3 += x3(i) * v
+          i += 1
+        }
+        heaps(q0 + j).insert(id, finish(a0, j, yy))
+        heaps(q0 + j + 1).insert(id, finish(a1, j + 1, yy))
+        heaps(q0 + j + 2).insert(id, finish(a2, j + 2, yy))
+        heaps(q0 + j + 3).insert(id, finish(a3, j + 3, yy))
+        j += queryGroup
+      }
+      while (j < nq) {
+        val xj = x(j)
+        var acc = 0.0
+        i = 0
+        if (mode == 0) while (i < dim) { val d = xj(i) - y(i); acc += d * d; i += 1 }
+        else while (i < dim) { acc += xj(i) * y(i); i += 1 }
+        heaps(q0 + j).insert(id, finish(acc, j, yy))
+        j += 1
+      }
+      r += 1
+    }
   }
 
   /** reassociated SIMD distance over a flat row (opt-in via [[scanSimd]];

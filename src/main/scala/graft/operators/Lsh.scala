@@ -134,75 +134,122 @@ final case class LshSearcher(
   * [[LocalScan]]: below the bytes cap the bucket relation collects once
   * (memoized per artifact) into per-table hash maps and the whole
   * probe → vote → cap → exact-rerank → brute-force-fallback pipeline
-  * runs driver-core-parallel per query with zero Spark jobs. Every stage
-  * replicates the relational plan's arithmetic and ordering exactly:
-  * integer collision votes, cap via the same [[BoundedTopK]] on
-  * (−votes, id), rerank and fallback through [[LocalScan]]'s metric
-  * kernels ((dist, id) order) — results are bit-identical
-  * (LocalScanSpec asserts against the forced-distributed plan). */
-private[operators] object LshLocal {
+  * runs on the driver cores with zero Spark jobs. Every stage replicates
+  * the relational plan's arithmetic and ordering exactly: integer
+  * collision votes, cap via the same [[BoundedTopK]] on (−votes, id),
+  * rerank through [[LocalScan.vecDistAt]] and the fallback through
+  * [[LocalScan]]'s exact flat scan ((dist, id) order) — results are
+  * bit-identical (LocalScanSpec asserts against the forced-distributed
+  * plan). */
+private[graft] object LshLocal {
+  import scala.collection.mutable.LongMap
 
-  /** per-table key → packed id-array bucket maps + the aligned vector
-    * table for rerank/fallback */
-  final class Buckets(val tables: Array[scala.collection.mutable.LongMap[Array[Long]]])
+  /** The per-table key → id-array maps of a collected bucket relation,
+    * its sorted distinct ids, and its driver bytes ([[mapBytes]] plus the
+    * ids), counted once here. Every index [[IndexAppend]] derives from it
+    * holds it by reference. */
+  final class Base(val tables: Array[LongMap[Array[Long]]], val ids: Array[Long]) {
+    val bytes: Long = mapBytes(tables) + 16L + 8L * ids.length
+  }
+
+  /** The bucket maps of one index relation: a [[Base]], shared by
+    * reference, plus the overlay that the appends and deletes since it
+    * made — per table the added rows' keys → ids (`added`), the sorted
+    * ids of those rows (`addedIds`) and the sorted deleted ids
+    * (`deleted`). A deleted id is dead in the base; an added row that a
+    * later delete removes leaves the overlay, so an id deleted and then
+    * appended again is live once, with its new keys. */
+  final class Buckets(val base: Base, val added: Array[LongMap[Array[Long]]],
+      val addedIds: Array[Long], val deleted: Array[Long]) {
+    /** a base id that a delete removed */
+    def dead(id: Long): Boolean =
+      deleted.length > 0 && java.util.Arrays.binarySearch(deleted, id) >= 0
+    def live(id: Long): Boolean =
+      java.util.Arrays.binarySearch(addedIds, id) >= 0 ||
+        (java.util.Arrays.binarySearch(base.ids, id) >= 0 && !dead(id))
+  }
 
   /** the bucket maps of an LSH bucket relation (table, key, id): collected
     * (when the 24 B per row lower bound fits [[LocalScan.bytesCap]]) or
     * derived from the parent relation's maps ([[LocalScan.derived]]), and
     * kept when their footprint ([[bucketBytes]]) fits the cap */
-  private def collectBuckets(data: DataFrame, numTables: Int): Option[Buckets] =
+  private[graft] def buckets(data: DataFrame, numTables: Int): Option[Buckets] =
     LocalScan.memoized[Buckets](data, "lsh_buckets")(bucketBytes) {
-      LocalScan.derived(data, "lsh_buckets")(collectBuckets(_, numTables))(withDelta)
+      LocalScan.derived(data, "lsh_buckets")(buckets(_, numTables))(withDelta)
         .orElse(Regime.collectUnder(data, LocalScan.bytesCap)(Some(data.count() * 24)) {
           Some(data.select(col("id").cast("long"), col("table").cast("int"),
             col("key").cast("long")).collect())
         }(_.length.toLong * 24).map { rows =>
           val grouped = Array.fill(numTables)(
-            new scala.collection.mutable.LongMap[scala.collection.mutable.ArrayBuffer[Long]]())
+            new LongMap[scala.collection.mutable.ArrayBuffer[Long]]())
           rows.foreach { r =>
             val t = r.getInt(1)
             if (t >= 0 && t < numTables)
               grouped(t).getOrElseUpdate(r.getLong(2),
                 new scala.collection.mutable.ArrayBuffer[Long]()) += r.getLong(0)
           }
-          new Buckets(grouped.map(_.map { case (k, v) => (k, v.toArray) }))
+          new Buckets(
+            new Base(grouped.map(_.map { case (k, v) => (k, v.toArray) }),
+              rows.map(_.getLong(0)).distinct.sorted),
+            Array.fill(numTables)(new LongMap[Array[Long]]()),
+            Array.emptyLongArray, Array.emptyLongArray)
         })
         .filter(bucketBytes(_) <= LocalScan.bytesCap)
     }
 
-  /** driver bytes of the bucket maps: per map its slot arrays (a long key
-    * and a compressed reference per slot; a LongMap keeps at most half of
-    * its slots full, and holds at least 16), and per key its id array (a
-    * 16 B header and 8 B per id): ~60 B per id when the buckets hold one
-    * id each, ~5 MB for 10,000 rows hashed into 8 tables. */
-  private def bucketBytes(b: Buckets): Long =
-    b.tables.iterator.map { t =>
+  /** driver bytes of key → id-array maps: per map its slot arrays (a long
+    * key and a compressed reference per slot; a LongMap keeps at most half
+    * of its slots full, and holds at least 16), and per key its id array
+    * (a 16 B header and 8 B per id): ~60 B per id when the buckets hold
+    * one id each, ~5 MB for 10,000 rows hashed into 8 tables. */
+  private def mapBytes(tables: Array[LongMap[Array[Long]]]): Long =
+    tables.iterator.filter(_.nonEmpty).map { t =>
       math.max(16L, java.lang.Long.highestOneBit(t.size * 2L) * 2) * 12 +
         t.valuesIterator.map(16L + 8L * _.length).sum
     }.sum
 
-  /** the parent's maps minus the deleted ids plus the appended rows under
-    * their keys (`payloads`: per-table keys from [[LshModel.hashOne]]);
-    * None when an appended id is already live. Each map is cloned, not
-    * rebuilt, and a bucket that a deleted id empties stays as an empty
-    * array. Neither changes a result: votes are counted per id and the
-    * cap heap is (−votes, id) ordered, so order within a bucket is
-    * immaterial too. */
-  private def withDelta(parent: Buckets, rows: Lineage.Rows): Option[Buckets] =
-    if (rows.ids.nonEmpty && parent.tables.exists(_.valuesIterator.exists(_.exists(rows.adds))))
-      None
-    else Some(new Buckets(parent.tables.indices.toArray.map { t =>
-      val out = parent.tables(t).clone()
-      if (rows.deleted.nonEmpty)
-        out.transformValuesInPlace(ids =>
-          if (ids.exists(rows.deletes)) ids.filterNot(rows.deletes) else ids)
-      rows.ids.indices.groupBy(i => rows.payloads(i).asInstanceOf[Array[Long]](t))
-        .foreach { case (key, added) =>
-          out(key) = out.getOrElse(key, Array.emptyLongArray) ++ added.map(rows.ids)
-        }
-      out
-    }))
+  /** driver bytes of `b`: its base's, counted once at collect, plus its
+    * overlay's */
+  private[graft] def bucketBytes(b: Buckets): Long =
+    b.base.bytes + mapBytes(b.added) + 32L + 8L * (b.addedIds.length + b.deleted.length)
 
+  /** `parent`'s maps changed by one delta, in time linear in the delta and
+    * the overlay, never in the base: the base is held by reference; the
+    * appended rows (`payloads`: per-table keys from [[LshModel.hashOne]])
+    * join the overlay; the deleted ids join `deleted` and leave the
+    * overlay. None when an appended id is already live. Votes are counted
+    * per id and the cap heap is (−votes, id) ordered, so neither the order
+    * within a bucket nor the split between base and overlay changes a
+    * result. */
+  private def withDelta(parent: Buckets, rows: Lineage.Rows): Option[Buckets] =
+    if (rows.ids.exists(parent.live)) None
+    else if (rows.deleted.nonEmpty) {
+      val touched = parent.addedIds.exists(rows.deletes)
+      Some(new Buckets(parent.base,
+        if (!touched) parent.added
+        else parent.added.map(_.flatMap { case (key, ids) =>
+          val kept = ids.filterNot(rows.deletes)
+          if (kept.isEmpty) None else Some(key -> kept)
+        }),
+        if (!touched) parent.addedIds else parent.addedIds.filterNot(rows.deletes),
+        (parent.deleted ++ rows.deleted).distinct.sorted))
+    } else Some(new Buckets(parent.base,
+      parent.added.indices.toArray.map { t =>
+        val out = parent.added(t).clone()
+        rows.ids.indices.groupBy(i => rows.payloads(i).asInstanceOf[Array[Long]](t))
+          .foreach { case (key, ids) =>
+            out(key) = out.getOrElse(key, Array.emptyLongArray) ++ ids.map(rows.ids)
+          }
+        out
+      },
+      (parent.addedIds ++ rows.ids).sorted, parent.deleted))
+
+  /** The batch search: per query (on every driver core) the vote over the
+    * base buckets, skipping dead ids, and the overlay's, then the cap and
+    * the exact rerank. The queries that share no bucket with any live row
+    * take the fallback (lsh.py:266-269) together, as one batch of
+    * [[LocalScan.exactHeaps]], the flat scan's exact query-blocked
+    * kernel. */
   def trySearch(artifact: IndexArtifact, model: LshModel, queries: DataFrame,
       k: Int, cap: Int, metric: String, fallback: Boolean): Option[DataFrame] = {
     val mode = LocalScan.metricMode(metric) match {
@@ -213,7 +260,7 @@ private[operators] object LshLocal {
       case Some(v) => v
       case None => return None
     }
-    val buckets = collectBuckets(artifact.data, model.numTables) match {
+    val b = buckets(artifact.data, model.numTables) match {
       case Some(b) => b
       case None => return None
     }
@@ -229,59 +276,53 @@ private[operators] object LshLocal {
     }
 
     val spark = artifact.data.sparkSession
+    // null → no rows for this query (resultDf skips), or the fallback
     val out = new Array[BoundedTopK](qids.length)
+    val unvoted = new Array[Boolean](qids.length)
     java.util.stream.IntStream.range(0, qids.length).parallel().forEach { qi =>
       val qv = qVecs(qi)
       val keys = model.hashOne(qv)
       // J5 vote: integer collision counts across tables
-      val votes = new scala.collection.mutable.LongMap[Int]()
+      val votes = new LongMap[Int]()
       var t = 0
       while (t < keys.length) {
-        buckets.tables(t).get(keys(t)).foreach { ids =>
+        b.base.tables(t).get(keys(t)).foreach { ids =>
           var i = 0
           while (i < ids.length) {
-            votes(ids(i)) = votes.getOrElse(ids(i), 0) + 1
+            if (!b.dead(ids(i))) votes(ids(i)) = votes.getOrElse(ids(i), 0) + 1
             i += 1
           }
         }
+        b.added(t).get(keys(t)).foreach(_.foreach(id => votes(id) = votes.getOrElse(id, 0) + 1))
         t += 1
       }
-      val result =
-        if (votes.isEmpty) {
-          if (!fallback) null
-          else {
-            // J6 fallback: exact scan of the full table for this query
-            val h = new BoundedTopK(k)
-            var r = 0
-            while (r < vt.n) {
-              h.insert(vt.ids(r),
-                LocalScan.vecDistAt(qv, vt.flat, r * vt.dim, vt.dim, mode))
-              r += 1
+      if (votes.isEmpty) unvoted(qi) = true
+      else {
+        // J6 cap by (votes desc, id asc) — the same bounded heap on
+        // dist = −votes the relational plan uses
+        val capHeap = new BoundedTopK(cap)
+        votes.foreach { case (id, c) => capHeap.insert(id, -c.toDouble) }
+        // J7 exact rerank of the capped candidates
+        val h = new BoundedTopK(k)
+        var i = 0
+        while (i < capHeap.size) {
+          val id = capHeap.ids(i)
+          // P7 parity: KnnJoin.rerank drops negative-id candidates
+          // (padding convention) before reranking
+          if (id >= 0)
+            idIndex.get(id).foreach { r =>
+              h.insert(id, LocalScan.vecDistAt(qv, vt.flat, r * vt.dim, vt.dim, mode))
             }
-            h
-          }
-        } else {
-          // J6 cap by (votes desc, id asc) — the same bounded heap on
-          // dist = −votes the relational plan uses
-          val capHeap = new BoundedTopK(cap)
-          votes.foreach { case (id, c) => capHeap.insert(id, -c.toDouble) }
-          // J7 exact rerank of the capped candidates
-          val h = new BoundedTopK(k)
-          var i = 0
-          while (i < capHeap.size) {
-            val id = capHeap.ids(i)
-            // P7 parity: KnnJoin.rerank drops negative-id candidates
-            // (padding convention) before reranking
-            if (id >= 0)
-              idIndex.get(id).foreach { r =>
-                h.insert(id, LocalScan.vecDistAt(qv, vt.flat, r * vt.dim, vt.dim, mode))
-              }
-            i += 1
-          }
-          h
+          i += 1
         }
-      out(qi) = result // null → no rows for this query (resultDf skips)
+        out(qi) = h
+      }
     }
+    // J6 fallback: an exact scan of the full table for each unvoted query
+    val misses = qids.indices.filter(unvoted).toArray
+    if (fallback && misses.nonEmpty)
+      LocalScan.exactHeaps(vt, misses.map(qVecs), k, mode).zip(misses)
+        .foreach { case (h, qi) => out(qi) = h }
     Some(LocalScan.resultDf(spark, qids, out))
   }
 }

@@ -436,6 +436,25 @@ class Bm25WandSpec extends AnyFunSuite {
     }
   }
 
+  test("a held snapshot serves a batch over the Σ df limit: no job, bit for bit") {
+    val (docs, queries) = skewedCorpus(42, nQueries = 25)
+    withIndex(docs, "wandix_overlimit") {
+      val want = relationalBits("wandix_overlimit", queries, k = 5)
+      serveIndex("wandix_overlimit", queries, k = 5).collect() // loads the snapshot
+      // a limit of 0 puts every batch that touches a posting over it
+      def overLimit() = Bm25.searchFromIndexWandUpTo(spark, "wandix_overlimit", queries,
+        "qid", "qtext", k = 5, k1 = 1.2, b = 0.75, driverMaxPostings = 0L)
+      val (jobs, got) = jobsOf(spark.sparkContext) {
+        val res = overLimit()
+        assert(allOnDriver(res))
+        rowBits(res)
+      }
+      assert(jobs == 0, s"$jobs Spark jobs")
+      assert(got == want)
+      assert(RouteCheck.distributed(rowBits(overLimit())) == want)
+    }
+  }
+
   test("a buildIndex of another corpus under the same name serves the new corpus") {
     val (docs, queries) = skewedCorpus(42, nQueries = 25)
     val (other, _) = skewedCorpus(5, nQueries = 1)

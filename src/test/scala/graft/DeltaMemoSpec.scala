@@ -123,6 +123,11 @@ class DeltaMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
         IndexAppend.delete(a, Seq(Some(99999L), None).toDF("id"))
       } == base)
       derived(f, dir)(append(extra.take(20)) _ andThen delete(del) andThen append(extra.drop(20)))
+      // delete of ids appended earlier in the same chain
+      val dropped = extra.take(5).map(_._1)
+      val appendedThenDeleted = derived(f, dir)(append(extra) _ andThen delete(dropped))
+      assert(!appendedThenDeleted.exists(r => dropped.contains(r._3)))
+      assert(appendedThenDeleted.exists(r => extraIds(r._3)))
 
       // an appended id that is already live: the union's plan is collected
       val (liveJobs, _) = served(f, append(Seq(baseRows(3)._1 -> extra.head._2))(load(dir)))
@@ -159,6 +164,39 @@ class DeltaMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(d.m == c.m)
       }
     }
+  }
+
+  test("lsh: a derived index holds its parent's base maps by reference") {
+    val f = fams.find(_.kind == "lsh").get
+    val numTables = f.params("num_tables").toInt
+    val dir = store(f.build(train), "lsh-overlay")
+    val loaded = load(dir)
+    served(f, loaded)
+    val parent = LshLocal.buckets(loaded.data, numTables).get
+    val art = (append(extra) _ andThen delete(del))(load(dir))
+    assert(served(f, art)._1 == 0)
+    val child = LshLocal.buckets(art.data, numTables).get
+    assert(child.base eq parent.base)
+    assert(child.base.tables eq parent.base.tables)
+    // the base is counted once; the overlay weighs what the delta does
+    val overlay = LshLocal.bucketBytes(child) - parent.base.bytes
+    assert(LshLocal.bucketBytes(parent) - parent.base.bytes < 64)
+    assert(overlay > 8L * (extra.size + del.size) && overlay < parent.base.bytes / 4,
+      s"overlay $overlay B against a base of ${parent.base.bytes} B")
+
+    // a fine hash puts each row alone in its buckets: a query equal to a
+    // deleted row shares a bucket only with that dead id, so it must take
+    // the fallback, as the anti-joined relation's plan does
+    val fine = Fam("lsh", Map("num_tables" -> "2", "hash_size" -> "16", "bucket_width" -> "0.5"))
+    val fineDir = store(fine.build(train), "lsh-fine")
+    val gone = baseRows.filter(r => del.contains(r._1)).take(8)
+    val q = vectors(gone.map { case (i, v) => (i + 50000, v) }, "qid")
+    fine.searcher.search(load(fineDir), q, k).collect()
+    val mutated = delete(del)(load(fineDir))
+    val (jobs, got) = jobsOf(sc)(RouteCheck.bits(fine.searcher.search(mutated, q, k), "dist"))
+    assert(jobs == 0)
+    assert(got == RouteCheck.distributed(RouteCheck.bits(fine.searcher.search(mutated, q, k), "dist")))
+    assert(got.length == gone.length * k && !got.exists(r => del.contains(r._3)))
   }
 
   private def withCap[T](cap: Long)(body: => T): T = {

@@ -150,6 +150,56 @@ class LocalScanSpec extends AnyFunSuite {
     artifact.data.unpersist()
   }
 
+  private val cores = Runtime.getRuntime.availableProcessors()
+
+  /** `n` random queries of the base's dim, as (qid, vector) */
+  private def randomQueries(n: Int): DataFrame =
+    RandomDataset.vectors(spark, n, 16, seed = 77).withColumnRenamed("id", "qid")
+
+  test("exact scan query groups ≡ distributed kNN join: l2, ip, cosine, zero vectors") {
+    // blocks of 5 (one group of 4 and one query) and of 8 (two groups),
+    // each batch ending in a shorter block; n mod 4 ≠ 0
+    val sizes = Seq(16 * cores + 3, 28 * cores + 7)
+    val zero = Seq.fill(16)(0.0f)
+    val base = trainC.unionByName(Seq((99999L, zero)).toDF("id", "vector"))
+    base.cache().count()
+    val artifact = Registry.indexer("brute_force", Map("seed" -> "42"), "l2").build(base)
+    for (n <- sizes; metric <- Seq("l2", "ip", "cosine")) {
+      val q = randomQueries(n - 1).unionByName(Seq((-1L, zero)).toDF("qid", "vector"))
+      val s = Registry.searcher("linear", Map.empty, metric)
+      val got = RouteCheck.bothRoutes(local = true, "dist")(s.search(artifact, q, 7))
+      assert(got.map(_._1).distinct.length == n, s"n=$n $metric")
+      if (metric == "cosine")
+        // the zero query's denominator is 0: every row at distance 1
+        assert(got.filter(_._1 == -1L).forall(_._4 == java.lang.Double.doubleToRawLongBits(1.0)))
+    }
+    base.unpersist()
+  }
+
+  test("lsh batch of voted and zero-collision queries ≡ distributed plan") {
+    // the base rows themselves share their own buckets; the far queries
+    // (×100) share none and take the exact fallback in query groups
+    val far = randomQueries(16 * cores + 3).select(
+      (org.apache.spark.sql.functions.col("qid") + 100000).as("qid"),
+      org.apache.spark.sql.functions.transform(
+        org.apache.spark.sql.functions.col("vector"),
+        x => x * org.apache.spark.sql.functions.lit(100.0f)).as("vector"))
+    val q = trainC.limit(40).select(
+      org.apache.spark.sql.functions.col("id").as("qid"),
+      org.apache.spark.sql.functions.col("vector")).unionByName(far)
+    val artifact = Registry.indexer("lsh",
+      Map("num_tables" -> "2", "hash_size" -> "16", "bucket_width" -> "0.5",
+        "seed" -> "42"), "l2").build(trainC)
+    artifact.data.cache().count()
+    val s = Registry.searcher("lsh", Map("candidate_multiplier" -> "8"), "l2")
+    val got = RouteCheck.bothRoutes(local = true, "dist")(s.search(artifact, q, 5))
+    val perQuery = got.groupBy(_._1).map { case (qid, rs) => qid -> rs.length }
+    // a voted query reranks only its candidates; a fallback one ranks all
+    assert(perQuery.count { case (qid, c) => qid < 100000 && c < 5 } > 0)
+    assert(perQuery.count { case (qid, c) => qid >= 100000 && c == 5 } == 16 * cores + 3)
+    artifact.data.unpersist()
+  }
+
   test("covertree local walk ≡ distributed broadcast walk") {
     checkAlgo("covertree", "covertree", "covertree", Map.empty)
   }
