@@ -1,8 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim
 
 /** Okapi BM25 full-text retrieval as relational operators — the lexical
   * complement to the vector-search family (the reference engine is
@@ -125,9 +128,9 @@ object Bm25 {
 
   /** The [[qtermsOf]] rows of a batch on the driver, or None when there are
     * more than `cap` of them. A LocalRelation batch already lives on the
-    * driver: it is tokenized as a Project (which ConvertToLocalRelation
-    * folds, so no job runs and no query is planned) over at most cap+1
-    * queries, read off the relation ([[Regime.driverRows]]) and exploded
+    * driver: it is tokenized as a Project over at most cap+1 queries,
+    * read off the relation ([[Regime.driverRows]] folds it: no optimizer
+    * run, no job, no planned query) and exploded
     * HERE — every non-null text has at least one term, so more than `cap`
     * queries is over the cap without counting further. Any other batch
     * keeps the Spark-side explode behind the [[Regime.rowsUpTo]] probe, so
@@ -179,8 +182,9 @@ object Bm25 {
     (ids.toIndexedSeq, terms.map(_.toArray).toArray)
   }
 
-  /** `(query_id, doc_id, rank, score)` from fixed-point scores: the one
-    * output expression every route ends in. */
+  /** `(query_id, doc_id, rank, score)` from fixed-point scores: the
+    * output expression every Spark-side route ends in ([[driverTopK]]
+    * divides the same way in Scala). */
   private def withScore(ranked: DataFrame): DataFrame =
     ranked.select(col("query_id"), col("doc_id"), col("rank"),
       (col("score_fixed") / lit(1e6)).as("score"))
@@ -339,9 +343,10 @@ object Bm25 {
     *   5. a driver-route batch then loads the index's snapshot when it
     *      fits ([[IndexSnapshot.load]]) and is scored from it, or else
     *      WAND runs over its terms' collected postings ([[wandOnDriver]]);
-    *      either way the result is a LocalRelation. Any other batch takes
-    *      distributed WAND ([[wandDistributed]]): one doc-keyed shuffle,
-    *      ≤ P·nq·k forwarded rows. */
+    *      either way the result is one pinned LocalRelation
+    *      ([[Shim.localRelationDf]]) that no optimizer pass sweeps. Any
+    *      other batch takes distributed WAND ([[wandDistributed]]): one
+    *      doc-keyed shuffle, ≤ P·nq·k forwarded rows. */
   private def wand(post: DataFrame, stats: DataFrame, prebuiltDf: Option[DataFrame],
       snapshot: Option[IndexSnapshot],
       queries: DataFrame, qIdCol: String, qTextCol: String,
@@ -478,8 +483,11 @@ object Bm25 {
     })
 
   /** Every query of `qtRows` scored by `scorer` in parallel on driver
-    * cores, the top-k in a LocalRelation with [[wandDistributed]]' output
-    * schema. Ranks follow the (score desc, doc_id asc) order. */
+    * cores, the top-k in one pinned LocalRelation
+    * ([[Shim.localRelationDf]]) with [[wandDistributed]]' output schema:
+    * `score` is `score_fixed / 1e6` as [[withScore]] divides it (IEEE
+    * division, the same bits) and nullable as Spark's division is. Ranks
+    * follow the (score desc, doc_id asc) order. */
   private def driverTopK(spark: org.apache.spark.sql.SparkSession, scorer: LocalWand,
       qtRows: Array[Row], qidField: org.apache.spark.sql.types.StructField,
       k: Int): DataFrame = {
@@ -491,16 +499,16 @@ object Bm25 {
       scorer.query(qTerms(qi), k, (docId, sc) => out += ((docId, sc)))
       top(qi) = out.sortWith((x, y) => x._2 > y._2 || (x._2 == y._2 && x._1 < y._1)).toArray
     }
+    val toQid = CatalystTypeConverters.createToCatalystConverter(qidField.dataType)
     val rows = for {
       qi <- qids.indices
       ((docId, sc), r) <- top(qi).iterator.zipWithIndex
-    } yield Row(qids(qi), docId, r + 1, sc)
-    withScore(spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-      StructType(Seq(
-        StructField("query_id", qidField.dataType, qidField.nullable),
-        StructField("doc_id", LongType, nullable = false),
-        StructField("rank", IntegerType, nullable = false),
-        StructField("score_fixed", LongType, nullable = false)))))
+    } yield InternalRow(toQid(qids(qi)), docId, r + 1, sc.toDouble / 1e6)
+    Shim.localRelationDf(spark, StructType(Seq(
+      StructField("query_id", qidField.dataType, qidField.nullable),
+      StructField("doc_id", LongType, nullable = false),
+      StructField("rank", IntegerType, nullable = false),
+      StructField("score", DoubleType, nullable = true))), rows)
   }
 
   /** The WAND scorer over one slice of the postings, shared by the
@@ -713,8 +721,16 @@ object Bm25 {
     * (k1, b) and a rebuilt index is a new key. */
   private final class IndexSnapshot(post: DataFrame, df: DataFrame, stats: DataFrame,
       k1: Double, b: Double, blockSize: Int) {
-    private lazy val key = Seq(post, df, stats).map(_.inputFiles.sorted.mkString(","))
+    private lazy val key = Seq(post, df, stats).map(filesOf(_).sorted.mkString(","))
       .mkString("bm25 ", ";", s";k1=$k1;b=$b;blockSize=$blockSize")
+
+    /** the files `Dataset.inputFiles` lists, read off the analyzed plan
+      * (a catalog table's relation), so keying a snapshot runs no
+      * optimizer */
+    private def filesOf(table: DataFrame): Array[String] =
+      table.queryExecution.analyzed.collect {
+        case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.location.inputFiles.toSeq
+      }.flatten.distinct.toArray
 
     /** the snapshot when it is held and fits the cap; runs nothing */
     def held: Option[LocalWand] = LocalScan.heldBy[LocalWand](key)

@@ -28,7 +28,8 @@ import graft.functions.VectorFunctions
   *    O(n_queries · k · partitions), independent of base row count.
   *
   * Driver route ([[scanOnDriver]]): a query batch that is already on the
-  * driver — its optimized plan is a LocalRelation, an exact test — is
+  * driver — its plan folds to a LocalRelation ([[Regime.driverRows]]), an
+  * exact test that runs no optimizer and no query — is
   * scanned there against the base's memoized collected table
   * ([[LocalScan.vecTable]]) when the base passes the LocalScan caps. The
   * kernels replicate the codegen distance arithmetic and the (dist, id)
@@ -107,8 +108,7 @@ object KnnJoin {
     // only a base read as-is (no per-call rename) can take the route
     val local =
       if (baseIdCol != "id" || baseVecCol != "vector") None
-      else scanOnDriver(q,
-        if (Regime.onDriver(q)) LocalScan.queryArrays(q.collect()) else None,
+      else scanOnDriver(q, Regime.driverRows(q).flatMap(LocalScan.queryArrays),
         base, k, metric)
     local.getOrElse(knnJoinDistributed(q, base, k, metric, baseIdCol, baseVecCol))
   }

@@ -102,9 +102,9 @@ private[operators] object Lineage {
   }
 
   /** `rows`' (id, vector) pairs, ids cast to long as the append's plan
-    * casts them. Integral ids are read from `rows`' own optimized plan,
-    * the one [[onDriver]] already folded to a LocalRelation, so a
-    * projection in it (the append's dim check) is not evaluated again. */
+    * casts them. Integral ids are read off `rows` itself
+    * ([[Regime.driverRows]] folds its plan), so a projection in it (the
+    * append's dim check) is evaluated once, with no cast projection on top. */
   private def appended(rows: DataFrame): Option[(Array[Long], Array[Array[Float]])] = {
     val read = rows.schema("id").dataType match {
       case LongType | IntegerType | ShortType | ByteType => rows

@@ -318,7 +318,9 @@ object LocalScan {
     * re-reading sources; pre-fast-path searchers re-collected per call
     * but froze nothing across calls either way.
     *
-    * Under-cap this is ONE collect job (r15): when the size estimate is
+    * A batch already on the driver ([[Regime.onDriver]]) is read off its
+    * relation, with no optimizer run and no job. Otherwise under-cap this
+    * is ONE collect job (r15): when the size estimate is
     * small, or `cap` is below [[queryRowCap]] (cap + 1 rows are few), the
     * [[Regime.rowsUpTo]] probe replaces the historical count-then-collect
     * pair — same rows (the batch sorts by qid anyway, so even row order
@@ -328,10 +330,11 @@ object LocalScan {
       : Option[(Array[Long], Array[Array[Float]])] =
     memoized[(Array[Long], Array[Array[Float]])](queries, "queries")(
         qv => qv._1.length * 8L + qv._2.map(_.length * 4L + 16).sum) {
-      if (cap < queryRowCap || Regime.smallEstimate(queries).isDefined)
-        Regime.rowsUpTo(qidVectors(queries), cap).flatMap(queryArrays)
+      val qv = qidVectors(queries)
+      if (cap < queryRowCap || Regime.onDriver(qv) || Regime.smallEstimate(queries).isDefined)
+        Regime.rowsUpTo(qv, cap).flatMap(queryArrays)
       else if (queries.count() > cap) None
-      else queryArrays(qidVectors(queries).collect())
+      else queryArrays(qv.collect())
     }
 
   /** [[queryVecs]] with the pre-existing unconditional-collect behavior
@@ -1470,7 +1473,7 @@ object LocalScan {
     * top-k heaps are visit-order-independent) — this removes a fork-join
     * dispatch, the per-centroid ArrayBuffer staging, and the
     * invertProbes pass, together ~0.5 ms of the ~2.5 ms tiny-batch
-    * serving floor (dev/ServeFloorProbe). */
+    * serving floor (retrbench serve's `search.ivf.point_ms`). */
   def scanVecsIvfFused(spark: SparkSession, vt: VecTable, qids: Array[Long],
       qVecs: Array[Array[Float]], k: Int, mode: Int,
       centroids: Array[(Int, Array[Float])], nprobe: Int,
@@ -1549,8 +1552,8 @@ object LocalScan {
     * UnsafeRows over ONE shared byte buffer (~40 B/row, zero boxing) —
     * the boxed-tuple + GenericInternalRow + generic-converter path cost
     * ~2.3 ms per 5,120-row batch, the dominant fixed tax of every
-    * driver-local serving row once the kernels were fast
-    * (dev/ResultDfMicro). DESTRUCTIVE on the heaps (popRoot drain,
+    * driver-local serving row once the kernels were fast. DESTRUCTIVE
+    * on the heaps (popRoot drain,
     * back-to-front = ascending (dist, id) — identical order and values
     * to the old BoundedTopK.sorted path). `schema` is [[resultSchema]]
     * up to the qid column's nullability ([[resultSchemaWith]]). */
@@ -1561,7 +1564,7 @@ object LocalScan {
     // query writes a disjoint slot range, so the packed layout (and every
     // row value) is identical to the sequential drain — the ~0.4 ms
     // single-threaded pack was a fixed tax on every tiny serving batch
-    // (dev/ServeFloorProbe). Below the threshold the sequential loop
+    // (retrbench serve's point calls). Below the threshold the sequential loop
     // avoids the fork-join dispatch.
     val nq = heaps.length
     val bases = new Array[Int](nq)

@@ -1,8 +1,14 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, IntegerLiteral, InterpretedMutableProjection, Predicate, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Limit, LocalLimit, LocalRelation, LogicalPlan, Project, SubqueryAlias}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.graftshim.Shim
+import org.apache.spark.sql.types.StructType
 
 /** Where an operator's data lives: collected on the driver (the FAISS
   * client-memory regime — every index in process RAM, modular.py:336-387)
@@ -10,7 +16,10 @@ import org.apache.spark.sql.graftshim.Shim
   * choice is decided from the three inputs here:
   *
   *  - the plan shape ([[onDriver]]): rows already on the driver cost no
-  *    job to read;
+  *    job to read. "On the driver" means the analyzed plan folds to a
+  *    LocalRelation the way the optimizer's ConvertToLocalRelation folds
+  *    it, so reading the rows runs no optimizer, no physical planning and
+  *    no job;
   *  - the Catalyst size estimate ([[smallEstimate]], the one place the
   *    engine reads it): cheap, but only an estimate — an array column is
   *    sized by its element default, so a vector relation can read ~100×
@@ -32,13 +41,11 @@ object Regime {
       .orElse(sys.env.get("GRAFT_LOCAL_SCAN"))
       .forall(v => v != "false" && v != "0")
 
-  /** True when the optimized plan of `df` is a LocalRelation: its rows are
-    * already on the driver, and `collect()` returns them without running
-    * a Spark job (`LocalTableScanExec.executeCollect`). A Project or
-    * Filter over a LocalRelation folds into one (ConvertToLocalRelation).
-    * The test is exact, not a size estimate. */
-  def onDriver(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+  /** True when the rows of `df` are already on the driver ([[local]]):
+    * `collect()` returns them without running a Spark job
+    * (`LocalTableScanExec.executeCollect`). The test is exact, not a size
+    * estimate, and evaluates no row. */
+  def onDriver(df: DataFrame): Boolean = local(df).isDefined
 
   /** The Catalyst size estimate of `df` when it is below
     * cores × maxPartitionBytes (the scan would split into fewer tasks than
@@ -72,9 +79,9 @@ object Regime {
   /** The rows of `df` when it holds at most `cap`, else None: one
     * `limit(cap + 1)` collect, so an over-cap relation never lands whole
     * on the driver. Rows that are already on the driver ([[onDriver]])
-    * are read from the relation itself, with no job and no physical plan
-    * (the planning and execution events of a `collect` cost more than
-    * converting a few hundred rows). */
+    * are read from the relation itself, at most cap + 1 of them, with no
+    * job and no physical plan (the planning and execution events of a
+    * `collect` cost more than converting a few hundred rows). */
   def rowsUpTo(df: DataFrame, cap: Long): Option[Array[Row]] = {
     val take = math.min(cap + 1, Int.MaxValue.toLong).toInt
     val rows = localRows(df, take).getOrElse(
@@ -88,8 +95,60 @@ object Regime {
   def driverRows(df: DataFrame): Option[Array[Row]] = localRows(df, Int.MaxValue)
 
   private def localRows(df: DataFrame, take: Int): Option[Array[Row]] =
-    df.queryExecution.optimizedPlan match {
-      case local: LocalRelation => Some(Shim.externalRows(local.schema, local.data.take(take)))
+    local(df).map { case (schema, rows) => Shim.externalRows(schema, rows.take(take).toSeq) }
+
+  /** The schema and (lazily evaluated) rows of `df` when its rows are on
+    * the driver, the one read behind [[onDriver]], [[driverRows]] and
+    * [[rowsUpTo]]. The analyzed plan, which Dataset analysis has already
+    * built, is folded ([[fold]]); any other shape, or a plan that reads
+    * cached data (the optimizer would read the InMemoryRelation that
+    * `CacheManager` swaps in, not the rows), falls back to matching the
+    * optimized plan, so every route decision is the optimizer's. */
+  private def local(df: DataFrame): Option[(StructType, Iterator[InternalRow])] = {
+    val qe = df.queryExecution
+    val cached = !df.sparkSession.sharedState.cacheManager.isEmpty &&
+      qe.withCachedData.exists(_.isInstanceOf[InMemoryRelation])
+    (if (cached) None else fold(qe.analyzed))
+      .map { case (out, rows) => (DataTypeUtils.fromAttributes(out), rows) }
+      .orElse(qe.optimizedPlan match {
+        case l: LocalRelation => Some((l.schema, l.data.iterator))
+        case _ => None
+      })
+  }
+
+  /** True when the optimizer's fold would evaluate `e` as it stands: no
+    * unevaluable expression, and no RuntimeReplaceable one (the
+    * optimizer replaces those before it folds) */
+  private def evaluable(e: Expression): Boolean =
+    !ConvertToLocalRelation.hasUnevaluableExpr(e) && !e.exists(_.isInstanceOf[RuntimeReplaceable])
+
+  /** `plan`'s output and rows when it is a LocalRelation under `Project`,
+    * `Filter`, `Limit` and `SubqueryAlias` nodes, folded bottom-up as
+    * ConvertToLocalRelation folds them: [[evaluable]] projections and
+    * predicates, evaluated interpreted and
+    * initialized for partition 0 (so a seeded `rand` draws what the
+    * optimizer's fold draws), and integer-literal limits. Rows are
+    * evaluated only as the iterator is read. */
+  private def fold(plan: LogicalPlan): Option[(Seq[Attribute], Iterator[InternalRow])] =
+    plan match {
+      case l: LocalRelation => Some((l.output, l.data.iterator))
+      case SubqueryAlias(_, child) => fold(child)
+      case Project(list, child) if list.forall(evaluable) =>
+        fold(child).map { case (in, rows) =>
+          val p = new InterpretedMutableProjection(list, in)
+          p.initialize(0)
+          (list.map(_.toAttribute), rows.map(r => p(r).copy()))
+        }
+      case Filter(cond, child) if evaluable(cond) =>
+        fold(child).map { case (in, rows) =>
+          val p = Predicate.create(cond, in)
+          p.initialize(0)
+          (in, rows.filter(p.eval))
+        }
+      case Limit(IntegerLiteral(n), child) =>
+        fold(child).map { case (in, rows) => (in, rows.take(n)) }
+      case LocalLimit(IntegerLiteral(n), child) =>
+        fold(child).map { case (in, rows) => (in, rows.take(n)) }
       case _ => None
     }
 }

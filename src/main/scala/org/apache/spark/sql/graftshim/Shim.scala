@@ -46,7 +46,7 @@ object Shim {
     * for the overridden root `collect()`: a field-wise builder for a
     * known fixed schema skips the generic Catalyst→Scala converter's
     * per-field dispatch (the remaining third of the per-batch
-    * result-relation tax; dev/ResultDfMicro). Must produce the same Row
+    * result-relation tax). Must produce the same Row
     * values/order the generic converter would. */
   def localRelationDf(
       spark: org.apache.spark.sql.SparkSession,
@@ -64,12 +64,14 @@ object Shim {
       // A bare LocalRelation of materialized rows is already resolved AND
       // in optimal form — every analyzer and optimizer rule is a no-op on
       // it, but the full rule sweeps still cost ~6 ms (analysis, at
-      // Dataset init) + ~5 ms (optimize) per relation (dev/ResultDfMicro),
-      // which at per-search-batch frequency is the dominant framework tax
-      // of driver-local serving. Pin all three phases to the relation
-      // itself (it holds no Command nodes, so commandExecuted ≡ analyzed);
-      // any DERIVED Dataset composes the logical plan and gets the full
-      // pipeline as usual.
+      // Dataset init) + ~5 ms (optimize) per relation, which at
+      // per-search-batch frequency is the dominant framework tax of
+      // driver-local serving. Pin all three phases to the relation
+      // itself (it holds no Command nodes, so commandExecuted ≡ analyzed).
+      // A DERIVED Dataset composes the logical plan and is analyzed as
+      // usual; an engine route that reads its rows folds the analyzed
+      // plan (graft.operators.Regime) instead of optimizing it, and only
+      // a caller's own collect of it plans the full pipeline.
       val qe = new org.apache.spark.sql.execution.QueryExecution(session, rel) {
         override def analyzed
             : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = rel
@@ -84,7 +86,7 @@ object Shim {
       // through a schema-cached Catalyst→Scala converter: the default
       // path resolves and compiles a fresh row deserializer PER DATASET
       // (~6 ms at search-batch frequency — the last third of the
-      // per-batch tax; dev/ResultDfMicro). Identical Row values and
+      // per-batch tax). Identical Row values and
       // order (LocalTableScanExec.executeCollect preserves insertion
       // order). Any DERIVED Dataset — select/filter/join — is a plain
       // Dataset again and collects through the normal machinery.
@@ -95,7 +97,7 @@ object Shim {
             // indexed parallel convert above the dispatch break-even:
             // order is preserved by construction (slot i → out(i)), and
             // at search-batch scale the sequential map was ~0.2 ms of
-            // the per-batch serving tax (dev/ServeFloorProbe)
+            // the per-batch serving tax (retrbench serve's point calls)
             val n = rows.length
             if (n >= 2048 && rows.isInstanceOf[scala.collection.immutable.ArraySeq[_]]) {
               val out = new Array[org.apache.spark.sql.Row](n)

@@ -1,12 +1,15 @@
 package graft
 
+import scala.util.Try
+
 import org.apache.spark.JobCount.{actionsOf, jobsOf}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Hybrid, KnnJoin, Mining}
+import graft.operators.{Bm25, BruteForceIndexer, Hybrid, KnnJoin, Mining, Regime}
+import graft.sources.{ArtifactStore, RandomDataset}
 
 /** Hybrid RRF fusion and hard-negative mining semantics. */
 class HybridSpec extends AnyFunSuite {
@@ -108,9 +111,8 @@ class HybridSpec extends AnyFunSuite {
     assert(gotSel.except(expect).isEmpty && expect.except(gotSel).isEmpty)
   }
 
-  // The driver route of rrfFuseWeighted (every arm's contribution plan a
-  // LocalRelation) must equal the distributed fusion bit for bit
-  // (RouteCheck).
+  // The driver route of rrfFuseWeighted (every arm's rows on the driver)
+  // must equal the distributed fusion bit for bit (RouteCheck).
   private def bits(df: DataFrame) = RouteCheck.bits(df, "rrf")
   private def bothRoutes(local: Boolean)(search: => DataFrame) =
     RouteCheck.bothRoutes(local, "rrf")(search)
@@ -171,5 +173,101 @@ class HybridSpec extends AnyFunSuite {
     assert(mixed == bits(Hybrid.rrfFuse(Seq(lex, den), 10)))
     assert(Hybrid.rrfFuse(Seq(lex, spread), 10).queryExecution.executedPlan.toString
       .contains("partial_top_k_by_dist"))
+  }
+
+  test("driver fusion ≡ distributed fusion: non-binary weights, int ids, a double rank, ties") {
+    val lex = arm(5, Seq(0L, 1L, 2L), 12)
+    val den = arm(6, Seq(0L, 1L, 2L, 4L), 12)
+    for ((wl, wd) <- Seq((0.3, 0.7), (1.0 / 3, 2.0 / 3)))
+      bothRoutes(local = true)(Hybrid.rrfFuseWeighted(Seq(lex -> wl, den -> wd), 10))
+    // int-typed qid and id, in a bare LocalRelation rather than a toDF
+    // projection
+    val intArm = spark.createDataFrame(java.util.Arrays.asList(
+      lex.collect().map(r => Row(r.getLong(0).toInt, r.getLong(1).toInt, r.getInt(2))): _*),
+      StructType(Seq(
+        StructField("qid", IntegerType, nullable = false),
+        StructField("id", IntegerType, nullable = false),
+        StructField("rank", IntegerType, nullable = false))))
+    bothRoutes(local = true)(Hybrid.rrfFuseWeighted(Seq(intArm -> 0.3, den -> 0.7), 10))
+    // a double rank: fractional ranks, and two docs tied at one rank
+    val dbl = Seq((0L, 3L, 1.0), (0L, 4L, 1.0), (0L, 5L, 2.5), (1L, 3L, 0.5), (4L, 9L, 7.0))
+      .toDF("qid", "id", "rank")
+    bothRoutes(local = true)(Hybrid.rrfFuseWeighted(Seq(dbl -> 1.0 / 3, den -> 0.7), 10))
+    // an rrf half-way at the 7th decimal (0.0001245): HALF_UP on the
+    // double's decimal form gives 0.000125, rounding x·1e6 in binary 0.000124
+    val one = Seq((0L, 1L, 1)).toDF("qid", "id", "rank")
+    assert(bothRoutes(local = true)(Hybrid.rrfFuseWeighted(Seq(one -> 1.245e-4), 5, k0 = 0))
+      .map(_._4) == Seq(java.lang.Double.doubleToRawLongBits(0.000125)))
+    // the fields found by name: another order and an extra column
+    val reordered = den.select(col("rank"), lit("x").as("src"), col("id"), col("qid"))
+    assert(bothRoutes(local = true)(Hybrid.rrfFuse(Seq(lex, reordered), 10)) ==
+      bits(Hybrid.rrfFuse(Seq(lex, den), 10)))
+  }
+
+  test("k0 + rank ≤ 0, a NaN rank or an infinite contribution keeps the distributed plan") {
+    for (ansi <- Seq("true", "false")) SparkFixture.withConf("spark.sql.ansi.enabled", ansi) {
+      val a = Seq((0L, 1L, 1), (0L, 2L, 2), (1L, 1L, 1)).toDF("qid", "id", "rank")
+      val nan = Seq((0L, 1L, Double.NaN), (0L, 3L, 1.0)).toDF("qid", "id", "rank")
+      val fusions = Seq[() => DataFrame](
+        () => Hybrid.rrfFuse(Seq(a), 5, k0 = -1), // k0 + rank = 0 at rank 1
+        () => Hybrid.rrfFuse(Seq(a), 5, k0 = -5), // below 0
+        () => Hybrid.rrfFuse(Seq(nan, a), 5),
+        () => Hybrid.rrfFuseWeighted(Seq(a -> Double.PositiveInfinity, a -> 1.0), 5))
+      for (fuse <- fusions) {
+        // under ANSI a zero divisor fails once the plan is optimized or
+        // run: the same error on both routes
+        val got = fuse()
+        assert(!Try(Regime.onDriver(got)).getOrElse(false), s"ansi $ansi")
+        val g = Try((got.schema, bits(got)))
+        val w = Try(RouteCheck.distributed { val d = fuse(); (d.schema, bits(d)) })
+        assert(g.toOption == w.toOption && g.failed.map(_.getClass).toOption ==
+          w.failed.map(_.getClass).toOption, s"ansi $ansi: $g vs $w")
+      }
+    }
+  }
+
+  test("warm hybrid lookup: no Spark job, no SQL execution, no optimizer run") {
+    val table = "hybrid_warm"
+    val tmp = java.nio.file.Files.createTempDirectory("hybrid-warm")
+    val (n, dim) = (200, 8)
+    try {
+      val docs = (0L until n.toLong).map(i => (i, s"w${i % 7} w${i % 11} w${i % 13} common"))
+        .toDF("id", "text")
+      Bm25.buildIndex(docs, "id", "text", table, buckets = 4)
+      val dir = tmp.resolve("dense").toString
+      ArtifactStore.save(BruteForceIndexer().build(RandomDataset.vectors(spark, n, dim, seed = 5)),
+        dir, "cosine", dim, n, "fp", "")
+      val base = ArtifactStore.load(spark, dir)._1.data
+      val vecs = base.filter(col("id") < 4).collect()
+      // the client's batch: bare LocalRelations, as a caller builds them
+      val text = spark.createDataFrame(java.util.Arrays.asList(
+        (0 until 4).map(i => Row(i.toLong, s"w$i w${i + 3} common")): _*),
+        StructType(Seq(StructField("qid", LongType, nullable = false),
+          StructField("qtext", StringType, nullable = false))))
+      val queries = spark.createDataFrame(java.util.Arrays.asList(
+        vecs.map(r => Row(r.getAs[Long]("id"), r.getAs[Seq[Float]]("vector"))): _*),
+        StructType(Seq(StructField("qid", LongType, nullable = false),
+          StructField("vector", ArrayType(FloatType, containsNull = false), nullable = false))))
+      def ranked(df: DataFrame, q: String, id: String) =
+        df.select(q, "rank", id).collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
+      // the first lookup loads the BM25 snapshot and the base's table
+      val lex = ranked(Bm25.searchFromIndexWand(spark, table, text, "qid", "qtext", 20),
+        "query_id", "doc_id")
+      val dense = ranked(KnnJoin.knnJoin(queries, base, 20, "cosine"), "qid", "id")
+      assert(lex.nonEmpty && dense.nonEmpty)
+      val (jobs, (actions, (optimizerRuns, fused))) = jobsOf(spark.sparkContext)(
+        actionsOf(spark.sparkContext)(OptimizerRuns.of {
+          Bm25.searchFromIndexWand(spark, table, text, "qid", "qtext", 20)
+          KnnJoin.knnJoin(queries, base, 20, "cosine")
+          Hybrid.rrfFuse(Seq(lex.toDF("qid", "rank", "id"), dense.toDF("qid", "rank", "id")), 10)
+        }))
+      assert((jobs, actions, optimizerRuns) == ((0, Nil, 0L)),
+        s"$jobs jobs, SQL executions ${actions.mkString("[", ", ", "]")}, " +
+          s"$optimizerRuns optimizer runs for a warm lookup")
+      assert(fused.collect().length == 40)
+    } finally {
+      Seq("_postings", "_df", "_stats").foreach(sfx => spark.sql(s"DROP TABLE IF EXISTS $table$sfx"))
+      org.apache.spark.network.util.JavaUtils.deleteRecursively(tmp.toFile)
+    }
   }
 }

@@ -1,8 +1,12 @@
 package graft
 
+import scala.util.Try
+
 import org.apache.spark.JobCount.{actionsOf, jobsOf}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators._
@@ -188,5 +192,72 @@ class RegimeSpec extends AnyFunSuite {
           ((1, Some((n.toLong, width)))))
     }
     assert(LocalScan.payloadStats(vectors(0, 8), "vector", 4).contains((0L, 0)))
+  }
+
+  /** the rows and schema of the optimized plan when it is a LocalRelation:
+    * the read [[Regime]] made before it folded the analyzed plan */
+  private def optimizerRows(df: DataFrame): Option[Seq[Row]] =
+    df.queryExecution.optimizedPlan match {
+      case l: LocalRelation => Some(Shim.externalRows(l.schema, l.data).toSeq)
+      case _ => None
+    }
+
+  /** (id: int, s: string, f: float) — a `toDF` Project over a LocalRelation */
+  private def local(): DataFrame = {
+    import spark.implicits._
+    Seq((1, "2", 1.5f), (2, "x", -3.25f), (3, "40", 0.0f), (4, null, 7.5f), (5, "6", 2.0f))
+      .toDF("a", "s", "f")
+  }
+
+  test("driver rows fold the analyzed plan: the optimizer's rows and schema, no optimizer run") {
+    for (ansi <- Seq(true, false)) SparkFixture.withConf("spark.sql.ansi.enabled", ansi.toString) {
+      val base = local()
+      val shapes = Seq(
+        "casts and aliases" -> base.select(col("a").cast("long").as("id"),
+          col("f").cast("double").as("d"), (col("a") * 3).as("t")),
+        "nested projects" -> base.select((col("a") + 1).as("b"), col("s"))
+          .select((col("b") * 2).as("c"), upper(col("s")).as("u")),
+        "filter" -> base.filter(col("a") % 2 === 1).select(col("a"), col("f")),
+        "limit" -> base.select(col("a")).limit(3),
+        "subquery alias" -> base.as("t").select(col("t.a"), col("t.f")),
+        "rand(7)" -> base.select(col("a"), rand(7).as("r")).filter(col("r") < 0.8),
+        "string to int" -> base.select(col("s").cast("int").as("n")))
+      for ((name, df) <- shapes) {
+        val (runs, got) = OptimizerRuns.of(Try(Regime.driverRows(df)))
+        val want = Try(optimizerRows(df))
+        assert(runs == 0, s"$name (ansi $ansi): $runs optimizer runs")
+        assert(got.isSuccess == want.isSuccess, s"$name (ansi $ansi): $got vs $want")
+        if (got.isSuccess) {
+          assert(got.get.map(_.toSeq) == want.get, s"$name (ansi $ansi)")
+          assert(got.get.get.forall(r => r.schema == want.get.get.head.schema), s"$name (ansi $ansi)")
+          assert(Regime.onDriver(df) && Regime.rowsUpTo(df, 2).isEmpty == (want.get.get.length > 2))
+        }
+      }
+      // a cast that fails under ANSI fails on both reads; without ANSI it is null
+      assert(Try(Regime.driverRows(base.select(col("s").cast("int")))).isFailure == ansi)
+    }
+  }
+
+  test("other shapes fall back to the optimized plan with the same answer") {
+    val base = local()
+    // nvl is RuntimeReplaceable: unevaluable until the optimizer replaces it
+    val nvl = base.select(expr("nvl(s, 'none')").as("n"))
+    val (runs, rows) = OptimizerRuns.of(Regime.driverRows(nvl))
+    assert(runs > 0)
+    assert(rows.map(_.toSeq) == optimizerRows(nvl))
+    // not on the driver: None, and no job runs to find out
+    val ranged = spark.range(5).select((col("id") * 2).as("id"))
+    assert(jobsOf(spark.sparkContext)(Regime.driverRows(ranged)) == ((0, None)))
+    assert(!Regime.onDriver(ranged) && optimizerRows(ranged).isEmpty)
+    // a cached local frame is read through its InMemoryRelation, as the
+    // optimizer reads it: the route keeps the optimizer's answer
+    val cached = base.select(col("a"), col("f"))
+    assert(Regime.onDriver(cached))
+    cached.cache()
+    try Seq(cached, base.select(col("a"), col("f")), cached.select(col("a"))).foreach { df =>
+      assert(Regime.onDriver(df) == optimizerRows(df).isDefined)
+      assert(Regime.driverRows(df).map(_.toSeq) == optimizerRows(df))
+    } finally cached.unpersist(blocking = true)
+    assert(Regime.onDriver(cached))
   }
 }

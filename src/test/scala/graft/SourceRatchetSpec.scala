@@ -34,6 +34,15 @@ class SourceRatchetSpec extends AnyFunSuite {
       Seq("Regime.scala"))
   }
 
+  test("only Regime reads the optimized plan or folds a plan onto its LocalRelation") {
+    // Shim's result relation overrides optimizedPlan: the one other mention
+    assert(filesMatching("""\.\s*optimizedPlan\b""".r) == Seq("Regime.scala"))
+    assert(filesMatching("""\boptimizedPlan\b""".r).toSet == Set("Regime.scala", "Shim.scala"))
+    assert(filesMatching(
+      """ConvertToLocalRelation\s*\.|InterpretedMutableProjection|Predicate\s*\.\s*create""".r) ==
+      Seq("Regime.scala"))
+  }
+
   /** lowered whenever a change turns knobs into constants */
   private val knobReadCeiling = 39
 

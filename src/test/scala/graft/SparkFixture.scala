@@ -17,4 +17,14 @@ object SparkFixture {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** runs `body` with SQL conf `key` set to `value`, restoring it after */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally old match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }
