@@ -718,7 +718,7 @@ object SparkEntry {
     //     docs per source by (n_chars desc, doc_id). Rank filter → map-
     //     side Partial WindowGroupLimit, so ≤ n rows per domain cross
     //     the exchange (plan asserted in spec; measured vs the explicit
-    //     bounded-heap formulation in dev/DomainCapProbe) ---
+    //     bounded-heap formulation in the removed dev/DomainCapProbe) ---
     "corpus_domain_cap" -> ((s, dir) =>
       Corpus.domainCap(Tables.load(s, dir, "documents"),
           "doc_id", "source", "n_chars", n = 10)
@@ -750,7 +750,7 @@ object SparkEntry {
     //     oracle. r13: the scoring pass routes the block-max WAND kernel
     //     over the same term-pruned index relations (bit-identical by
     //     the text_bm25_wand contract; equality-asserted at 10× by
-    //     dev/ServeWandAb) — the relational Σ qf·df join it replaces
+    //     the removed dev/ServeWandAb) — the relational Σ qf·df join it replaces
     //     measured 290 s vs WAND's 3.6 s at 50k docs × 944 queries ---
     "text_bm25_serve" -> ((s, dir) => {
       val docs = Tables.load(s, dir, "documents")
@@ -776,7 +776,7 @@ object SparkEntry {
     //     on BOTH engines. df/idf remain exact corpus statistics.
     //     N=32 is a COST-bound operating point (candidate space
     //     Σ_t qf·min(df, 32)), not an exactness claim: the r13 Zipf
-    //     sweep (dev/ChampionSweep, flat + Zipf corpora × long + short
+    //     sweep (the removed dev/ChampionSweep, flat + Zipf corpora × long + short
     //     queries) measures top-5 agreement ≤0.62 for ANY champion
     //     variant at N ≤ 128 on this generator while exact WAND costs
     //     less — exact serving routes text_bm25_wand ---

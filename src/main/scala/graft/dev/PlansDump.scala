@@ -98,7 +98,8 @@ object PlansDump {
         |the Exchange — each map partition forwards at most n rows per
         |domain, so a heavy-hitter domain cannot flood a reducer. Catalyst
         |derives this from the plain `row_number() <= n` filter
-        |(InferWindowGroupLimit); measured in dev/DomainCapProbe.scala.""".stripMargin) {
+        |(InferWindowGroupLimit); measured in the removed
+        |dev/DomainCapProbe.""".stripMargin) {
       Corpus.domainCap(Tables.load(spark, dir, "documents"),
         "doc_id", "source", "n_chars", n = 10)
     }
@@ -174,8 +175,8 @@ object PlansDump {
         |the kernel emits ≤ k rows per (partition, query), and one
         |hashpartitioning(qidx) exchange ranks them. No pair join
         |anywhere — the candidate set is bounded ≤ P·nq·k at any corpus
-        |scale (dev/ServeWandAb: 3.6 s vs 290 s relational at the 10×
-        |serve shape, bit-identical results).""".stripMargin) {
+        |scale (the removed dev/ServeWandAb: 3.6 s vs 290 s relational at
+        |the 10× serve shape, bit-identical results).""".stripMargin) {
       val docs = Tables.load(spark, dir, "documents")
       Bm25.ensureIndex(docs, "doc_id", "text", "plans_bm25ix", buckets = 8)
       Bm25.searchFromIndexWand(spark, "plans_bm25ix",

@@ -26,11 +26,11 @@ import graft.Tables
   * ~90% substitution on EVERY replica including 0). The standard
   * fixtures keep the flat jittered vocabulary — their dedup-skew and
   * BM25 oracles are calibrated to it — but a flat-impact corpus makes
-  * champion-list truncation look uniformly terrible (ChampionSweep r12:
-  * top-5 agreement 0.03-0.27 at any affordable N) because every term's
-  * posting impacts are interchangeable. Real retrieval corpora are
-  * Zipfian (term frequencies concentrate), which is the regime champion
-  * lists were designed for — this mode builds that stand-in so the
+  * champion-list truncation look uniformly terrible (r12, the removed
+  * dev/ChampionSweep: top-5 agreement 0.03-0.27 at any affordable N)
+  * because every term's posting impacts are interchangeable. Real retrieval
+  * corpora are Zipfian (term frequencies concentrate), which is the regime
+  * champion lists were designed for — this mode builds that stand-in so the
   * operating point can be swept where the operator is actually used.
   */
 object ScaleData {

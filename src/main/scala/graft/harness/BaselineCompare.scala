@@ -86,8 +86,9 @@ object BaselineCompare {
       // knob to reach the published recall at equal nlist
       // strided_accum: stride-4 partial sums in the scan kernel —
       // FAISS's AVX kernels reassociate the same way, and the single-
-      // chain loop is FP-add-latency bound (Sq8ScanShootout: 9.3 ns/elem,
-      // 95% of search wall); recall-equivalent, gates keep the exact sum
+      // chain loop is FP-add-latency bound (the removed dev/Sq8ScanShootout:
+      // 9.3 ns/elem, 95% of search wall); recall-equivalent, gates keep the
+      // exact sum
       ("ivf_sq8", "ivf_sq8", "ivf_sq8",
         Map("nlist" -> "256", "nprobe" -> nprobe.toString,
           "strided_accum" -> "true")),
@@ -96,7 +97,7 @@ object BaselineCompare {
       // strided_accum since r12: the float-LUT scorers now route through
       // the hardware-gather kernel (AdcScan.adcGatherKernel, vgatherdps)
       // and beat the double ADC walk 1.7-1.8× at both weak-row shapes
-      // (dev/FloatAdcAb: random 17.7→10.1 ms, msmarco 28.2→15.6 ms);
+      // (the removed dev/FloatAdcAb: random 17.7→10.1 ms, msmarco 28.2→15.6 ms);
       // through r11 they measured PAR scalar-vs-scalar and the rows kept
       // the oracle-exact path
       ("pq", "pq", "pq",
@@ -113,12 +114,12 @@ object BaselineCompare {
         "num_centroids" -> "256", "residual" -> "true",
         "train_iters" -> "25",
         // r12: the gather-kernel float residual scorer measures
-        // 1.05-1.12× the double walk (dev/FloatAdcAb ivfpq arm)
+        // 1.05-1.12× the double walk (the removed dev/FloatAdcAb ivfpq arm)
         "strided_accum" -> "true")))
     val ct: Seq[AlgoRow] = if (!withCoverTree) Nil else Seq(
       ("covertree", "covertree", "covertree", Map.empty[String, String]))
     // ef_search per workload at the reference's recall operating point
-    // with ~2-point margin (dev/EfSearchSweep.scala) — the old global 256
+    // with ~2-point margin (the removed dev/EfSearchSweep) — the old global 256
     // bought surplus recall the comparison never credits for 20-45% QPS
     val hnsw: Seq[AlgoRow] = if (!withHnsw) Nil else Seq(
       ("hnsw", "hnsw_global", "hnsw_global",
@@ -134,8 +135,8 @@ object BaselineCompare {
     Workload("random", 20000, 256, 64, normalize = false,
       // ivfFlatNprobe 12 and lshMult 128 close the two below-reference
       // recall rows (0.39→0.43 vs ref 0.41; 0.30→0.43 vs ref 0.32) at
-      // 25-60× the reference's QPS either way (dev/LshIvfRecallSweep)
-      // nprobe 32→30 (r10 finer sweep, dev/NprobeSweep random): recall
+      // 25-60× the reference's QPS either way (the removed dev/LshIvfRecallSweep)
+      // nprobe 32→30 (r10 finer sweep, the removed dev/NprobeSweep random): recall
       // at 30 is 0.5207 vs ref 0.5090 (28 dips below at 0.5021), so 32
       // bought 1.9 recall points the comparison never credits for ~6%
       // more scan; both quantized rows sit in the 0.5× noise band where
@@ -155,22 +156,22 @@ object BaselineCompare {
     // nprobe at the reference's RECALL operating point, not above it:
     // the clustered stand-ins concentrate true neighbors in few lists,
     // so the old deep probes bought recall headroom the comparison never
-    // credits while paying 2-4× the scan (dev/NprobeSweep.scala)
+    // credits while paying 2-4× the scan (the removed dev/NprobeSweep)
     Workload("glove50", 20000, 256, 50, normalize = false,
-      // hnswEf 64: recall 0.9846 vs ref 0.9750 (dev/EfSearchSweep r8 —
+      // hnswEf 64: recall 0.9846 vs ref 0.9750 (the removed dev/EfSearchSweep r8 —
       // ef=40 dips below ref at 0.9709; the old 100 bought 0.992, 1.7
       // points of surplus the comparison never credits, for ~35% more
       // beam work). pqInit "++": the ONE sub-reference recall row —
       // random-init codebooks plateau at 0.9750 vs ref 0.9820; D²-seeded
       // k-means reaches 0.9918 at the same iters AND converges faster
-      // (dev/Glove50PqProbe). random/msmarco pq keep random init: both
+      // (the removed dev/Glove50PqProbe). random/msmarco pq keep random init: both
       // already clear ref and random's 0.15-point margin isn't worth
       // perturbing.
       // nprobe 8→5 (r9): the r8 pin still over-probed — recall at 5 is
       // 0.8984/0.9311/0.9254 (ivf_flat/sq8/ivf_pq) vs ref
       // 0.8699/0.9113/0.9094, a 2-3 point margin at ~60% of the scan
-      // (dev/NprobeSweep r9 rerun)
-      // hnswEf 56 (r9 float-kernel re-sweep, dev/EfSearchSweep): recall
+      // (the removed dev/NprobeSweep r9 rerun)
+      // hnswEf 56 (r9 float-kernel re-sweep, the removed dev/EfSearchSweep): recall
       // 0.9805 vs ref 0.9750 — the sweep is deterministic on the seeded
       // stand-in, ef=48 would leave only 0.2pt; 64 bought 0.43pt more
       // margin for ~10% QPS
@@ -194,12 +195,12 @@ object BaselineCompare {
     // build at 100k × 384-d exceeds the per-algo watchdog (the REFERENCE
     // itself took 4,387 s on this row — benchmark_summary.md:49). hnsw
     // participates: its driver-parallel build measures ~13 s standalone
-    // at this shape (HnswBuildProfile, post-r8 primitive-array rewrite +
-    // scalar kernels + pre-sized heap; the r7 Vector-API default plus
+    // at this shape (the removed dev/HnswBuildProfile, post-r8 primitive-array
+    // rewrite + scalar kernels + pre-sized heap; the r7 Vector-API default plus
     // boxed-tuple garbage inflated it past the 120 s watchdog in-bench).
     // Operating points re-pinned on the r8 HARDENED stand-in
-    // (dev/OverlapSweep + dev/MsmarcoRetune): overlap=0.7/deg=4 with
-    // sigma=1.2 reproduces the reference's coarse-probe hardness —
+    // (the removed dev/OverlapSweep and dev/MsmarcoRetune): overlap=0.7/deg=4
+    // with sigma=1.2 reproduces the reference's coarse-probe hardness —
     // ivf_flat recall 0.915@16 / 0.949@24 / 0.969@32 vs the reference's
     // 0.9529@32 (benchmark_summary.md:45). The old stand-in saturated
     // at 1.0000 by nprobe=4 (the r7 "missing hardness" finding), which
@@ -214,7 +215,7 @@ object BaselineCompare {
         // Reference anchor = the reference's single-node hnsw row: the
         // reference has no distributed variant, so the anchor is a
         // comparison point, not a parity claim. Operating point from
-        // dev/HnswDistProbe (r9): SPANN-style spill=2 boundary closure,
+        // the removed dev/HnswDistProbe (r9): SPANN-style spill=2 boundary closure,
         // 16 groups, probe 12, ef 20 → recall 0.9921 ≥ ref 0.9857 at
         // ~0.8× ref QPS, build ~2.6× the global's at this shape (the
         // crossover analysis lives in README §Distributed HNSW).
@@ -234,7 +235,7 @@ object BaselineCompare {
         // counterpart through r9 (1.0000 / 5.76 QPS / 4,388 s build,
         // benchmark_summary.md:49). The r10 block-parallel cover-test
         // scan (CoverTree.scala) brings the exact build to a MEASURED
-        // ~181 s at this shape (dev/CoverTreeMsmarcoProbe, ~24× the
+        // ~181 s at this shape (the removed dev/CoverTreeMsmarcoProbe, ~24× the
         // reference build), over the default 120 s watchdog but a
         // one-shot cost, and running last it can never starve other rows.
         // budget 360→480 s (r15, verdict r14 #7): the r14 c32 run lost
@@ -257,7 +258,7 @@ object BaselineCompare {
       // intrinsicDim = 64: MiniLM-class encoders have effective rank in
       // the tens — full-rank 384-d noise under-reported PQ recall (0.52
       // vs the reference's real-data 0.78); sigma 0.9→1.2 under the
-      // overlap knob keeps PQ at 0.789 vs ref 0.7757 (MsmarcoRetune)
+      // overlap knob keeps PQ at 0.789 vs ref 0.7757 (the removed dev/MsmarcoRetune)
       clusters = Some((512, 1.2, 64)), overlap = 0.7))
 
   /** Per-algorithm wall budget. On overrun the algorithm's Spark job
@@ -274,13 +275,6 @@ object BaselineCompare {
   val totalBudgetSec: Int =
     sys.env.getOrElse("SPARK_GRAFT_BASELINE_TOTAL_SEC", "1200").toInt
 
-  // NOTE on graft.scan.simd: the flag exists (LocalScan.scanSimd,
-  // SimdScanSpec) and would be the FAISS-regime arithmetic for these
-  // measurements, but it stays OFF here: dev/KernelMicro measures this
-  // box's incubator Vector API at ≤1.4× scalar at 384-d and 0.5× at
-  // 64-d (virtualized JVM, intrinsics not engaging), so enabling it
-  // LOSES throughput. On hardware where the API intrinsifies it is the
-  // right knob for the float-scan rows.
   def run(spark: SparkSession): Seq[Entry] = {
     Registry.init()
     // dev filters: SPARK_GRAFT_BASELINE_ONLY=lsh,pq /
@@ -478,7 +472,7 @@ object BaselineCompare {
     // Warm-up: the pinned policy (comment above prepOne) is that the
     // reference is AOT-compiled C++, so our numbers must exclude JIT
     // compilation — the old single warm call under-implemented that:
-    // dev/Sq8WarmCurve shows serve paths taking ~10-25 calls to reach C2
+    // the removed dev/Sq8WarmCurve shows serve paths taking ~10-25 calls to reach C2
     // steady state (call-2-4 min 4x the converged time at the glove50
     // ivf_sq8 shape), so a 1-warm + best-of-3 window was measuring the
     // compiler, not the code. Adaptive warm-up: keep serving until the
@@ -496,10 +490,10 @@ object BaselineCompare {
       // serve curves reach their LAST C2 cliff beyond the old window —
       // msmarco ivf_sq8 drops 14→10 ms at call ~24 and glove50 hnsw
       // descends 3.5→2.4 ms in sub-10% steps over calls ~12-24
-      // (dev/Sq8WarmCurve e2e curves, committed in its scaladoc), so
-      // the old cap exited with the compiler still in the window. The
-      // policy is unchanged (reference is AOT C++ — exclude JIT);
-      // steady rows still exit after ~5 calls via the patience check.
+      // (the removed dev/Sq8WarmCurve's e2e curves), so the old cap exited with
+      // the compiler still in the window. The policy is unchanged (reference is
+      // AOT C++ — exclude JIT); steady rows still exit after ~5 calls via the
+      // patience check.
       while (calls < 32 && stale < 6 && (System.nanoTime() - w0) < 4_500_000_000L) {
         val t = timed()._1
         calls += 1

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * for Spark's execution model.
   *
   * Why not score pair-rows in the join pipeline? Two measured costs at
-  * n_base × n_queries volume (dev/AdcProfile.scala):
+  * n_base × n_queries volume (the removed dev/AdcProfile):
   *   1. **LUT locality**: a BroadcastNestedLoopJoin streams base rows and
   *      loops queries per row, so consecutive scores touch a DIFFERENT
   *      query's LUT (128 KB each at m=64,nC=256 — a 32 MB working set at
@@ -101,7 +101,7 @@ object AdcScan {
     /** whole-chunk form, `out(r) = Σᵢ w(i)·codes(off0+r·stride+i)` for
       * r < nRows — same bit-exact contract per row. The SIMD kernels
       * override it to hoist the per-row overheads that made the one-row
-      * kernel LOSE at 50-64-d (dev/Sq8ChunkAb): the int weights widen
+      * kernel LOSE at 50-64-d (the removed dev/Sq8ChunkAb): the int weights widen
       * once per chunk (plain loads replace per-row S2I converts) and two
       * rows run in flight so the B2I converts and lane reductions
       * pipeline instead of serializing per call. */
@@ -117,24 +117,16 @@ object AdcScan {
 
   /** Runtime-optional SIMD iwsum (same reflective-load discipline as
     * [[SimdDist.vectorKernel]]): present whenever `jdk.incubator.vector`
-    * resolves, unless force-disabled with -Dgraft.sq8.simd=false /
-    * GRAFT_SQ8_SIMD=0. ON by default when loadable — unlike the float
-    * kernels there is no numeric divergence to opt into: the integer
+    * resolves. There is no numeric divergence to opt into: the integer
     * sum is bit-identical to the scalar loop (spec-asserted), so even
     * the hash-model gates could run it; it simply lives behind the same
     * int16 regime switch as the scalar iwsum. */
-  val sq8SimdKernel: Option[Sq8IwsumKernel] = {
-    val off = sys.props.get("graft.sq8.simd")
-      .orElse(sys.env.get("GRAFT_SQ8_SIMD"))
-      .exists(v => v == "false" || v == "0")
-    if (off) None
-    else
-      try {
-        Class.forName("jdk.incubator.vector.IntVector")
-        Some(Class.forName("graft.operators.VectorSq8Kernel")
-          .getMethod("make").invoke(null).asInstanceOf[Sq8IwsumKernel])
-      } catch { case _: Throwable => None }
-  }
+  val sq8SimdKernel: Option[Sq8IwsumKernel] =
+    try {
+      Class.forName("jdk.incubator.vector.IntVector")
+      Some(Class.forName("graft.operators.VectorSq8Kernel")
+        .getMethod("make").invoke(null).asInstanceOf[Sq8IwsumKernel])
+    } catch { case _: Throwable => None }
 
   /** the hardware-gather ADC contract [[VectorSq8Kernel.Gather512]]
     * fills for the FLOAT LUT scorers (lane-reassociated sums — the
@@ -150,27 +142,20 @@ object AdcScan {
 
   /** runtime-optional gather ADC: present on 512-bit-vector CPUs with
     * the incubator module (vgatherdps is the whole point — narrower
-    * CPUs keep the scalar 4-row block). -Dgraft.adc.simd=false /
-    * GRAFT_ADC_SIMD=0 forces it off for A/Bs. */
-  val adcGatherKernel: Option[AdcGatherKernel] = {
-    val off = sys.props.get("graft.adc.simd")
-      .orElse(sys.env.get("GRAFT_ADC_SIMD"))
-      .exists(v => v == "false" || v == "0")
-    if (off) None
-    else
-      try {
-        val sp = Class.forName("jdk.incubator.vector.IntVector")
-          .getField("SPECIES_PREFERRED").get(null)
-        // length() must be looked up on the PUBLIC VectorSpecies
-        // interface — the implementation class is not exported, so a
-        // getClass-based lookup throws on invoke
-        val wide = Class.forName("jdk.incubator.vector.VectorSpecies")
-          .getMethod("length").invoke(sp).asInstanceOf[Integer] >= 16
-        if (!wide) None
-        else Some(Class.forName("graft.operators.VectorSq8Kernel")
-          .getMethod("makeGather").invoke(null).asInstanceOf[AdcGatherKernel])
-      } catch { case _: Throwable => None }
-  }
+    * CPUs keep the scalar 4-row block). */
+  val adcGatherKernel: Option[AdcGatherKernel] =
+    try {
+      val sp = Class.forName("jdk.incubator.vector.IntVector")
+        .getField("SPECIES_PREFERRED").get(null)
+      // length() must be looked up on the PUBLIC VectorSpecies
+      // interface — the implementation class is not exported, so a
+      // getClass-based lookup throws on invoke
+      val wide = Class.forName("jdk.incubator.vector.VectorSpecies")
+        .getMethod("length").invoke(sp).asInstanceOf[Integer] >= 16
+      if (!wide) None
+      else Some(Class.forName("graft.operators.VectorSq8Kernel")
+        .getMethod("makeGather").invoke(null).asInstanceOf[AdcGatherKernel])
+    } catch { case _: Throwable => None }
 
   /** JVM-wide [[Sq8FastScorer]] row-norms memo: weak identity keys on
     * the flat codes array, so an unpersisted artifact's entry collects
@@ -566,7 +551,7 @@ object AdcScan {
     *    [[Sq8Scorer]]'s dim×256 table is 786 KB at 384-d, so every
     *    data-dependent lookup was an L2 hit; the measured scan floor was
     *    ~9 ns/element with the lookup latency chain dominating
-    *    (dev/Sq8ScanShootout; a stride-4 unroll alone recovered only
+    *    (the removed dev/Sq8ScanShootout; a stride-4 unroll alone recovered only
     *    ~24%).
     * 2. **Gram decomposition + hoisting.** L2: ‖q−x‖² = ‖q−lo−s·u‖²
     *    = qn − 2·Σᵢ ys(i)·u(cᵢ) + rn(row), with ys(i) = (qᵢ−lo(i))·
@@ -593,7 +578,7 @@ object AdcScan {
     /** per-query state is ys/qs (dim doubles ≈ 3 KB at 384-d) + a scalar
       * — the u table and row norms are query-shared, so the list-major
       * scan's state cycling is L1-cheap while the codes-traffic saving
-      * is ~(avg probing queries per list)× (dev/Sq8StageProfile msmarco:
+      * is ~(avg probing queries per list)× (the removed dev/Sq8StageProfile msmarco:
       * the query-major scan re-read 252 MB/batch at 42 ms where the
       * arithmetic bound is ~8 ms) */
     override def prefersListMajor: Boolean = true
@@ -738,7 +723,7 @@ object AdcScan {
       *                ≈ (step·Σ wsq(i)·cᵢ + 128·Σ w(i)) / 255
       * and the inner loop is ONE int16×int8 multiply-accumulate per
       * element — no table lookup, no double FMA chain
-      * (dev/Sq8SymMicro: 0.55 vs 0.90 ns/elem). |Σ| ≤ dim·16383·128
+      * (the removed dev/Sq8SymMicro: 0.55 vs 0.90 ns/elem). |Σ| ≤ dim·16383·128
       * stays in int32 through 1024 dims. Weight quantization error is
       * ≤ 2⁻¹⁴ relative — recall-equivalent, same contract as this
       * scorer's reassociated sums (opt-in strided regime only; gates pin
@@ -801,36 +786,32 @@ object AdcScan {
     // int16 weight quantization: auto ON only at wide rows (dim >= 128,
     // i.e. the msmarco 384-d regime where it measured 43 -> 31 ms/batch).
     // At 50-64-d the double-lookup wsum is already load-port-fed from L1
-    // and the int16 variant measured NO steady-state win (Sq8StageProfile
-    // glove50 A/B: 1.5 vs 1.6 ms) while its extra branch+lazy state
-    // roughly TRIPLED C2 warm-up (dev/Sq8WarmCurve: still ~6 ms/call at
-    // call 30 vs ~2.4 ms by call 7 with it off) — and the frozen bench
+    // and the int16 variant measured NO steady-state win (the removed
+    // dev/Sq8StageProfile glove50 A/B: 1.5 vs 1.6 ms) while its extra
+    // branch+lazy state roughly TRIPLED C2 warm-up (the removed
+    // dev/Sq8WarmCurve: still ~6 ms/call at call 30 vs ~2.4 ms by call 7 with
+    // it off) — and the frozen bench
     // window is 1-warm + best-of-3, so slow warm-up IS a QPS regression
     // (glove50/random ivf_sq8 fell 1.43x -> 0.49x / 0.20x -> 0.11x of
     // reference in the r10 mid-round artifact before this gate).
-    // -Dgraft.sq8.int16=true/false forces either side for kernel A/Bs.
     // Upper bound 1024: iwsum's |Σ| ≤ dim·16383·128 only stays inside
     // int32 through 1024 dims (qIntState's own bound) — beyond that the
     // accumulator could wrap and corrupt distances, so wider rows keep
-    // the double-lookup wsum (the forced prop respects the bound too).
+    // the double-lookup wsum.
     // r12 note: the per-ROW SIMD iwsum (4-6× the scalar loop in
-    // isolation, dev/Sq8SimdMicro) did NOT move the dim gate — in-context
-    // row A/Bs measured it ~2× WORSE than the double-lookup wsum at
+    // isolation, the removed dev/Sq8SimdMicro) did NOT move the dim gate —
+    // in-context row A/Bs measured it ~2× WORSE than the double-lookup wsum at
     // 50-64-d (glove50 99.6k → 51.1k QPS, random 43.0k → 26.8k): at
     // narrow dims the scan was bound by per-row overheads the vector
     // kernel added (convert+reduce per 3-4 steps). The CHUNK kernel
     // (iwsumChunk: weights widened once per tile, 2 rows in flight)
     // removes exactly those, and flips the verdict at every baseline
-    // shape (dev/Sq8ChunkAb, min-of-12 interleaved): glove50 93.4k →
-    // 133.6k QPS, random 63.8k → 98.5k, msmarco 2.07k → 3.02k. So with
+    // shape (the removed dev/Sq8ChunkAb, min-of-12 interleaved): glove50 93.4k
+    // → 133.6k QPS, random 63.8k → 98.5k, msmarco 2.07k → 3.02k. So with
     // the SIMD kernel present the int16 regime is ON at every dim
     // (≤ 1024, the int32 bound); without it (module absent) the scalar
     // int16 path keeps its measured dim>=128 gate.
-    private val useInt16 = dim <= 1024 &&
-      (sys.props.get("graft.sq8.int16") match {
-        case Some(v) => v != "false" && v != "0"
-        case None => dim >= 128 || sq8SimdKernel.isDefined
-      })
+    private val useInt16 = dim <= 1024 && (dim >= 128 || sq8SimdKernel.isDefined)
 
     // lazy JIT priming (once per JVM): only a scorer that will actually
     // route the int16 SIMD path pays the ≤250 ms warm-up — previously
@@ -1174,7 +1155,7 @@ object AdcScan {
 
   /** A/B escape hatch for the fused probe+scan dispatch
     * (-Dgraft.adc.fused=false restores the two-phase path) — exists for
-    * in-context serve-path A/Bs (dev/Sq8WarmCurve); default on. Read per
+    * in-context serve-path A/Bs (the removed dev/Sq8WarmCurve); default on. Read per
     * call so one JVM can interleave both paths. */
   def fusedEnabled: Boolean =
     sys.props.get("graft.adc.fused").forall(v => v != "false" && v != "0")
@@ -1191,7 +1172,7 @@ object AdcScan {
     // flat centroid layout + blocked parallelism: the boxed-tuple
     // per-query version cost ~1.4 ms of the 6.7 ms random-ivf_flat batch
     // (nlist=100) and ~4 ms at nlist=256 — per-query fork-join tasks of
-    // ~6k flops are all dispatch (dev/IvfStageProfile). Arithmetic is
+    // ~6k flops are all dispatch (the removed dev/IvfStageProfile). Arithmetic is
     // UNCHANGED (index-order float→double accumulation, (dist, cid)
     // ties): the probed set feeds hash-tier gate oracles.
     val nc = centroids.length
@@ -1211,7 +1192,7 @@ object AdcScan {
     // that grain). The old fixed qb=16 made ceil(70/16)=5 tasks of the
     // msmarco batch (70 q × 256 lists × 384-d ≈ 98k flops/query) and
     // left 27 of 32 cores idle — 2.6 ms of the 10 ms steady serve
-    // (dev/Sq8WarmCurve staged curve, r14). Small shapes keep blocks of
+    // (the removed dev/Sq8WarmCurve staged curve, r14). Small shapes keep blocks of
     // several queries, so the dispatch amortization that motivated
     // qb=16 is preserved where it matters. Arithmetic unchanged.
     val qb = math.max(1, 100_000 / math.max(1, nc * dim))

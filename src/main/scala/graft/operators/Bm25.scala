@@ -30,7 +30,7 @@ import org.apache.spark.sql.graftshim.Shim
   *   - per-query top-k is the rank-filter window form: on Spark 4
   *     Catalyst rewrites it to a Partial `WindowGroupLimit`, so each map
   *     partition forwards at most k rows per query before the exchange
-  *     (measured in dev/DomainCapProbe.scala for the same shape).
+  *     (measured in the removed dev/DomainCapProbe for the same shape).
   *
   * Cross-engine determinism AND aggregate speed come from the same
   * choice: each per-term contribution is rounded to a fixed-point long
@@ -95,7 +95,7 @@ object Bm25 {
     * semantics. It stays on this relational path only: it is approximate
     * by construction, so it cannot share WAND's exactness contract, and
     * exact WAND already costs less than every champion variant measured
-    * (dev/ChampionSweep) — a WAND champion option would be code for a
+    * (the removed dev/ChampionSweep) — a WAND champion option would be code for a
     * variant nothing needs. */
   def searchTopK(docs: DataFrame, queries: DataFrame,
       idCol: String, textCol: String, qIdCol: String, qTextCol: String,
@@ -686,7 +686,7 @@ object Bm25 {
     * collect, then the driver's postings collect or distributed WAND.
     *
     * Measured at the 10× serve shape (50k docs, 944 doc-prefix queries,
-    * dev/ServeWandAb, equality-asserted then interleaved min-of-2): WAND
+    * the removed dev/ServeWandAb, equality-asserted then interleaved min-of-2): WAND
     * 3.6 s vs relational 290 s — the relational arm's Σ qf·df join
     * materializes ~1.9B candidate rows on that corpus (every query shares
     * the 40-word head vocabulary), exactly the blow-up WAND's θ-pruned

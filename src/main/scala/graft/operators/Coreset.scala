@@ -65,8 +65,8 @@ object Coreset {
     * shuffle-free min-update scan (batch distance exprs folded with
     * `least`, still one codegen stage) + one TakeOrdered reduce — so
     * per-CENTER cost drops ~batch×. k ≈ 10⁴ selection over 100 TB
-    * becomes ~k/batch ≈ 10² scan-stages (`dev/KcenterScaleProbe`
-    * measures the flat per-pass cost).
+    * becomes ~k/batch ≈ 10² scan-stages (the removed
+    * `dev/KcenterScaleProbe` measured the flat per-pass cost).
     *
     * Early stop: a pass whose pre-refinement pool head has min distance
     * 0 means the corpus is fully covered (the head is the global
@@ -189,7 +189,7 @@ object Coreset {
     // Each pass's min-update frame is eagerly localCheckpoint'ed, NOT
     // persist'ed: a persist chain nests one projection per pass and the
     // closure/plan serialization recurses once per level — at k ≈ 10²⁺
-    // passes that StackOverflows (found by dev/KcenterScaleProbe at
+    // passes that StackOverflows (found by the removed dev/KcenterScaleProbe at
     // k=256) and Catalyst analysis cost grows with depth. The checkpoint
     // truncates lineage to a constant-size LogicalRDD (the
     // connectedComponents discipline, Dedup.scala:255-260); exactly one
@@ -208,7 +208,8 @@ object Coreset {
           // codegen'd scan. ONLY below a small fold width: at ~64
           // folded distance exprs the generated method blows the JIT
           // limit and whole-stage codegen degrades to interpreted eval
-          // (measured 160 s/pass vs 0.3 s at b=64 in KcenterScaleProbe)
+          // (measured 160 s/pass vs 0.3 s at b=64 in the removed
+          // dev/KcenterScaleProbe)
           val dmin = newCenters.iterator
             .map(c => VectorFunctions.distance(metric)(col("vector"),
               typedLit(c.toSeq)))

@@ -206,7 +206,7 @@ object Corpus {
     * keep at most `n` documents from any one `domainCol` value, the best
     * first by (`orderDescCol` DESC, id ASC).
     *
-    * Implementation choice, measured (dev/DomainCapProbe.scala): the
+    * Implementation choice, measured (the removed dev/DomainCapProbe): the
     * naive-looking `row_number() OVER (PARTITION BY domain …) <= n` is
     * the RIGHT plan on Spark ≥ 3.5. Catalyst's
     * InferWindowGroupLimit rewrites a rank filter with a literal bound

@@ -329,7 +329,7 @@ object CoverTreeModel {
     // sqrt), every tree satisfying the invariant yields the same EXACT
     // search results — which is what the j12 gate hashes — and the
     // sf0.01/sf0.1/10× gates all verified green against the oracle.
-    // 30k×384 build: 129.5 → 8.7 s (dev/CoverTreeMsmarcoProbe).
+    // 30k×384 build: 129.5 → 8.7 s (the removed dev/CoverTreeMsmarcoProbe).
     // strip-mined: the abort check runs once per 32-element block, not
     // per element — a per-element compare+branch de-pipelines the
     // subtract/multiply chain and measured SLOWER than no exit at all

@@ -422,7 +422,7 @@ private[operators] final class IntVec(initial: Int = 8) {
   * top-k) lives in a per-thread [[HnswWorkspace]] — the same de-boxing
   * HnswGlobal's walk got in round 8; the boxed HashSet[Integer] +
   * tuple-PriorityQueue path cost ~3× on both the per-centroid build and
-  * the serve walk (dev/HnswDistProbe before/after). */
+  * the serve walk (the removed dev/HnswDistProbe before/after). */
 final class NswGraph private (
     vecs: Array[Array[Float]], metric: String,
     private val nbrs: Array[IntVec]) {
@@ -445,8 +445,8 @@ final class NswGraph private (
   @transient private lazy val wsTl: ThreadLocal[HnswWorkspace] =
     ThreadLocal.withInitial(() => new HnswWorkspace(vecs.length))
 
-  // dim-gated Vector-API kernel by default since r12 (GRAFT_SIMD=0
-  // restores float-scalar; floor-tier tolerance — SimdDist's scope note)
+  // dim-gated Vector-API kernel since r12 (float-scalar when the module
+  // is absent; floor-tier tolerance — SimdDist's scope note)
   @inline private def dist(a: Array[Float], b: Array[Float]): Double =
     if (isCosine) SimdDist.kernel.cosineDist(a, b)
     else SimdDist.kernel.l2(a, b)

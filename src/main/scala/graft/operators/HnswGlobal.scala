@@ -65,7 +65,7 @@ final case class HnswGlobalIndexer(
       // fixed nprobe=12 (the 16-group hnsw_dist tuning) would silently
       // collapse recall at hundreds of auto-routed groups, so the
       // FRACTION scales with the group count. 1/2 is the swept
-      // saturation knee (dev/RoutedNprobeSweep, 256 and 1024 groups on
+      // saturation knee (the removed dev/RoutedNprobeSweep, 256 and 1024 groups on
       // the clustered overlap-0.7 stand-in: recall@10 0.9935/0.9970 at
       // 1/2 vs 0.9950/0.9985 at full probe — 3/4 buys ≤0.0015 more at
       // 1.5× the cost; the curve is group-count-invariant-or-better as
@@ -153,7 +153,7 @@ final case class HnswGlobalSearcher(efSearch: Int = 100, metric: String = "l2",
     if (artifact.kind == "hnsw") {
       // probe count pinned at build-routing time (scaled with the routed
       // partition count); the `max(12, nPart/2)` fallback (the swept
-      // fraction — dev/RoutedNprobeSweep) covers artifacts from stores
+      // fraction — the removed dev/RoutedNprobeSweep) covers artifacts from stores
       // written before the meta key existed
       val nprobe = artifact.meta.get("routed_nprobe").map(_.toInt)
         .getOrElse(math.max(12,
@@ -297,8 +297,9 @@ final class HnswGlobalModel(
   // compare on the distance path costs measurably at 10⁸ calls per build
   private val isCosine = metric == "cosine"
 
-  // SimdDist.kernel defaults to the dim-gated Vector-API kernel since
-  // r12 (SIMD at >= simdMinDim, float-scalar below; the floor-tier gate
+  // SimdDist.kernel is the dim-gated Vector-API kernel since r12 when
+  // the module resolves (SIMD at >= simdMinDim, float-scalar below and
+  // without the module; the floor-tier gate
   // tolerates lane-reassociated sums — see SimdDist's scope note and the
   // species-access fix that unblocked intrinsification)
   @inline private[operators] def dist(a: Array[Float], b: Array[Float]): Double =

@@ -63,7 +63,7 @@ final case class IvfSq8Searcher(nprobe: Int, metric: String,
     // LAZY: DataFrame construction runs the analyzer eagerly (~ms), and
     // this relation is only needed on probesAuto's over-cap fallback —
     // building it per serve batch taxed every driver-local search
-    // (dev/Sq8StageProfile: ~half the e2e batch was outside the stages)
+    // (the removed dev/Sq8StageProfile: ~half the e2e batch was outside the stages)
     def q = queries.select(col("qid").cast("long").as("qid"), col("vector"))
     val spark = artifact.data.sparkSession
     val (qids, qVecs) = LocalScan.queryVecsAlways(queries)

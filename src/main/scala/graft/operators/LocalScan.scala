@@ -64,35 +64,11 @@ object LocalScan {
     * to their streaming plans */
   val queryRowCap: Long = 1L << 20
 
-  /** OPT-IN reassociated SIMD kernels for the driver-local FLOAT scans
-    * (exact / ivf_flat): -Dgraft.scan.simd=true / GRAFT_SCAN_SIMD=1.
-    * Default OFF — the default scalar kernels replicate the codegen
-    * expressions' double accumulation bit-for-bit, which the hash-tier
-    * gate oracles and the local≡distributed equality specs require.
-    * With the flag on, distances accumulate in float lanes (FAISS's own
-    * arithmetic regime — ~1e-5 relative error): results are
-    * recall-equivalent, not bit-reproducible against the distributed
-    * plans. Measure before enabling: on THIS sandbox the incubator
-    * Vector API barely intrinsifies (dev/KernelMicro: ≤1.4× scalar at
-    * 384-d, 0.5× at 64-d), so the flag stays off everywhere here; on
-    * hardware where the API engages it is the FAISS-regime knob for the
-    * float-scan rows. */
-  def scanSimd: Boolean =
-    sys.props.get("graft.scan.simd")
-      .orElse(sys.env.get("GRAFT_SCAN_SIMD"))
-      .exists(v => v == "true" || v == "1")
-
   /** Vector-API dot for the STRIDED (gram/FAISS-regime) scans — already
-    * the reassociated contract, so the SIMD kernel is default-ON there
-    * when the module resolves, dim-gated at [[scanSimdMinDim]].
-    * GRAFT_SCAN_SIMD=0 / -Dgraft.scan.simd=false forces it off; the
-    * NON-strided scans keep the oracle-exact kernels unless the r9
-    * opt-in flag above explicitly enables [[simdDistAt]]. */
-  private val stridedSimdKernel: SimdDist.Kernel =
-    if (sys.props.get("graft.scan.simd")
-        .orElse(sys.env.get("GRAFT_SCAN_SIMD"))
-        .exists(v => v == "false" || v == "0")) null
-    else SimdDist.vectorKernel.orNull
+    * the reassociated contract, so the SIMD kernel is used whenever the
+    * module resolves, dim-gated at [[scanSimdMinDim]]. The NON-strided
+    * scans keep the oracle-exact double kernels. */
+  private val stridedSimdKernel: SimdDist.Kernel = SimdDist.vectorKernel.orNull
 
   /** The flat scan's own dim gate — LOWER than the HNSW walk's
     * [[SimdDist.simdMinDim]]: over contiguous rows the SIMD dot wins
@@ -795,7 +771,7 @@ object LocalScan {
     * traffic drops from Σ_q (probed rows of q) to the union of probed
     * lists (~(avg probing queries/list)× less; the msmarco ivf_sq8 scan
     * was bandwidth-bound at 42 ms vs an ~8 ms arithmetic bound,
-    * dev/Sq8StageProfile). Each (list, query) keeps a bounded partial
+    * the removed dev/Sq8StageProfile). Each (list, query) keeps a bounded partial
     * top-k; the per-query merge of its lists' partials is EXACT (top-k
     * of a union = top-k over per-subset top-ks, and the (dist, id)
     * total order makes the result insertion-order independent) — rows
@@ -951,7 +927,7 @@ object LocalScan {
     * [[AdcScan.Sq8FastScorer]] construction, exactly the
     * [[VectorSq8Kernel.primeOnce]] discipline. Why: the r12 kernel prime
     * warmed the iwsum chunk MAC but not the loops AROUND it —
-    * dev/Sq8StageProfile on this box measures the same serve batch at
+    * the removed dev/Sq8StageProfile on this box measures the same serve batch at
     * 7.3 ms inside the bench's 1-warm+best-of-6 window vs 2.5 ms at
     * true steady state (~20+ calls), i.e. ~2.9× of the weak
     * `random ivf_sq8` row was the C2 warm-up of scan dispatch, heap
@@ -959,8 +935,7 @@ object LocalScan {
     * METHOD, so warming these cores on a tiny synthetic table warms the
     * real serve path at every shape. Budgeted (≤1.5 s loop leg + ≤0.5 s
     * resultDf leg, so ~2 s worst-case on a cold JVM; in practice the
-    * pass caps land well under the deadlines), latched, and skippable
-    * via the same -Dgraft.sq8.prime=false escape.
+    * pass caps land well under the deadlines) and latched.
     *
     * DRIVER-ONLY, including the latch: the loops it warms
     * (queryMajorHeaps / fusedHeaps / listMajorHeaps) are driver-local
@@ -979,11 +954,10 @@ object LocalScan {
     servePrimed.set(false)
   def primeSq8ServeOnce(): Unit =
     if (org.apache.spark.TaskContext.get() == null
-        && !sys.props.get("graft.sq8.prime").exists(v => v == "false" || v == "0")
         && servePrimed.compareAndSet(false, true)) {
       val rnd = new java.util.Random(7)
       // INVOCATION-count-sized, not wall-time-sized: the late cliff in
-      // the serve curve (dev/PrimeCheck: the fusedHeaps stage sits at
+      // the serve curve (the removed dev/PrimeCheck: the fusedHeaps stage sits at
       // 4.3 ms/call through call ~29, then 1.4 ms) is the per-QUERY
       // loop body crossing C2's Tier4InvocationThreshold (~15k). A
       // big-tile prime burns its budget on few invocations and never
@@ -1029,8 +1003,8 @@ object LocalScan {
       }
       // TWO shapes, short-vector first then long-vector (r14): the r13
       // single-shape (64-d) prime left the msmarco-class 384-d serve
-      // curve with its cliff intact — dev/Sq8WarmCurve at 100k × 384-d /
-      // 70 q measured ~19 ms/call through call ~26, then 10.7 ms. C2
+      // curve with its cliff intact — the removed dev/Sq8WarmCurve at 100k ×
+      // 384-d / 70 q measured ~19 ms/call through call ~26, then 10.7 ms. C2
       // profiles loop trip counts per method; a 64-d-only profile
       // compiles the chunk/heap loops for 4-iteration bodies and the
       // 384-d serve path pays re-profiling in production. ~19k
@@ -1042,14 +1016,14 @@ object LocalScan {
       // 384-d pass with 256-row lists (~98 KB of codes per list): above
       // the 64 KB avg-list gate, so the scan routes LIST-MAJOR — the
       // production path at the msmarco-class shape. The staged curve
-      // (dev/Sq8WarmCurve … staged) localized the residual descent to
+      // (the removed dev/Sq8WarmCurve … staged) localized the residual descent to
       // scanCodesIvf at exactly this routing; priming the query-major
       // pass alone left it cold.
       primeShape(384, 32, 800_000_000L, 600, rowsPerList = 256)
       val nlist = 16
       // result-packing + local-collect leg (resultDf drains heaps into a
       // LocalRelation; collect on it is driver-only — no Spark job), the
-      // other ~1 ms of early-window tax (dev/PrimeCheck: resultDf 1.6 →
+      // other ~1 ms of early-window tax (the removed dev/PrimeCheck: resultDf 1.6 →
       // 0.7 ms, collect 1.8 → 0.25 ms as the analyzer/pack paths
       // compile). Runs on the 64-d tile (the FIRST primeShape's
       // returns), not the heavy 384-d one: this leg's target is
@@ -1145,7 +1119,7 @@ object LocalScan {
     * (fvec_inner_product accumulates in float lanes): eight independent
     * float chains with no per-element cvtss2sd. vs the index-order
     * double kernel this is both reassociated AND single-precision;
-    * dev/FloatAccumMicro: 0.42–0.90 ns/elem vs 1.24–1.72 (double
+    * the removed dev/FloatAccumMicro: 0.42–0.90 ns/elem vs 1.24–1.72 (double
     * index-order) and 2.2–2.5 (the r8 stride-4 double chains, which
     * turned out cvt-throughput-bound). Only the `strided_accum`
     * baseline-serving rows use it — gates keep the oracle-exact double
@@ -1192,8 +1166,7 @@ object LocalScan {
 
   /** exact flat scan (mirrors KnnJoin.knnJoin: broadcast queries × base
     * scan + bounded heap, no padding); tiled like [[scanCodesFull]], and
-    * scored by [[fullHeaps]]. [[scanSimd]] swaps in the reassociated SIMD
-    * kernels (opt-in); `strided` swaps in the scalar stride-4 gram
+    * scored by [[exactHeaps]]. `strided` swaps in the stride-4 gram
     * kernels (opt-in via the searcher's `strided_accum` — the FAISS
     * comparison regime; not bit-identical to the oracle-exact kernels, so
     * gates never set it). */
@@ -1202,29 +1175,21 @@ object LocalScan {
       strided: Boolean = false, qidNullable: Boolean = false): DataFrame = {
     val schema = resultSchemaWith(qidNullable)
     if (strided) return scanVecsFullStrided(spark, vt, qids, qVecs, k, mode, schema)
-    // SIMD kernels cover modes 0-2 only; the gram mode's dot loop is
-    // already the minimal-op kernel
-    val simd = scanSimd && SimdDist.vectorKernel.isDefined && mode != 3
-    resultDf(spark, qids, fullHeaps(vt, qVecs, k, mode, simd), schema)
+    resultDf(spark, qids, exactHeaps(vt, qVecs, k, mode), schema)
   }
-
-  /** the exact flat scan's top-k heaps, aligned with `qVecs`: the
-    * index-order double kernels, never the SIMD ones (LSH's zero-collision
-    * fallback, which must equal the distributed kNN join bit for bit) */
-  private[operators] def exactHeaps(vt: VecTable, qVecs: Array[Array[Float]],
-      k: Int, mode: Int): Array[BoundedTopK] =
-    fullHeaps(vt, qVecs, k, mode, simd = false)
 
   /** queries scored together per row by the exact kernel ([[groupHeaps]]) */
   private val queryGroup = 4
 
-  /** One top-k heap per query over every row, a block of queries
-    * ([[blockFor]]) per parallel task. A block of at least [[queryGroup]]
-    * queries on the exact kernels goes through [[groupHeaps]]; a smaller
-    * one (a point batch's one-query blocks), the gram mode and the SIMD
-    * kernels score query by query over L2-sized row chunks. */
-  private def fullHeaps(vt: VecTable, qVecs: Array[Array[Float]], k: Int,
-      mode: Int, simd: Boolean): Array[BoundedTopK] = {
+  /** The exact flat scan's top-k heaps, aligned with `qVecs`, in the
+    * index-order double kernels (so LSH's zero-collision fallback equals
+    * the distributed kNN join bit for bit). One block of queries
+    * ([[blockFor]]) per parallel task: a block of at least [[queryGroup]]
+    * queries goes through [[groupHeaps]]; a smaller one (a point batch's
+    * one-query blocks) and the gram mode score query by query over
+    * L2-sized row chunks. */
+  private[operators] def exactHeaps(vt: VecTable, qVecs: Array[Array[Float]],
+      k: Int, mode: Int): Array[BoundedTopK] = {
     val heaps = new Array[BoundedTopK](qVecs.length)
     val gram = mode == 3
     val norms = if (gram) rowNorms(vt) else null
@@ -1236,7 +1201,7 @@ object LocalScan {
       val q1 = math.min(qVecs.length, q0 + qb)
       var qi = q0
       while (qi < q1) { heaps(qi) = new BoundedTopK(k); qi += 1 }
-      if (!gram && !simd && q1 - q0 >= queryGroup) groupHeaps(vt, qVecs, q0, q1, heaps, mode)
+      if (!gram && q1 - q0 >= queryGroup) groupHeaps(vt, qVecs, q0, q1, heaps, mode)
       else {
         // hoisted ‖q‖² per query of this block (gram mode only)
         val qq = if (!gram) null else {
@@ -1268,10 +1233,7 @@ object LocalScan {
                 r += 1
               }
             } else while (r < c1) {
-              val d =
-                if (simd) simdDistAt(q, vt.flat, r * vt.dim, mode)
-                else vecDist(q, vt.flat, r * vt.dim, vt.dim, mode)
-              h.insert(vt.ids(r), d)
+              h.insert(vt.ids(r), vecDist(q, vt.flat, r * vt.dim, vt.dim, mode))
               r += 1
             }
             qi += 1
@@ -1349,16 +1311,6 @@ object LocalScan {
     }
   }
 
-  /** reassociated SIMD distance over a flat row (opt-in via [[scanSimd]];
-    * same emitted convention as [[vecDist]]: L2 sqrt'd, IP negated) */
-  @inline private def simdDistAt(q: Array[Float], flat: Array[Float],
-      off: Int, mode: Int): Double = {
-    val kern = SimdDist.vectorKernel.getOrElse(SimdDist.ScalarKernel)
-    if (mode == 2) kern.cosineFlat(q, flat, off)
-    else if (mode == 1) -kern.dotFlat(q, flat, off)
-    else kern.l2Flat(q, flat, off)
-  }
-
   /** full flat scan with the stride-4 gram kernels: one dot4 per
     * element-row, ‖q‖² hoisted per query, per-row norms computed once
     * per table (memoized) and shared by every query and every search */
@@ -1413,7 +1365,7 @@ object LocalScan {
   /** one query's probed-list scan (shared by [[scanVecsIvf]] and
     * [[scanVecsIvfFused]] — identical arithmetic and visit order) */
   private def scanQueryLists(vt: VecTable, q: Array[Float], cids: Array[Int],
-      k: Int, mode: Int, m: Int, strided: Boolean, simd: Boolean,
+      k: Int, mode: Int, m: Int, strided: Boolean,
       norms: Array[Double]): BoundedTopK = {
     var h: BoundedTopK = null
     val qn = if (strided) queryNorm(q) else 0.0
@@ -1437,10 +1389,7 @@ object LocalScan {
             r += 1
           }
         } else while (r < end) {
-          val d =
-            if (simd) simdDistAt(q, vt.flat, r * vt.dim, mode)
-            else vecDist(q, vt.flat, r * vt.dim, vt.dim, mode)
-          h.insert(vt.ids(r), d)
+          h.insert(vt.ids(r), vecDist(q, vt.flat, r * vt.dim, vt.dim, mode))
           r += 1
         }
       }
@@ -1454,12 +1403,11 @@ object LocalScan {
       probes: Array[Array[Int]], strided: Boolean = false): DataFrame = {
     val byQuery = invertProbes(probes, qids.length)
     val heaps = new Array[BoundedTopK](qids.length)
-    val simd = scanSimd && SimdDist.vectorKernel.isDefined
     val m = if (strided && mode == 3) 0 else mode
     val norms = if (strided && m != 1) rowNorms(vt) else null
     java.util.stream.IntStream.range(0, qids.length).parallel().forEach { qi =>
       heaps(qi) =
-        scanQueryLists(vt, qVecs(qi), byQuery(qi), k, mode, m, strided, simd, norms)
+        scanQueryLists(vt, qVecs(qi), byQuery(qi), k, mode, m, strided, norms)
     }
     resultDf(spark, qids, heaps)
   }
@@ -1489,7 +1437,6 @@ object LocalScan {
       c += 1
     }
     val heaps = new Array[BoundedTopK](qids.length)
-    val simd = scanSimd && SimdDist.vectorKernel.isDefined
     val m = if (strided && mode == 3) 0 else mode
     val norms = if (strided && m != 1) rowNorms(vt) else null
     val nq = qids.length
@@ -1514,7 +1461,7 @@ object LocalScan {
         var j = 0
         while (j < cids.length) { cids(j) = ph.ids(j).toInt; j += 1 }
         java.util.Arrays.sort(cids) // ascending, like invertProbes
-        heaps(qi) = scanQueryLists(vt, q, cids, k, mode, m, strided, simd, norms)
+        heaps(qi) = scanQueryLists(vt, q, cids, k, mode, m, strided, norms)
       }
     }
     resultDf(spark, qids, heaps)

@@ -114,7 +114,7 @@ final case class PqModel(codebooks: Array[Array[Array[Float]]], dsub: Int)
   /** per-subspace codebooks flattened to contiguous [c*dsub + i] floats,
     * built lazily once per model: the 3-level array walk (plus an
     * in-loop metric branch) made LUT construction the dominant per-batch
-    * prep of the PQ serve paths (dev/IvfPqStageProfile: 2-5 ms of an
+    * prep of the PQ serve paths (the removed dev/IvfPqStageProfile: 2-5 ms of an
     * ~8 ms glove50 ivf_pq batch) */
   @transient private lazy val flatCb: Array[Array[Float]] = codebooks.map { cb =>
     val nC = cb.length

@@ -83,7 +83,7 @@ object SimdDist {
   /** FAISS-regime scalar kernel: eight independent FLOAT accumulation
     * chains (FAISS's fvec_* functions accumulate in float; the
     * index-order double chain additionally pays a cvtss2sd per element
-    * and serializes on FP-add latency — dev/FloatAccumMicro measures
+    * and serializes on FP-add latency — the removed dev/FloatAccumMicro measures
     * 0.42–0.90 ns/elem vs 1.24–1.72). Values differ from [[ScalarKernel]]
     * by reassociation + single-precision rounding — fine for the
     * floor-tier graph walks this object serves (see scope note above),
@@ -186,36 +186,22 @@ object SimdDist {
   /** measured crossover (between 50-d and 64-d on this box) */
   val simdMinDim: Int = 64
 
-  /** tri-state: -Dgraft.simd.enabled / GRAFT_SIMD forces either side;
-    * unset = ON when the module resolves (the r12 default flip) */
-  private def simdPref: Option[Boolean] =
-    sys.props.get("graft.simd.enabled")
-      .orElse(sys.env.get("GRAFT_SIMD"))
-      .map(v => v == "true" || v == "1")
-
   /** The process-wide kernel consumed by the HNSW family. Default since
     * r12 = [[vectorKernel]] when the incubator module resolves. Through
     * r11 the Vector API was believed non-intrinsifying on this box
-    * ("dev/KernelMicro: ≤1.4× scalar at 384-d, 0.5× at 64-d", and the
-    * r7 default attempt made HNSW builds 45-60% slower) — that was the
-    * instance-field species anti-pattern in VectorDistKernel (see its
-    * scaladoc), not the hardware: with the species read from the static
-    * final, the same micro measures the SIMD kernel 3.6× (64-d) to 8.9×
+    * (the removed dev/KernelMicro read "≤1.4× scalar at 384-d, 0.5× at
+    * 64-d", and the r7 default attempt made HNSW builds 45-60% slower) —
+    * that was the instance-field species anti-pattern in VectorDistKernel
+    * (see its scaladoc), not the hardware: with the species read from the
+    * static final, the same micro measured the SIMD kernel 3.6× (64-d) to 8.9×
     * (384-d) FASTER than the scalar chain. Reassociation contract is
     * unchanged from the FloatScalarKernel era (floor-tier graph walks;
     * one shared kernel instance keeps local ≡ distributed equality).
-    * GRAFT_SIMD=0 restores [[FloatScalarKernel]];
-    * GRAFT_EXACT_KERNEL=1 restores the index-order double kernel. */
+    * Without the module it is [[FloatScalarKernel]]. */
   val kernel: Kernel =
-    if (sys.props.get("graft.exact.kernel")
-        .orElse(sys.env.get("GRAFT_EXACT_KERNEL"))
-        .exists(v => v == "true" || v == "1")) ScalarKernel
-    else if (simdPref.getOrElse(true))
-      vectorKernel
-        .map(v => new DimGatedKernel(v, FloatScalarKernel, simdMinDim): Kernel)
-        .getOrElse(FloatScalarKernel)
-    else FloatScalarKernel
+    vectorKernel
+      .map(v => new DimGatedKernel(v, FloatScalarKernel, simdMinDim): Kernel)
+      .getOrElse(FloatScalarKernel)
 
-  def simdActive: Boolean =
-    vectorKernel.isDefined && kernel.isInstanceOf[DimGatedKernel]
+  def simdActive: Boolean = kernel.isInstanceOf[DimGatedKernel]
 }

@@ -19,7 +19,7 @@ final class VectorDistKernel extends SimdDist.Kernel {
   // every lane op took the generic object path and the kernel measured
   // 60x SLOWER than scalar (the r7 "never intrinsifies on this box"
   // verdict — it was this access pattern, not the box; see
-  // dev/KernelMicro before/after).
+  // the removed dev/KernelMicro before/after).
 
   def l2(a: Array[Float], b: Array[Float]): Double = {
     val sp = FloatVector.SPECIES_PREFERRED

@@ -157,7 +157,7 @@ object VectorSq8Kernel {
     * thousands of profiled calls), so without priming the first real
     * scans run the interpreter/C1 path — measured as call2-7 of the
     * bench's 1-warm+best-of-6 window sitting 3-10× over steady state
-    * (dev/Sq8WarmCurve), i.e. the window graded the JIT, not the code.
+    * (the removed dev/Sq8WarmCurve), i.e. the window graded the JIT, not the code.
     * Priming runs the chunk kernel over synthetic tiles at the three
     * baseline dims (50 exercises the scalar tail, 64/384 the pure lane
     * loop; odd nRows exercises the per-row fallback) under a hard
@@ -193,13 +193,11 @@ object VectorSq8Kernel {
     * int16 SIMD kernel — NOT at class load (ADVICE r12: load-time
     * priming burned up to 250 ms in every JVM that touched any AdcScan
     * member, driver included, even for workloads that never run SQ8
-    * scans or force graft.sq8.int16=false). The bench's serve windows
+    * scans). The bench's serve windows
     * are unaffected: their untimed warm call constructs the scorer, so
     * priming still lands outside the timed best-of-N. */
   def primeOnce(k: AdcScan.Sq8IwsumKernel): Unit =
-    if (!sys.props.get("graft.sq8.prime").exists(v => v == "false" || v == "0")
-        && primed.compareAndSet(false, true))
-      prime(k)
+    if (primed.compareAndSet(false, true)) prime(k)
 
   def make(): AdcScan.Sq8IwsumKernel =
     if (IntVector.SPECIES_PREFERRED.length() >= 16) new W512 else new W256
@@ -207,7 +205,7 @@ object VectorSq8Kernel {
   /** PQ ADC gather kernel (512-bit only — vgatherdps is the point; on
     * narrower CPUs the scalar 4-row block stays): accumulate
     * accs(r) += Σ_j lut(j·nC + 128 + codes(off_r + j)) over a whole
-    * ≤256-row chunk, 2 rows in flight (dev/PqSimdGatherMicro: 2-row
+    * ≤256-row chunk, 2 rows in flight (the removed dev/PqSimdGatherMicro: 2-row
     * gather ≈ 2× the shipped scalar4 at the m=64/nC=256 L2-resident
     * shape). Lane-reassociated float sums — [[AdcScan.FloatPqLutScorer]]
     * regime only; the double gate scorers never route here. The j tail

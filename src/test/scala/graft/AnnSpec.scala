@@ -467,7 +467,7 @@ class AnnSpec extends AnyFunSuite {
   }
 
   test("routed probe fraction nPart/2 holds the recall floor at 256 groups") {
-    // the swept operating point (dev/RoutedNprobeSweep: saturation knee
+    // the swept operating point (the removed dev/RoutedNprobeSweep: saturation knee
     // at 1/2 on 256 AND 1024 groups at 500k rows) re-asserted at suite
     // scale: the auto-route's exact build shape (spill=2 closure), 256
     // groups, served at nprobe = max(12, nPart/2) — must clear the

@@ -251,7 +251,7 @@ class LocalScanSpec extends AnyFunSuite {
   test("float-LUT ADC scorers rank like the oracle-exact double scorers") {
     // strided_accum on pq/ivf_pq = FloatPqLutScorer/FloatResidualScorer:
     // values differ by single-precision rounding, rankings must be
-    // recall-equivalent (dev/FloatAdcAb measures the perf side)
+    // recall-equivalent (the removed dev/FloatAdcAb measures the perf side)
     for ((ind, params) <- Seq(
         ("pq", Map("num_subspaces" -> "8", "num_centroids" -> "32")),
         ("ivf_pq", Map("nlist" -> "8", "nprobe" -> "4",
@@ -322,13 +322,7 @@ class LocalScanSpec extends AnyFunSuite {
     // TaskContext check at the top of primeSq8ServeOnce, INCLUDING the
     // latch: an executor construction must leave the latch unset so a
     // later driver-side serve still gets its warm-up.
-    // save/restore the escape-hatch prop (adjacent serveBatchCap test's
-    // discipline): removing it unconditionally would leak prime state
-    // into later tests when a run sets -Dgraft.sq8.prime=false
-    val savedPrime = sys.props.get("graft.sq8.prime")
-    sys.props.remove("graft.sq8.prime") // prime enabled
     LocalScan.resetSq8ServePrimeForTest()
-    try {
     // construct a scorer INSIDE a task (local master still sets a real
     // TaskContext per task, so this exercises the exact executor path)
     val constructed = spark.range(0, 2, 1, 2).rdd.mapPartitions { _ =>
@@ -348,10 +342,6 @@ class LocalScanSpec extends AnyFunSuite {
     new AdcScan.Sq8FastScorer(AdcScan.LocalLut(qv), lo, hi, 0)
     assert(LocalScan.sq8ServePrimed,
       "driver-side construction must run the once-per-JVM prime")
-    } finally savedPrime match {
-      case Some(v) => sys.props("graft.sq8.prime") = v
-      case None => sys.props.remove("graft.sq8.prime")
-    }
   }
 
   test("payloadStats / queryVecs one-job small-estimate probe ≡ count-then-probe path") {

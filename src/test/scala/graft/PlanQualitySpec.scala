@@ -296,7 +296,7 @@ class PlanQualitySpec extends AnyFunSuite {
       // the WAND serve route (r13, the text_bm25_serve gate path) is
       // contracted bit-identical to the relational serve — same index,
       // same answers, candidates bounded by the DAAT kernel instead of
-      // the Σ qf·df join (dev/ServeWandAb: 3.6 s vs 290 s at 10×)
+      // the Σ qf·df join (the removed dev/ServeWandAb: 3.6 s vs 290 s at 10×)
       val wandServed = graft.operators.Bm25.searchFromIndexWand(
           spark, "pq_bm25ix", queries, "qid", "qtext", k = 5)
         .select("query_id", "doc_id", "rank")

@@ -15,7 +15,7 @@ class SimdDistSpec extends AnyFunSuite {
 
   test("Vector-API kernel is loadable in the forked test JVM") {
     // build.sbt adds --add-modules jdk.incubator.vector; if this fails
-    // the opt-in flag would silently have nothing to switch to
+    // every SIMD path silently falls back to its scalar kernel
     assert(SimdDist.vectorKernel.isDefined)
   }
 
@@ -23,10 +23,10 @@ class SimdDistSpec extends AnyFunSuite {
     // r12 default flip: the r7-r11 "never intrinsifies on this box"
     // measurements were the instance-field species anti-pattern in
     // VectorDistKernel (see its scaladoc) — with the species read from
-    // the static final, dev/KernelMicro measures the SIMD kernel
-    // 3.6-8.9x FASTER than the float-scalar chain. The module is on in
-    // this forked JVM (previous test), so the default must be SIMD;
-    // GRAFT_SIMD=0 / GRAFT_EXACT_KERNEL=1 remain the escapes.
+    // the static final, the removed dev/KernelMicro measured the SIMD
+    // kernel 3.6-8.9x FASTER than the float-scalar chain. The module is
+    // on in this forked JVM (previous test), so the default must be SIMD;
+    // only a JVM without the module falls back to the float-scalar kernel.
     assert(SimdDist.simdActive)
     // the default is the dim-gated hybrid: SIMD at >= simdMinDim,
     // float-scalar below (the 50-d net-negative measurement)
@@ -69,5 +69,24 @@ class SimdDistSpec extends AnyFunSuite {
     // zero-norm convention preserved
     val z = new Array[Float](16)
     assert(k.cosineDist(z, Array.fill(16)(1f)) == 1.0)
+  }
+
+  test("flat SIMD kernels agree with scalar to 1e-5 relative") {
+    assume(SimdDist.vectorKernel.isDefined, "no jdk.incubator.vector in this JVM")
+    val rnd = new java.util.Random(7)
+    val dim = 131 // odd size exercises the lane tail
+    val q = Array.fill(dim)(rnd.nextFloat() * 2 - 1)
+    val flat = Array.fill(dim * 5)(rnd.nextFloat() * 2 - 1)
+    for (row <- 0 until 5) {
+      val off = row * dim
+      val b = java.util.Arrays.copyOfRange(flat, off, off + dim)
+      val k = SimdDist.vectorKernel.get
+      val s = SimdDist.ScalarKernel
+      assert(math.abs(k.l2Flat(q, flat, off) - s.l2(q, b)) <=
+        1e-5 * math.max(1.0, s.l2(q, b)))
+      assert(math.abs(k.dotFlat(q, flat, off) - s.dot(q, b)) <=
+        1e-5 * math.max(1.0, math.abs(s.dot(q, b))))
+      assert(math.abs(k.cosineFlat(q, flat, off) - s.cosineDist(q, b)) <= 1e-5)
+    }
   }
 }

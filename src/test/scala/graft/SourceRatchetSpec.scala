@@ -44,7 +44,7 @@ class SourceRatchetSpec extends AnyFunSuite {
   }
 
   /** lowered whenever a change turns knobs into constants */
-  private val knobReadCeiling = 39
+  private val knobReadCeiling = 24
 
   test("ad-hoc knob reads stay at or under the ceiling") {
     val reads = sources.map { case (_, s) =>
@@ -52,5 +52,17 @@ class SourceRatchetSpec extends AnyFunSuite {
     }.sum
     assert(reads <= knobReadCeiling,
       s"$reads sys.props/sys.env/System.getProperty/System.getenv reads (ceiling $knobReadCeiling)")
+  }
+
+  /** lowered whenever a change deletes a main */
+  private val devMainCeiling = 11
+
+  test("graft/dev holds at most the surviving dev mains") {
+    val list = Files.list(Paths.get("src/main/scala/graft/dev"))
+    val mains =
+      try list.iterator.asScala.count(_.toString.endsWith(".scala"))
+      finally list.close()
+    assert(mains <= devMainCeiling,
+      s"$mains .scala files under graft/dev (ceiling $devMainCeiling)")
   }
 }
